@@ -258,13 +258,16 @@ final class GraphDatabase private (
   }
 
   private def mergeIndexed(ix: IndexPipeline.Indexed, taskId: String): Unit = {
-    val nodes2 =
-      if (snap.nodes.isEmpty) ix.nodes
-      else Merge.upsertInto(snap.nodes, ix.nodes.drop("label"))
+    // a re-indexed file's locations replace its base rows, not add to them
+    val (nodes2, baseLocations) =
+      if (snap.nodes.isEmpty) (ix.nodes, snap.locations)
+      else (Merge.upsertInto(snap.nodes, ix.nodes.drop("label")),
+        snap.locations.join(ix.locations.select("filePath").distinct(),
+          Seq("filePath"), "left_anti"))
     val edges2 = snap.edges.unionByName(ix.edges)
       .dropDuplicates("src", "rel_type", "dst")
     snap = GraphSnapshot(nodes2, edges2,
-      snap.locations.unionByName(ix.locations))
+      baseLocations.unionByName(ix.locations))
     dir.foreach(d => { Snapshot.write(snap, d); snap = Snapshot.read(spark, d) })
   }
 

@@ -18,6 +18,21 @@ import graft.enrich.Closure
   * per-file parsing is executor-parallel (C2 = partition parallelism) and
   * the merge is two shuffles (SURVEY.md §2.A), so ingest scales with the
   * cluster, not the lock.
+  *
+  * Physical plan. At this input size the cost is per task and per job,
+  * not per byte, so:
+  *   - [[readRepo]] spreads the directory walk and the content reads over
+  *     `spark.sparkContext.defaultParallelism` partitions (one per core),
+  *     and every later scan of the parsed events inherits that count;
+  *   - [[indexFiles]] caches the parsed events only while the four
+  *     projections read from them are pinned (merged nodes, merged edges,
+  *     locations, imports), then releases the cache — ingest leaves no
+  *     entry in the session's cache manager;
+  *   - [[enrich]] pins its join tail (`flagged`) once, so the snapshot
+  *     write's three tables (edges, the stub nodes built from them, and
+  *     the locations whose dropped references they decide) read that
+  *     leaf instead of each re-running the joins.
+  * The graph itself does not depend on the partition count.
   */
 object IndexPipeline {
 
@@ -45,8 +60,9 @@ object IndexPipeline {
       try topStream.iterator().asScala
         .map(p => rootPath.relativize(p).toString).toSeq.sorted
       finally topStream.close()
+    val par = spark.sparkContext.defaultParallelism
     spark.createDataset(top)
-      .repartition(math.max(1, math.min(top.size, 64)))
+      .repartition(math.max(1, math.min(top.size, par)))
       .flatMap { rel =>
         val p = Paths.get(root, rel)
         if (Files.isRegularFile(p)) {
@@ -60,7 +76,7 @@ object IndexPipeline {
           finally s.close()
         } else Iterator.empty
       }
-      .repartition(64)
+      .repartition(par)
       .map { rel =>
         val bytes = Files.readAllBytes(Paths.get(root, rel))
         SourceFile(rel, decodeSource(bytes))
@@ -159,8 +175,6 @@ object IndexPipeline {
     }.cache()
     val symbolEvents = events.flatMap(_._1)
     val edgeEvents = events.flatMap(_._2)
-    val locations = events.flatMap(_._3)
-    val imports = events.flatMap(_._4)
     val nodes0 = Merge.mergeNodes(symbolEvents.toDF())
     val edges = Merge.mergeEdges(edgeEvents.toDF())
       .pin(eager = true)
@@ -170,8 +184,13 @@ object IndexPipeline {
     // enough joins that carrying the merge plan underneath it pushes
     // task binaries past the MiB warning threshold — and this is a
     // write pipeline, so materializing the merged tables is the normal
-    // posture (the reference persists here too)
-    Indexed(nodes, edges, locations.toDF(), imports.toDF())
+    // posture (the reference persists here too). enrich reads `imports`
+    // in six places and the snapshot write reads `locations`, so both
+    // are pinned too; after that nothing reads `events` again.
+    val locations = events.flatMap(_._3).toDF().pin(eager = true)
+    val imports = events.flatMap(_._4).toDF().pin(eager = true)
+    events.unpersist()
+    Indexed(nodes, edges, locations, imports)
   }
 
   /** D2 — re-export chasing: an edge/import target `pkg.name` where `pkg`
@@ -330,6 +349,9 @@ object IndexPipeline {
       .withColumn("_dropme",
         col("rel_type") === Rel.Call && col("_dstdef").isNull &&
           col("_def").isNull && col("_clsdef").isNotNull && col("_dyn").isNull)
+      // read by the edges, the stubs built from them and the locations:
+      // unpinned, the snapshot write re-runs this join tail per table
+      .pin(eager = true)
     val finalEdges = flagged
       .filter(!col("_dropme"))
       .withColumn("dst", coalesce(col("_def"), col("dst")))

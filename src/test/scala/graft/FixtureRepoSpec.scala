@@ -63,4 +63,31 @@ class FixtureRepoSpec extends AnyFunSuite {
       .select("symbolFullName").collect().map(_.getString(0)).toSet
     assert(errs === Set("broken"))
   }
+
+  test("the graph does not depend on the partition count of the input") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    def graph(parts: Int) = {
+      val files = IndexPipeline.readRepo(spark, resource("fixture_repo"))
+        .repartition(parts)
+      val g = IndexPipeline.enrich(
+        IndexPipeline.indexFiles(spark, files, "t1"), "t1")
+      (rows(g.nodes), rows(g.edges), rows(g.locations))
+    }
+    val (n1, e1, l1) = graph(1)
+    val (n7, e7, l7) = graph(7)
+    assert(n1 === n7)
+    assert(e1 === e7)
+    assert(l1 === l7)
+  }
+
+  test("ingest leaves no cached plan behind") {
+    // the cache manager is session-global: other suites' leftovers must
+    // not mask (or fake) this ingest's own leak
+    spark.sqlContext.clearCache()
+    graft.api.GraphDatabase.inMemory(spark)
+      .indexRepo(resource("fixture_repo"), "t1")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "indexRepo left plans in the cache manager")
+  }
 }

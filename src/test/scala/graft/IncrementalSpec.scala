@@ -91,4 +91,16 @@ class IncrementalSpec extends AnyFunSuite {
       .select("task_ids").as[Seq[String]].collect()(0)
     assert(bTasks.sorted === Seq("v1", "v2"))
   }
+
+  test("D6: re-indexing an unchanged file replaces its locations") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graftloc")
+    Files.write(dir.resolve("a.py"), aV1.getBytes("UTF-8"))
+    Files.write(dir.resolve("b.py"), b.getBytes("UTF-8"))
+    val db = graft.api.GraphDatabase.inMemory(spark)
+    db.indexRepo(dir.toString, "v1")
+    val before = db.locations.count()
+    db.updateVersion("v1", "v2", Seq("b.py"), Some(dir.toString))
+    assert(db.locations.count() === before)
+  }
 }

@@ -841,4 +841,15 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"),
       s"no cartesian anywhere in training; plan:\n$plan")
   }
+
+  test("enrich's edge frame reads its pinned join tail: no Join left " +
+      "for each snapshot table to re-run") {
+    import graft.indexer.IndexPipeline
+    val repo = getClass.getClassLoader.getResource("fixture_repo").getPath
+    val edges = IndexPipeline.run(spark, repo, "t1").edges
+    val plan = edges.queryExecution.optimizedPlan
+    assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans
+        .logical.Join => j }.isEmpty,
+      s"enrich edges must not carry a join; plan:\n$plan")
+  }
 }
