@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Bounded
 import graft.ops.Pin._
 
 /** B10 — `execute_query(cypher)` for the Cypher subset the reference's
@@ -2847,24 +2848,22 @@ object CypherLite {
     * d = first-reach level, par = MIN predecessor among the settling
     * level's frontier rows (every edge OCCURRENCE a row, as in the
     * groupBy), np = Σ np(pred) over edge occurrences (exact longs, the
-    * fused count DP). At cluster scale the limit(k+1) edge probe misses
-    * and the distributed loop carries the work; specs force it via
-    * `spark.graft.cypher.localThreshold = 0`. Returns (s, v, d, par,
-    * np) per settled pair. */
+    * fused count DP). At cluster scale the bounded edge probe
+    * ([[graft.ops.Bounded]]) misses and the distributed loop carries the
+    * work; specs force it via `spark.graft.localThreshold = 0`. Returns
+    * (s, v, d, par, np) per settled pair. */
   private def spathBfsLocal(e: DataFrame, seedF: DataFrame, maxH: Int,
       seedCap: Int = 64)
       : Option[Seq[(String, String, Long, Option[String], Long)]] = {
-    val th = e.sparkSession.conf
-      .getOption("spark.graft.cypher.localThreshold")
-      .map(_.toInt).getOrElse(200000)
+    val th = Bounded.rows(e.sparkSession)
     if (th <= 0) return None
     // seeds first (tiny); a large seed set takes the distributed arm —
     // driver work is Σ_seed |reached edges|, bounded only for few seeds
-    val seeds = seedF.limit(seedCap + 1).collect().map(_.getString(0))
-    if (seeds.length > seedCap) return None
-    val probe = e.select(col("src"), col("dst")).limit(th + 1)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    if (probe.length > th) return None
+    val seeds = Bounded.take(seedF, seedCap)(_.getString(0))
+      .getOrElse(return None)
+    val probe = Bounded.take(e.select(col("src"), col("dst")), th)(
+        r => (r.getString(0), r.getString(1)))
+      .getOrElse(return None)
     val adj = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[String]]
     probe.foreach { case (u, w) =>

@@ -2,6 +2,7 @@ package graft.enrich
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Bounded
 import graft.ops.Pin._
 
 /** Iterative graph analytics on the edge-list representation — the
@@ -139,7 +140,7 @@ object Analytics {
   }
 
   def stronglyConnected(edges: DataFrame,
-      localThreshold: Int = 200000): DataFrame = {
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     // r13: the q77 probe discipline applied to the WHOLE operator — a
     // graph under the probe threshold skips the distributed trim AND
     // the coloring loop entirely: the driver-local Tarjan kernel labels
@@ -150,31 +151,20 @@ object Analytics {
     // the probe misses and the trim + Orzan loop below (with a post-trim
     // core probe) carry the work. String-keyed graphs only (the kernel's
     // key type) — others take the loop unconditionally.
-    def tarjanAll(pairs: Array[(String, String)]): DataFrame = {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val m = tarjanNontrivial(pairs)
-      pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-        .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
-    }
-    brandesProbe(edges, localThreshold).foreach(arr => return tarjanAll(arr))
+    val spark = edges.sparkSession
+    localEdges(edges, localThreshold)
+      .foreach(arr => return tarjanFrame(spark, arr))
     // eager: sccTrim's first layer reads e0 along the src- and
     // dst-distinct branches of one job — lazy duplicated the distinct
     val e0 = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).pin(eager = true)
-    val isStringKeyed = e0.schema.head.dataType ==
-      org.apache.spark.sql.types.StringType
     val (trimmed, eTrim, remTrim) = sccTrim(e0)
     // post-trim probe: the acyclic periphery is gone, so the surviving
     // cyclic core may fit the kernel even when the full graph did not
-    if (isStringKeyed) {
-      val probe = eTrim.limit(localThreshold + 1)
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      if (probe.length <= localThreshold) {
-        val core = tarjanAll(probe)
-        return trimmed.fold(core)(t =>
-          t.select(col("v"), col("c").as("scc")).unionByName(core))
-      }
+    localEdges(eTrim, localThreshold).foreach { arr =>
+      val core = tarjanFrame(spark, arr)
+      return trimmed.fold(core)(t =>
+        t.select(col("v"), col("c").as("scc")).unionByName(core))
     }
     var e = eTrim
     var rem = remTrim
@@ -278,6 +268,27 @@ object Analytics {
     reached
   }
 
+  /** The string-keyed (src, dst) edge list when it fits `k` rows
+    * ([[Bounded.take]]) — the input of the driver kernels. Other key
+    * types take the distributed arm. */
+  private def localEdges(edges: DataFrame,
+      k: Int): Option[Array[(String, String)]] = {
+    val e = edges.select(col("src"), col("dst"))
+    if (e.schema.head.dataType != org.apache.spark.sql.types.StringType)
+      None
+    else Bounded.take(e, k)(r => (r.getString(0), r.getString(1)))
+  }
+
+  /** Driver-Tarjan SCC labels (v, scc) for every endpoint of `pairs`:
+    * the min member of its class, itself when the class is trivial. */
+  private def tarjanFrame(spark: SparkSession,
+      pairs: Array[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val m = tarjanNontrivial(pairs)
+    pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
+      .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
+  }
+
   /** Iterative Tarjan over a driver-local edge list — the kernel of the
     * incremental-SCC local path (the c3 discipline: a bounded probe
     * collects the delta-sized affected subgraph; anything bigger takes
@@ -374,7 +385,8 @@ object Analytics {
     * rounds = condensation depth; SCC only on the (tiny) affected
     * subgraph; one broadcast-sized relabel join over the label table. */
   def stronglyConnectedIncremental(newEdges: DataFrame, prev: DataFrame,
-      prevCond: DataFrame, localThreshold: Int = 200000): DataFrame = {
+      prevCond: DataFrame,
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     val spark = newEdges.sparkSession
     val e = newEdges.select(col("src"), col("dst"))
     val prevL = prev.select(col("v"), col("scc"))
@@ -423,11 +435,9 @@ object Analytics {
     // distributed BFS passes buy nothing a one-pass local Tarjan
     // doesn't give. At scale the condensation is corpus-sized, the
     // probe misses, and the BFS-bounded region path carries the work.
-    val augProbe = aug.limit(localThreshold + 1)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    if (augProbe.length <= localThreshold) {
+    localEdges(aug, localThreshold).foreach { arr =>
       import spark.implicits._
-      return relabel(tarjanNontrivial(augProbe).toSeq.toDF("c", "_m"))
+      return relabel(tarjanNontrivial(arr).toSeq.toDF("c", "_m"))
     }
     // forward reach from the new heads bounds every possible merge: a
     // nontrivial SCC of aug must contain a new pair (the condensation
@@ -443,13 +453,11 @@ object Analytics {
     // merge classes: driver-local Tarjan when the affected subgraph is
     // delta-sized (the c3 kernel discipline — bounded probe, distributed
     // fallback above the threshold, identical labels either way)
-    val probe = subF.limit(localThreshold + 1)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val merged: DataFrame =
-      if (probe.length <= localThreshold) {
+    val merged: DataFrame = localEdges(subF, localThreshold) match {
+      case Some(arr) =>
         import spark.implicits._
-        tarjanNontrivial(probe).toSeq.toDF("c", "_m")
-      } else {
+        tarjanNontrivial(arr).toSeq.toDF("c", "_m")
+      case None =>
         // distributed: shrink further with a backward pass confined to
         // the fwd-induced subgraph (cycle nodes lie on both sides), then
         // run the full coloring SCC on the region-induced subgraph
@@ -463,9 +471,9 @@ object Analytics {
           .join(region.withColumnRenamed("v", "src"), Seq("src"))
           .join(region.withColumnRenamed("v", "dst"), Seq("dst"))
           .select(col("src"), col("dst"))
-        stronglyConnected(sub)
+        stronglyConnected(sub, localThreshold)
           .select(col("v").as("c"), col("scc").as("_m"))
-      }
+    }
     relabel(merged)
   }
 
@@ -520,17 +528,17 @@ object Analytics {
     * corpus version (`scclabels`/`scccond`), so the relaxation loop
     * reads two parquet scans and touches the base graph zero times. */
   def condensationLayersOver(condEdges: DataFrame,
-      scc0: DataFrame, localThreshold: Int = 200000): DataFrame = {
+      scc0: DataFrame,
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     // r19: both inputs are bounded probes (condensation edges + DISTINCT
     // labels — never the corpus-sized vertex table), so at gate scale the
     // max-plus fixpoint runs as one driver pass of exact longs; at 100 TB
     // either probe misses and the relaxation loop below carries the work.
     val spark = condEdges.sparkSession
-    brandesProbe(condEdges.select(col("src_scc").as("src"),
+    localEdges(condEdges.select(col("src_scc").as("src"),
         col("dst_scc").as("dst")), localThreshold).foreach { ceArr =>
-      val labs = scc0.select(col("scc")).distinct()
-        .limit(localThreshold + 1).collect().map(_.getString(0))
-      if (labs.length <= localThreshold) {
+      Bounded.take(scc0.select(col("scc")).distinct(), localThreshold)(
+          _.getString(0)).foreach { labs =>
         import spark.implicits._
         val layer = scala.collection.mutable.HashMap.empty[String, Long]
         labs.foreach(l => layer(l) = 0L)
@@ -597,7 +605,8 @@ object Analytics {
     * convention) so all three spellings — coloring loop, Pregel, oracle
     * closure — agree on the min-member label. */
   def stronglyConnectedGraphX(spark: SparkSession, edges: DataFrame,
-      numIter: Int = 12, localThreshold: Int = 200000): DataFrame = {
+      numIter: Int = 12,
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     import spark.implicits._
     // r19: the DF path's PRE-trim probe, ported (the c3 discipline —
@@ -611,11 +620,8 @@ object Analytics {
     // limit(k+1) pulls at most k+1 rows, the probe misses, and trim +
     // Pregel carry the work; specs force the Pregel arm via
     // localThreshold = 0.
-    brandesProbe(edges, localThreshold).foreach { arr =>
-      val m = tarjanNontrivial(arr)
-      return arr.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-        .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
-    }
+    localEdges(edges, localThreshold)
+      .foreach(arr => return tarjanFrame(spark, arr))
     // the same TRIM pre-pass as the DataFrame path: the DAG periphery
     // (most of the fixture) never enters Pregel at all
     // eager: sccTrim's first layer reads e0 along the src- and
@@ -633,18 +639,10 @@ object Analytics {
     // one-pass local Tarjan on it. At cluster scale the probe misses
     // (limit(k+1) pulls at most k+1 rows, never the graph) and Pregel
     // carries the work; specs force the Pregel arm via localThreshold=0.
-    if (core.schema.head.dataType ==
-        org.apache.spark.sql.types.StringType) {
-      val probe = core.limit(localThreshold + 1)
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      if (probe.length <= localThreshold) {
-        val m = tarjanNontrivial(probe)
-        val coreLabeled = probe.iterator
-          .flatMap(p => Iterator(p._1, p._2)).toSet
-          .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
-        return trimmed.fold(coreLabeled)(t =>
-          t.select(col("v"), col("c").as("scc")).unionByName(coreLabeled))
-      }
+    localEdges(core, localThreshold).foreach { arr =>
+      val coreLabeled = tarjanFrame(spark, arr)
+      return trimmed.fold(coreLabeled)(t =>
+        t.select(col("v"), col("c").as("scc")).unionByName(coreLabeled))
     }
     val keyed = core.select(
       xxhash64(col("src")).as("sid"), col("src"),
@@ -713,10 +711,10 @@ object Analytics {
     * radius: (h, nf = Σ_v |B_h(v)| estimate, reached_frac vs h=rounds).
     * N(h)'s growth curve is the effective-diameter instrument. */
   def anf(edges: DataFrame, rounds: Int, m: Int = 16,
-      localThreshold: Int = 200000): DataFrame = {
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     require(m == 16, "alpha is pinned for m = 16 (0.673)")
     require(rounds >= 1 && rounds <= 12, s"anf rounds $rounds out of budget")
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    localEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return anfLocal(arr, rounds, m).toDF("h", "nf")
@@ -1046,13 +1044,13 @@ object Analytics {
     * (Only equal when the DataFrame loop also converges within its
     * maxIter — true for any graph with diameter ≤ 20.) */
   def connectedComponentsGraphX(spark: SparkSession, edges: DataFrame,
-      localThreshold: Int = 200000): DataFrame = {
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     import spark.implicits._
     // the DF arm's bounded probe, ported (the stronglyConnectedGraphX
     // r19 shape): min-label union-find IS the Pregel + component-min
     // relabel fixpoint; Pregel carries the work when the probe misses
-    ccProbeLocal(edges, localThreshold).foreach(return _)
+    localUnionFind(edges, localThreshold).foreach(return _)
     val keyed = edges.select(
       xxhash64(col("src")).as("sid"), col("src"),
       xxhash64(col("dst")).as("did"), col("dst")).cache()
@@ -1077,8 +1075,9 @@ object Analytics {
     * fixpoint is reached once `iterations` ≥ graph depth from the source;
     * the oracle unrolls the identical min-plus recurrence. */
   def bfsDistances(edges: DataFrame, source: String,
-      iterations: Int = 10, localThreshold: Int = 200000): DataFrame = {
-    brandesProbe(edges, localThreshold).foreach { arr =>
+      iterations: Int = 10,
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+    localEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return bfsLocal(arr, Seq(source), iterations)
@@ -1129,8 +1128,9 @@ object Analytics {
     * depth, or earlier when a frontier empties) is identical to the
     * min-then-sum recurrence the oracle unrolls. */
   def shortestPathCounts(edges: DataFrame, source: String,
-      iterations: Int = 10, localThreshold: Int = 200000): DataFrame = {
-    brandesProbe(edges, localThreshold).foreach { arr =>
+      iterations: Int = 10,
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+    localEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return brandesLocalState(arr, Seq(source), iterations)
@@ -1142,23 +1142,6 @@ object Analytics {
     val src0 = e.sparkSession.range(1)
       .select(lit(source).as("v"), lit(0L).as("d"), lit(1L).as("sig"))
     sigmaLevels(e, src0, Seq("v"), iterations).reduce(_.unionByName(_))
-  }
-
-  /** Bounded probe for the Brandes-family driver kernel (the c3 / SCC
-    * discipline): collect the edge list iff it fits `localThreshold`
-    * (string-keyed only); at cluster scale limit(k+1) pulls at most k+1
-    * rows, the probe misses, and the level-synchronous distributed
-    * passes carry the work. Specs force the distributed arm with
-    * localThreshold = 0. */
-  private def brandesProbe(edges: DataFrame,
-      localThreshold: Int): Option[Array[(String, String)]] = {
-    if (localThreshold <= 0) return None
-    val e = edges.select(col("src"), col("dst"))
-    if (e.schema.head.dataType !=
-        org.apache.spark.sql.types.StringType) return None
-    val probe = e.limit(localThreshold + 1)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    if (probe.length <= localThreshold) Some(probe) else None
   }
 
   /** Driver-local Brandes state kernel — the exact recurrences of
@@ -1322,8 +1305,8 @@ object Analytics {
     * @return (v, d, betweenness) — δ rounded to 6, for reachable vertices
     */
   def betweennessFromSource(edges: DataFrame, source: String,
-      depth: Int = 10, localThreshold: Int = 200000): DataFrame = {
-    brandesProbe(edges, localThreshold).foreach { arr =>
+      depth: Int = 10, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+    localEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return brandesLocalState(arr, Seq(source), depth)
@@ -1367,10 +1350,10 @@ object Analytics {
     * the fused plan shares the per-source-replay oracle. Returns
     * (v, betweenness) for vertices reachable from ≥1 landmark. */
   def betweennessLandmarks(edges: DataFrame, sources: Seq[String],
-      depth: Int = 10, localThreshold: Int = 200000): DataFrame = {
+      depth: Int = 10, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    localEdges(edges, localThreshold).foreach { arr =>
       // combine locally: per v, Σ over landmarks of round-6 δ (own-source
       // row excluded), rounded to 6 — the distributed groupBy's spelling;
       // round-6 quantization absorbs summation order exactly as it does
@@ -1411,10 +1394,10 @@ object Analytics {
     * replayable-float discipline). Returns (src, dst, ebtw) for DAG
     * edges reachable from ≥1 landmark. */
   def edgeBetweennessLandmarks(edges: DataFrame, sources: Seq[String],
-      depth: Int = 10, localThreshold: Int = 200000): DataFrame = {
+      depth: Int = 10, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    localEdges(edges, localThreshold).foreach { arr =>
       // per-(s, edge-occurrence) round-10 terms summed per (src, dst),
       // rounded to 6 — the distributed e ⋈ state join's spelling, with
       // every duplicate edge row contributing exactly as the join does
@@ -1651,10 +1634,10 @@ object Analytics {
     * per landmark is identical to [[bfsDistances]], so per-landmark
     * oracles replay unchanged. */
   def bfsDistancesLandmarks(edges: DataFrame, sources: Seq[String],
-      iterations: Int, localThreshold: Int = 200000): DataFrame = {
+      iterations: Int, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    localEdges(edges, localThreshold).foreach { arr =>
       return bfsLocal(arr, sources, iterations).toDF("s", "v", "d")
     }
     val e = edges.select(col("src"), col("dst"))
@@ -2674,55 +2657,25 @@ object Analytics {
     * on the UNDIRECTED view of edges(src, dst). Deterministic; converges
     * in O(diameter) iterations. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      localThreshold: Int = 200000): DataFrame = {
-    ccProbeLocal(edges, localThreshold).foreach(return _)
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+    localUnionFind(edges, localThreshold).foreach(return _)
     val und = undirectedView(edges)
     ccFrom(und, und.select(col("src").as("v")).distinct()
       .withColumn("component", col("v")), maxIter)
   }
 
-  /** Bounded probe + driver union-find for the CC arms (the SCC arm's
-    * c3 discipline): labels = class minimum, exactly the fixpoint of
-    * both the min-label propagation loop and the Pregel twin's
-    * component-min relabel. At cluster scale limit(k+1) pulls at most
-    * k+1 rows and the probe misses; specs force the distributed arms
-    * via localThreshold = 0. */
-  private def ccProbeLocal(edges: DataFrame,
-      localThreshold: Int): Option[DataFrame] = {
-    if (localThreshold <= 0) return None
+  /** Driver union-find for the CC arms when `edges` (src, dst) fits `k`
+    * rows ([[Bounded.take]]): (v, component) with component = class
+    * minimum, exactly the fixpoint of both the min-label propagation
+    * loop and the Pregel twin's component-min relabel, in the key type
+    * of `edges` (string corpus keys, longs in specs). Specs force the
+    * distributed arms via localThreshold = 0. */
+  private def localUnionFind(edges: DataFrame,
+      k: Int): Option[DataFrame] = {
     val e = edges.select(col("src"), col("dst"))
-    val probe = e.limit(localThreshold + 1)
-      .collect().map(r => (r.get(0), r.get(1)))
-    if (probe.length > localThreshold) return None
-    val vt = e.schema.head.dataType
-    val rows = unionFindMin(probe).toSeq
-      .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-    Some(edges.sparkSession.createDataFrame(
-      new java.util.ArrayList(
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v", vt),
-        org.apache.spark.sql.types.StructField("component", vt)))))
-  }
-
-  /** [[connectedComponents]] for PAIR graphs known to be small relative
-    * to the corpus (near-dup candidate pairs, LSH cluster edges): the
-    * q77/q59 probe discipline — a bounded `limit(k+1)` collect feeds
-    * the driver-local min-label union-find, the distributed fixpoint
-    * is the fallback above the threshold, identical labels either way
-    * (both converge to the class minimum). The win is rounds × job
-    * overhead on graphs whose edge count is a vanishing fraction of
-    * the corpus — exactly the near-dup shape, where |pairs| ≪ |docs|
-    * at any scale or the dedup would be removing most of the corpus. */
-  def connectedComponentsBounded(edges: DataFrame,
-      maxIter: Int = 20, localThreshold: Int = 200000): DataFrame = {
-    val e1 = edges.select(col("src"), col("dst"))
-      .pin(eager = true)
-    val probe = e1.limit(localThreshold + 1)
-      .collect().map(r => (r.get(0), r.get(1)))
-    if (probe.length <= localThreshold) {
-      val vt = e1.schema.head.dataType
-      val rows = unionFindMin(probe).toSeq
+    Bounded.take(e, k)(r => (r.get(0), r.get(1))).map { pairs =>
+      val vt = e.schema.head.dataType
+      val rows = unionFindMin(pairs).toSeq
         .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
       edges.sparkSession.createDataFrame(
         new java.util.ArrayList(
@@ -2730,7 +2683,7 @@ object Analytics {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("v", vt),
           org.apache.spark.sql.types.StructField("component", vt))))
-    } else connectedComponents(e1, maxIter)
+    }
   }
 
   /** Incremental CC by CONTRACTION — the D5 carry-forward discipline
@@ -2749,7 +2702,8 @@ object Analytics {
     * provably EQUALS the full recomputation — the gate shares q11's
     * oracle. */
   def connectedComponentsIncremental(edges: DataFrame, prev: DataFrame,
-      maxIter: Int = 20, localThreshold: Int = 200000): DataFrame = {
+      maxIter: Int = 20,
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     // DIRECTED edges suffice here (r13 — the q59 drift fix): the label
     // mapping only needs each edge's endpoint pair once, and the
     // contracted graph is re-undirected inside ccFrom anyway. The old
@@ -2776,25 +2730,11 @@ object Analytics {
     // limit(k+1) probe, distributed fallback above it, identical labels
     // either way) replaces rounds of checkpointed fixpoint jobs whose
     // per-round overhead dominated at this graph size (r13).
-    val probe = contracted.limit(localThreshold + 1)
-      .collect().map(r => (r.get(0), r.get(1)))
-    val merged: DataFrame =
-      if (probe.length <= localThreshold) {
-        // label type follows the caller's vertex type (string corpus
-        // keys here, longs in specs) — rebuild with the source schema
-        val vt = contracted.schema.head.dataType
-        val rows = unionFindMin(probe).toSeq
-          .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-        edges.sparkSession.createDataFrame(
-          new java.util.ArrayList(
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("v", vt),
-            org.apache.spark.sql.types.StructField("component", vt))))
-      } else ccFrom(undirectedView(contracted),
+    val merged = localUnionFind(contracted, localThreshold).getOrElse(
+      ccFrom(undirectedView(contracted),
         contracted.select(col("src").as("v"))
           .union(contracted.select(col("dst").as("v"))).distinct()
-          .withColumn("component", col("v")), maxIter)
+          .withColumn("component", col("v")), maxIter))
     // merged: (v = old label, component = new min label) → relabel
     seed
       .join(broadcast(merged
@@ -3085,7 +3025,8 @@ object Analytics {
     * explicit budgets with LOUD require failures (the q65/q67/q68
     * discipline), matched by the oracle's unroll. */
   def boruvkaMsf(edges: DataFrame, maxRounds: Int = 6,
-      propHops: Int = 12, localThreshold: Int = 200000): DataFrame = {
+      propHops: Int = 12,
+      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
     val spark = edges.sparkSession
     val e0 = edges.select(
         least(col("src"), col("dst")).as("src"),
@@ -3131,19 +3072,9 @@ object Analytics {
         // component, so from round 1 on it is far below the threshold
         // even at cluster scale); distributed min-label propagation is
         // the fallback above it, identical labels (class minimum)
-        val mgProbe = mg.limit(localThreshold + 1)
-          .collect().map(r => (r.get(0), r.get(1)))
-        val lbl: DataFrame = if (mgProbe.length <= localThreshold) {
-          val vt = mg.schema.head.dataType
-          val rows = unionFindMin(mgProbe).toSeq
-            .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-          spark.createDataFrame(
-            new java.util.ArrayList(
-              scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("c", vt),
-              org.apache.spark.sql.types.StructField("lbl", vt))))
-        } else {
+        val lbl: DataFrame = localUnionFind(
+            mg.select(col("a").as("src"), col("b").as("dst")), localThreshold)
+          .map(_.toDF("c", "lbl")).getOrElse {
           var l0 = mg.select(col("a").as("c")).distinct()
             .withColumn("lbl", col("c")).pin(eager = false)
           // THREE hops per materialization (the ccFrom amortization):

@@ -2,6 +2,7 @@ package graft.enrich
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Bounded
 import graft.ops.Pin._
 
 /** Iterative graph closure — the reference's transitive enrichment passes
@@ -156,30 +157,26 @@ object Closure {
     * an inheritance CYCLE (illegal Python) never linearize and are
     * absent from the result.
     *
-    * ADAPTIVE: an inheritance graph under `c3LocalThreshold` edges
-    * (default 100k — class hierarchies are broadcast-sized metadata
-    * even for enormous repos) linearizes AT THE DRIVER with the same
-    * [[c3Merge]] kernel and parallelizes the result, skipping
-    * one-Spark-job-per-hierarchy-LEVEL fixpoint overhead; above it the
-    * distributed fixpoint runs unchanged. Identical output either way
-    * (MroLocalSpec pins the equivalence). */
+    * ADAPTIVE: an inheritance graph within the session's row budget
+    * (`spark.graft.localThreshold`, see [[graft.ops.Bounded]] — class
+    * hierarchies are broadcast-sized metadata even for enormous repos)
+    * linearizes AT THE DRIVER with the same [[c3Merge]] kernel and
+    * parallelizes the result, skipping one-Spark-job-per-hierarchy-LEVEL
+    * fixpoint overhead; above it the distributed fixpoint runs
+    * unchanged. Identical output either way (ClosureSpec pins the
+    * equivalence). */
   def c3Linearize(inheritsOrd: DataFrame): DataFrame = {
     val spark = inheritsOrd.sparkSession
-    val threshold = spark.conf
-      .getOption("spark.graft.c3LocalThreshold").map(_.toInt)
-      .getOrElse(100000)
-    val head = inheritsOrd.select(col("src"), col("dst"),
-        coalesce(col("ord"), lit(0)).cast("int").as("ord"))
-      .limit(threshold + 1).collect()
-    if (head.length <= threshold) return c3LinearizeLocal(spark,
-      head.map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq)
+    val edges = inheritsOrd.select(col("src"), col("dst"),
+      coalesce(col("ord"), lit(0)).cast("int").as("ord"))
+    Bounded.take(edges, Bounded.rows(spark))(
+        r => (r.getString(0), r.getString(1), r.getInt(2)))
+      .foreach(head => return c3LinearizeLocal(spark, head.toSeq))
     val c3Udf = udf { (cls: String, bm: Seq[Row]) =>
       val bases = bm.map(_.getString(1)).toList
       val mros = bm.map(_.getSeq[String](2).toList)
       c3Merge(cls, mros :+ bases)
     }
-    val edges = inheritsOrd.select(col("src"), col("dst"),
-      coalesce(col("ord"), lit(0)).cast("int").as("ord"))
     val parents = edges.groupBy("src").agg(
       array_sort(collect_list(struct(col("ord"), col("dst")))).as("bases"))
     val subclassed = edges.select(col("src").as("cls")).distinct()

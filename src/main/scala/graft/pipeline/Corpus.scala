@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.ops.Bounded
 import graft.ops.Pin._
 
 /** Corpus-preparation operators a large-scale training-data pipeline needs
@@ -1998,14 +1999,14 @@ object Corpus {
     * back (the bpeFertility discipline). Below `kernelThreshold`
     * distinct words the segmentation short-circuits through the SAME
     * [[viterbiPieces]] kernel driver-side (the bounded union-find/Tarjan
-    * probe discipline: limit(k+1) decides BEFORE rows are held, the
-    * spec forces the distributed path at threshold 0 and pins
+    * probe discipline: [[graft.ops.Bounded]] decides BEFORE rows are
+    * held, the spec forces the distributed path at threshold 0 and pins
     * equality). The oracle replays training AND the application DP
     * verbatim. */
   def unigramFertility(docs: DataFrame, emRounds: Int = 2,
       vocabCap: Int = 2000, maxLen: Int = 8, maxPiece: Int = 4,
       seedCap: Int = 200, vocabSize: Int = 64,
-      kernelThreshold: Int = 200000): DataFrame = {
+      kernelThreshold: Int = Bounded.DefaultRows): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val m = unigramTrain(docs, emRounds, vocabCap, maxLen, maxPiece,
@@ -2016,14 +2017,11 @@ object Corpus {
       .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
       .pin(eager = true)
     val distinctWords = langWords.select(col("word")).distinct()
-    val probe = distinctWords.limit(kernelThreshold + 1)
-      .as[String].collect()
-    val nsub =
-      if (probe.length <= kernelThreshold)
-        probe.sorted.toSeq.map(w => (w,
-          viterbiPieces(w, maxPiece, m.appWts, Some(m.unkLw)).length.toLong))
-          .toDF("word", "n_pieces")
-      else unigramSegmentRelational(distinctWords, m, maxLen, maxPiece)
+    val nsub = Bounded.take(distinctWords, kernelThreshold)(_.getString(0))
+      .map(_.sorted.toSeq.map(w => (w,
+        viterbiPieces(w, maxPiece, m.appWts, Some(m.unkLw)).length.toLong))
+        .toDF("word", "n_pieces"))
+      .getOrElse(unigramSegmentRelational(distinctWords, m, maxLen, maxPiece))
     langWords.join(nsub, Seq("word"))
       .groupBy("lang")
       .agg(sum(col("cnt")).cast("long").as("n_words"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftExpressions
 import graft.functions.TextFunctions._
+import graft.ops.Pin._
 
 /** Deduplication operators for the training-data pipeline, over a
   * documents(doc_id, text, ...) table.
@@ -417,8 +418,10 @@ object Dedup {
       .select(col("a").as("src"), col("b").as("dst"))
     // bounded driver union-find kernel (r13): near-dup pair graphs are
     // a vanishing fraction of the corpus by construction, so the q59
-    // probe discipline applies — distributed fallback above 200k pairs
-    val cc = graft.enrich.Analytics.connectedComponentsBounded(pairs)
+    // probe discipline applies — distributed fallback above the budget.
+    // Eager pin: the probe and the fallback both read the pairs.
+    val cc = graft.enrich.Analytics
+      .connectedComponents(pairs.pin(eager = true))
       .select(col("v").as("doc_id"), col("component").as("keeper"))
     docs.select(col("doc_id")).join(cc, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("keeper"), col("doc_id")).as("keeper"))

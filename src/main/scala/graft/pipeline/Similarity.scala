@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{CosineSim, GraftExpressions, SignLshSig}
+import graft.ops.Bounded
 import graft.ops.Pin._
 
 /** Similarity search over an embedding column (Array[Float]).
@@ -189,20 +190,20 @@ object Similarity {
       // the sampling coin is the LCG hash (the epochRepeat spelling —
       // the string rolling hash is near-LINEAR over consecutive integer
       // ids and clumps the sample); per-round salt in the increment
-      // probe discipline (r14): limit(cap+1) BEFORE the collect — the
-      // driver holds at most maxCandidates+1 rows even when the sample
-      // blows up, and the require fires on the probe, not after the
-      // fact (the q77 Tarjan-probe spelling). Within the bound the
-      // limit is a no-op, so the sampled set is unchanged.
-      val probe = d2.filter(
+      // probe discipline (r14): a bounded probe (graft.ops.Bounded)
+      // BEFORE the collect — the driver holds at most maxCandidates+1
+      // rows even when the sample blows up, and the require fires on
+      // the probe, not after the fact (the q77 Tarjan-probe spelling).
+      // Within the bound the limit is a no-op, so the sampled set is
+      // unchanged.
+      val probe = Bounded.take(d2.filter(
           (pmod(col("vec_id") * lit(1103515245L) + lit(12345L * r),
             lit(2147483647L)) % lit(1000000L)).cast("double") * lit(phi) <
           lit(l * 1000000.0) * col("d2"))
-        .select(col("vec_id")).limit(maxCandidates + 1)
-        .as[Long].collect()
-      require(probe.length <= maxCandidates,
+        .select(col("vec_id")), maxCandidates)(_.getLong(0))
+      require(probe.isDefined,
         s"k-means|| candidate blow-up (> $maxCandidates sampled in round $r)")
-      candIds = (candIds ++ probe.sorted.toVector).distinct
+      candIds = (candIds ++ probe.get.sorted.toVector).distinct
       require(candIds.length <= maxCandidates,
         s"k-means|| candidate blow-up (${candIds.length} > $maxCandidates)")
     }

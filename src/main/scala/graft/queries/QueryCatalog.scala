@@ -1647,9 +1647,11 @@ object QueryCatalog {
       .select(col("a").as("src"), col("b").as("dst"))
     // the pair graph is tiny by construction (bucket-capped LSH
     // pairs), so the bounded driver union-find kernel (r13 — the q59
-    // probe discipline, distributed fallback above 200k pairs) replaces
-    // rounds of fixpoint jobs; labels identical (class minimum)
-    val cc = graft.enrich.Analytics.connectedComponentsBounded(pairs)
+    // probe discipline, distributed fallback above the budget) replaces
+    // rounds of fixpoint jobs; labels identical (class minimum). Eager
+    // pin: the probe and the fallback both read the pairs.
+    val cc = graft.enrich.Analytics
+      .connectedComponents(pairs.pin(eager = true))
       .select(col("v").as("vec_id"), col("component").as("keeper"))
     emb.select(col("vec_id")).join(cc, Seq("vec_id"), "left")
       .select(col("vec_id"),

@@ -1,0 +1,128 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.Bounded
+
+class BoundedSpec extends AnyFunSuite {
+  import TestSpark.spark
+
+  private final class Recorder extends SparkListener {
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = events.add(e)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => events.add(s)
+      case _ =>
+    }
+  }
+
+  /** Runs `body` and returns its result with the events it caused: the
+    * jobs it submitted and the SQL executions it ran. Listener delivery
+    * is asynchronous but ordered, so two marker jobs bracket `body`. */
+  private def recorded[T](body: => T): (T, Seq[SparkListenerEvent]) = {
+    val sc = spark.sparkContext
+    val rec = new Recorder
+    def marker(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+    }
+    def isMarker(tag: String)(e: SparkListenerEvent): Boolean = e match {
+      case j: SparkListenerJobStart =>
+        j.properties.getProperty("spark.job.description") == tag
+      case _ => false
+    }
+    sc.addSparkListener(rec)
+    try {
+      marker("bounded-begin")
+      val out = body
+      marker("bounded-end")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!rec.events.asScala.exists(isMarker("bounded-end")) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      val evs = rec.events.asScala.toSeq
+        .dropWhile(!isMarker("bounded-begin")(_)).drop(1)
+        .takeWhile(!isMarker("bounded-end")(_))
+      assert(rec.events.asScala.exists(isMarker("bounded-end")),
+        "listener never saw the closing marker job")
+      (out, evs)
+    } finally sc.removeSparkListener(rec)
+  }
+
+  private def jobs(evs: Seq[SparkListenerEvent]): Int =
+    evs.count(_.isInstanceOf[SparkListenerJobStart])
+
+  /** The executed plan's root below any AdaptiveSparkPlan wrapper. */
+  private def root(info: SparkPlanInfo): SparkPlanInfo =
+    if (info.nodeName == "AdaptiveSparkPlan") root(info.children.head)
+    else info
+
+  private def rows(n: Int) = spark.range(0, n, 1, 4).toDF("id")
+
+  test("take: Some with at most k rows, None with k + 1") {
+    val k = 5
+    assert(Bounded.take(rows(k), k)(_.getLong(0)).map(_.sorted.toSeq) ===
+      Some(0L until k))
+    assert(Bounded.take(rows(k - 2), k)(_.getLong(0)).map(_.length) ===
+      Some(k - 2))
+    assert(Bounded.take(rows(0), k)(_.getLong(0)).map(_.length) === Some(0))
+    assert(Bounded.take(rows(k + 1), k)(_.getLong(0)) === None)
+  }
+
+  test("take: k <= 0 answers None without submitting a job") {
+    for (k <- Seq(0, -1)) {
+      val (out, evs) = recorded(Bounded.take(rows(0), k)(_.getLong(0)))
+      assert(out === None)
+      assert(jobs(evs) === 0, s"k = $k")
+    }
+    // the recorder does see a probe that runs
+    val (_, evs) = recorded(Bounded.take(rows(3), 1)(_.getLong(0)))
+    assert(jobs(evs) > 0)
+  }
+
+  test("take: the probe executes as CollectLimit k + 1, so a miss never " +
+      "collects the whole frame") {
+    val k = 3
+    val (out, evs) = recorded(Bounded.take(rows(1000), k)(_.getLong(0)))
+    assert(out === None)
+    val plans = evs.collect { case s: SparkListenerSQLExecutionStart =>
+      root(s.sparkPlanInfo) }
+    assert(plans.size === 1, plans.map(_.simpleString))
+    assert(plans.head.nodeName === "CollectLimit")
+    assert(plans.head.simpleString.split("[ ,]").contains((k + 1).toString),
+      plans.head.simpleString)
+  }
+
+  test("rows: spark.graft.localThreshold sets the session budget") {
+    assert(Bounded.rows(spark) === Bounded.DefaultRows)
+    spark.conf.set("spark.graft.localThreshold", "7")
+    try assert(Bounded.rows(spark) === 7)
+    finally spark.conf.unset("spark.graft.localThreshold")
+  }
+
+  test("structure: the only limit(k + 1) probe in src/main is Bounded's") {
+    val probe = """\.limit\([^()]*\+\s*1\s*\)""".r
+    val bounded = Paths.get("src/main/scala/graft/ops/Bounded.scala")
+    def hits(p: Path): Seq[String] =
+      Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+        case (l, i) if probe.findFirstIn(l).isDefined =>
+          s"$p:${i + 1}: ${l.trim}"
+      }
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(sources.contains(bounded))
+    assert(hits(bounded).nonEmpty)
+    val outside = sources.filterNot(_ == bounded).flatMap(hits)
+    assert(outside.isEmpty,
+      "size probes belong in graft.ops.Bounded:\n" + outside.mkString("\n"))
+  }
+}

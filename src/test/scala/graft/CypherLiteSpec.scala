@@ -826,7 +826,7 @@ class CypherLiteSpec extends AnyFunSuite {
   }
 
   test("spath BFS driver kernel ≡ the distributed frontier loop " +
-      "(spark.graft.cypher.localThreshold = 0 forces the loop)") {
+      "(spark.graft.localThreshold = 0 forces the loop)") {
     val qs = Seq(
       "MATCH p = shortestPath((a {full_name: 'a'})-[:CONTAINS*]->(b)) " +
         "RETURN b.full_name AS v, nodes(p) AS ns, relationships(p) AS rs " +
@@ -835,11 +835,11 @@ class CypherLiteSpec extends AnyFunSuite {
         "RETURN b.full_name AS v, length(p) AS d ORDER BY v, d")
     for (q <- qs) {
       val local = dsp.executeQuery(q).collect().map(_.toSeq).toSeq
-      spark.conf.set("spark.graft.cypher.localThreshold", "0")
+      spark.conf.set("spark.graft.localThreshold", "0")
       try {
         val dist = dsp.executeQuery(q).collect().map(_.toSeq).toSeq
         assert(local === dist, q)
-      } finally spark.conf.unset("spark.graft.cypher.localThreshold")
+      } finally spark.conf.unset("spark.graft.localThreshold")
     }
   }
 
