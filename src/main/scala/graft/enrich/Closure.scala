@@ -11,8 +11,9 @@ import graft.ops.Pin._
   *
   * Spark has no recursive-CTE operator, so fixpoint iteration is a driver
   * loop over DataFrame joins. Hygiene for scale:
-  *  - `localCheckpoint` each delta to cut lineage (otherwise plan depth
-  *    grows linearly with iterations and planning time explodes);
+  *  - pin each delta through [[graft.ops.Pin]] to cut lineage (otherwise
+  *    plan depth grows linearly with iterations and planning time
+  *    explodes);
   *  - dedup (`except`) against the accumulated set for termination on
   *    cycles — the reference's `processed_relations` set does the same;
   *  - the per-iteration join shuffles only the DELTA, not the full
@@ -20,10 +21,15 @@ import graft.ops.Pin._
   */
 object Closure {
 
+  /** Default round cap of the fixpoint loops: pairs up to
+    * `MaxRounds + 1` hops apart are found. */
+  private[graft] val MaxRounds = 50
+
   /** All (descendant, ancestor) pairs reachable along child→parent `edges`
     * (columns src, dst). Depth-bounded only by the data (DAG assumed for
     * termination without dedup; dedup makes cycles safe too). */
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+  def transitiveClosure(edges: DataFrame, maxIter: Int = MaxRounds)
+      : DataFrame = {
     // checkpointed hash-partitioned on src — the probe key of every
     // iteration's extension join, so only the delta side shuffles
     val base = edges.select(col("src"), col("dst")).distinct()
@@ -75,7 +81,8 @@ object Closure {
     * (descendant, ancestor, depth). The frontier loop reaches each pair
     * first at its shortest distance (BFS invariant), so the anti-join
     * that admits only NEW pairs is also the min-depth selector. */
-  def transitiveClosureDepth(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+  def transitiveClosureDepth(edges: DataFrame, maxIter: Int = MaxRounds)
+      : DataFrame = {
     val base = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).pin(eager = false)
     var acc = base.withColumn("depth", lit(1L))
@@ -107,9 +114,8 @@ object Closure {
     * same level-ordered computation (a class linearizes once all its
     * bases have; cycles never do and are absent), same [[c3Merge]]
     * kernel, one `parallelize` instead of a per-level job chain. */
-  private def c3LinearizeLocal(spark: org.apache.spark.sql.SparkSession,
-      edges: Seq[(String, String, Int)]): DataFrame = {
-    import spark.implicits._
+  private[graft] def c3LinearizeLocal(edges: Seq[(String, String, Int)])
+      : Seq[(String, List[String])] = {
     val bases: Map[String, List[String]] = edges.groupBy(_._1)
       .map { case (c, es) => c -> es.sortBy(e => (e._3, e._2)).map(_._2).toList }
     val memo = scala.collection.mutable.Map.empty[String, Option[List[String]]]
@@ -131,7 +137,7 @@ object Closure {
       .map(c => (c, List(c)))
     val linearized = bases.keys.toSeq.sorted
       .flatMap(c => mro(c).map(m => (c, m)))
-    (leaves ++ linearized).toDF("cls", "mro")
+    leaves ++ linearized
   }
 
   private[graft] def c3Merge(head: String, seqs: Seq[List[String]]): Seq[String] = {
@@ -167,11 +173,12 @@ object Closure {
     * equivalence). */
   def c3Linearize(inheritsOrd: DataFrame): DataFrame = {
     val spark = inheritsOrd.sparkSession
+    import spark.implicits._
     val edges = inheritsOrd.select(col("src"), col("dst"),
       coalesce(col("ord"), lit(0)).cast("int").as("ord"))
     Bounded.take(edges, Bounded.rows(spark))(
         r => (r.getString(0), r.getString(1), r.getInt(2)))
-      .foreach(head => return c3LinearizeLocal(spark, head.toSeq))
+      .foreach(head => return c3LinearizeLocal(head.toSeq).toDF("cls", "mro"))
     val c3Udf = udf { (cls: String, bm: Seq[Row]) =>
       val bases = bm.map(_.getString(1)).toList
       val mros = bm.map(_.getSeq[String](2).toList)

@@ -1,7 +1,11 @@
 package graft.indexer
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Bounded
 import graft.ops.Pin._
 import graft.merge.Merge
 import graft.model._
@@ -28,11 +32,20 @@ import graft.enrich.Closure
   *     projections read from them are pinned (merged nodes, merged edges,
   *     locations, imports), then releases the cache — ingest leaves no
   *     entry in the session's cache manager;
-  *   - [[enrich]] pins its join tail (`flagged`) once, so the snapshot
-  *     write's three tables (edges, the stub nodes built from them, and
-  *     the locations whose dropped references they decide) read that
-  *     leaf instead of each re-running the joins.
-  * The graph itself does not depend on the partition count.
+  *   - [[enrich]] has two arms, chosen by one bounded probe per table
+  *     ([[graft.ops.Bounded.take]] on the pinned merged edges, then
+  *     nodes, then imports, each against `spark.graft.localThreshold`
+  *     rows). When all three fit, the driver arm ([[EnrichLocal]])
+  *     computes D1–D4 in one in-memory pass and returns the edges and
+  *     stub nodes as local frames: three probe jobs in place of the
+  *     distributed arm's dozens of join and fixpoint jobs. When one
+  *     misses, the distributed arm runs; it pins its join tail
+  *     (`flagged`) once, so the snapshot write's three tables (edges, the
+  *     stub nodes built from them, and the locations whose dropped
+  *     references they decide) read that leaf instead of each re-running
+  *     the joins.
+  * The graph itself depends neither on the partition count nor on the
+  * arm.
   */
 object IndexPipeline {
 
@@ -53,7 +66,6 @@ object IndexPipeline {
   def readRepo(spark: SparkSession, root: String): Dataset[SourceFile] = {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val rootPath = Paths.get(root)
     val topStream = Files.list(rootPath)
     val top =
@@ -224,8 +236,56 @@ object IndexPipeline {
     *     of the source module (B4 join shape, ast_manage.py:154-160);
     *  3. inherited-method closure (D4, ast_manage.py:79-99);
     *  4. stub reconciliation for the rewritten edge set.
+    *
+    * When the merged edges, nodes (`full_name`, `kind`) and imports each
+    * fit the session's row budget ([[Bounded.rows]]), the pass runs on
+    * the driver ([[EnrichLocal]]): the edges and stub nodes come back as
+    * local frames, real nodes and locations stay distributed. Otherwise
+    * [[enrichDistributed]] runs; both give the same graph.
     */
   def enrich(ix: Indexed, taskId: String): Indexed = {
+    val spark = ix.edges.sparkSession
+    import spark.implicits._
+    val budget = Bounded.rows(spark)
+    // the three tables are pinned: one task reads their blocks, so each
+    // probe is one job instead of a limit's partition scale-up rounds
+    def probe[T: ClassTag](df: DataFrame)(f: Row => T) =
+      Bounded.take(df.coalesce(1), budget)(f)
+    val local = for {
+      edges <- probe(ix.edges.select("src", "rel_type", "dst", "props"))(
+        r => EnrichLocal.Edge(r.getString(0), r.getString(1),
+          r.getString(2), r.getMap[String, String](3).toMap))
+      nodes <- probe(ix.nodes.select("full_name", "kind"))(r =>
+        (r.getString(0), r.getString(1)))
+      imports <- probe(ix.imports.select("module", "alias", "target", "kind"))(
+        r => EnrichLocal.Import(r.getString(0), r.getString(1),
+          r.getString(2), r.getString(3)))
+    } yield EnrichLocal.run(edges, nodes, imports)
+    local.fold(enrichDistributed(ix, taskId)) { out =>
+      // in the distributed arm's column order: its USING join on dst leads
+      val edges = spark.createDataFrame(
+        out.edges.map(e => Row(e.dst, e.src, e.rel, e.props)).asJava,
+        ix.edges.select("dst", "src", "rel_type", "props").schema)
+      // one partition each for the stubs and the locations, as the
+      // distributed arm's shuffles coalesce to at this size: the snapshot
+      // writes a file per partition
+      val stubs = Merge.stubNodes(out.stubs.toDF("full_name")
+        .withColumn("task_ids", array(lit(taskId)))).coalesce(1)
+      val nodes = ix.nodes.filter(col("kind") =!= Kind.None_)
+        .unionByName(stubs)
+      // drops the REFERENCE rows of dropped calls, as the distributed
+      // arm's join does, with a filter on the pinned table
+      val locations =
+        if (out.dropped.isEmpty) ix.locations.coalesce(1)
+        else ix.locations.coalesce(1).filter(!(col("kind") === "REFERENCE" &&
+          coalesce(col("symbolFullName").isin(out.dropped.toSeq: _*),
+            lit(false))))
+      Indexed(nodes, edges, locations, ix.imports)
+    }
+  }
+
+  /** [[enrich]] as Spark joins, for graphs over the driver budget. */
+  private def enrichDistributed(ix: Indexed, taskId: String): Indexed = {
     val defined = ix.nodes.filter(col("kind") =!= Kind.None_)
       .select(col("full_name"))
     val edges1 = chaseReexports(ix.edges, "dst", ix.imports, defined, hops = 2)

@@ -84,21 +84,24 @@ object Merge {
         .groupBy("full_name")
         .agg(array_sort(array_distinct(collect_list(col("taskId")))).as("task_ids")))
 
-  private def appendStubs(nodes: DataFrame, endpoints: DataFrame): DataFrame = {
-    val stubs = endpoints
-      .join(nodes.select("full_name"), Seq("full_name"), "left_anti")
-      .select(
-        col("full_name"),
-        lit(Kind.None_).as("kind"),
-        col("task_ids"),
-        element_at(split(col("full_name"), "\\."), -1).as("name"),
-        lit(null).cast("string").as("file_path"),
-        lit(null).cast("string").as("signature"),
-        lit(null).cast("string").as("clazz"),
-        lit(null).cast("string").as("code"),
-        map().cast("map<string,string>").as("props"))
-    nodes.unionByName(stubs)
-  }
+  private def appendStubs(nodes: DataFrame, endpoints: DataFrame): DataFrame =
+    nodes.unionByName(stubNodes(endpoints
+      .join(nodes.select("full_name"), Seq("full_name"), "left_anti")))
+
+  /** The 'none'-labeled stub row for each (full_name, task_ids) of
+    * `endpoints`: its name is the last dotted segment, every other
+    * property is unset. */
+  private[graft] def stubNodes(endpoints: DataFrame): DataFrame =
+    endpoints.select(
+      col("full_name"),
+      lit(Kind.None_).as("kind"),
+      col("task_ids"),
+      element_at(split(col("full_name"), "\\."), -1).as("name"),
+      lit(null).cast("string").as("file_path"),
+      lit(null).cast("string").as("signature"),
+      lit(null).cast("string").as("clazz"),
+      lit(null).cast("string").as("code"),
+      map().cast("map<string,string>").as("props"))
 
   /** Merge a freshly-indexed batch into an existing snapshot: full-outer
     * on the key, column-wise coalesce with the new side winning, label

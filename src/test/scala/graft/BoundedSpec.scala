@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,50 +13,8 @@ import graft.ops.Bounded
 class BoundedSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  private final class Recorder extends SparkListener {
-    val events = new ConcurrentLinkedQueue[SparkListenerEvent]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = events.add(e)
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case s: SparkListenerSQLExecutionStart => events.add(s)
-      case _ =>
-    }
-  }
-
-  /** Runs `body` and returns its result with the events it caused: the
-    * jobs it submitted and the SQL executions it ran. Listener delivery
-    * is asynchronous but ordered, so two marker jobs bracket `body`. */
-  private def recorded[T](body: => T): (T, Seq[SparkListenerEvent]) = {
-    val sc = spark.sparkContext
-    val rec = new Recorder
-    def marker(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-    }
-    def isMarker(tag: String)(e: SparkListenerEvent): Boolean = e match {
-      case j: SparkListenerJobStart =>
-        j.properties.getProperty("spark.job.description") == tag
-      case _ => false
-    }
-    sc.addSparkListener(rec)
-    try {
-      marker("bounded-begin")
-      val out = body
-      marker("bounded-end")
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!rec.events.asScala.exists(isMarker("bounded-end")) &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      val evs = rec.events.asScala.toSeq
-        .dropWhile(!isMarker("bounded-begin")(_)).drop(1)
-        .takeWhile(!isMarker("bounded-end")(_))
-      assert(rec.events.asScala.exists(isMarker("bounded-end")),
-        "listener never saw the closing marker job")
-      (out, evs)
-    } finally sc.removeSparkListener(rec)
-  }
-
-  private def jobs(evs: Seq[SparkListenerEvent]): Int =
-    evs.count(_.isInstanceOf[SparkListenerJobStart])
+  private def recorded[T](body: => T) = JobRecorder.recorded(spark)(body)
+  import JobRecorder.jobs
 
   /** The executed plan's root below any AdaptiveSparkPlan wrapper. */
   private def root(info: SparkPlanInfo): SparkPlanInfo =

@@ -14,7 +14,8 @@ class FixtureRepoSpec extends AnyFunSuite {
   private def resource(p: String): String =
     getClass.getClassLoader.getResource(p).getPath
 
-  private lazy val ix = IndexPipeline.run(spark, resource("fixture_repo"), "t1")
+  private lazy val ix = EnrichArms.both(IndexPipeline.indexFiles(spark,
+    IndexPipeline.readRepo(spark, resource("fixture_repo")), "t1"), "t1")
 
   private def golden(name: String): Seq[String] =
     scala.io.Source.fromFile(resource(s"golden/$name")).getLines().toSeq

@@ -66,7 +66,7 @@ class IndexerSpec extends AnyFunSuite {
     SourceFile("folder1/file1.py", file1Py),
     SourceFile("folder1/file2.py", file2Py)).toDS()
 
-  private lazy val ix = IndexPipeline.enrich(
+  private lazy val ix = EnrichArms.both(
     IndexPipeline.indexFiles(spark, fixture, "t1"), "t1")
 
   test("moduleName: dotted path, __init__ collapse (C10)") {
@@ -2066,7 +2066,7 @@ class IndexerSpec extends AnyFunSuite {
   }
 
   test("idempotent re-index: same snapshot twice equals once") {
-    val again = IndexPipeline.enrich(
+    val again = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fixture, "t1"), "t1")
     assert(ix.nodes.collect().toSet === again.nodes.collect().toSet)
     assert(ix.edges.collect().toSet === again.edges.collect().toSet)
@@ -2104,7 +2104,7 @@ class IndexerSpec extends AnyFunSuite {
         |    def nowhere(self):
         |        return super().missing()
         |""".stripMargin
-    val ix2 = IndexPipeline.enrich(IndexPipeline.indexFiles(spark,
+    val ix2 = EnrichArms.both(IndexPipeline.indexFiles(spark,
       Seq(SourceFile("a.py", aPy), SourceFile("b.py", bPy)).toDS(), "ts"), "ts")
     val calls = ix2.edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
@@ -2564,7 +2564,7 @@ class IndexerSpec extends AnyFunSuite {
         |    w = Widget()
         |    return w.spin()
         |""".stripMargin
-    val ix2 = IndexPipeline.enrich(IndexPipeline.indexFiles(spark,
+    val ix2 = EnrichArms.both(IndexPipeline.indexFiles(spark,
       Seq(SourceFile("lib.py", libPy), SourceFile("app.py", appPy)).toDS(),
       "tv"), "tv")
     val calls = ix2.edges.filter(col("rel_type") === Rel.Call)
@@ -2624,7 +2624,7 @@ class IndexerSpec extends AnyFunSuite {
         |    q = Plain()
         |    return q.not_there()
         |""".stripMargin
-    val ix2 = IndexPipeline.enrich(IndexPipeline.indexFiles(spark,
+    val ix2 = EnrichArms.both(IndexPipeline.indexFiles(spark,
       Seq(SourceFile("lib.py", libPy), SourceFile("app.py", appPy)).toDS(),
       "tdy"), "tdy")
     val calls = ix2.edges.filter(col("rel_type") === Rel.Call)
@@ -2925,7 +2925,7 @@ class IndexerSpec extends AnyFunSuite {
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_open.py", modOpen),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t62"), "t62")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3006,7 +3006,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t63"), "t63")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3055,7 +3055,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t64"), "t64")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3103,7 +3103,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t65"), "t65")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3145,7 +3145,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t66"), "t66")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3206,7 +3206,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_c.py", modC), SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t83"), "t83")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_c.Conn.ping")
@@ -3252,7 +3252,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_c.py", modC), SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t83b"), "t83b")
     val calls = out.edges.filter(col("rel_type") === Rel.Call)
       .filter(col("src") === "mod_b.use")
@@ -3295,7 +3295,7 @@ class IndexerSpec extends AnyFunSuite {
     val fx = Seq(SourceFile("mod_core.py", modCore),
       SourceFile("mod_pkg.py", modPkg), SourceFile("mod_f.py", modF),
       SourceFile("mod_g.py", modG)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t85"), "t85")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_core.User.save")
@@ -3327,7 +3327,7 @@ class IndexerSpec extends AnyFunSuite {
     val fx = Seq(SourceFile("core.py", core),
       SourceFile("pkg/__init__.py", init),
       SourceFile("app.py", app)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t85b"), "t85b")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "core.User.save")
@@ -3359,7 +3359,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA), SourceFile("mod_b.py", modB),
       SourceFile("mod_c.py", modC)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t86"), "t86")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3413,7 +3413,7 @@ class IndexerSpec extends AnyFunSuite {
       SourceFile("mod_c.py", modC), SourceFile("mod_d.py", modD),
       SourceFile("mod_f.py", modF), SourceFile("mod_e.py", modE),
       SourceFile("mod_h.py", modH)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t89"), "t89")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3557,7 +3557,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t91"), "t91")
     val calls = out.edges
       .filter(col("rel_type") === Rel.Call)
@@ -3661,7 +3661,7 @@ class IndexerSpec extends AnyFunSuite {
       "from mod_b import get\n\ndef use():\n    get().boom()\n"
     val fx = Seq(SourceFile("mod_bad.py", modBad),
       SourceFile("mod_b.py", modB), SourceFile("mod_c.py", modC)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t86d"), "t86d")
     val booms = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_bad.Conn.boom")
@@ -3707,7 +3707,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t87"), "t87")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.User.save")
@@ -3767,7 +3767,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t88"), "t88")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.User.save")
@@ -3811,7 +3811,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t84"), "t84")
     val calls = out.edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
@@ -3861,7 +3861,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t67"), "t67")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
@@ -3925,7 +3925,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_m.py", modM), SourceFile("mod_f.py", modF),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t68"), "t68")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call &&
@@ -3996,7 +3996,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_m.py", modM), SourceFile("mod_f.py", modF),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = IndexPipeline.enrich(
+    val out = EnrichArms.both(
       IndexPipeline.indexFiles(spark, fx, "t69"), "t69")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call &&
@@ -4729,5 +4729,72 @@ class IndexerSpec extends AnyFunSuite {
     val u5 = "from mod_dyn import conn\ndef use():\n    conn.ping()\n"
     assert(callDsts(u5, Seq("mod_t.py" -> modT, "mod_dyn.py" -> modDyn))
       .contains("mod_t.Conn.ping"))
+  }
+
+  test("enrich fan-out: a re-export alias with two targets, a two-hop " +
+      "re-export chain, a call rebound to every inherited definition, " +
+      "super() along the declared base order") {
+    val fx = Seq(
+      SourceFile("pkg/__init__.py",
+        """try:
+          |    from .fast import Impl
+          |except ImportError:
+          |    from .slow import Impl
+          |from .mid import Thing
+          |""".stripMargin),
+      SourceFile("pkg/fast.py", "class Impl:\n    def go(self):\n        pass\n"),
+      SourceFile("pkg/slow.py", "class Impl:\n    def go(self):\n        pass\n"),
+      SourceFile("pkg/mid.py", "from .core import Thing\n"),
+      SourceFile("pkg/core.py", "class Thing:\n    def run(self):\n        pass\n"),
+      SourceFile("app.py",
+        """import pkg
+          |from pkg import Impl, Thing
+          |
+          |
+          |def f():
+          |    pkg.Impl()
+          |    return pkg.Thing()
+          |""".stripMargin),
+      SourceFile("shapes.py",
+        """class A:
+          |    def m(self):
+          |        pass
+          |
+          |
+          |class B:
+          |    def m(self):
+          |        pass
+          |
+          |
+          |class C(A, B):
+          |    def other(self):
+          |        return self.m()
+          |
+          |
+          |class Z:
+          |    def m(self):
+          |        pass
+          |
+          |
+          |class Y:
+          |    def m(self):
+          |        pass
+          |
+          |
+          |class X(Z, Y):
+          |    def m(self):
+          |        return super().m()
+          |""".stripMargin)).toDS()
+    val out = EnrichArms.both(IndexPipeline.indexFiles(spark, fx, "tfan"), "tfan")
+    val es = out.edges.select("src", "rel_type", "dst")
+      .as[(String, String, String)].collect().toSet
+    def dsts(src: String, rel: String) =
+      es.collect { case (`src`, `rel`, d) => d }
+    assert(dsts("app.f", Rel.Call) ===
+      Set("pkg.fast.Impl", "pkg.slow.Impl", "pkg.core.Thing"))
+    assert(dsts("app", Rel.Contains) ===
+      Set("app.f", "pkg.fast.Impl", "pkg.slow.Impl", "pkg.core.Thing"))
+    assert(dsts("shapes.C.other", Rel.Call) === Set("shapes.A.m", "shapes.B.m"))
+    assert(dsts("shapes.X.m", Rel.Call) === Set("shapes.Z.m"))
   }
 }

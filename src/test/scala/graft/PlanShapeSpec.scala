@@ -842,14 +842,29 @@ class PlanShapeSpec extends AnyFunSuite {
       s"no cartesian anywhere in training; plan:\n$plan")
   }
 
-  test("enrich's edge frame reads its pinned join tail: no Join left " +
-      "for each snapshot table to re-run") {
+  private def fixtureIndexed = {
     import graft.indexer.IndexPipeline
     val repo = getClass.getClassLoader.getResource("fixture_repo").getPath
-    val edges = IndexPipeline.run(spark, repo, "t1").edges
+    IndexPipeline.indexFiles(spark, IndexPipeline.readRepo(spark, repo), "t1")
+  }
+
+  test("enrich's edge frame reads its pinned join tail: no Join left " +
+      "for each snapshot table to re-run") {
+    val edges =
+      EnrichArms.enrich(EnrichArms.Distributed)(fixtureIndexed, "t1").edges
     val plan = edges.queryExecution.optimizedPlan
     assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans
         .logical.Join => j }.isEmpty,
       s"enrich edges must not carry a join; plan:\n$plan")
+  }
+
+  test("enrich within the row budget runs one job per probed table") {
+    import JobRecorder.{jobs, recorded}
+    val ix = fixtureIndexed
+    def jobsOn(arm: EnrichArms.Arm) =
+      jobs(recorded(spark)(EnrichArms.enrich(arm)(ix, "t1"))._2)
+    val probed = 3 // edges, nodes, imports
+    assert(jobsOn(EnrichArms.Driver) <= probed)
+    assert(jobsOn(EnrichArms.Distributed) > probed)
   }
 }
