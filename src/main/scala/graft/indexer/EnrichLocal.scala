@@ -19,12 +19,17 @@ import graft.model.{Kind, Rel}
   *  - C11 rebinds a call to every inherited definition of the method,
   *    not only the first in MRO order.
   */
-private[indexer] object EnrichLocal {
+private[graft] object EnrichLocal {
 
   final case class Edge(src: String, rel: String, dst: String,
       props: Map[String, String])
   final case class Import(module: String, alias: String, target: String,
       kind: String)
+
+  /** The merged tables the pass reads: the edges, every node's
+    * (full_name, kind) and the import facts. */
+  final case class Input(edges: Seq[Edge], nodes: Seq[(String, String)],
+      imports: Seq[Import])
 
   /** The enriched edges, the stub names they need beyond the real
     * nodes, and the call targets whose REFERENCE locations drop. */
@@ -50,9 +55,8 @@ private[indexer] object EnrichLocal {
     es.filter(e => seen.add((e.src, e.rel, e.dst))).toVector
   }
 
-  /** `nodes` are (full_name, kind) pairs of the merged node table. */
-  def run(edges: Seq[Edge], nodes: Seq[(String, String)],
-      imports: Seq[Import]): Out = {
+  def run(in: Input): Out = {
+    import in.{edges, imports, nodes}
     val defined = nodes.collect {
       case (n, k) if k != null && k != Kind.None_ => n }.toSet
     val classes = nodes.collect { case (n, Kind.Class) => n }.toSet

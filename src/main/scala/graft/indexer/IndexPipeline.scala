@@ -5,9 +5,10 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.ops.Bounded
 import graft.ops.Pin._
-import graft.merge.Merge
+import graft.merge.{Merge, MergeLocal}
 import graft.model._
 import graft.enrich.Closure
 
@@ -20,30 +21,38 @@ import graft.enrich.Closure
   * The reference fans out a subprocess per file and serializes every write
   * through one inter-process lock (its main bottleneck, SURVEY.md §4); here
   * per-file parsing is executor-parallel (C2 = partition parallelism) and
-  * the merge is two shuffles (SURVEY.md §2.A), so ingest scales with the
-  * cluster, not the lock.
+  * the merge is two shuffles (SURVEY.md §2.A) above the driver budget, so
+  * ingest scales with the cluster, not the lock.
   *
   * Physical plan. At this input size the cost is per task and per job,
   * not per byte, so:
   *   - [[readRepo]] spreads the directory walk and the content reads over
   *     `spark.sparkContext.defaultParallelism` partitions (one per core),
   *     and every later scan of the parsed events inherits that count;
-  *   - [[indexFiles]] caches the parsed events only while the four
-  *     projections read from them are pinned (merged nodes, merged edges,
-  *     locations, imports), then releases the cache — ingest leaves no
-  *     entry in the session's cache manager;
-  *   - [[enrich]] has two arms, chosen by one bounded probe per table
+  *   - [[indexFiles]] holds the tree's rows for its two reads (the
+  *     pre-scan and the parse) and caches the parsed events. One bounded
+  *     collect of the events, a row each, decides the merge's arm
+  *     ([[graft.ops.Bounded.take]] against `spark.graft.localThreshold`
+  *     rows): a cache stage parses in parallel, then one task reads the
+  *     cache. When they fit, [[graft.merge.MergeLocal]] folds them into
+  *     the four tables, which come back as one-partition local frames,
+  *     with the tables enrich reads kept on the driver: two jobs in place
+  *     of the merge shuffles and four pins. When they miss, the merge
+  *     shuffles run and the merged nodes, merged edges, locations and
+  *     imports are pinned. Either way both caches are released — ingest
+  *     leaves no entry in the session's cache manager;
+  *   - [[enrich]] has two arms. Tables merged on the driver take the
+  *     driver arm; others are probed, one bounded probe per table
   *     ([[graft.ops.Bounded.take]] on the pinned merged edges, then
-  *     nodes, then imports, each against `spark.graft.localThreshold`
-  *     rows). When all three fit, the driver arm ([[EnrichLocal]])
-  *     computes D1–D4 in one in-memory pass and returns the edges and
-  *     stub nodes as local frames: three probe jobs in place of the
-  *     distributed arm's dozens of join and fixpoint jobs. When one
-  *     misses, the distributed arm runs; it pins its join tail
-  *     (`flagged`) once, so the snapshot write's three tables (edges, the
-  *     stub nodes built from them, and the locations whose dropped
-  *     references they decide) read that leaf instead of each re-running
-  *     the joins.
+  *     nodes, then imports, each against the same budget). When all
+  *     three fit, the driver arm ([[EnrichLocal]]) computes D1–D4 in one
+  *     in-memory pass and returns the edges and stub nodes as local
+  *     frames, in place of the distributed arm's dozens of join and
+  *     fixpoint jobs. When one misses, the distributed arm runs; it pins
+  *     its join tail (`flagged`) once, so the snapshot write's three
+  *     tables (edges, the stub nodes built from them, and the locations
+  *     whose dropped references they decide) read that leaf instead of
+  *     each re-running the joins.
   * The graph itself depends neither on the partition count nor on the
   * arm.
   */
@@ -153,16 +162,30 @@ object IndexPipeline {
     }
   }
 
+  /** The graph tables of one ingest. `onDriver` holds the merged tables
+    * [[enrich]] reads when [[indexFiles]] merged them on the driver, so
+    * enrich needs no probe to find them. */
   final case class Indexed(
       nodes: DataFrame, edges: DataFrame, locations: DataFrame,
-      imports: DataFrame)
+      imports: DataFrame, onDriver: Option[EnrichLocal.Input] = None)
+
+  private type Parsed = (Seq[SymbolEvent], Seq[EdgeEvent], Seq[LocationRow],
+    Seq[PyIndexer.ImportFact])
+  private type Event = (SymbolEvent, EdgeEvent, LocationRow,
+    PyIndexer.ImportFact)
 
   /** C2/C4/C13 — index every file and merge the event stream into graph
-    * tables. One wide flatMap (no shuffle) + the Merge shuffles. Files the
-    * parser chokes on degrade to an ERROR location row (never abort). */
+    * tables. One wide flatMap (no shuffle), then the merge: a fold on the
+    * driver when the events fit the session's row budget
+    * ([[Bounded.rows]]), else the Merge shuffles. Files the parser chokes
+    * on degrade to an ERROR location row (never abort). */
   def indexFiles(spark: SparkSession, files: Dataset[SourceFile],
       taskId: String): Indexed = {
     import spark.implicits._
+    // the pre-scan and the parse both read the tree: hold its rows for
+    // the two passes, unless the caller already holds them
+    val hold = files.storageLevel == StorageLevel.NONE
+    if (hold) files.cache()
     // r14 slice 62 pre-scan: one cheap executor pass collects each
     // module's top-level binding set (bounded: names per repo, the model
     // jedi holds in memory for the whole project anyway); broadcast so
@@ -183,26 +206,73 @@ object IndexPipeline {
     val events = files.flatMap { f =>
       val ev = PyIndexer.indexFileSafe(taskId, f.path, f.content,
         Some(ctxB.value))
-      Seq((ev.symbols, ev.edges, ev.locations, ev.imports))
+      Seq[Parsed]((ev.symbols, ev.edges, ev.locations, ev.imports))
     }.cache()
-    val symbolEvents = events.flatMap(_._1)
-    val edgeEvents = events.flatMap(_._2)
-    val nodes0 = Merge.mergeNodes(symbolEvents.toDF())
-    val edges = Merge.mergeEdges(edgeEvents.toDF())
-      .pin(eager = true)
-    val nodes = Merge.withStubs(nodes0, edges, taskId)
-      .pin(eager = true)
-    // lineage cut at the phase boundary: the enrichment stage chains
-    // enough joins that carrying the merge plan underneath it pushes
-    // task binaries past the MiB warning threshold — and this is a
-    // write pipeline, so materializing the merged tables is the normal
-    // posture (the reference persists here too). enrich reads `imports`
-    // in six places and the snapshot write reads `locations`, so both
-    // are pinned too; after that nothing reads `events` again.
-    val locations = events.flatMap(_._3).toDF().pin(eager = true)
-    val imports = events.flatMap(_._4).toDF().pin(eager = true)
+    val nodes0 = Merge.mergeNodes(events.flatMap(_._1).toDF())
+    val edges0 = Merge.mergeEdges(events.flatMap(_._2).toDF())
+    val locations0 = events.flatMap(_._3).toDF()
+    val imports0 = events.flatMap(_._4).toDF()
+    // the one "fits on the driver" decision: a bounded collect of the
+    // events, one row each. It reads the cache through one task, after
+    // the cache stage has filled it (the parse) in parallel
+    val collected = Bounded.take(events.flatMap { case (s, e, l, i) =>
+      s.iterator.map(x => (x, null, null, null): Event) ++
+        e.iterator.map(x => (null, x, null, null): Event) ++
+        l.iterator.map(x => (null, null, x, null): Event) ++
+        i.iterator.map(x => (null, null, null, x): Event)
+    }.coalesce(1), Bounded.rows(spark))(identity)
+    val out = collected match {
+      case Some(evs) =>
+        mergeOnDriver(evs.toSeq, taskId, Indexed(
+          Merge.withStubs(nodes0, edges0, taskId), edges0, locations0,
+          imports0))
+      case None =>
+        val edges = edges0.pin(eager = true)
+        val nodes = Merge.withStubs(nodes0, edges, taskId)
+          .pin(eager = true)
+        // lineage cut at the phase boundary: the enrichment stage chains
+        // enough joins that carrying the merge plan underneath it pushes
+        // task binaries past the MiB warning threshold — and this is a
+        // write pipeline, so materializing the merged tables is the normal
+        // posture (the reference persists here too). enrich reads
+        // `imports` in six places and the snapshot write reads
+        // `locations`, so both are pinned too; after that nothing reads
+        // `events` again.
+        val locations = locations0.pin(eager = true)
+        val imports = imports0.pin(eager = true)
+        Indexed(nodes, edges, locations, imports)
+    }
     events.unpersist()
-    Indexed(nodes, edges, locations, imports)
+    if (hold) files.unpersist()
+    out
+  }
+
+  /** [[indexFiles]]' merge over the collected events (each row sets one
+    * of its four fields), by [[MergeLocal]]: the four tables come back as
+    * one-partition local frames in the schemas of `plan`, the distributed
+    * arm's unexecuted frames, with the tables [[enrich]] reads kept on
+    * the driver. */
+  private def mergeOnDriver(events: Seq[Event], taskId: String,
+      plan: Indexed): Indexed = {
+    val spark = plan.nodes.sparkSession
+    def frame(rows: Seq[Row], like: DataFrame) =
+      spark.createDataFrame(rows.asJava, like.schema).coalesce(1)
+    val named = MergeLocal.nodes(events.flatMap(e => Option(e._1)))
+    val keys = named.iterator.map(_.getString(0)).toSet
+    val edges = MergeLocal.edges(events.flatMap(e => Option(e._2)))
+    val nodes = named ++ MergeLocal.stubs(keys, edges, taskId)
+    val locations = events.flatMap(e => Option(e._3))
+    val imports = events.flatMap(e => Option(e._4))
+    Indexed(
+      frame(nodes, plan.nodes),
+      frame(edges.map(e => Row(e.src, e.relType, e.dst, e.props)), plan.edges),
+      frame(locations.map(Row.fromTuple), plan.locations),
+      frame(imports.map(Row.fromTuple), plan.imports),
+      Some(EnrichLocal.Input(
+        edges.map(e => EnrichLocal.Edge(e.src, e.relType, e.dst, e.props)),
+        nodes.map(r => (r.getString(0), r.getString(1))),
+        imports.map(i =>
+          EnrichLocal.Import(i.module, i.alias, i.target, i.kind)))))
   }
 
   /** D2 — re-export chasing: an edge/import target `pkg.name` where `pkg`
@@ -237,11 +307,12 @@ object IndexPipeline {
     *  3. inherited-method closure (D4, ast_manage.py:79-99);
     *  4. stub reconciliation for the rewritten edge set.
     *
-    * When the merged edges, nodes (`full_name`, `kind`) and imports each
-    * fit the session's row budget ([[Bounded.rows]]), the pass runs on
-    * the driver ([[EnrichLocal]]): the edges and stub nodes come back as
-    * local frames, real nodes and locations stay distributed. Otherwise
-    * [[enrichDistributed]] runs; both give the same graph.
+    * When [[indexFiles]] merged on the driver (`ix.onDriver`), or the
+    * merged edges, nodes (`full_name`, `kind`) and imports each fit the
+    * session's row budget ([[Bounded.rows]]), the pass runs on the
+    * driver ([[EnrichLocal]]), and the edges and stub nodes come back as
+    * local frames. Otherwise [[enrichDistributed]] runs; both give the
+    * same graph.
     */
   def enrich(ix: Indexed, taskId: String): Indexed = {
     val spark = ix.edges.sparkSession
@@ -251,7 +322,8 @@ object IndexPipeline {
     // probe is one job instead of a limit's partition scale-up rounds
     def probe[T: ClassTag](df: DataFrame)(f: Row => T) =
       Bounded.take(df.coalesce(1), budget)(f)
-    val local = for {
+    // tables merged on the driver are there already: no probe
+    val input = ix.onDriver.orElse(for {
       edges <- probe(ix.edges.select("src", "rel_type", "dst", "props"))(
         r => EnrichLocal.Edge(r.getString(0), r.getString(1),
           r.getString(2), r.getMap[String, String](3).toMap))
@@ -260,21 +332,21 @@ object IndexPipeline {
       imports <- probe(ix.imports.select("module", "alias", "target", "kind"))(
         r => EnrichLocal.Import(r.getString(0), r.getString(1),
           r.getString(2), r.getString(3)))
-    } yield EnrichLocal.run(edges, nodes, imports)
-    local.fold(enrichDistributed(ix, taskId)) { out =>
-      // in the distributed arm's column order: its USING join on dst leads
+    } yield EnrichLocal.Input(edges, nodes, imports))
+    input.map(EnrichLocal.run).fold(enrichDistributed(ix, taskId)) { out =>
+      // in the distributed arm's column order (its USING join on dst
+      // leads), and one partition per table: the snapshot writes a file
+      // per partition, and one partition needs no shuffle to deduplicate
       val edges = spark.createDataFrame(
         out.edges.map(e => Row(e.dst, e.src, e.rel, e.props)).asJava,
         ix.edges.select("dst", "src", "rel_type", "props").schema)
-      // one partition each for the stubs and the locations, as the
-      // distributed arm's shuffles coalesce to at this size: the snapshot
-      // writes a file per partition
+        .coalesce(1)
       val stubs = Merge.stubNodes(out.stubs.toDF("full_name")
-        .withColumn("task_ids", array(lit(taskId)))).coalesce(1)
+        .withColumn("task_ids", array(lit(taskId))))
       val nodes = ix.nodes.filter(col("kind") =!= Kind.None_)
-        .unionByName(stubs)
+        .unionByName(stubs).coalesce(1)
       // drops the REFERENCE rows of dropped calls, as the distributed
-      // arm's join does, with a filter on the pinned table
+      // arm's join does, with a filter on the table
       val locations =
         if (out.dropped.isEmpty) ix.locations.coalesce(1)
         else ix.locations.coalesce(1).filter(!(col("kind") === "REFERENCE" &&

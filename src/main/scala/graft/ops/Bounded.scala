@@ -2,13 +2,14 @@ package graft.ops
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The one "fits on the driver" decision.
   *
   * Operators with an exact driver-local kernel and a distributed
   * fallback (Tarjan / union-find / Brandes / BFS kernels, the c3
-  * linearization, Cypher path search, the fertility segmentation) ask
+  * linearization, Cypher path search, the fertility segmentation,
+  * ingest's merge and enrich) ask
   * [[take]] whether their input fits a row budget. The probe is a
   * `limit(k + 1)` collect, so the driver holds at most k+1 rows: a miss
   * costs one partial scan, never the whole frame, and the distributed
@@ -31,14 +32,14 @@ object Bounded {
     spark.conf.getOption("spark.graft.localThreshold").map(_.toInt)
       .getOrElse(DefaultRows)
 
-  /** `Some(f` over every row`)` when `df` has at most `k` rows, else
-    * `None`. Runs exactly one `df.limit(k + 1).collect()`; `k <= 0`
+  /** `Some(f` over every row`)` when `ds` has at most `k` rows, else
+    * `None`. Runs exactly one `ds.limit(k + 1).collect()`; `k <= 0`
     * returns `None` without running a job. */
-  def take[T: ClassTag](df: DataFrame, k: Int)(f: Row => T)
+  def take[A, T: ClassTag](ds: Dataset[A], k: Int)(f: A => T)
       : Option[Array[T]] =
     if (k <= 0) None
     else {
-      val probe = df.limit(k + 1).collect()
+      val probe = ds.limit(k + 1).collect()
       if (probe.length <= k) Some(probe.map(f)) else None
     }
 }

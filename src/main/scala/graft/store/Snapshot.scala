@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Graph snapshot persistence — the rebuild's storage layer (SURVEY.md
@@ -26,6 +27,21 @@ object Snapshot {
   final case class GraphSnapshot(
       nodes: DataFrame, edges: DataFrame, locations: DataFrame)
 
+  // the tables' columns in the order [[write]] lays them out and [[read]]
+  // declares them; `part_task` is the nodes' partition column
+  private val NodeSchema = StructType.fromDDL("full_name STRING, " +
+    "kind STRING, task_ids ARRAY<STRING>, name STRING, file_path STRING, " +
+    "signature STRING, clazz STRING, code STRING, " +
+    "props MAP<STRING, STRING>")
+  private val EdgeSchema = StructType.fromDDL(
+    "src STRING, rel_type STRING, dst STRING, props MAP<STRING, STRING>")
+  private val LocationSchema = StructType.fromDDL("symbolFullName STRING, " +
+    "filePath STRING, kind STRING, startLine INT, startCol INT, " +
+    "endLine INT, endCol INT")
+
+  private def laidOut(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fieldNames.toSeq.map(col): _*)
+
   def write(snap: GraphSnapshot, dir: String): Unit = {
     val tmp = s"$dir.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
     // sort on the point-lookup keys inside each file: parquet row-group
@@ -36,13 +52,14 @@ object Snapshot {
     // part_task leads the sort: partitionBy requires ordering on the
     // partition column, so this single sort satisfies the writer (no
     // second writer-inserted sort that could unstably reorder full_name)
-    snap.nodes
+    laidOut(snap.nodes, NodeSchema)
       .withColumn("part_task", coalesce(element_at(col("task_ids"), 1), lit("none")))
       .sortWithinPartitions("part_task", "full_name")
       .write.mode("overwrite").partitionBy("part_task").parquet(s"$tmp/nodes")
-    snap.edges.sortWithinPartitions("src", "rel_type")
+    laidOut(snap.edges, EdgeSchema).sortWithinPartitions("src", "rel_type")
       .write.mode("overwrite").parquet(s"$tmp/edges")
-    snap.locations.write.mode("overwrite").parquet(s"$tmp/locations")
+    laidOut(snap.locations, LocationSchema)
+      .write.mode("overwrite").parquet(s"$tmp/locations")
     val target = Paths.get(dir)
     if (Files.exists(target)) {
       val old = Paths.get(s"$dir.old-${System.nanoTime()}")
@@ -54,11 +71,14 @@ object Snapshot {
     }
   }
 
+  /** Reads the three tables with their declared schemas: no job opens
+    * a parquet footer to infer one. */
   def read(spark: SparkSession, dir: String): GraphSnapshot =
     GraphSnapshot(
-      spark.read.parquet(s"$dir/nodes").drop("part_task"),
-      spark.read.parquet(s"$dir/edges"),
-      spark.read.parquet(s"$dir/locations"))
+      spark.read.schema(NodeSchema.add("part_task", StringType))
+        .parquet(s"$dir/nodes").drop("part_task"),
+      spark.read.schema(EdgeSchema).parquet(s"$dir/edges"),
+      spark.read.schema(LocationSchema).parquet(s"$dir/locations"))
 
   private[store] def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (Files.isDirectory(p))

@@ -14,8 +14,8 @@ class FixtureRepoSpec extends AnyFunSuite {
   private def resource(p: String): String =
     getClass.getClassLoader.getResource(p).getPath
 
-  private lazy val ix = EnrichArms.both(IndexPipeline.indexFiles(spark,
-    IndexPipeline.readRepo(spark, resource("fixture_repo")), "t1"), "t1")
+  private lazy val ix = IngestArms.both(
+    IndexPipeline.readRepo(spark, resource("fixture_repo")), "t1")
 
   private def golden(name: String): Seq[String] =
     scala.io.Source.fromFile(resource(s"golden/$name")).getLines().toSeq
@@ -71,8 +71,7 @@ class FixtureRepoSpec extends AnyFunSuite {
     def graph(parts: Int) = {
       val files = IndexPipeline.readRepo(spark, resource("fixture_repo"))
         .repartition(parts)
-      val g = IndexPipeline.enrich(
-        IndexPipeline.indexFiles(spark, files, "t1"), "t1")
+      val g = IngestArms.both(files, "t1")
       (rows(g.nodes), rows(g.edges), rows(g.locations))
     }
     val (n1, e1, l1) = graph(1)

@@ -66,8 +66,7 @@ class IndexerSpec extends AnyFunSuite {
     SourceFile("folder1/file1.py", file1Py),
     SourceFile("folder1/file2.py", file2Py)).toDS()
 
-  private lazy val ix = EnrichArms.both(
-    IndexPipeline.indexFiles(spark, fixture, "t1"), "t1")
+  private lazy val ix = IngestArms.both(fixture, "t1")
 
   test("moduleName: dotted path, __init__ collapse (C10)") {
     assert(PyIndexer.moduleName("main.py") === "main")
@@ -1953,7 +1952,7 @@ class IndexerSpec extends AnyFunSuite {
     // nothing in the fixture is fully unresolved, so craft one:
     val one = Seq(SourceFile("solo.py",
       "from ext.lib import thing\n\ndef go():\n    thing()\n")).toDS()
-    val out = IndexPipeline.indexFiles(spark, one, "t2")
+    val out = IngestArms.indexed(one, "t2")
     val kinds = out.nodes.select("full_name", "kind").as[(String, String)]
       .collect().toMap
     assert(kinds("ext.lib.thing") === Kind.None_)
@@ -1962,7 +1961,7 @@ class IndexerSpec extends AnyFunSuite {
   test("parenthesized multi-line imports resolve (C8)") {
     val src = Seq(SourceFile("p.py",
       "from folder1.file2 import (Helper,\n    helper_fn as hfn)\n\ndef go():\n    hfn()\n    Helper()\n")).toDS()
-    val out = IndexPipeline.indexFiles(spark, src, "tp")
+    val out = IngestArms.indexed(src, "tp")
     val calls = out.edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
     assert(calls.contains(("p.go", "folder1.file2.helper_fn")))
@@ -1972,7 +1971,7 @@ class IndexerSpec extends AnyFunSuite {
   test("plain dotted import binds the full path; prefix-resolves calls (C8/C9)") {
     val src = Seq(SourceFile("q.py",
       "import folder1.file2\nimport os.path as osp\n\ndef go():\n    folder1.file2.helper_fn()\n    osp.join()\n")).toDS()
-    val calls = IndexPipeline.indexFiles(spark, src, "tq")
+    val calls = IngestArms.indexed(src, "tq")
       .edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
     assert(calls.contains(("q.go", "folder1.file2.helper_fn")))
@@ -2066,8 +2065,7 @@ class IndexerSpec extends AnyFunSuite {
   }
 
   test("idempotent re-index: same snapshot twice equals once") {
-    val again = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fixture, "t1"), "t1")
+    val again = IngestArms.both(fixture, "t1")
     assert(ix.nodes.collect().toSet === again.nodes.collect().toSet)
     assert(ix.edges.collect().toSet === again.edges.collect().toSet)
   }
@@ -2104,8 +2102,8 @@ class IndexerSpec extends AnyFunSuite {
         |    def nowhere(self):
         |        return super().missing()
         |""".stripMargin
-    val ix2 = EnrichArms.both(IndexPipeline.indexFiles(spark,
-      Seq(SourceFile("a.py", aPy), SourceFile("b.py", bPy)).toDS(), "ts"), "ts")
+    val ix2 = IngestArms.both(
+      Seq(SourceFile("a.py", aPy), SourceFile("b.py", bPy)).toDS(), "ts")
     val calls = ix2.edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
     // A.run's super() -> X.run (one level up, same file)
@@ -2564,9 +2562,8 @@ class IndexerSpec extends AnyFunSuite {
         |    w = Widget()
         |    return w.spin()
         |""".stripMargin
-    val ix2 = EnrichArms.both(IndexPipeline.indexFiles(spark,
-      Seq(SourceFile("lib.py", libPy), SourceFile("app.py", appPy)).toDS(),
-      "tv"), "tv")
+    val ix2 = IngestArms.both(
+      Seq(SourceFile("lib.py", libPy), SourceFile("app.py", appPy)).toDS(), "tv")
     val calls = ix2.edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
     // the defined member resolves
@@ -2624,9 +2621,8 @@ class IndexerSpec extends AnyFunSuite {
         |    q = Plain()
         |    return q.not_there()
         |""".stripMargin
-    val ix2 = EnrichArms.both(IndexPipeline.indexFiles(spark,
-      Seq(SourceFile("lib.py", libPy), SourceFile("app.py", appPy)).toDS(),
-      "tdy"), "tdy")
+    val ix2 = IngestArms.both(
+      Seq(SourceFile("lib.py", libPy), SourceFile("app.py", appPy)).toDS(), "tdy")
     val calls = ix2.edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
     // __getattr__ classes answer any member at runtime: keep the take
@@ -2925,8 +2921,7 @@ class IndexerSpec extends AnyFunSuite {
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_open.py", modOpen),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t62"), "t62")
+    val out = IngestArms.both(fx, "t62")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3006,8 +3001,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t63"), "t63")
+    val out = IngestArms.both(fx, "t63")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3055,8 +3049,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t64"), "t64")
+    val out = IngestArms.both(fx, "t64")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3103,8 +3096,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t65"), "t65")
+    val out = IngestArms.both(fx, "t65")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3145,8 +3137,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t66"), "t66")
+    val out = IngestArms.both(fx, "t66")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3206,8 +3197,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_c.py", modC), SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t83"), "t83")
+    val out = IngestArms.both(fx, "t83")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_c.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3252,8 +3242,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_c.py", modC), SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t83b"), "t83b")
+    val out = IngestArms.both(fx, "t83b")
     val calls = out.edges.filter(col("rel_type") === Rel.Call)
       .filter(col("src") === "mod_b.use")
       .select("dst").as[String].collect().toSet
@@ -3295,8 +3284,7 @@ class IndexerSpec extends AnyFunSuite {
     val fx = Seq(SourceFile("mod_core.py", modCore),
       SourceFile("mod_pkg.py", modPkg), SourceFile("mod_f.py", modF),
       SourceFile("mod_g.py", modG)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t85"), "t85")
+    val out = IngestArms.both(fx, "t85")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_core.User.save")
       .select("src").as[String].collect().toSet
@@ -3327,8 +3315,7 @@ class IndexerSpec extends AnyFunSuite {
     val fx = Seq(SourceFile("core.py", core),
       SourceFile("pkg/__init__.py", init),
       SourceFile("app.py", app)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t85b"), "t85b")
+    val out = IngestArms.both(fx, "t85b")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "core.User.save")
       .select("src").as[String].collect().toSet
@@ -3359,8 +3346,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA), SourceFile("mod_b.py", modB),
       SourceFile("mod_c.py", modC)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t86"), "t86")
+    val out = IngestArms.both(fx, "t86")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3413,8 +3399,7 @@ class IndexerSpec extends AnyFunSuite {
       SourceFile("mod_c.py", modC), SourceFile("mod_d.py", modD),
       SourceFile("mod_f.py", modF), SourceFile("mod_e.py", modE),
       SourceFile("mod_h.py", modH)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t89"), "t89")
+    val out = IngestArms.both(fx, "t89")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3557,8 +3542,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t91"), "t91")
+    val out = IngestArms.both(fx, "t91")
     val calls = out.edges
       .filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
@@ -3661,8 +3645,7 @@ class IndexerSpec extends AnyFunSuite {
       "from mod_b import get\n\ndef use():\n    get().boom()\n"
     val fx = Seq(SourceFile("mod_bad.py", modBad),
       SourceFile("mod_b.py", modB), SourceFile("mod_c.py", modC)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t86d"), "t86d")
+    val out = IngestArms.both(fx, "t86d")
     val booms = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_bad.Conn.boom")
       .select("src").as[String].collect().toSet
@@ -3707,8 +3690,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t87"), "t87")
+    val out = IngestArms.both(fx, "t87")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.User.save")
       .select("src").as[String].collect().toSet
@@ -3767,8 +3749,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t88"), "t88")
+    val out = IngestArms.both(fx, "t88")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.User.save")
       .select("src").as[String].collect().toSet
@@ -3811,8 +3792,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t84"), "t84")
+    val out = IngestArms.both(fx, "t84")
     val calls = out.edges.filter(col("rel_type") === Rel.Call)
       .select("src", "dst").as[(String, String)].collect().toSet
     assert(calls.contains(("mod_b.use_typed", "mod_a.Conn.ping")),
@@ -3861,8 +3841,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_a.py", modA),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t67"), "t67")
+    val out = IngestArms.both(fx, "t67")
     val pings = out.edges
       .filter(col("rel_type") === Rel.Call && col("dst") === "mod_a.Conn.ping")
       .select("src").as[String].collect().toSet
@@ -3925,8 +3904,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_m.py", modM), SourceFile("mod_f.py", modF),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t68"), "t68")
+    val out = IngestArms.both(fx, "t68")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call &&
         col("dst") === "mod_m.User.save")
@@ -3996,8 +3974,7 @@ class IndexerSpec extends AnyFunSuite {
         |""".stripMargin
     val fx = Seq(SourceFile("mod_m.py", modM), SourceFile("mod_f.py", modF),
       SourceFile("mod_b.py", modB)).toDS()
-    val out = EnrichArms.both(
-      IndexPipeline.indexFiles(spark, fx, "t69"), "t69")
+    val out = IngestArms.both(fx, "t69")
     val saves = out.edges
       .filter(col("rel_type") === Rel.Call &&
         col("dst") === "mod_m.User.save")
@@ -4785,7 +4762,7 @@ class IndexerSpec extends AnyFunSuite {
           |    def m(self):
           |        return super().m()
           |""".stripMargin)).toDS()
-    val out = EnrichArms.both(IndexPipeline.indexFiles(spark, fx, "tfan"), "tfan")
+    val out = IngestArms.both(fx, "tfan")
     val es = out.edges.select("src", "rel_type", "dst")
       .as[(String, String, String)].collect().toSet
     def dsts(src: String, rel: String) =

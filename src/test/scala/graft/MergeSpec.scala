@@ -72,4 +72,36 @@ class MergeSpec extends AnyFunSuite {
     assert(r.getString(1) === Kind.Class)
     assert(r.getAs[String]("code") === "c1") // old prop survives the upsert
   }
+
+  test("MergeLocal folds random event streams to Merge's tables row for " +
+      "row: column LWW, label promotion, task sets, props fold, stubs") {
+    def rows(rs: Seq[org.apache.spark.sql.Row]) =
+      rs.groupBy(identity).view.mapValues(_.size).toMap
+    (1 to 5).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](as: A*): A = as(rnd.nextInt(as.size))
+      def opt(s: String) = pick(None, Some(s))
+      def props = (1 to rnd.nextInt(3)).map(_ =>
+        pick("a", "b", "c") -> rnd.nextInt(5).toString).toMap
+      // unique seqs: two events of one key never tie
+      val seqs = rnd.shuffle((1L to 400L).toVector)
+      val symbols = seqs.take(200).map(s => SymbolEvent(s,
+        pick("t1", "t2", null), pick(Kind.None_, Kind.Class, Kind.Function),
+        s"m.k${rnd.nextInt(12)}", pick("n1", "n2", null), opt("f.py"),
+        opt(s"sig$s"), opt("C"), opt(s"code$s"), props))
+      val edgeEvents = seqs.drop(200).map(s => EdgeEvent(s, "t1",
+        s"m.k${rnd.nextInt(16)}", pick(Rel.Call, Rel.Contains),
+        s"m.k${rnd.nextInt(16)}", props))
+      val edges = Merge.mergeEdges(edgeEvents.toDF())
+      val nodes = Merge.withStubs(Merge.mergeNodes(symbols.toDF()), edges, "t9")
+      val localNodes = graft.merge.MergeLocal.nodes(symbols)
+      val localEdges = graft.merge.MergeLocal.edges(edgeEvents)
+      val named = localNodes.map(_.getString(0)).toSet
+      assert(rows(nodes.collect().toSeq) === rows(localNodes ++
+        graft.merge.MergeLocal.stubs(named, localEdges, "t9")), s"seed $seed")
+      assert(rows(edges.collect().toSeq) === rows(localEdges.map(e =>
+        org.apache.spark.sql.Row(e.src, e.relType, e.dst, e.props))),
+        s"seed $seed")
+    }
+  }
 }

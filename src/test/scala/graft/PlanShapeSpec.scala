@@ -842,16 +842,20 @@ class PlanShapeSpec extends AnyFunSuite {
       s"no cartesian anywhere in training; plan:\n$plan")
   }
 
+  private def fixtureRepo =
+    getClass.getClassLoader.getResource("fixture_repo").getPath
+
+  // merged by the Spark shuffles, so enrich's own probe decides its arm
   private def fixtureIndexed = {
     import graft.indexer.IndexPipeline
-    val repo = getClass.getClassLoader.getResource("fixture_repo").getPath
-    IndexPipeline.indexFiles(spark, IndexPipeline.readRepo(spark, repo), "t1")
+    IngestArms.indexFiles(IngestArms.Distributed)(
+      IndexPipeline.readRepo(spark, fixtureRepo), "t1")
   }
 
   test("enrich's edge frame reads its pinned join tail: no Join left " +
       "for each snapshot table to re-run") {
     val edges =
-      EnrichArms.enrich(EnrichArms.Distributed)(fixtureIndexed, "t1").edges
+      IngestArms.enrich(IngestArms.Distributed)(fixtureIndexed, "t1").edges
     val plan = edges.queryExecution.optimizedPlan
     assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans
         .logical.Join => j }.isEmpty,
@@ -861,10 +865,27 @@ class PlanShapeSpec extends AnyFunSuite {
   test("enrich within the row budget runs one job per probed table") {
     import JobRecorder.{jobs, recorded}
     val ix = fixtureIndexed
-    def jobsOn(arm: EnrichArms.Arm) =
-      jobs(recorded(spark)(EnrichArms.enrich(arm)(ix, "t1"))._2)
+    def jobsOn(arm: IngestArms.Arm) =
+      jobs(recorded(spark)(IngestArms.enrich(arm)(ix, "t1"))._2)
     val probed = 3 // edges, nodes, imports
-    assert(jobsOn(EnrichArms.Driver) <= probed)
-    assert(jobsOn(EnrichArms.Distributed) > probed)
+    assert(jobsOn(IngestArms.Driver) <= probed)
+    assert(jobsOn(IngestArms.Distributed) > probed)
+  }
+
+  test("indexRepo within the row budget runs at most 9 jobs") {
+    import JobRecorder.{jobs, recorded}
+    def jobsOn(arm: IngestArms.Arm) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ingest-jobs")
+      try IngestArms.under(arm)(jobs(recorded(spark)(
+        graft.api.GraphDatabase.open(spark, s"$dir/db")
+          .indexRepo(fixtureRepo, "t1"))._2))
+      finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
+    // the pre-scan 4 (the tree's two shuffles, its cache, the collect),
+    // the bounded event collect 2 (the parse into the cache, the
+    // collect), the snapshot write 3 (a job per table)
+    val bound = 9
+    assert(jobsOn(IngestArms.Driver) <= bound)
+    assert(jobsOn(IngestArms.Distributed) > bound)
   }
 }
