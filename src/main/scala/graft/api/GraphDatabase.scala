@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.indexer.IndexPipeline
 import graft.merge.Merge
 import graft.model._
-import graft.ops.GraphOps
+import graft.ops.{Bounded, GraphOps}
 import graft.store.Snapshot
 import graft.store.Snapshot.GraphSnapshot
 
@@ -27,6 +27,24 @@ import graft.store.Snapshot.GraphSnapshot
   *   db.updateVersion("t2", "t3", changed)     // update_version.py
   *   db.clearTaskData("t1")                    // A5 DETACH DELETE
   * }}}
+  *
+  * Residency. Each version's `nodes` and `edges` live on the driver, as
+  * local frames, when they fit the row budget ([[graft.ops.Bounded]],
+  * `spark.graft.localThreshold`); otherwise they stay parquet-backed
+  * (persisted) or pinned (in memory). `locations`, which no read
+  * touches, is never held. The choice is made at most once per version
+  * and table: by the table's first read (so `indexRepo` runs no collect
+  * for it), or by the write that makes the version — a table the driver
+  * held stays held while its new plan, run over the held leaves, still
+  * fits. Spark folds point filters over local frames without a job, so
+  * point reads, the MERGE existence probes and the path searches' edge
+  * collect run on the driver only.
+  *
+  * Every write ends the same way (`advance`): a persisted database
+  * writes the tables the write changed, links the files of the others
+  * (the [[graft.store.Snapshot]] atomic commit), and reads back every
+  * table the driver does not hold, so no frame outlives the files it
+  * lists. A commit that stages no edge rewrites `nodes` alone.
   */
 final class GraphDatabase private (
     val spark: SparkSession, dir: Option[String]) {
@@ -47,6 +65,11 @@ final class GraphDatabase private (
 
   dir.filter(d => new java.io.File(s"$d/nodes").exists())
     .foreach(d => snap = Snapshot.read(spark, d))
+
+  // whether the driver holds the current version's "nodes" and "edges";
+  // a table missing here is decided by its next read
+  private var held = Map.empty[String, Boolean]
+  private def isHeld(t: String): Boolean = held.getOrElse(t, false)
 
   // Staged per-call events accumulate on the DRIVER until commit() — this
   // mirrors the reference's per-call add_node/add_edge surface 1:1 and is
@@ -69,9 +92,74 @@ final class GraphDatabase private (
       commit()
   }
 
-  def nodes: DataFrame = { autoFlush(); snap.nodes }
-  def edges: DataFrame = { autoFlush(); snap.edges }
+  def nodes: DataFrame = { autoFlush(); table("nodes") }
+  def edges: DataFrame = { autoFlush(); table("edges") }
   def locations: DataFrame = { autoFlush(); snap.locations }
+
+  /** Table `t` ("nodes" or "edges") of the current version; its first
+    * read decides whether the driver holds it. */
+  private def table(t: String): DataFrame = synchronized {
+    if (!held.contains(t)) {
+      val local = hold(t, snap(t))
+      held += t -> local.isDefined
+      local.foreach(l => snap = snap.updated(t, l))
+    }
+    snap(t)
+  }
+
+  /** `df` as a local frame when it fits the row budget: one bounded
+    * collect. Persisted, it takes the schema a read of table `t` gives,
+    * so a held table and a read one have the same schema. */
+  private def hold(t: String, df: DataFrame): Option[DataFrame] = {
+    val schema = if (dir.isDefined) Snapshot.schema(t) else df.schema
+    val shaped = if (dir.isDefined) df.to(schema) else df
+    Bounded.take(shaped, Bounded.rows(spark))(identity).map(rows =>
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  /** Installs the next version, in which the given tables changed and the
+    * others stay as they are; every write ends here. A changed table the
+    * driver held stays held if it still fits. Persisted, the changed
+    * tables are written (a held one from its local frame, one file per
+    * table partition) and the others linked, in one atomic commit, and
+    * every table the driver does not hold is read back from the new
+    * directory. In memory, a changed table decided not to fit is pinned:
+    * each commit's merge plan embeds the previous snapshot's plan several
+    * times (upsertInto + stubs), so a session of many commits (e.g.
+    * per-statement MERGE existence probes) would otherwise compound its
+    * plan exponentially. */
+  private def advance(nodes: Option[DataFrame] = None,
+      edges: Option[DataFrame] = None,
+      locations: Option[DataFrame] = None): Unit = {
+    val changed = Seq("nodes" -> nodes, "edges" -> edges,
+      "locations" -> locations).collect { case (t, Some(df)) => t -> df }.toMap
+    val next = changed.foldLeft(snap) { case (s, (t, df)) =>
+      if (!isHeld(t)) s.updated(t, df)
+      else {
+        val local = hold(t, df)
+        held += t -> local.isDefined
+        s.updated(t, local.getOrElse(df))
+      }
+    }
+    dir match {
+      case Some(d) if changed.nonEmpty || !new java.io.File(d).exists() =>
+        def written(t: String) =
+          if (isHeld(t)) next(t).coalesce(1) else next(t)
+        Snapshot.write(GraphSnapshot(written("nodes"), written("edges"),
+          next.locations), d, unchanged = Set("nodes", "edges",
+            "locations") -- changed.keySet)
+        val read = Snapshot.read(spark, d)
+        snap = GraphSnapshot(
+          if (isHeld("nodes")) next.nodes else read.nodes,
+          if (isHeld("edges")) next.edges else read.edges,
+          read.locations)
+      case Some(_) => // nothing changed, and the directory holds it
+      case None =>
+        snap = changed.keys.foldLeft(next)((s, t) =>
+          if (held.get(t).contains(false)) s.updated(t, s(t).pin(eager = true))
+          else s)
+    }
+  }
 
   // ------------------------------------------------------------- write path
 
@@ -112,7 +200,7 @@ final class GraphDatabase private (
     val stagedSame = stagedEdges.filter(e =>
       e.src == src && e.relType == relType && e.dst == dst)
     val exists = stagedSame.nonEmpty ||
-      !snap.edges.filter(col("src") === src &&
+      !table("edges").filter(col("src") === src &&
         col("rel_type") === relType && col("dst") === dst).isEmpty
     if (!exists) addEdge(taskId, src, relType, dst, props ++ onCreate)
     else if (onMatch.nonEmpty) {
@@ -127,14 +215,25 @@ final class GraphDatabase private (
   }
 
   /** Merge the staged batch into the snapshot (set-oriented A1-A4) and
-    * persist if a directory is configured. */
+    * persist if a directory is configured. A batch without edges leaves
+    * the edge table (and its files) as it is. */
   def commit(): Unit = synchronized {
-    if (stagedSymbols.nonEmpty || stagedEdges.nonEmpty || stagedUpdates.nonEmpty) {
+    if (stagedSymbols.isEmpty && stagedEdges.isEmpty && stagedUpdates.isEmpty)
+      advance()
+    else {
+      // a held table enters the merge as one partition, as the staged
+      // events always do: over held tables Spark then plans the merge
+      // with no exchange, one task over the driver's rows
+      def leaf(t: String) = {
+        val df = table(t)
+        if (isHeld(t)) df.coalesce(1) else df
+      }
+      def staged(events: DataFrame) = events.coalesce(1)
+      val base = leaf("nodes")
       // mergeNodes already set-unions task_ids per node from the event
       // stream, so a batch staging events from several tasks attributes
       // each node (and each stub, below) to exactly the tasks that touched
       // it — no collapse to the first task id (round-3 defect #2).
-      val edgeEvents = stagedEdges.toSeq.toDF()
       // never-create (graphDB.py:114-119): update_node applies only when
       // the node EXISTS at the update's call time. Per-call replay order is
       // recovered from the seq numbers: an update is "late" when some
@@ -158,63 +257,54 @@ final class GraphDatabase private (
       // BASE snapshot only — left_semi drops the rest, so a later add in
       // this batch starts from a clean node, exactly like per-call replay
       val baseNodes =
-        if (earlyUpdates.isEmpty) snap.nodes.drop("label")
-        else Merge.upsertInto(snap.nodes.drop("label"),
-          Merge.mergeNodes(earlyUpdates.toDF())
-            .join(snap.nodes.select("full_name"), Seq("full_name"), "left_semi"))
+        if (earlyUpdates.isEmpty) base.drop("label")
+        else Merge.upsertInto(base.drop("label"),
+          Merge.mergeNodes(staged(earlyUpdates.toDF()))
+            .join(base.select("full_name"), Seq("full_name"), "left_semi"))
       // late updates on added keys ride the SAME seq-ordered stream (null
       // taskId → no task attribution, 'none' kind → no promotion), so the
       // LWW fold interleaves adds and prop-SETs in exact call order; every
       // key in `fresh` has an addNode event, so no never-create gating is
       // needed here
-      val fresh = Merge.mergeNodes(
-        (stagedSymbols.toSeq ++ lateUpdates.filter(u => addKeys(u.fullName))).toDF())
-      val freshEdges = Merge.mergeEdges(edgeEvents)
+      val fresh = Merge.mergeNodes(staged(
+        (stagedSymbols.toSeq ++ lateUpdates.filter(u => addKeys(u.fullName))).toDF()))
       val upserted = Merge.upsertInto(baseNodes, fresh)
-      // updateNode AFTER addEdge in the same batch must patch the edge's
-      // stub node (per-call replay: the stub exists when the SET runs) —
-      // seq-gated so an update staged BEFORE the edge stays a no-op,
-      // exactly like the reference's immediate calls
-      val stubPatchEvents = lateUpdates.filter(u =>
-        !addKeys(u.fullName) &&
-          endpointFirstSeq.get(u.fullName).exists(u.seq > _))
-      // edge upsert: fresh props overwrite base props key-wise (A4)
-      val allEdges = snap.edges.withColumn("prio", lit(0))
-        .unionByName(freshEdges.withColumn("prio", lit(1)))
-        .groupBy("src", "rel_type", "dst")
-        .agg(aggregate(
-          array_sort(collect_list(struct(col("prio"), col("props"))),
-            (l, r) => l.getField("prio") - r.getField("prio")),
-          map().cast("map<string,string>"),
-          (acc, e) => map_concat(
-            map_filter(acc, (k, _) => !map_contains_key(e.getField("props"), k)),
-            e.getField("props"))).as("props"))
-      val withStubs = Merge.withStubsByTask(upserted, edgeEvents)
-      val finalNodes =
-        if (stubPatchEvents.isEmpty) withStubs
-        else Merge.upsertInto(withStubs, Merge.mergeNodes(stubPatchEvents.toDF()))
-      snap = GraphSnapshot(finalNodes, allEdges, snap.locations)
+      val edgeEvents = staged(stagedEdges.toSeq.toDF())
+      // without staged edges there is no stub to add or patch, and no
+      // edge to regroup
+      val next =
+        if (stagedEdges.isEmpty) (upserted, None)
+        else {
+          // updateNode AFTER addEdge in the same batch must patch the
+          // edge's stub node (per-call replay: the stub exists when the SET
+          // runs) — seq-gated so an update staged BEFORE the edge stays a
+          // no-op, exactly like the reference's immediate calls
+          val stubPatchEvents = lateUpdates.filter(u =>
+            !addKeys(u.fullName) &&
+              endpointFirstSeq.get(u.fullName).exists(u.seq > _))
+          // edge upsert: fresh props overwrite base props key-wise (A4)
+          val allEdges = leaf("edges").withColumn("prio", lit(0))
+            .unionByName(Merge.mergeEdges(edgeEvents).withColumn("prio", lit(1)))
+            .groupBy("src", "rel_type", "dst")
+            .agg(aggregate(
+              array_sort(collect_list(struct(col("prio"), col("props"))),
+                (l, r) => l.getField("prio") - r.getField("prio")),
+              map().cast("map<string,string>"),
+              (acc, e) => map_concat(
+                map_filter(acc, (k, _) => !map_contains_key(e.getField("props"), k)),
+                e.getField("props"))).as("props"))
+          val withStubs = Merge.withStubsByTask(upserted, edgeEvents)
+          val finalNodes =
+            if (stubPatchEvents.isEmpty) withStubs
+            else Merge.upsertInto(withStubs,
+              Merge.mergeNodes(staged(stubPatchEvents.toDF())))
+          (finalNodes, Some(allEdges))
+        }
       stagedSymbols.clear(); stagedEdges.clear(); stagedUpdates.clear()
-    }
-    dir match {
-      case Some(d) => Snapshot.write(snap, d); snap = Snapshot.read(spark, d)
-      case None =>
-        // in-memory sessions must truncate lineage HERE, exactly as the
-        // persisted path does via its write+re-read: each commit's merge
-        // plan embeds the previous snapshot's plan several times
-        // (upsertInto + stubs), so an interactive session with many
-        // commits (e.g. per-statement MERGE existence probes) otherwise
-        // compounds the plan exponentially
-        snap = GraphSnapshot(snap.nodes.pin(eager = true),
-          snap.edges.pin(eager = true), snap.locations)
+      advance(nodes = Some(next._1), edges = next._2)
     }
   }
 
-  /** A3 — prop-only update of an EXISTING node (graphDB.py:114-119:
-    * match-then-SET): a missing full_name is a NO-OP — no node is
-    * created, unlike [[addNode]]'s upsert. STAGED like addNode (one merge
-    * + one snapshot write per batch instead of a full snapshot rewrite
-    * per call); reads flush first, so call-order semantics are intact. */
   /** Neo4j `MERGE … ON CREATE SET … ON MATCH SET …` — the conditional
     * upsert: if the key exists, apply the ON MATCH branch as an A3 prop
     * patch; otherwise create the node from the pattern props + the ON
@@ -232,11 +322,16 @@ final class GraphDatabase private (
       onMatch: Map[String, String]): Unit = synchronized {
     val exists = stagedSymbols.exists(_.fullName == fullName) ||
       stagedEdges.exists(e => e.src == fullName || e.dst == fullName) ||
-      !snap.nodes.filter(col("full_name") === fullName).isEmpty
+      !table("nodes").filter(col("full_name") === fullName).isEmpty
     if (!exists) addNode(taskId, kind, fullName, props ++ onCreate)
     else if (onMatch.nonEmpty) updateNode(fullName, onMatch)
   }
 
+  /** A3 — prop-only update of an EXISTING node (graphDB.py:114-119:
+    * match-then-SET): a missing full_name is a NO-OP — no node is
+    * created, unlike [[addNode]]'s upsert. STAGED like addNode (one merge
+    * + one snapshot write per batch instead of a full snapshot rewrite
+    * per call); reads flush first, so call-order semantics are intact. */
   def updateNode(fullName: String, props0: Map[String, String]): Unit = synchronized {
     // accept the "class" props key exactly as addNode does (stored in the
     // clazz column)
@@ -257,18 +352,21 @@ final class GraphDatabase private (
     mergeIndexed(ix, taskId)
   }
 
-  private def mergeIndexed(ix: IndexPipeline.Indexed, taskId: String): Unit = {
+  private def mergeIndexed(ix: IndexPipeline.Indexed, taskId: String,
+      baseNodes: DataFrame = snap.nodes): Unit = {
     // a re-indexed file's locations replace its base rows, not add to them
     val (nodes2, baseLocations) =
-      if (snap.nodes.isEmpty) (ix.nodes, snap.locations)
-      else (Merge.upsertInto(snap.nodes, ix.nodes.drop("label")),
+      if (baseNodes.isEmpty) (ix.nodes, snap.locations)
+      else (Merge.upsertInto(baseNodes, ix.nodes.drop("label")),
         snap.locations.join(ix.locations.select("filePath").distinct(),
           Seq("filePath"), "left_anti"))
     val edges2 = snap.edges.unionByName(ix.edges)
       .dropDuplicates("src", "rel_type", "dst")
-    snap = GraphSnapshot(nodes2, edges2,
-      baseLocations.unionByName(ix.locations))
-    dir.foreach(d => { Snapshot.write(snap, d); snap = Snapshot.read(spark, d) })
+    // the ingested version's tables are decided by their first read, so
+    // the ingest runs no collect for them
+    held = Map.empty
+    advance(Some(nodes2), Some(edges2),
+      Some(baseLocations.unionByName(ix.locations)))
   }
 
   /** Cypher `MATCH (a)-[r:REL]->(b) DELETE r` — point edge delete (r14
@@ -281,14 +379,8 @@ final class GraphDatabase private (
   def deleteEdge(src: String, relType: String, dst: String): Unit =
     synchronized {
       autoFlush()
-      // lineage truncation mirrors commit's in-memory arm: later
-      // commits embed the snapshot plan several times, so an unchecked
-      // filter chain would compound
-      val e2 = snap.edges.filter(!(col("src") === src &&
-        col("rel_type") === relType && col("dst") === dst))
-        .pin(eager = true)
-      snap = GraphSnapshot(snap.nodes, e2, snap.locations)
-      dir.foreach(d => Snapshot.write(snap, d))
+      advance(edges = Some(table("edges").filter(!(col("src") === src &&
+        col("rel_type") === relType && col("dst") === dst))))
     }
 
   /** Cypher `MATCH (n {full_name:'x'}) REMOVE n.k, n.j` — property
@@ -303,7 +395,7 @@ final class GraphDatabase private (
       val core = Map("name" -> "name", "file_path" -> "file_path",
         "signature" -> "signature", "class" -> "clazz", "code" -> "code")
       val hit = col("full_name") === fullName
-      var n2 = snap.nodes
+      var n2 = table("nodes")
       keys.foreach { k =>
         core.get(k) match {
           case Some(c) => n2 = n2.withColumn(c,
@@ -313,34 +405,28 @@ final class GraphDatabase private (
               .otherwise(col("props")))
         }
       }
-      snap = GraphSnapshot(n2.pin(eager = true), snap.edges,
-        snap.locations)
-      dir.foreach(d => Snapshot.write(snap, d))
+      advance(nodes = Some(n2))
     }
 
   /** A5 — DETACH DELETE of a task snapshot. */
   def clearTaskData(taskId: String): Unit = synchronized {
     autoFlush()
-    val (n2, e2) = GraphOps.clearTask(snap.nodes, snap.edges, taskId)
-    snap = GraphSnapshot(n2, e2, snap.locations)
-    dir.foreach(d => Snapshot.write(snap, d))
+    val (n2, e2) = GraphOps.clearTask(table("nodes"), table("edges"), taskId)
+    advance(Some(n2), Some(e2))
   }
 
   /** A6 — clear everything. */
   def clearDatabase(): Unit = synchronized {
     stagedSymbols.clear(); stagedEdges.clear(); stagedUpdates.clear()
-    snap = GraphSnapshot(snap.nodes.limit(0), snap.edges.limit(0),
-      snap.locations.limit(0))
-    dir.foreach(d => Snapshot.write(snap, d))
+    advance(Some(snap.nodes.limit(0)), Some(snap.edges.limit(0)),
+      Some(snap.locations.limit(0)))
   }
 
   /** A7 — strip a root prefix off file paths. */
   def updateFilePath(root: String): Unit = synchronized {
     autoFlush()
-    snap = GraphSnapshot(
-      GraphOps.stripPathPrefix(snap.nodes, "file_path", root),
-      snap.edges, snap.locations)
-    dir.foreach(d => Snapshot.write(snap, d))
+    advance(nodes =
+      Some(GraphOps.stripPathPrefix(table("nodes"), "file_path", root)))
   }
 
   /** D5/D6 — incremental version update (update_version.py:58-73): carry
@@ -348,16 +434,16 @@ final class GraphDatabase private (
   def updateVersion(oldTask: String, newTask: String, changedFiles: Seq[String],
       repoRoot: Option[String] = None): Unit = synchronized {
     autoFlush()
-    snap = GraphSnapshot(
-      GraphOps.carryForward(snap.nodes, newTask, changedFiles),
-      snap.edges, snap.locations)
-    repoRoot.foreach { root =>
-      import IndexPipeline.SourceFile
-      val changed = IndexPipeline.readRepo(spark, root)
-        .filter((f: SourceFile) => changedFiles.contains(f.path))
-      val ix = IndexPipeline.enrich(
-        IndexPipeline.indexFiles(spark, changed, newTask), newTask)
-      mergeIndexed(ix, newTask)
+    val carried = GraphOps.carryForward(snap.nodes, newTask, changedFiles)
+    repoRoot match {
+      case None => advance(nodes = Some(carried))
+      case Some(root) =>
+        import IndexPipeline.SourceFile
+        val changed = IndexPipeline.readRepo(spark, root)
+          .filter((f: SourceFile) => changedFiles.contains(f.path))
+        val ix = IndexPipeline.enrich(
+          IndexPipeline.indexFiles(spark, changed, newTask), newTask)
+        mergeIndexed(ix, newTask, carried)
     }
   }
 
@@ -381,7 +467,7 @@ final class GraphDatabase private (
 
   def expand(relType: String, srcPred: Column, dstPred: Column = lit(true)): DataFrame = {
     val n = nodes // flushes once; snapshot frames below are consistent
-    val e = snap.edges.filter(col("rel_type") === relType)
+    val e = table("edges").filter(col("rel_type") === relType)
     val srcs = n.filter(srcPred).select(col("full_name").as("src"))
     e.join(broadcast(srcs), "src")
       .join(n.withColumnRenamed("full_name", "dst_name")
@@ -396,20 +482,11 @@ final class GraphDatabase private (
     * kind promotes; anything else is untouched (A2). */
   def promoteNodeKind(fullName: String, newKind: String): Unit = synchronized {
     autoFlush()
-    snap = GraphSnapshot(
-      snap.nodes.withColumn("kind",
-        when(col("full_name") === fullName && col("kind") === Kind.None_,
-          newKind).otherwise(col("kind"))),
-      snap.edges, snap.locations)
-    dir.foreach(d => Snapshot.write(snap, d))
+    advance(nodes = Some(table("nodes").withColumn("kind",
+      when(col("full_name") === fullName && col("kind") === Kind.None_,
+        newKind).otherwise(col("kind")))))
   }
 
-  /** B10 — `execute_query` for the reference's observed Cypher shapes
-    * (graphDB.py:106-112; full Cypher delegated to Neo4j there, subset
-    * parsed natively here — SURVEY.md §7.3). WRITE statements (the
-    * shapes the reference's own handler issues — see [[CypherWrite]])
-    * route to the typed write API and return an empty frame, exactly
-    * the no-records result `graph.run` gives a write. */
   /** `<read clauses> FOREACH (v IN <boundList> | <write body>)` — the
     * DATA-DRIVEN write loop (`MATCH … WITH collect(n.name) AS names
     * FOREACH (nm IN names | SET …)`): the read part runs through
@@ -422,6 +499,12 @@ final class GraphDatabase private (
   private val dataForeachRe =
     """(?is)^(.+?\S)\s+FOREACH\s*\(\s*(\w+)\s+IN\s+(\w+)\s*\|\s*(.+)\)\s*$""".r
 
+  /** B10 — `execute_query` for the reference's observed Cypher shapes
+    * (graphDB.py:106-112; full Cypher delegated to Neo4j there, subset
+    * parsed natively here — SURVEY.md §7.3). WRITE statements (the
+    * shapes the reference's own handler issues — see [[CypherWrite]])
+    * route to the typed write API and return an empty frame, exactly
+    * the no-records result `graph.run` gives a write. */
   def executeQuery(cypher: String): DataFrame =
     CypherWrite.parseAll(cypher) match {
       case None if dataForeachRe.findFirstMatchIn(cypher).isDefined =>
@@ -429,7 +512,7 @@ final class GraphDatabase private (
         val (readPart, v, listVar, body) =
           (m.group(1), m.group(2), m.group(3), m.group(4))
         val n = nodes
-        val rows = CypherLite.execute(n, snap.edges,
+        val rows = CypherLite.execute(n, table("edges"),
           s"$readPart RETURN $listVar AS __fe").collect()
         val elems = rows.toSeq.flatMap(r => r.getSeq[Any](0)).map(_.toString)
         if (elems.nonEmpty) {
@@ -463,7 +546,7 @@ final class GraphDatabase private (
             removeNodeProps(fn, keys)
         }
         spark.emptyDataFrame
-      case None => { val n = nodes; CypherLite.execute(n, snap.edges, cypher) }
+      case None => { val n = nodes; CypherLite.execute(n, table("edges"), cypher) }
     }
 
   /** [[executeQuery]] with Neo4j-style parameters — the reference's own

@@ -82,8 +82,9 @@ object IndexPipeline {
         .map(p => rootPath.relativize(p).toString).toSeq.sorted
       finally topStream.close()
     val par = spark.sparkContext.defaultParallelism
-    spark.createDataset(top)
-      .repartition(math.max(1, math.min(top.size, par)))
+    // the listing is spread as it is sliced, without a shuffle
+    spark.createDataset(spark.sparkContext.parallelize(top,
+        math.max(1, math.min(top.size, par))))
       .flatMap { rel =>
         val p = Paths.get(root, rel)
         if (Files.isRegularFile(p)) {

@@ -757,43 +757,44 @@ class CypherLiteSpec extends AnyFunSuite {
 
   test("write Cypher: CREATE/MERGE/SET/promotion/DELETE route to the " +
       "typed write API with reference semantics") {
-    val d = GraphDatabase.inMemory(spark)
-    // CREATE with kind+task labels and props (py2neo create spelling)
-    assert(d.executeQuery(
-      "CREATE (n:CLASS:tw {full_name: 'm.A', name: 'A'})").count() === 0)
-    // MERGE + SET upserts props on the same key (add_node's update path)
-    d.executeQuery("MERGE (n:CLASS:tw {full_name: 'm.A'}) SET n.code = 'class A:'")
-    // edge MERGE stubs the unknown endpoint as `none` (A4)
-    d.executeQuery(
-      "MERGE (a:tw {full_name: 'm.A'})-[:INHERITS]->(b {full_name: 'm.B'})")
-    val kinds = d.nodes.select("full_name", "kind")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(kinds === Map("m.A" -> Kind.Class, "m.B" -> Kind.None_))
-    // explicit promotion Cypher (graphDB.py:86-88): none → CLASS
-    d.executeQuery(
-      "MATCH (n:none {full_name: 'm.B'}) REMOVE n:none SET n:CLASS")
-    assert(d.nodes.filter(col("full_name") === "m.B")
-      .select("kind").head().getString(0) === Kind.Class)
-    // a second promotion attempt is a no-op (kind is no longer none)
-    d.executeQuery(
-      "MATCH (n:none {full_name: 'm.B'}) REMOVE n:none SET n:METHOD")
-    assert(d.nodes.filter(col("full_name") === "m.B")
-      .select("kind").head().getString(0) === Kind.Class)
-    // MATCH-SET is A3: existing node patches, missing node is a NO-OP
-    d.executeQuery("MATCH (n {full_name: 'm.A'}) SET n.sig = 'x', n.v = '2'")
-    d.executeQuery("MATCH (n {full_name: 'm.GHOST'}) SET n.v = '9'")
-    assert(d.nodes.count() === 2)
-    val aProps = d.executeQuery(
-      "MATCH (n:tw {full_name: 'm.A'}) RETURN n.code, n.sig, n.v").head()
-    assert((aProps.getString(0), aProps.getString(1), aProps.getString(2))
-      === (("class A:", "x", "2")))
-    // task-scoped DETACH DELETE clears the task's nodes (A5)
-    d.executeQuery("MATCH (n:`tw`) DETACH DELETE n")
-    assert(d.nodes.count() === 0)
-    // full clear (A6)
-    d.executeQuery("CREATE (n:CLASS:tw2 {full_name: 'm.C'})")
-    d.executeQuery("MATCH (n) DETACH DELETE n")
-    assert(d.nodes.count() === 0)
+    DatabaseArms.inMemory { d =>
+      // CREATE with kind+task labels and props (py2neo create spelling)
+      assert(d.executeQuery(
+        "CREATE (n:CLASS:tw {full_name: 'm.A', name: 'A'})").count() === 0)
+      // MERGE + SET upserts props on the same key (add_node's update path)
+      d.executeQuery("MERGE (n:CLASS:tw {full_name: 'm.A'}) SET n.code = 'class A:'")
+      // edge MERGE stubs the unknown endpoint as `none` (A4)
+      d.executeQuery(
+        "MERGE (a:tw {full_name: 'm.A'})-[:INHERITS]->(b {full_name: 'm.B'})")
+      val kinds = d.nodes.select("full_name", "kind")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(kinds === Map("m.A" -> Kind.Class, "m.B" -> Kind.None_))
+      // explicit promotion Cypher (graphDB.py:86-88): none → CLASS
+      d.executeQuery(
+        "MATCH (n:none {full_name: 'm.B'}) REMOVE n:none SET n:CLASS")
+      assert(d.nodes.filter(col("full_name") === "m.B")
+        .select("kind").head().getString(0) === Kind.Class)
+      // a second promotion attempt is a no-op (kind is no longer none)
+      d.executeQuery(
+        "MATCH (n:none {full_name: 'm.B'}) REMOVE n:none SET n:METHOD")
+      assert(d.nodes.filter(col("full_name") === "m.B")
+        .select("kind").head().getString(0) === Kind.Class)
+      // MATCH-SET is A3: existing node patches, missing node is a NO-OP
+      d.executeQuery("MATCH (n {full_name: 'm.A'}) SET n.sig = 'x', n.v = '2'")
+      d.executeQuery("MATCH (n {full_name: 'm.GHOST'}) SET n.v = '9'")
+      assert(d.nodes.count() === 2)
+      val aProps = d.executeQuery(
+        "MATCH (n:tw {full_name: 'm.A'}) RETURN n.code, n.sig, n.v").head()
+      assert((aProps.getString(0), aProps.getString(1), aProps.getString(2))
+        === (("class A:", "x", "2")))
+      // task-scoped DETACH DELETE clears the task's nodes (A5)
+      d.executeQuery("MATCH (n:`tw`) DETACH DELETE n")
+      assert(d.nodes.count() === 0)
+      // full clear (A6)
+      d.executeQuery("CREATE (n:CLASS:tw2 {full_name: 'm.C'})")
+      d.executeQuery("MATCH (n) DETACH DELETE n")
+      assert(d.nodes.count() === 0)
+    }
   }
 
   private lazy val dsp = {
@@ -883,23 +884,24 @@ class CypherLiteSpec extends AnyFunSuite {
   }
 
   test("write Cypher rejects malformed writes instead of reading them") {
-    val d = GraphDatabase.inMemory(spark)
-    // node write without a task label
-    intercept[IllegalArgumentException] {
-      d.executeQuery("CREATE (n:CLASS {full_name: 'm.X'})")
-    }
-    // parameterized statement
-    intercept[IllegalArgumentException] {
-      d.executeQuery(
-        "MATCH (n:none {full_name: $full_name}) REMOVE n:none SET n:CLASS")
-    }
-    // DETACH DELETE by kind label
-    intercept[IllegalArgumentException] {
-      d.executeQuery("MATCH (n:CLASS) DETACH DELETE n")
-    }
-    // write keyword head with unsupported body
-    intercept[IllegalArgumentException] {
-      d.executeQuery("MERGE (a)-[:R]->(b) ON CREATE SET a.x = '1'")
+    DatabaseArms.inMemory { d =>
+      // node write without a task label
+      intercept[IllegalArgumentException] {
+        d.executeQuery("CREATE (n:CLASS {full_name: 'm.X'})")
+      }
+      // parameterized statement
+      intercept[IllegalArgumentException] {
+        d.executeQuery(
+          "MATCH (n:none {full_name: $full_name}) REMOVE n:none SET n:CLASS")
+      }
+      // DETACH DELETE by kind label
+      intercept[IllegalArgumentException] {
+        d.executeQuery("MATCH (n:CLASS) DETACH DELETE n")
+      }
+      // write keyword head with unsupported body
+      intercept[IllegalArgumentException] {
+        d.executeQuery("MERGE (a)-[:R]->(b) ON CREATE SET a.x = '1'")
+      }
     }
   }
 
@@ -989,15 +991,16 @@ class CypherLiteSpec extends AnyFunSuite {
   }
 
   test("parameters: a parameterized WRITE routes through CypherWrite") {
-    val d = GraphDatabase.inMemory(spark)
-    d.executeQuery("CREATE (n:t:FUNCTION {full_name: $fn, name: $nm})",
-      Map("fn" -> "m.g", "nm" -> "g"))
-    val out = d.executeQuery("MATCH (n:t) RETURN n.full_name, n.name").collect()
-    assert(out.map(r => (r.getString(0), r.getString(1))).toSeq ===
-      Seq(("m.g", "g")))
-    // the no-params overload must NOT treat $fn as literal text
-    intercept[IllegalArgumentException] {
-      d.executeQuery("CREATE (n:t:FUNCTION {full_name: $fn})")
+    DatabaseArms.inMemory { d =>
+      d.executeQuery("CREATE (n:t:FUNCTION {full_name: $fn, name: $nm})",
+        Map("fn" -> "m.g", "nm" -> "g"))
+      val out = d.executeQuery("MATCH (n:t) RETURN n.full_name, n.name").collect()
+      assert(out.map(r => (r.getString(0), r.getString(1))).toSeq ===
+        Seq(("m.g", "g")))
+      // the no-params overload must NOT treat $fn as literal text
+      intercept[IllegalArgumentException] {
+        d.executeQuery("CREATE (n:t:FUNCTION {full_name: $fn})")
+      }
     }
   }
 
@@ -1328,140 +1331,144 @@ class CypherLiteSpec extends AnyFunSuite {
   }
 
   test("FOREACH writes: one typed mutation per list element") {
-    val d = GraphDatabase.inMemory(spark)
-    d.executeQuery("FOREACH (nm IN ['a1', 'a2', 'a3'] | " +
-      "CREATE (n:CLASS:`tf` {full_name: nm, name: nm}))")
-    d.executeQuery("FOREACH (nm IN ['a1', 'a2'] | " +
-      "MATCH (n {full_name: nm}) SET n.seen = 'y')")
-    val rows = d.nodes.select(col("full_name"),
-        org.apache.spark.sql.functions.element_at(col("props"), "seen"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows.keySet === Set("a1", "a2", "a3"))
-    assert(rows("a1") === "y" && rows("a2") === "y" && rows("a3") === null)
-    // body that is not a write raises
-    intercept[IllegalArgumentException] {
-      d.executeQuery("FOREACH (x IN ['p'] | MATCH (n) RETURN n)")
+    DatabaseArms.inMemory { d =>
+      d.executeQuery("FOREACH (nm IN ['a1', 'a2', 'a3'] | " +
+        "CREATE (n:CLASS:`tf` {full_name: nm, name: nm}))")
+      d.executeQuery("FOREACH (nm IN ['a1', 'a2'] | " +
+        "MATCH (n {full_name: nm}) SET n.seen = 'y')")
+      val rows = d.nodes.select(col("full_name"),
+          org.apache.spark.sql.functions.element_at(col("props"), "seen"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(rows.keySet === Set("a1", "a2", "a3"))
+      assert(rows("a1") === "y" && rows("a2") === "y" && rows("a3") === null)
+      // body that is not a write raises
+      intercept[IllegalArgumentException] {
+        d.executeQuery("FOREACH (x IN ['p'] | MATCH (n) RETURN n)")
+      }
     }
   }
 
   test("MERGE ON CREATE SET / ON MATCH SET takes exactly one branch") {
-    val d = GraphDatabase.inMemory(spark)
-    def props(fn: String): Map[String, String] = {
-      val r = d.nodes.filter(col("full_name") === fn)
-        .select(org.apache.spark.sql.functions.element_at(col("props"), "o"),
-          org.apache.spark.sql.functions.element_at(col("props"), "m"),
-          col("name")).collect()
-      assert(r.length === 1)
-      Map("o" -> r(0).getString(0), "m" -> r(0).getString(1),
-        "name" -> r(0).getString(2)).filter(_._2 != null)
+    DatabaseArms.inMemory { d =>
+      def props(fn: String): Map[String, String] = {
+        val r = d.nodes.filter(col("full_name") === fn)
+          .select(org.apache.spark.sql.functions.element_at(col("props"), "o"),
+            org.apache.spark.sql.functions.element_at(col("props"), "m"),
+            col("name")).collect()
+        assert(r.length === 1)
+        Map("o" -> r(0).getString(0), "m" -> r(0).getString(1),
+          "name" -> r(0).getString(2)).filter(_._2 != null)
+      }
+      // first merge: node absent → ON CREATE branch (pattern props + seed)
+      d.executeQuery("MERGE (n:CLASS:`mg` {full_name: 'x.A', name: 'A'}) " +
+        "ON CREATE SET n.o = 'new'")
+      assert(props("x.A") === Map("o" -> "new", "name" -> "A"))
+      // second merge: node present → ON MATCH only; the second ON CREATE
+      // value must NOT overwrite the first
+      d.executeQuery("MERGE (n:CLASS:`mg` {full_name: 'x.A'}) " +
+        "ON CREATE SET n.o = 'again' ON MATCH SET n.m = '1'")
+      assert(props("x.A") === Map("o" -> "new", "m" -> "1", "name" -> "A"))
+      // ON MATCH alone on an absent node creates WITHOUT the match patch
+      d.executeQuery("MERGE (n:CLASS:`mg` {full_name: 'x.B', name: 'B'}) " +
+        "ON MATCH SET n.m = '1'")
+      assert(props("x.B") === Map("name" -> "B"))
     }
-    // first merge: node absent → ON CREATE branch (pattern props + seed)
-    d.executeQuery("MERGE (n:CLASS:`mg` {full_name: 'x.A', name: 'A'}) " +
-      "ON CREATE SET n.o = 'new'")
-    assert(props("x.A") === Map("o" -> "new", "name" -> "A"))
-    // second merge: node present → ON MATCH only; the second ON CREATE
-    // value must NOT overwrite the first
-    d.executeQuery("MERGE (n:CLASS:`mg` {full_name: 'x.A'}) " +
-      "ON CREATE SET n.o = 'again' ON MATCH SET n.m = '1'")
-    assert(props("x.A") === Map("o" -> "new", "m" -> "1", "name" -> "A"))
-    // ON MATCH alone on an absent node creates WITHOUT the match patch
-    d.executeQuery("MERGE (n:CLASS:`mg` {full_name: 'x.B', name: 'B'}) " +
-      "ON MATCH SET n.m = '1'")
-    assert(props("x.B") === Map("name" -> "B"))
   }
 
   test("r14 edge MERGE ON CREATE SET / ON MATCH SET takes exactly one " +
       "branch; SETs must dot the relationship variable") {
-    val d = GraphDatabase.inMemory(spark)
-    def eprops(src: String, rel: String, dst: String): Map[String, String] = {
-      val r = d.edges.filter(col("src") === src &&
-          col("rel_type") === rel && col("dst") === dst)
-        .select(org.apache.spark.sql.functions.element_at(col("props"), "k"),
-          org.apache.spark.sql.functions.element_at(col("props"), "o"),
-          org.apache.spark.sql.functions.element_at(col("props"), "m"))
-        .collect()
-      assert(r.length === 1)
-      Map("k" -> r(0).getString(0), "o" -> r(0).getString(1),
-        "m" -> r(0).getString(2)).filter(_._2 != null)
-    }
-    // absent edge → ON CREATE seeds (pattern props + branch), ON MATCH
-    // never applies
-    d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:CALLS {k: 'v'}]->" +
-      "(b {full_name: 'x.B'}) ON CREATE SET r.o = 'new' ON MATCH SET r.m = '1'")
-    assert(eprops("x.A", "CALLS", "x.B") === Map("k" -> "v", "o" -> "new"))
-    // present edge (same-batch staged AND after a flush) → ON MATCH
-    // patches key-wise, the second ON CREATE value never lands
-    d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:CALLS]->" +
-      "(b {full_name: 'x.B'}) " +
-      "ON CREATE SET r.o = 'again' ON MATCH SET r.m = '1'")
-    assert(eprops("x.A", "CALLS", "x.B") ===
-      Map("k" -> "v", "o" -> "new", "m" -> "1"))
-    // eprops flushed the batch: a cross-commit match patches the BASE
-    // snapshot edge key-wise too
-    d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:CALLS]->" +
-      "(b {full_name: 'x.B'}) ON MATCH SET r.m = '2'")
-    assert(eprops("x.A", "CALLS", "x.B") ===
-      Map("k" -> "v", "o" -> "new", "m" -> "2"))
-    // ON MATCH alone on an absent edge creates WITHOUT the match patch
-    d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:USES]->" +
-      "(b {full_name: 'x.C'}) ON MATCH SET r.m = '1'")
-    assert(eprops("x.A", "USES", "x.C") === Map.empty)
-    // branch SET must dot the BOUND relationship variable
-    intercept[IllegalArgumentException] {
+    DatabaseArms.inMemory { d =>
+      def eprops(src: String, rel: String, dst: String): Map[String, String] = {
+        val r = d.edges.filter(col("src") === src &&
+            col("rel_type") === rel && col("dst") === dst)
+          .select(org.apache.spark.sql.functions.element_at(col("props"), "k"),
+            org.apache.spark.sql.functions.element_at(col("props"), "o"),
+            org.apache.spark.sql.functions.element_at(col("props"), "m"))
+          .collect()
+        assert(r.length === 1)
+        Map("k" -> r(0).getString(0), "o" -> r(0).getString(1),
+          "m" -> r(0).getString(2)).filter(_._2 != null)
+      }
+      // absent edge → ON CREATE seeds (pattern props + branch), ON MATCH
+      // never applies
+      d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:CALLS {k: 'v'}]->" +
+        "(b {full_name: 'x.B'}) ON CREATE SET r.o = 'new' ON MATCH SET r.m = '1'")
+      assert(eprops("x.A", "CALLS", "x.B") === Map("k" -> "v", "o" -> "new"))
+      // present edge (same-batch staged AND after a flush) → ON MATCH
+      // patches key-wise, the second ON CREATE value never lands
       d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:CALLS]->" +
-        "(b {full_name: 'x.B'}) ON MATCH SET a.m = '1'")
-    }
-    // branches without a relationship variable raise
-    intercept[IllegalArgumentException] {
-      d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[:CALLS]->" +
-        "(b {full_name: 'x.B'}) ON MATCH SET r.m = '1'")
+        "(b {full_name: 'x.B'}) " +
+        "ON CREATE SET r.o = 'again' ON MATCH SET r.m = '1'")
+      assert(eprops("x.A", "CALLS", "x.B") ===
+        Map("k" -> "v", "o" -> "new", "m" -> "1"))
+      // eprops flushed the batch: a cross-commit match patches the BASE
+      // snapshot edge key-wise too
+      d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:CALLS]->" +
+        "(b {full_name: 'x.B'}) ON MATCH SET r.m = '2'")
+      assert(eprops("x.A", "CALLS", "x.B") ===
+        Map("k" -> "v", "o" -> "new", "m" -> "2"))
+      // ON MATCH alone on an absent edge creates WITHOUT the match patch
+      d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:USES]->" +
+        "(b {full_name: 'x.C'}) ON MATCH SET r.m = '1'")
+      assert(eprops("x.A", "USES", "x.C") === Map.empty)
+      // branch SET must dot the BOUND relationship variable
+      intercept[IllegalArgumentException] {
+        d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[r:CALLS]->" +
+          "(b {full_name: 'x.B'}) ON MATCH SET a.m = '1'")
+      }
+      // branches without a relationship variable raise
+      intercept[IllegalArgumentException] {
+        d.executeQuery("MERGE (a:`mg` {full_name: 'x.A'})-[:CALLS]->" +
+          "(b {full_name: 'x.B'}) ON MATCH SET r.m = '1'")
+      }
     }
   }
 
   test("r14 DELETE r / REMOVE n.prop / SET += : the remaining write " +
       "surface, with Neo4j no-op and mismatch semantics") {
     import org.apache.spark.sql.functions.element_at
-    val d = GraphDatabase.inMemory(spark)
-    d.executeQuery("CREATE (n:CLASS:`w` {full_name: 'w.A', name: 'A'})")
-    d.executeQuery("CREATE (n:CLASS:`w` {full_name: 'w.B', name: 'B'})")
-    d.executeQuery("MATCH (n {full_name: 'w.A'}) SET n.k = '1', n.j = '2'")
-    d.executeQuery("MERGE (a:`w` {full_name: 'w.A'})-[:CALLS {e: 'v'}]->" +
-      "(b {full_name: 'w.B'})")
-    d.executeQuery("MERGE (a:`w` {full_name: 'w.A'})-[:USES]->" +
-      "(b {full_name: 'w.B'})")
-    // SET += map-merges: new key lands, existing key overwrites, the
-    // untouched key survives
-    d.executeQuery("MATCH (n {full_name: 'w.A'}) SET n += {k: '9', p: 'x'}")
-    def propsOfA = d.nodes.filter(col("full_name") === "w.A")
-      .select(element_at(col("props"), "k"), element_at(col("props"), "j"),
-        element_at(col("props"), "p"), col("name")).collect().head
-    assert((propsOfA.getString(0), propsOfA.getString(1),
-      propsOfA.getString(2)) === (("9", "2", "x")))
-    // REMOVE drops map keys AND core fields; absent keys no-op
-    d.executeQuery("MATCH (n {full_name: 'w.A'}) REMOVE n.j, n.name, n.zz")
-    val after = propsOfA
-    assert(after.getString(1) === null && after.getString(3) === null)
-    assert(after.getString(0) === "9") // untouched key survives
-    // DELETE r drops exactly the one typed edge; the other type stays
-    d.executeQuery("MATCH (a {full_name: 'w.A'})-[r:CALLS]->" +
-      "(b {full_name: 'w.B'}) DELETE r")
-    val rels = d.edges.filter(col("src") === "w.A")
-      .select(col("rel_type")).collect().map(_.getString(0)).toSeq
-    assert(rels === Seq("USES"))
-    // endpoints survive an edge delete (DETACH is A5's job)
-    assert(d.nodes.filter(col("full_name").isin("w.A", "w.B")).count() === 2)
-    // DELETE of a variable that isn't the bound one raises
-    intercept[IllegalArgumentException] {
-      d.executeQuery("MATCH (a {full_name: 'w.A'})-[r:USES]->" +
-        "(b {full_name: 'w.B'}) DELETE x")
-    }
-    // REMOVE must dot the bound variable
-    intercept[IllegalArgumentException] {
-      d.executeQuery("MATCH (n {full_name: 'w.A'}) REMOVE m.k")
-    }
-    // SET += must target the bound variable
-    intercept[IllegalArgumentException] {
-      d.executeQuery("MATCH (n {full_name: 'w.A'}) SET m += {k: '1'}")
+    DatabaseArms.inMemory { d =>
+      d.executeQuery("CREATE (n:CLASS:`w` {full_name: 'w.A', name: 'A'})")
+      d.executeQuery("CREATE (n:CLASS:`w` {full_name: 'w.B', name: 'B'})")
+      d.executeQuery("MATCH (n {full_name: 'w.A'}) SET n.k = '1', n.j = '2'")
+      d.executeQuery("MERGE (a:`w` {full_name: 'w.A'})-[:CALLS {e: 'v'}]->" +
+        "(b {full_name: 'w.B'})")
+      d.executeQuery("MERGE (a:`w` {full_name: 'w.A'})-[:USES]->" +
+        "(b {full_name: 'w.B'})")
+      // SET += map-merges: new key lands, existing key overwrites, the
+      // untouched key survives
+      d.executeQuery("MATCH (n {full_name: 'w.A'}) SET n += {k: '9', p: 'x'}")
+      def propsOfA = d.nodes.filter(col("full_name") === "w.A")
+        .select(element_at(col("props"), "k"), element_at(col("props"), "j"),
+          element_at(col("props"), "p"), col("name")).collect().head
+      assert((propsOfA.getString(0), propsOfA.getString(1),
+        propsOfA.getString(2)) === (("9", "2", "x")))
+      // REMOVE drops map keys AND core fields; absent keys no-op
+      d.executeQuery("MATCH (n {full_name: 'w.A'}) REMOVE n.j, n.name, n.zz")
+      val after = propsOfA
+      assert(after.getString(1) === null && after.getString(3) === null)
+      assert(after.getString(0) === "9") // untouched key survives
+      // DELETE r drops exactly the one typed edge; the other type stays
+      d.executeQuery("MATCH (a {full_name: 'w.A'})-[r:CALLS]->" +
+        "(b {full_name: 'w.B'}) DELETE r")
+      val rels = d.edges.filter(col("src") === "w.A")
+        .select(col("rel_type")).collect().map(_.getString(0)).toSeq
+      assert(rels === Seq("USES"))
+      // endpoints survive an edge delete (DETACH is A5's job)
+      assert(d.nodes.filter(col("full_name").isin("w.A", "w.B")).count() === 2)
+      // DELETE of a variable that isn't the bound one raises
+      intercept[IllegalArgumentException] {
+        d.executeQuery("MATCH (a {full_name: 'w.A'})-[r:USES]->" +
+          "(b {full_name: 'w.B'}) DELETE x")
+      }
+      // REMOVE must dot the bound variable
+      intercept[IllegalArgumentException] {
+        d.executeQuery("MATCH (n {full_name: 'w.A'}) REMOVE m.k")
+      }
+      // SET += must target the bound variable
+      intercept[IllegalArgumentException] {
+        d.executeQuery("MATCH (n {full_name: 'w.A'}) SET m += {k: '1'}")
+      }
     }
   }
 
@@ -2261,36 +2268,38 @@ class CypherLiteSpec extends AnyFunSuite {
   }
 
   test("data-driven FOREACH: the write loop runs over a COLLECTED list") {
-    val d = GraphDatabase.inMemory(spark)
-    d.executeQuery("FOREACH (nm IN ['p1', 'p2', 'q3'] | " +
-      "CREATE (n:CLASS:`dd` {full_name: nm, name: nm}))")
-    // read feeds write: collect the p-names, patch exactly those
-    d.executeQuery(
-      "MATCH (n:CLASS) WHERE n.name STARTS WITH 'p' " +
-        "WITH collect(n.name) AS names " +
-        "FOREACH (nm IN names | MATCH (x {full_name: nm}) SET x.seen = 'y')")
-    val rows = d.nodes.select(col("full_name"),
-        org.apache.spark.sql.functions.element_at(col("props"), "seen"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows === Map("p1" -> "y", "p2" -> "y", "q3" -> null))
-    // an empty collected list is a no-op, not an error
-    d.executeQuery(
-      "MATCH (n:CLASS) WHERE n.name STARTS WITH 'zz' " +
-        "WITH collect(n.name) AS names " +
-        "FOREACH (nm IN names | MATCH (x {full_name: nm}) SET x.seen = 'n')")
-    assert(d.nodes.count() === 3)
+    DatabaseArms.inMemory { d =>
+      d.executeQuery("FOREACH (nm IN ['p1', 'p2', 'q3'] | " +
+        "CREATE (n:CLASS:`dd` {full_name: nm, name: nm}))")
+      // read feeds write: collect the p-names, patch exactly those
+      d.executeQuery(
+        "MATCH (n:CLASS) WHERE n.name STARTS WITH 'p' " +
+          "WITH collect(n.name) AS names " +
+          "FOREACH (nm IN names | MATCH (x {full_name: nm}) SET x.seen = 'y')")
+      val rows = d.nodes.select(col("full_name"),
+          org.apache.spark.sql.functions.element_at(col("props"), "seen"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(rows === Map("p1" -> "y", "p2" -> "y", "q3" -> null))
+      // an empty collected list is a no-op, not an error
+      d.executeQuery(
+        "MATCH (n:CLASS) WHERE n.name STARTS WITH 'zz' " +
+          "WITH collect(n.name) AS names " +
+          "FOREACH (nm IN names | MATCH (x {full_name: nm}) SET x.seen = 'n')")
+      assert(d.nodes.count() === 3)
+    }
   }
 
   test("FOREACH loop variable colliding with a prop-map key substitutes " +
     "only value positions") {
-    val d = GraphDatabase.inMemory(spark)
-    // `name` is both the loop variable AND a property KEY: the key
-    // position must survive the substitution untouched
-    d.executeQuery("FOREACH (name IN ['k1', 'k2'] | " +
-      "CREATE (n:CLASS:`tfk` {full_name: name, name: name}))")
-    val rows = d.nodes.select(col("full_name"), col("name"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows === Map("k1" -> "k1", "k2" -> "k2"))
+    DatabaseArms.inMemory { d =>
+      // `name` is both the loop variable AND a property KEY: the key
+      // position must survive the substitution untouched
+      d.executeQuery("FOREACH (name IN ['k1', 'k2'] | " +
+        "CREATE (n:CLASS:`tfk` {full_name: name, name: name}))")
+      val rows = d.nodes.select(col("full_name"), col("name"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(rows === Map("k1" -> "k1", "k2" -> "k2"))
+    }
   }
 
   test("string functions: toUpper/toLower/replace/substring/left/right") {
@@ -2351,11 +2360,12 @@ class CypherLiteSpec extends AnyFunSuite {
   }
 
   test("FOREACH composes with $param lists (the batch-write idiom)") {
-    val d = GraphDatabase.inMemory(spark)
-    d.executeQuery("FOREACH (nm IN $names | " +
-      "CREATE (n:CLASS:`tp` {full_name: nm, name: nm}))",
-      Map("names" -> Seq("p1", "p2")))
-    assert(d.nodes.count() === 2)
+    DatabaseArms.inMemory { d =>
+      d.executeQuery("FOREACH (nm IN $names | " +
+        "CREATE (n:CLASS:`tp` {full_name: nm, name: nm}))",
+        Map("names" -> Seq("p1", "p2")))
+      assert(d.nodes.count() === 2)
+    }
   }
 
   test("bare arrows --> / <-- match any relationship type") {

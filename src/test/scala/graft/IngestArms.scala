@@ -72,9 +72,16 @@ object IngestArms {
     same("locations", a.locations, b.locations)
   }
 
-  private def same(what: String, a: DataFrame, b: DataFrame): Unit = {
+  /** Fails unless `a` and `b` have the same schema and rows. */
+  def same(what: String, a: DataFrame, b: DataFrame): Unit = {
     def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
     assert(shape(a) === shape(b), s"$what: schemas differ")
+    sameRows(what, a, b)
+  }
+
+  /** Fails unless `a` and `b` have the same rows, counted with
+    * multiplicity. */
+  def sameRows(what: String, a: DataFrame, b: DataFrame): Unit = {
     def rows(df: DataFrame) =
       df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
     val (ra, rb) = (rows(a), rows(b))

@@ -872,7 +872,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(jobsOn(IngestArms.Distributed) > probed)
   }
 
-  test("indexRepo within the row budget runs at most 9 jobs") {
+  test("indexRepo within the row budget runs at most 8 jobs") {
     import JobRecorder.{jobs, recorded}
     def jobsOn(arm: IngestArms.Arm) = {
       val dir = java.nio.file.Files.createTempDirectory("graft-ingest-jobs")
@@ -881,11 +881,37 @@ class PlanShapeSpec extends AnyFunSuite {
           .indexRepo(fixtureRepo, "t1"))._2))
       finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
     }
-    // the pre-scan 4 (the tree's two shuffles, its cache, the collect),
-    // the bounded event collect 2 (the parse into the cache, the
-    // collect), the snapshot write 3 (a job per table)
-    val bound = 9
+    // the pre-scan 3 (the tree's rebalancing shuffle, its cache, the
+    // collect), the bounded event collect 2 (the parse into the cache,
+    // the collect), the snapshot write 3 (a job per table)
+    val bound = 8
     assert(jobsOn(IngestArms.Driver) <= bound)
     assert(jobsOn(IngestArms.Distributed) > bound)
+  }
+
+  test("a held snapshot serves a point read with no job, and a node-only " +
+      "persisted commit runs at most 2 jobs (more at threshold 0)") {
+    import JobRecorder.{jobs, recorded}
+    def jobsOn(arm: IngestArms.Arm): (Int, Int) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-serve-jobs")
+      try IngestArms.under(arm) {
+        val db = graft.api.GraphDatabase.open(spark, s"$dir/db")
+        db.indexRepo(fixtureRepo, "t1")
+        db.nodes; db.edges // the version's first reads decide residency
+        val point = jobs(recorded(spark)(db.executeQuery(
+          "MATCH (n {full_name: 'main'}) RETURN n.kind AS kind").collect())._2)
+        db.executeQuery("MERGE (n:t1 {full_name: 'main'}) SET n.tag = 'x'")
+        (point, jobs(recorded(spark)(db.commit())._2))
+      } finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
+    // the commit: the bounded collect of the merged nodes, whose plan
+    // over single-partition held leaves has no exchange, and the nodes'
+    // write; edges and locations are linked
+    val (point, commit) = jobsOn(IngestArms.Driver)
+    assert(point === 0)
+    assert(commit <= 2)
+    val (pointStored, commitStored) = jobsOn(IngestArms.Distributed)
+    assert(pointStored > 0)
+    assert(commitStored > commit)
   }
 }

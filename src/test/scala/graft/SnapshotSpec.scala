@@ -2,14 +2,18 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.GraphDatabase
 import graft.store.Snapshot
 
 /** `Snapshot.read` declares the tables' schemas instead of inferring them
-  * from the parquet footers. */
+  * from the parquet footers, and `Snapshot.write` links the files of the
+  * tables a commit did not change. */
 class SnapshotSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -68,6 +72,47 @@ class SnapshotSpec extends AnyFunSuite {
         Snapshot.write(Snapshot.GraphSnapshot(g.nodes, g.edges, g.locations),
           dir)
         agree(dir)
+      }
+    }
+  }
+
+  test("a commit that changes only nodes keeps the edge and location " +
+      "files (same names, same bytes), readable once the previous " +
+      "version's directory is gone") {
+    def files(dir: String, t: String): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(dir, t)
+      val tree = Files.walk(root)
+      try tree.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString ->
+          Files.readAllBytes(p).toSeq).toMap
+      finally tree.close()
+    }
+    def rows(df: DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    Seq(IngestArms.Driver, IngestArms.Distributed).foreach { arm =>
+      ingested(arm) { (db, dir) =>
+        val kept = Seq("edges", "locations")
+        val before = kept.map(files(dir, _))
+        val nodesBefore = files(dir, "nodes")
+        val v1 = Snapshot.read(spark, dir)
+        val rowsBefore = Seq(v1.edges, v1.locations).map(rows)
+        IngestArms.under(arm) {
+          db.updateNode("main", Map("tag" -> "x"))
+          db.commit()
+          assert(db.nodeByKey("main").select(col("props")("tag"))
+            .collect().map(_.getString(0)).toSeq === Seq("x"))
+        }
+        assert(files(dir, "nodes") !== nodesBefore, arm.name)
+        // one file per table partition, as the ingest writes them
+        assert(files(dir, "nodes").keys.filter(_.endsWith(".parquet"))
+          .groupBy(f => java.nio.file.Paths.get(f).getParent).values
+          .forall(_.size == 1), arm.name)
+        assert(kept.map(files(dir, _)) === before, arm.name)
+        assert(Files.list(java.nio.file.Paths.get(dir).getParent)
+          .iterator().asScala.map(_.getFileName.toString).toSeq ===
+          Seq("db"), arm.name)
+        val v2 = Snapshot.read(spark, dir)
+        assert(Seq(v2.edges, v2.locations).map(rows) === rowsBefore, arm.name)
       }
     }
   }
