@@ -1,7 +1,6 @@
 package graft.indexer
 
 import scala.jdk.CollectionConverters._
-import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,29 +29,27 @@ import graft.enrich.Closure
   *     `spark.sparkContext.defaultParallelism` partitions (one per core),
   *     and every later scan of the parsed events inherits that count;
   *   - [[indexFiles]] holds the tree's rows for its two reads (the
-  *     pre-scan and the parse) and caches the parsed events. One bounded
-  *     collect of the events, a row each, decides the merge's arm
-  *     ([[graft.ops.Bounded.take]] against `spark.graft.localThreshold`
-  *     rows): a cache stage parses in parallel, then one task reads the
-  *     cache. When they fit, [[graft.merge.MergeLocal]] folds them into
-  *     the four tables, which come back as one-partition local frames,
-  *     with the tables enrich reads kept on the driver: two jobs in place
-  *     of the merge shuffles and four pins. When they miss, the merge
-  *     shuffles run and the merged nodes, merged edges, locations and
-  *     imports are pinned. Either way both caches are released — ingest
-  *     leaves no entry in the session's cache manager;
-  *   - [[enrich]] has two arms. Tables merged on the driver take the
-  *     driver arm; others are probed, one bounded probe per table
-  *     ([[graft.ops.Bounded.take]] on the pinned merged edges, then
-  *     nodes, then imports, each against the same budget). When all
-  *     three fit, the driver arm ([[EnrichLocal]]) computes D1–D4 in one
-  *     in-memory pass and returns the edges and stub nodes as local
-  *     frames, in place of the distributed arm's dozens of join and
-  *     fixpoint jobs. When one misses, the distributed arm runs; it pins
-  *     its join tail (`flagged`) once, so the snapshot write's three
-  *     tables (edges, the stub nodes built from them, and the locations
-  *     whose dropped references they decide) read that leaf instead of
-  *     each re-running the joins.
+  *     pre-scan and the parse) and pins the parsed events in one parallel
+  *     job. One bounded collect of the symbol, edge and import events, a
+  *     row each, through one task over the pin, is the ingest's only
+  *     "fits on the driver" decision ([[graft.ops.Bounded.take]] against
+  *     `spark.graft.localThreshold` rows). Locations need no merge, so
+  *     they are not collected: on both arms `locations` and `imports` are
+  *     projections of the pin. When the collected events fit,
+  *     [[graft.merge.MergeLocal]] folds them into nodes and edges, which
+  *     come back as one-partition local frames, with the tables enrich
+  *     reads kept on the driver. When they miss, the merge shuffles run
+  *     and the merged nodes and edges are pinned. Ingest leaves no entry
+  *     in the session's cache manager;
+  *   - [[enrich]] follows the merge's arm. After the driver merge, its
+  *     driver arm ([[EnrichLocal]]) computes D1–D4 in one in-memory pass
+  *     and returns the edges and stub nodes as local frames, in place of
+  *     the distributed arm's dozens of join and fixpoint jobs. After the
+  *     merge shuffles, the distributed arm runs; it pins its join tail
+  *     (`flagged`) once, so the snapshot write's three tables (edges, the
+  *     stub nodes built from them, and the locations whose dropped
+  *     references they decide) read that leaf instead of each re-running
+  *     the joins.
   * The graph itself depends neither on the partition count nor on the
   * arm.
   */
@@ -139,13 +136,19 @@ object IndexPipeline {
     if (bytes.length >= 3 && at(0) == 0xef && at(1) == 0xbb && at(2) == 0xbf)
       return decode(StandardCharsets.UTF_8, 3)
     // 2 — PEP 263 cookie within the first two lines (read them as
-    // latin-1: the cookie is ASCII and every byte maps)
+    // latin-1: the cookie is ASCII and every byte maps); as in
+    // `tokenize.detect_encoding`, line 2 counts only below a blank or
+    // comment line 1
     locally {
       val headLen = math.min(bytes.length, 256)
       val head = new String(bytes, 0, headLen, StandardCharsets.ISO_8859_1)
       val cookie = """coding[:=]\s*([-\w.]+)""".r
-      head.split("\n", 3).take(2).foreach { ln =>
-        if (ln.trim.startsWith("#"))
+      val lines = head.split("\n", 3).take(2)
+        .map(_.dropWhile(c => c == ' ' || c == '\t' || c == '\f'))
+      val blankOrComment =
+        lines.head.isEmpty || lines.head(0) == '#' || lines.head(0) == '\r'
+      lines.take(if (blankOrComment) 2 else 1).foreach { ln =>
+        if (ln.startsWith("#"))
           cookie.findFirstMatchIn(ln).foreach { m =>
             try return new String(bytes, Charset.forName(m.group(1)))
             catch { case _: Exception => /* unknown codec name: fall on */ }
@@ -164,22 +167,23 @@ object IndexPipeline {
   }
 
   /** The graph tables of one ingest. `onDriver` holds the merged tables
-    * [[enrich]] reads when [[indexFiles]] merged them on the driver, so
-    * enrich needs no probe to find them. */
+    * [[enrich]] reads when [[indexFiles]] merged them on the driver;
+    * [[enrich]] takes its driver arm exactly when it is set. */
   final case class Indexed(
       nodes: DataFrame, edges: DataFrame, locations: DataFrame,
       imports: DataFrame, onDriver: Option[EnrichLocal.Input] = None)
 
   private type Parsed = (Seq[SymbolEvent], Seq[EdgeEvent], Seq[LocationRow],
     Seq[PyIndexer.ImportFact])
-  private type Event = (SymbolEvent, EdgeEvent, LocationRow,
-    PyIndexer.ImportFact)
+  private type Event = (SymbolEvent, EdgeEvent, PyIndexer.ImportFact)
 
   /** C2/C4/C13 — index every file and merge the event stream into graph
-    * tables. One wide flatMap (no shuffle), then the merge: a fold on the
-    * driver when the events fit the session's row budget
-    * ([[Bounded.rows]]), else the Merge shuffles. Files the parser chokes
-    * on degrade to an ERROR location row (never abort). */
+    * tables. One wide flatMap (no shuffle), pinned, then the merge: a
+    * fold on the driver when the symbol, edge and import events fit the
+    * session's row budget ([[Bounded.rows]]), else the Merge shuffles.
+    * Location events are not counted: they need no merge, and on both
+    * arms `locations` reads them from the pin. Files the parser chokes on
+    * degrade to an ERROR location row (never abort). */
   def indexFiles(spark: SparkSession, files: Dataset[SourceFile],
       taskId: String): Indexed = {
     import spark.implicits._
@@ -204,55 +208,50 @@ object IndexPipeline {
           t._4.toSet, t._5.toMap, t._6.toMap, t._7.toMap, t._8.toMap,
           t._9.toMap, t._10.toMap, t._11.toMap, t._12, t._13)))
     val ctxB = spark.sparkContext.broadcast(ctx)
+    // the parse, in parallel, in the pin's one job: every later read of
+    // the events (the collect, the merge, locations, imports) reads the
+    // pin, and the tree is read no more
     val events = files.flatMap { f =>
       val ev = PyIndexer.indexFileSafe(taskId, f.path, f.content,
         Some(ctxB.value))
       Seq[Parsed]((ev.symbols, ev.edges, ev.locations, ev.imports))
-    }.cache()
+    }.pin(eager = true)
+    if (hold) files.unpersist()
     val nodes0 = Merge.mergeNodes(events.flatMap(_._1).toDF())
     val edges0 = Merge.mergeEdges(events.flatMap(_._2).toDF())
-    val locations0 = events.flatMap(_._3).toDF()
-    val imports0 = events.flatMap(_._4).toDF()
-    // the one "fits on the driver" decision: a bounded collect of the
-    // events, one row each. It reads the cache through one task, after
-    // the cache stage has filled it (the parse) in parallel
-    val collected = Bounded.take(events.flatMap { case (s, e, l, i) =>
-      s.iterator.map(x => (x, null, null, null): Event) ++
-        e.iterator.map(x => (null, x, null, null): Event) ++
-        l.iterator.map(x => (null, null, x, null): Event) ++
-        i.iterator.map(x => (null, null, null, x): Event)
+    val locations = events.flatMap(_._3).toDF()
+    val imports = events.flatMap(_._4).toDF()
+    // the ingest's one "fits on the driver" decision: a bounded collect
+    // of the events the merge and enrich read, one row each, through one
+    // task over the pin
+    val collected = Bounded.take(events.flatMap { case (s, e, _, i) =>
+      s.iterator.map(x => (x, null, null): Event) ++
+        e.iterator.map(x => (null, x, null): Event) ++
+        i.iterator.map(x => (null, null, x): Event)
     }.coalesce(1), Bounded.rows(spark))(identity)
-    val out = collected match {
+    collected match {
       case Some(evs) =>
         mergeOnDriver(evs.toSeq, taskId, Indexed(
-          Merge.withStubs(nodes0, edges0, taskId), edges0, locations0,
-          imports0))
+          Merge.withStubs(nodes0, edges0, taskId), edges0, locations,
+          imports))
       case None =>
-        val edges = edges0.pin(eager = true)
-        val nodes = Merge.withStubs(nodes0, edges, taskId)
-          .pin(eager = true)
         // lineage cut at the phase boundary: the enrichment stage chains
         // enough joins that carrying the merge plan underneath it pushes
         // task binaries past the MiB warning threshold — and this is a
         // write pipeline, so materializing the merged tables is the normal
-        // posture (the reference persists here too). enrich reads
-        // `imports` in six places and the snapshot write reads
-        // `locations`, so both are pinned too; after that nothing reads
-        // `events` again.
-        val locations = locations0.pin(eager = true)
-        val imports = imports0.pin(eager = true)
+        // posture (the reference persists here too)
+        val edges = edges0.pin(eager = true)
+        val nodes = Merge.withStubs(nodes0, edges, taskId)
+          .pin(eager = true)
         Indexed(nodes, edges, locations, imports)
     }
-    events.unpersist()
-    if (hold) files.unpersist()
-    out
   }
 
   /** [[indexFiles]]' merge over the collected events (each row sets one
-    * of its four fields), by [[MergeLocal]]: the four tables come back as
-    * one-partition local frames in the schemas of `plan`, the distributed
-    * arm's unexecuted frames, with the tables [[enrich]] reads kept on
-    * the driver. */
+    * of its three fields), by [[MergeLocal]]: nodes and edges come back
+    * as one-partition local frames in the schemas of `plan`, the
+    * distributed arm's unexecuted frames, with the tables [[enrich]]
+    * reads kept on the driver. `plan`'s locations and imports are kept. */
   private def mergeOnDriver(events: Seq[Event], taskId: String,
       plan: Indexed): Indexed = {
     val spark = plan.nodes.sparkSession
@@ -262,17 +261,14 @@ object IndexPipeline {
     val keys = named.iterator.map(_.getString(0)).toSet
     val edges = MergeLocal.edges(events.flatMap(e => Option(e._2)))
     val nodes = named ++ MergeLocal.stubs(keys, edges, taskId)
-    val locations = events.flatMap(e => Option(e._3))
-    val imports = events.flatMap(e => Option(e._4))
-    Indexed(
-      frame(nodes, plan.nodes),
-      frame(edges.map(e => Row(e.src, e.relType, e.dst, e.props)), plan.edges),
-      frame(locations.map(Row.fromTuple), plan.locations),
-      frame(imports.map(Row.fromTuple), plan.imports),
-      Some(EnrichLocal.Input(
+    plan.copy(
+      nodes = frame(nodes, plan.nodes),
+      edges = frame(edges.map(e => Row(e.src, e.relType, e.dst, e.props)),
+        plan.edges),
+      onDriver = Some(EnrichLocal.Input(
         edges.map(e => EnrichLocal.Edge(e.src, e.relType, e.dst, e.props)),
         nodes.map(r => (r.getString(0), r.getString(1))),
-        imports.map(i =>
+        events.flatMap(e => Option(e._3)).map(i =>
           EnrichLocal.Import(i.module, i.alias, i.target, i.kind)))))
   }
 
@@ -308,33 +304,19 @@ object IndexPipeline {
     *  3. inherited-method closure (D4, ast_manage.py:79-99);
     *  4. stub reconciliation for the rewritten edge set.
     *
-    * When [[indexFiles]] merged on the driver (`ix.onDriver`), or the
-    * merged edges, nodes (`full_name`, `kind`) and imports each fit the
-    * session's row budget ([[Bounded.rows]]), the pass runs on the
-    * driver ([[EnrichLocal]]), and the edges and stub nodes come back as
-    * local frames. Otherwise [[enrichDistributed]] runs; both give the
-    * same graph.
+    * [[enrich]] follows [[indexFiles]]' arm. When the events were merged
+    * on the driver (`ix.onDriver`), the pass runs there too
+    * ([[EnrichLocal]]), and the edges and stub nodes come back as local
+    * frames. Otherwise [[enrichDistributed]] runs; both give the same
+    * graph. So one row budget caps everything a whole ingest holds on the
+    * driver: an ingest whose symbol, edge and import events miss the
+    * budget enriches with Spark joins, even when each merged table alone
+    * would fit it.
     */
   def enrich(ix: Indexed, taskId: String): Indexed = {
     val spark = ix.edges.sparkSession
     import spark.implicits._
-    val budget = Bounded.rows(spark)
-    // the three tables are pinned: one task reads their blocks, so each
-    // probe is one job instead of a limit's partition scale-up rounds
-    def probe[T: ClassTag](df: DataFrame)(f: Row => T) =
-      Bounded.take(df.coalesce(1), budget)(f)
-    // tables merged on the driver are there already: no probe
-    val input = ix.onDriver.orElse(for {
-      edges <- probe(ix.edges.select("src", "rel_type", "dst", "props"))(
-        r => EnrichLocal.Edge(r.getString(0), r.getString(1),
-          r.getString(2), r.getMap[String, String](3).toMap))
-      nodes <- probe(ix.nodes.select("full_name", "kind"))(r =>
-        (r.getString(0), r.getString(1)))
-      imports <- probe(ix.imports.select("module", "alias", "target", "kind"))(
-        r => EnrichLocal.Import(r.getString(0), r.getString(1),
-          r.getString(2), r.getString(3)))
-    } yield EnrichLocal.Input(edges, nodes, imports))
-    input.map(EnrichLocal.run).fold(enrichDistributed(ix, taskId)) { out =>
+    ix.onDriver.map(EnrichLocal.run).fold(enrichDistributed(ix, taskId)) { out =>
       // in the distributed arm's column order (its USING join on dst
       // leads), and one partition per table: the snapshot writes a file
       // per partition, and one partition needs no shuffle to deduplicate

@@ -9,12 +9,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Operators with an exact driver-local kernel and a distributed
   * fallback (Tarjan / union-find / Brandes / BFS kernels, the c3
   * linearization, Cypher path search, the fertility segmentation,
-  * ingest's merge and enrich) ask
-  * [[take]] whether their input fits a row budget. The probe is a
-  * `limit(k + 1)` collect, so the driver holds at most k+1 rows: a miss
-  * costs one partial scan, never the whole frame, and the distributed
-  * arm carries the work. A budget of 0 (or less) answers "does not fit"
-  * without a job; specs use it to force the distributed arm.
+  * ingest's merge) ask [[take]] whether their input fits a row budget.
+  * The probe is a `limit(k + 1)` collect, so the driver holds at most
+  * k+1 rows: a miss costs one partial scan, never the whole frame, and
+  * the distributed arm carries the work. A budget of 0 (or less)
+  * answers "does not fit" without a job; specs use it to force the
+  * distributed arm.
   *
   * Operators with a `localThreshold` parameter default it to
   * [[DefaultRows]]; operators without one read [[rows]]. Caps that are

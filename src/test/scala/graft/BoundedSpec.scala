@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -64,20 +65,32 @@ class BoundedSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.localThreshold")
   }
 
-  test("structure: the only limit(k + 1) probe in src/main is Bounded's") {
-    val probe = """\.limit\([^()]*\+\s*1\s*\)""".r
-    val bounded = Paths.get("src/main/scala/graft/ops/Bounded.scala")
-    def hits(p: Path): Seq[String] =
-      Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
-        case (l, i) if probe.findFirstIn(l).isDefined =>
-          s"$p:${i + 1}: ${l.trim}"
-      }
-    val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+  /** The Scala sources under `dir`. */
+  private def sources(dir: String): List[Path] =
+    Files.walk(Paths.get(dir)).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toList
-    assert(sources.contains(bounded))
-    assert(hits(bounded).nonEmpty)
-    val outside = sources.filterNot(_ == bounded).flatMap(hits)
+
+  /** `p`'s lines that match `re`, as `path:line: text`. */
+  private def hits(re: Regex)(p: Path): Seq[String] =
+    Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+      case (l, i) if re.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+    }
+
+  test("structure: the only limit(k + 1) probe in src/main is Bounded's") {
+    val probe = hits("""\.limit\([^()]*\+\s*1\s*\)""".r) _
+    val bounded = Paths.get("src/main/scala/graft/ops/Bounded.scala")
+    val all = sources("src/main/scala")
+    assert(all.contains(bounded))
+    assert(probe(bounded).nonEmpty)
+    val outside = all.filterNot(_ == bounded).flatMap(probe)
     assert(outside.isEmpty,
       "size probes belong in graft.ops.Bounded:\n" + outside.mkString("\n"))
+  }
+
+  test("the indexer makes one arm decision") {
+    // indexFiles' bounded collect; enrich follows the arm it picks
+    val calls = sources("src/main/scala/graft/indexer")
+      .flatMap(hits("""Bounded\.take\(""".r))
+    assert(calls.size === 1, calls.mkString("\n"))
   }
 }

@@ -1923,6 +1923,10 @@ class IndexerSpec extends AnyFunSuite {
     // cookie on line 2 (after a shebang) also counts
     val she = "#!/usr/bin/env python\n# coding: latin-1\ns = 'café'\n"
     assert(decodeSource(she.getBytes(StandardCharsets.ISO_8859_1)) === she)
+    // but not below a code line 1 (tokenize.detect_encoding reads line 2
+    // only after a blank or comment line): UTF-8 decides
+    val below = "x = 'é'\n# -*- coding: iso-8859-1 -*-\n"
+    assert(decodeSource(below.getBytes(StandardCharsets.UTF_8)) === below)
     // cookie on line 3 does NOT count (PEP 263: lines 1-2 only) — the
     // latin-1 é then falls through to the permissive total decode
     val late = "x = 1\ny = 2\n# coding: utf-16\nz = 'café'\n"

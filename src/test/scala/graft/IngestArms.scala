@@ -32,9 +32,6 @@ object IngestArms {
       taskId: String): Indexed =
     under(arm)(IndexPipeline.indexFiles(TestSpark.spark, files, taskId))
 
-  def enrich(arm: Arm)(ix: Indexed, taskId: String): Indexed =
-    under(arm)(IndexPipeline.enrich(ix, taskId))
-
   def ingest(arm: Arm)(files: Dataset[SourceFile], taskId: String): Indexed =
     under(arm)(IndexPipeline.enrich(
       IndexPipeline.indexFiles(TestSpark.spark, files, taskId), taskId))
@@ -50,8 +47,10 @@ object IngestArms {
     * the driver arm's graph. */
   def both(files: Dataset[SourceFile], taskId: String): Indexed = {
     val (driver, distributed) = merged(files, taskId)
-    val graph = enrich(Driver)(driver, taskId)
-    same(graph, enrich(Distributed)(distributed, taskId))
+    // enrich follows each merge's arm; at budget 0 the distributed arm's
+    // C3 linearization takes its Spark fixpoint too
+    val graph = IndexPipeline.enrich(driver, taskId)
+    same(graph, under(Distributed)(IndexPipeline.enrich(distributed, taskId)))
     graph
   }
 

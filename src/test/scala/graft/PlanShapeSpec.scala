@@ -845,7 +845,8 @@ class PlanShapeSpec extends AnyFunSuite {
   private def fixtureRepo =
     getClass.getClassLoader.getResource("fixture_repo").getPath
 
-  // merged by the Spark shuffles, so enrich's own probe decides its arm
+  // merged by the Spark shuffles, so enrich takes its distributed arm at
+  // any budget
   private def fixtureIndexed = {
     import graft.indexer.IndexPipeline
     IngestArms.indexFiles(IngestArms.Distributed)(
@@ -855,21 +856,46 @@ class PlanShapeSpec extends AnyFunSuite {
   test("enrich's edge frame reads its pinned join tail: no Join left " +
       "for each snapshot table to re-run") {
     val edges =
-      IngestArms.enrich(IngestArms.Distributed)(fixtureIndexed, "t1").edges
+      graft.indexer.IndexPipeline.enrich(fixtureIndexed, "t1").edges
     val plan = edges.queryExecution.optimizedPlan
     assert(plan.collect { case j: org.apache.spark.sql.catalyst.plans
         .logical.Join => j }.isEmpty,
       s"enrich edges must not carry a join; plan:\n$plan")
   }
 
-  test("enrich within the row budget runs one job per probed table") {
+  test("enrich follows the merge's arm") {
     import JobRecorder.{jobs, recorded}
-    val ix = fixtureIndexed
-    def jobsOn(arm: IngestArms.Arm) =
-      jobs(recorded(spark)(IngestArms.enrich(arm)(ix, "t1"))._2)
-    val probed = 3 // edges, nodes, imports
-    assert(jobsOn(IngestArms.Driver) <= probed)
-    assert(jobsOn(IngestArms.Distributed) > probed)
+    import graft.indexer.IndexPipeline
+    def enrichJobs(ix: IndexPipeline.Indexed) =
+      jobs(recorded(spark)(IndexPipeline.enrich(ix, "t1"))._2)
+    val onDriver = IngestArms.indexFiles(IngestArms.Driver)(
+      IndexPipeline.readRepo(spark, fixtureRepo), "t1")
+    assert(onDriver.onDriver.isDefined)
+    assert(enrichJobs(onDriver) === 0)
+    // the merged tables fit the default budget, but the shuffled merge
+    // sends enrich to its Spark joins: more jobs than a probe per table
+    val shuffled = fixtureIndexed
+    assert(shuffled.onDriver.isEmpty)
+    assert(enrichJobs(shuffled) > 3)
+  }
+
+  test("indexFiles' arm decision counts symbol, edge and import events, " +
+      "not locations") {
+    import graft.indexer.{IndexPipeline, PyIndexer}
+    val files = IndexPipeline.readRepo(spark, fixtureRepo).collect().toSeq
+    val ctx = PyIndexer.corpusContext(
+      files.map(f => PyIndexer.moduleBindings(f.path, f.content)))
+    val parsed = files.map(f =>
+      PyIndexer.indexFileSafe("t1", f.path, f.content, Some(ctx)))
+    val merged = parsed.map(e =>
+      e.symbols.size + e.edges.size + e.imports.size).sum
+    assert(parsed.map(_.locations.size).sum > 0)
+    def onDriver(budget: Int) = IngestArms.indexFiles(
+        IngestArms.Arm(s"budget $budget", budget))(
+        IndexPipeline.readRepo(spark, fixtureRepo), "t1")
+      .onDriver.isDefined
+    assert(onDriver(merged), s"$merged events fit a budget of $merged")
+    assert(!onDriver(merged - 1))
   }
 
   test("indexRepo within the row budget runs at most 8 jobs") {
@@ -882,7 +908,7 @@ class PlanShapeSpec extends AnyFunSuite {
       finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
     }
     // the pre-scan 3 (the tree's rebalancing shuffle, its cache, the
-    // collect), the bounded event collect 2 (the parse into the cache,
+    // collect), the bounded event collect 2 (the parse into the pin,
     // the collect), the snapshot write 3 (a job per table)
     val bound = 8
     assert(jobsOn(IngestArms.Driver) <= bound)
