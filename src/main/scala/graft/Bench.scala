@@ -1,22 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
+
+/** Times every declared query (min of 3 runs) on Verify's session, so
+  * the arm a query is timed on is the arm the oracle gates. Per query,
+  * `bench_full.json` also carries the Spark work of the run it reports
+  * as the min (`work`: jobs, stages, tasks, task seconds) and lists the
+  * queries whose runs failed (`failed`); a failed run is never timed. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bench measures the cluster posture: routed operators (q11_cc)
-      // take their scale path here; Verify leaves the flag unset so the
-      // oracle gates the local/deterministic path of the same operators
-      .config("spark.graft.scale", "cluster")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Warm-up: run every query once at the smallest SF so JIT/codegen
     // compilation and parquet-footer caching don't land in the first few
     // timed queries (we time steady-state engine cost, not JVM warmup).
@@ -136,14 +133,24 @@ object Bench {
         .filter(_.getName.toLowerCase.contains("codeheap"))
         .map(_.getUsage.getUsed).sum >> 20
     }
-    val probes = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Long, Long, Long)]
-    val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
+    val probes = mutable.LinkedHashMap.empty[String, (Long, Long, Long)]
+    val work = new RunWork
+    spark.sparkContext.addSparkListener(work)
+    /** Run `run` of query `name`: its wall seconds, or None if it failed
+      * (a failed run must never win the min with a near-zero time). */
+    def timed(name: String, run: Int): Option[Double] = {
+      spark.sparkContext.setLocalProperty(RunWork.Key, RunWork.id(name, run))
+      val t0 = System.nanoTime()
+      try {
+        picked(name)(spark, sfDir).count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name run $run failed: ${e.getMessage}")
+        None
+      } finally spark.sparkContext.setLocalProperty(RunWork.Key, null)
+    }
+    val results = picked.keys.toSeq.sorted.map { name =>
+      val times = (0 until 3).map(timed(name, _))
       resetCacheState()
       probes(name) = (tmpShuffleMb(), heapMb(), codeCacheMb())
       name -> times
@@ -159,24 +166,29 @@ object Bench {
     // tail, exactly the rows adjudication reads — cheap to re-confirm).
     // The headline min is min(both passes); the artifact carries both
     // values under "reran" so a persistent-load run is self-evident.
-    val suspects = results.filter { case (_, ts) =>
+    // A query with any failed run is listed as failed and timed nowhere.
+    val firstPass = results.collect {
+      case (n, ts) if !ts.contains(None) => n -> ts.flatten }
+    val suspects = firstPass.filter { case (_, ts) =>
       ts.max / math.max(ts.min, 1e-9) > 2.5 || ts.min > 3.0 }
     val rerun = suspects.map { case (name, _) =>
       resetCacheState()
-      val t0 = System.nanoTime()
-      try { picked(name)(spark, sfDir).count() } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> timed(name, 3)
     }
-    val finalTimes = results.map { case (n, ts) => n -> (ts ++ rerun.get(n)) }
+    val failed = (results.keySet -- firstPass.keySet ++
+      rerun.collect { case (n, None) => n }).toSeq.sorted
+    val finalTimes = firstPass.collect { case (n, ts) if !failed.contains(n) =>
+      n -> (ts ++ rerun.get(n).flatten) }
     def jmap(f: Seq[Double] => Double) = finalTimes
       .map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val qs = jmap(_.min)
     // median stays over the first-pass 3 runs for cross-round comparability
-    val med = results
-      .map { case (k, v) => s"\"" + k + "\":" + v.sorted.apply(v.size / 2) }
+    val med = finalTimes.keys
+      .map { k => val v = firstPass(k).sorted
+        s"\"" + k + "\":" + v(v.size / 2) }
       .mkString("{", ",", "}")
-    val reranJson = rerun.map { case (k, v) =>
-      f""""$k":{"first_min":${results(k).min}%.3f,"rerun":$v%.3f}"""
+    val reranJson = rerun.collect { case (k, Some(v)) =>
+      f""""$k":{"first_min":${firstPass(k).min}%.3f,"rerun":$v%.3f}"""
     }.mkString("{", ",", "}")
     val total = finalTimes.values.map(_.min).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":$med,"sf":"$sfDir"}""")
@@ -199,23 +211,72 @@ object Bench {
     // can truncate — the full per-query map stays on the two lines above
     // (unchanged, so the driver's parser keeps working) and in the
     // committed bench_full.json.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${finalTimes.size},"load_gate":"$loadGate"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${finalTimes.size},"n_failed":${failed.size},"load_gate":"$loadGate"}""")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     // per-query hygiene columns, sweep (= name) order preserved so the
     // accumulation trend reads top-to-bottom
     val probeJson = probes.map { case (k, (t, h, c)) =>
       s""""$k":{"tmp_mb":$t,"heap_mb":$h,"codecache_mb":$c}"""
     }.mkString("{", ",", "}")
+    // the work of the run each query reports as its min; every task-end
+    // event has reached the listener once the bus is drained
+    org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    val workJson = finalTimes.toSeq.sortBy(_._1).map { case (k, v) =>
+      s""""$k":${work.json(RunWork.id(k, v.indexOf(v.min)))}"""
+    }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",
          |"load_start":"$loadStart","load_end":"$loadEnd","load_gate":"$loadGate",
          |"queries":$qs,
          |"queries_median":$med,
          |"reran":$reranJson,
-         |"probe":$probeJson}""".stripMargin
+         |"probe":$probeJson,
+         |"work":$workJson,
+         |"failed":$failedJson}""".stripMargin
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full)
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     spark.stop()
   }
+}
+
+/** Spark work per timed run. A run sets [[RunWork.Key]] on the calling
+  * thread; every job started under it carries the property, so the
+  * listener charges that job's stages and tasks to the run. */
+private final class RunWork extends SparkListener {
+  private val stageRun = mutable.Map.empty[Int, String]
+  // per run: jobs, completed stages, tasks, task milliseconds
+  private val work = mutable.Map.empty[String, Array[Long]]
+
+  private def add(run: String, i: Int, n: Long): Unit =
+    work.getOrElseUpdate(run, new Array[Long](4))(i) += n
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    Option(e.properties).flatMap(p => Option(p.getProperty(RunWork.Key)))
+      .foreach { run =>
+        add(run, 0, 1)
+        e.stageIds.foreach(stageRun(_) = run)
+      }
+  }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    synchronized(stageRun.get(e.stageInfo.stageId).foreach(add(_, 1, 1)))
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    stageRun.get(e.stageId).foreach { run =>
+      add(run, 2, 1)
+      if (e.taskInfo != null) add(run, 3, e.taskInfo.duration)
+    }
+  }
+
+  def json(run: String): String = synchronized {
+    val Array(jobs, stages, tasks, ms) = work.getOrElse(run, new Array[Long](4))
+    f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_s":${ms / 1e3}%.3f}"""
+  }
+}
+
+private object RunWork {
+  val Key = "graft.bench.run"
+  def id(query: String, run: Int): String = s"$query#$run"
 }

@@ -477,14 +477,6 @@ object Analytics {
     relabel(merged)
   }
 
-  /** Routing twin of [[connectedComponentsAuto]]: the DataFrame coloring
-    * loop locally, the Pregel path under `spark.graft.scale=cluster`
-    * (the flag Bench sets) — both share the oracle. */
-  def stronglyConnectedAuto(s: SparkSession, edges: DataFrame): DataFrame =
-    if (s.conf.getOption("spark.graft.scale").contains("cluster"))
-      stronglyConnectedGraphX(s, edges)
-    else stronglyConnected(edges)
-
   /** CONDENSATION of a directed graph: contract every SCC
     * ([[stronglyConnected]]) to one node and keep the distinct
     * non-self label pairs — the DAG downstream cycle-aware processing
@@ -492,7 +484,7 @@ object Analytics {
     * One edge double-join against the label table + a distinct — the
     * [[connectedComponentsIncremental]] contraction shape. */
   def condensation(edges: DataFrame): DataFrame =
-    condensationFrom(edges, stronglyConnectedAuto(edges.sparkSession, edges))
+    condensationFrom(edges, stronglyConnected(edges))
 
   /** [[condensation]] over ALREADY-DERIVED labels (the persisted
     * `scclabels` table at scale — labels derive once per corpus
@@ -513,15 +505,14 @@ object Analytics {
     * path (in condensed edges) into component C — the stage number a
     * cycle-aware scheduler runs C at (stage 0 components have no
     * cross-SCC dependencies). SCC labels come from
-    * [[stronglyConnectedAuto]] once; the condensed edge set is one edge
+    * [[stronglyConnected]] once; the condensed edge set is one edge
     * double-join + distinct; then max-plus relaxation to fixpoint —
     * rounds = condensation depth (2 on the gate fixture BY
     * CONSTRUCTION), each one equi join + max groupBy on the (tiny)
     * component table. Every component reports, including isolated
     * ones (layer 0). The oracle unrolls the identical recurrence. */
   def condensationLayers(edges: DataFrame): DataFrame =
-    condensationLayersFrom(edges,
-      stronglyConnectedAuto(edges.sparkSession, edges))
+    condensationLayersFrom(edges, stronglyConnected(edges))
 
   /** [[condensationLayersFrom]] over an ALREADY-DERIVED condensation —
     * the r12 deployment shape: labels AND condensation persist per
@@ -2544,20 +2535,6 @@ object Analytics {
     }
     labels.select(col("v"), col("c").as("community"))
   }
-
-  /** Routed connected components: the DataFrame min-label loop
-    * ([[connectedComponents]]) is the deterministic oracle path and the
-    * local default; under `spark.graft.scale=cluster` the GraphX
-    * pointer-jumping twin ([[connectedComponentsGraphX]]) runs instead —
-    * O(log n) rounds vs the loop's O(diameter), the difference that
-    * matters on a 100x-diameter graph. Both reach the same converged
-    * fixpoint and are gated against the same oracle SQL (q11_cc /
-    * q11_cc_gx), so the routing flag changes cost, never answers. */
-  def connectedComponentsAuto(s: SparkSession, edges: DataFrame,
-      maxIter: Int = 20): DataFrame =
-    if (s.conf.getOption("spark.graft.scale").contains("cluster"))
-      connectedComponentsGraphX(s, edges)
-    else connectedComponents(edges, maxIter)
 
   /** GraphX scale path for [[labelPropagation]] — SYNCHRONOUS modal-label
     * rounds via aggregateMessages with the SAME deterministic

@@ -111,8 +111,9 @@ object IndexPipeline {
     *  1. BOM sniff: UTF-8 / UTF-16LE/BE / UTF-32LE/BE (32 before 16 —
     *     a UTF-32LE BOM starts with the UTF-16LE one);
     *  2. PEP 263 coding cookie on line 1 or 2
-    *     (`# -*- coding: latin-1 -*-`), charset resolved through Java's
-    *     alias table (latin-1, cp1252, …) with unknown names ignored;
+    *     (`# -*- coding: latin-1 -*-`), the name normalized as
+    *     `tokenize` does, then resolved through Java's alias table
+    *     (cp1252, …) with unknown names ignored;
     *  3. strict UTF-8 (the Python-3 default);
     *  4. permissive total ISO-8859-1 (every byte maps) rather than
     *     scattering U+FFFD through the text — keeps un-decodable files
@@ -150,7 +151,7 @@ object IndexPipeline {
       lines.take(if (blankOrComment) 2 else 1).foreach { ln =>
         if (ln.startsWith("#"))
           cookie.findFirstMatchIn(ln).foreach { m =>
-            try return new String(bytes, Charset.forName(m.group(1)))
+            try return new String(bytes, Charset.forName(normalCodec(m.group(1))))
             catch { case _: Exception => /* unknown codec name: fall on */ }
           }
       }
@@ -164,6 +165,17 @@ object IndexPipeline {
       case _: java.nio.charset.CharacterCodingException =>
         new String(bytes, StandardCharsets.ISO_8859_1)
     }
+  }
+
+  /** A cookie's codec name as `tokenize._get_normal_name` spells it:
+    * Python accepts `latin_1`, `Latin-1-unix` and the like, Java's
+    * charset lookup does not. */
+  private def normalCodec(name: String): String = {
+    val enc = name.take(12).toLowerCase(java.util.Locale.ROOT).replace('_', '-')
+    def is(n: String) = enc == n || enc.startsWith(n + "-")
+    if (is("utf-8")) "utf-8"
+    else if (Seq("latin-1", "iso-8859-1", "iso-latin-1").exists(is)) "iso-8859-1"
+    else name
   }
 
   /** The graph tables of one ingest. `onDriver` holds the merged tables

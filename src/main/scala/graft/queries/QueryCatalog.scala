@@ -1424,7 +1424,7 @@ object QueryCatalog {
     * closure, scc(u) = min v with u→*v ∧ v→*u (self included via the
     * closure seed). */
   val q61Scc: Q = (s, d) =>
-    graft.enrich.Analytics.stronglyConnectedAuto(s, GraphTables.sccRings(s, d))
+    graft.enrich.Analytics.stronglyConnected(GraphTables.sccRings(s, d))
 
   /** q61_gx — the GraphX twin (Pregel SCC + component-min relabel),
     * same oracle. */
@@ -1589,7 +1589,7 @@ object QueryCatalog {
     * converges in ≤6 (its diameter), and the fixpoint is stable, so the
     * Spark until-no-change loop and the fixed unroll land identically. */
   val q11Cc: Q = (s, d) =>
-    graft.enrich.Analytics.connectedComponentsAuto(s, GraphTables.hierarchy(s, d))
+    graft.enrich.Analytics.connectedComponents(GraphTables.hierarchy(s, d))
 
   /** q59 — INCREMENTAL connected components by CONTRACTION
     * ([[graft.enrich.Analytics.connectedComponentsIncremental]]): a

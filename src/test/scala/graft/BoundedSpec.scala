@@ -87,6 +87,13 @@ class BoundedSpec extends AnyFunSuite {
       "size probes belong in graft.ops.Bounded:\n" + outside.mkString("\n"))
   }
 
+  test("structure: one SparkSession builder under src, no routing knob") {
+    val builders = sources("src").flatMap(hits("""SparkSession\.builder\(""".r))
+    assert(builders.size === 1, builders.mkString("\n"))
+    val knob = sources("src/main").flatMap(hits("""spark\.graft\.scale""".r))
+    assert(knob.isEmpty, knob.mkString("\n"))
+  }
+
   test("the indexer makes one arm decision") {
     // indexFiles' bounded collect; enrich follows the arm it picks
     val calls = sources("src/main/scala/graft/indexer")

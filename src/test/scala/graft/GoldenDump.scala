@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the FixtureRepoSpec golden dumps after an INTENTIONAL
   * fixture or indexer change (test scope only; run with
   * `Test/runMain graft.GoldenDump`). Writes to src/test/resources/golden
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
   * not judge it. */
 object GoldenDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     val ix = graft.indexer.IndexPipeline.run(
       spark, "src/test/resources/fixture_repo", "t1")
     val nodes = ix.nodes

@@ -1923,6 +1923,10 @@ class IndexerSpec extends AnyFunSuite {
     // cookie on line 2 (after a shebang) also counts
     val she = "#!/usr/bin/env python\n# coding: latin-1\ns = 'café'\n"
     assert(decodeSource(she.getBytes(StandardCharsets.ISO_8859_1)) === she)
+    // Python's spellings of latin-1 that Java's lookup rejects: these
+    // bytes are also valid UTF-8 (as 'é'), so only the cookie gives 'Ã©'
+    val latin = "# -*- coding: latin-1 -*-\nx = 'Ã©'\n"
+    assert(decodeSource(latin.getBytes(StandardCharsets.ISO_8859_1)) === latin)
     // but not below a code line 1 (tokenize.detect_encoding reads line 2
     // only after a blank or comment line): UTF-8 decides
     val below = "x = 'é'\n# -*- coding: iso-8859-1 -*-\n"
