@@ -20,7 +20,8 @@ import graft.ops.Pin._
   *    orientation matches via a symmetrized scan whose physical
   *    (src, rel_type, dst) columns survive, so startNode()/endNode(),
   *    r-projections and relationship-uniqueness see the real edge;
-  *    self-loops match once; var-length undirected raises),
+  *    self-loops match once; a var-length undirected hop (r16) walks
+  *    both orientations per step),
   *    optionally variable-length (`-[:R*2]->`, `-[:R*1..3]->`,
   *    `-[:R*..3]->`, zero-length `-[:R*0..2]->` binding the same node,
   *    and unbounded `-[:R*]->` via an edge-uniqueness path fixpoint
@@ -102,8 +103,8 @@ import graft.ops.Pin._
   *    `UNWIND [list] AS x` preludes (literal or `$param` lists), and
   *    Neo4j-style `$name` parameters via the params overloads.
   *
-  * Anything else (undirected edges, cartesian products past the row
-  * budget, aggregates beyond those six) raises — exactly the
+  * Anything else (cartesian products past the row budget, aggregates
+  * beyond those six) raises — exactly the
   * reference's posture of not reimplementing Neo4j.
   *
   * The parse result is a plain DataFrame expression — Catalyst plans it
@@ -172,6 +173,9 @@ object CypherLite {
     * the unboundedMatchCap discipline applied to path multiplicity. */
   private val allspLevelRowCap = 2000000L
 
+  /** The path-count saturation of the path-search BFS ([[spathBfs]]). */
+  private val spathCountCap = allspLevelRowCap + 1
+
   /** Un-anchored plain-MATCH row budget (r15, verdict task #3): Neo4j
     * executes `MATCH (a:CLASS), (b:CLASS)` as a cartesian product with
     * a warning; we execute it under the allShortestPaths loud-budget
@@ -212,13 +216,6 @@ object CypherLite {
     out.toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Every (src, dst) endpoint pair of paths with `min`..∞ edges of the
-    * given scan, one row PER PATH, under Neo4j's relationship-uniqueness
-    * rule — a breadth-first path-extension fixpoint. Each level is one
-    * frontier⋈edges join; the visited-edge set rides along as an array
-    * column, so uniqueness is a narrow `array_contains` filter, not a
-    * driver-side structure. Levels localCheckpoint: the loop is
-    * DataFrame-iterative (lineage would otherwise deepen per level). */
   /** Restrict an edge frame's first-leg `src` to the anchor frontier
     * (r16, scale): an ANCHORED var-length pattern must expand FROM its
     * bound side, not enumerate every path in the graph and join the
@@ -238,34 +235,57 @@ object CypherLite {
   private def targetDst(e: DataFrame, target: Option[DataFrame]): DataFrame =
     target.fold(e)(t => e.join(t, Seq("dst"), "left_semi"))
 
-  /** Flip an edge scan for BACKWARD var-length expansion (r17, verdict
-    * task #2): a dst-anchored REVERSED hop must expand from its bound
-    * side too — walking the flipped graph from the anchor is a frontier
-    * walk; expanding forward from everywhere and joining the anchor
-    * afterwards is the planet-sized enumeration the r16 seeding exists
-    * to prevent, just mirrored. */
-  private def flipScan(e: DataFrame): DataFrame =
-    e.select(col("dst").as("src"), col("rel_type"),
-      col("src").as("dst"))
+  /** The traversal frame every var-length hop and both path searches
+    * expand over: traversal (src, dst, rel_type) per direction mode. A
+    * REVERSED hop walks the flipped graph (r17): a dst-anchored pattern
+    * then expands from its bound side too, instead of enumerating every
+    * path and joining the anchor afterwards. An UNDIRECTED hop (r15/r16)
+    * unions both orientations, self-loops entering once. Both carry the
+    * PHYSICAL (psrc, pdst) along, so relationship uniqueness, `prels`
+    * and path reconstruction see the real edge; a forward frame IS its
+    * physical frame and carries no extra column (see [[physical]]). */
+  private def traversalFrame(scan: DataFrame, reversed: Boolean,
+      undirected: Boolean): DataFrame = {
+    val base = scan.select(col("src"), col("dst"), col("rel_type"))
+    if (undirected)
+      base.select(col("src"), col("dst"), col("rel_type"),
+          col("src").as("psrc"), col("dst").as("pdst"))
+        .unionByName(base.filter(col("src") =!= col("dst"))
+          .select(col("dst").as("src"), col("src").as("dst"),
+            col("rel_type"), col("src").as("psrc"),
+            col("dst").as("pdst")))
+    else if (reversed)
+      base.select(col("dst").as("src"), col("src").as("dst"),
+        col("rel_type"), col("src").as("psrc"), col("dst").as("pdst"))
+    else base
+  }
 
-  /** Undo [[flipScan]] on an expanded var-length frame: swap the
-    * endpoints back and restore each prels struct's PHYSICAL
-    * orientation, reversing the list so edge order again runs from the
-    * frame's (restored) src to its dst. */
+  /** The physical (src, dst) column names of a [[traversalFrame]]. */
+  private def physical(e: DataFrame): (String, String) =
+    if (e.columns.contains("psrc")) ("psrc", "pdst") else ("src", "dst")
+
+  /** Turn a REVERSED hop's expanded frame back from expansion space:
+    * swap the endpoints and reverse `prels`, so edge order again runs
+    * from the frame's (restored) src to its dst. The structs are
+    * already physical. */
   private def flipVarFrame(f: DataFrame): DataFrame =
     f.select(col("dst").as("src"), col("src").as("dst"), col("hops"),
-      reverse(transform(col("prels"), x =>
-        struct(x.getField("dst").as("src"),
-          x.getField("rel_type").as("rel_type"),
-          x.getField("src").as("dst")))).as("prels"))
+      reverse(col("prels")).as("prels"))
 
-  private def varLengthRelUnbounded(e0: DataFrame, min: Int,
-      seed: Option[DataFrame] = None): DataFrame = {
-    val e = e0.select(col("src"), col("rel_type"), col("dst"))
-    // the visited-edge array doubles as the PATH for `relationships(p)`
-    // projections (r12): entries carry (s, t, d); uniqueness still
-    // compares (s, d) only — on this dedup'd edge table an edge IS its
-    // (src, dst), the documented identity
+  /** Every (src, dst) endpoint pair of paths with `min`..∞ edges of a
+    * [[traversalFrame]], one row PER PATH, under Neo4j's relationship-
+    * uniqueness rule — a breadth-first path-extension fixpoint. Each
+    * level is one frontier⋈edges join; the visited-edge array rides
+    * along and doubles as the path for `relationships(p)` (r12): its
+    * entries carry the PHYSICAL (s, t, d), and uniqueness compares the
+    * physical (s, d) — on this dedup'd edge table an edge IS its
+    * (src, dst), whatever orientation a step crossed it in. Converges:
+    * every path consumes a distinct edge. */
+  private def varLengthRelUnbounded(e: DataFrame, min: Int,
+      seed: Option[DataFrame]): DataFrame = {
+    val (ps, pd) = physical(e)
+    def edge(x: String) = struct(col(s"$x$ps").as("s"),
+      col(s"${x}rel_type").as("t"), col(s"$x$pd").as("d"))
     def emit(f: DataFrame, hops: Long) = f.select(col("src"), col("dst"),
       lit(hops).as("hops"),
       transform(col("__p"), x => struct(x.getField("s").as("src"),
@@ -273,11 +293,11 @@ object CypherLite {
         .as("prels"))
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // r19 job-count pass: lazy pin + count — ONE job per level both
-    // materializes the frontier and probes convergence (was eager
-    // checkpoint + isEmpty, two scheduler round-trips per level)
+    // materializes the frontier and probes convergence. The INITIAL
+    // frontier seeds from the anchor; the expansion join walks the
+    // full frame.
     var frontier = seedSrc(e, seed).select(col("src"), col("dst"),
-      array(struct(col("src").as("s"), col("rel_type").as("t"),
-        col("dst").as("d"))).as("__p"))
+      array(edge("")).as("__p"))
       .pin(eager = false)
     var nFrontier = frontier.count()
     var level = 1
@@ -287,11 +307,10 @@ object CypherLite {
       frontier = frontier.alias("p")
         .join(e.alias("x"), col("p.dst") === col("x.src"))
         .filter(!exists(col("p.__p"), el =>
-          el.getField("s") === col("x.src") && el.getField("d") === col("x.dst")))
+          el.getField("s") === col(s"x.$ps") &&
+            el.getField("d") === col(s"x.$pd")))
         .select(col("p.src").as("src"), col("x.dst").as("dst"),
-          concat(col("p.__p"),
-            array(struct(col("x.src").as("s"), col("x.rel_type").as("t"),
-              col("x.dst").as("d")))).as("__p"))
+          concat(col("p.__p"), array(edge("x."))).as("__p"))
         .pin(eager = false)
       nFrontier = frontier.count()
       if (level >= min) out += emit(frontier, level.toLong)
@@ -301,152 +320,56 @@ object CypherLite {
         "levels without converging — bound the pattern (*m..n)")
     out.reduceOption(_ unionAll _)
       .getOrElse(emit(e.select(col("src"), col("dst"),
-        array(struct(col("src").as("s"), col("rel_type").as("t"),
-          col("dst").as("d"))).as("__p")), 0L).limit(0))
-  }
-
-  /** Symmetrize an edge scan for UNDIRECTED var-length traversal (r16):
-    * traversal (src, dst) covers both orientations while the PHYSICAL
-    * (psrc, pdst) rides along — prels structs and edge-uniqueness read
-    * physical identity (an edge traversed either way is the same
-    * relationship), exactly the single-hop undirected discipline.
-    * Self-loops enter once (the swapped copy filters them). */
-  private def symmetrizedScan(e0: DataFrame): DataFrame = {
-    val e = e0.select(col("src"), col("rel_type"), col("dst"))
-    e.select(col("src"), col("rel_type"), col("dst"),
-        col("src").as("psrc"), col("dst").as("pdst"))
-      .unionByName(e.filter(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("rel_type"),
-          col("src").as("dst"), col("src").as("psrc"),
-          col("dst").as("pdst")))
-  }
-
-  /** [[varLengthRel]]'s UNDIRECTED twin (r16, verdict task #2): each
-    * step of the composition may cross an edge in either physical
-    * orientation; uniqueness compares PHYSICAL (psrc, pdst) pairs — a
-    * back-and-forth over one edge binds nothing, whatever orientations
-    * the two steps used — and `prels` carries physical structs (Neo4j's
-    * relationship entities never flip their endpoints). */
-  private def varLengthRelUndirected(e0: DataFrame, min: Int,
-      max: Int, seed: Option[DataFrame] = None,
-      target: Option[DataFrame] = None): DataFrame = {
-    val e = symmetrizedScan(e0)
-    def edgeStruct(j: Int) = struct(col(s"ps$j").as("src"),
-      col(s"t$j").as("rel_type"), col(s"pd$j").as("dst"))
-    // leg 0 seeds from the anchor frontier — later legs start at
-    // interior vertices; the last leg prunes to the target set when
-    // the right endpoint is filtered (r17)
-    def sel(j: Int, len: Int) = {
-      val base0 = if (j == 0) seedSrc(e, seed) else e
-      val base = if (j == len - 1) targetDst(base0, target) else base0
-      base.select(col("src").as(s"s$j"),
-        col("rel_type").as(s"t$j"), col("dst").as(s"d$j"),
-        col("psrc").as(s"ps$j"), col("pdst").as(s"pd$j"))
-    }
-    val perLength = (math.max(min, 1) to max).map { len =>
-      var df = sel(0, len)
-      for (j <- 1 until len) {
-        df = df.join(sel(j, len), col(s"d${j - 1}") === col(s"s$j"))
-        for (k <- 0 until j)
-          df = df.filter(!(col(s"ps$k") === col(s"ps$j") &&
-            col(s"pd$k") === col(s"pd$j")))
-      }
-      df.select(col("s0").as("src"), col(s"d${len - 1}").as("dst"),
-        lit(len.toLong).as("hops"),
-        array((0 until len).map(edgeStruct): _*).as("prels"))
-    }
-    perLength.reduce(_ unionAll _)
-  }
-
-  /** [[varLengthRelUnbounded]]'s UNDIRECTED twin (r16): the same BFS
-    * path enumeration over the symmetrized frame; `__p` entries carry
-    * PHYSICAL (s, t, d), and the visited filter compares physical
-    * pairs, so edge-uniqueness spans orientations. Converges — every
-    * path consumes a distinct physical edge. */
-  private def varLengthRelUnboundedUndirected(e0: DataFrame,
-      min: Int, seed: Option[DataFrame] = None): DataFrame = {
-    val e = symmetrizedScan(e0)
-    def emit(f: DataFrame, hops: Long) = f.select(col("src"), col("dst"),
-      lit(hops).as("hops"),
-      transform(col("__p"), x => struct(x.getField("s").as("src"),
-        x.getField("t").as("rel_type"), x.getField("d").as("dst")))
-        .as("prels"))
-    val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // the INITIAL frontier seeds from the anchor; the expansion join
-    // walks the full frame
-    // r19: lazy pin + fused count probe (see varLengthRelUnbounded)
-    var frontier = seedSrc(e, seed).select(col("src"), col("dst"),
-      array(struct(col("psrc").as("s"), col("rel_type").as("t"),
-        col("pdst").as("d"))).as("__p"))
-      .pin(eager = false)
-    var nFrontier = frontier.count()
-    var level = 1
-    if (min <= 1) out += emit(frontier, 1L)
-    while (nFrontier > 0 && level < unboundedMatchCap) {
-      level += 1
-      frontier = frontier.alias("p")
-        .join(e.alias("x"), col("p.dst") === col("x.src"))
-        .filter(!exists(col("p.__p"), el =>
-          el.getField("s") === col("x.psrc") &&
-            el.getField("d") === col("x.pdst")))
-        .select(col("p.src").as("src"), col("x.dst").as("dst"),
-          concat(col("p.__p"),
-            array(struct(col("x.psrc").as("s"), col("x.rel_type").as("t"),
-              col("x.pdst").as("d")))).as("__p"))
-        .pin(eager = false)
-      nFrontier = frontier.count()
-      if (level >= min) out += emit(frontier, level.toLong)
-    }
-    require(nFrontier == 0,
-      s"unbounded variable-length expansion passed $unboundedMatchCap " +
-        "levels without converging — bound the pattern (*m..n)")
-    out.reduceOption(_ unionAll _)
-      .getOrElse(emit(e.select(col("src"), col("dst"),
-        array(struct(col("psrc").as("s"), col("rel_type").as("t"),
-          col("pdst").as("d"))).as("__p")), 0L).limit(0))
+        array(edge("")).as("__p")), 0L).limit(0))
   }
 
   /** The (src, dst) endpoint pairs of every path of `min`..`max` edges of
-    * type `rel` — one output row PER PATH (Cypher's path multiplicity),
-    * with Neo4j's relationship-uniqueness rule (an edge appears at most
-    * once per path; on this dedup'd edge table an edge IS its (src,dst)).
+    * a [[traversalFrame]] — one output row PER PATH (Cypher's path
+    * multiplicity), under the same relationship-uniqueness rule as
+    * [[varLengthRelUnbounded]]: no two steps cross the same physical
+    * (src, dst), whatever their orientations (a back-and-forth over one
+    * undirected edge binds nothing). `prels` carries the physical
+    * (src, rel_type, dst) structs (r12: the per-edge type rides along)
+    * in traversal order.
     *
     * Shape: the length-L slice is L-1 self-joins on the hop key; lengths
     * union together. Each self-join shuffles on the chain key unless the
     * edge table is bucketed (store.Bucketing's layout co-locates it). */
   private def varLengthRel(e: DataFrame, min: Int, max: Int,
-      seed: Option[DataFrame] = None,
-      target: Option[DataFrame] = None): DataFrame = {
-    // per-edge rel types ride along (t$j) so `relationships(p)` path
-    // projections (r12) see the actual type of each hop — uniqueness
-    // stays on (src, dst), the documented edge identity here
-    def edgeStruct(j: Int) = struct(col(s"s$j").as("src"),
-      col(s"t$j").as("rel_type"), col(s"d$j").as("dst"))
+      seed: Option[DataFrame], target: Option[DataFrame]): DataFrame = {
+    val (ps, pd) = physical(e)
+    // leg j's physical columns: a forward frame's are its s$j / d$j
+    val carried = ps == "psrc"
+    def psj(j: Int) = col(if (carried) s"ps$j" else s"s$j")
+    def pdj(j: Int) = col(if (carried) s"pd$j" else s"d$j")
     // leg 0 seeds from the anchor frontier (r16, scale); the LAST leg
     // of each length prunes to the target key set when the pattern's
     // right endpoint is filtered (r17) — interior legs can't prune
     // (their vertices are unknown until joined)
-    val e1 = seedSrc(e, seed)
+    def leg(j: Int, len: Int) = {
+      val b0 = if (j == 0) seedSrc(e, seed) else e
+      val b = if (j == len - 1) targetDst(b0, target) else b0
+      b.select(Seq(col("src").as(s"s$j"), col("rel_type").as(s"t$j"),
+        col("dst").as(s"d$j")) ++ (if (carried) Seq(col("psrc").as(s"ps$j"),
+        col("pdst").as(s"pd$j")) else Nil): _*)
+    }
     val perLength = (min to max).map { len =>
       if (len == 1)
-        targetDst(e1, target)
-          .select(col("src"), col("dst"), lit(1L).as("hops"),
-          array(struct(col("src"), col("rel_type"), col("dst"))).as("prels"))
+        // one leg composes nothing: project the frame directly
+        targetDst(seedSrc(e, seed), target).select(col("src"), col("dst"),
+          lit(1L).as("hops"), array(struct(col(ps).as("src"),
+            col("rel_type"), col(pd).as("dst"))).as("prels"))
       else {
-        var df = e1.select(col("src").as("s0"), col("rel_type").as("t0"),
-          col("dst").as("d0"))
+        var df = leg(0, len)
         for (j <- 1 until len) {
-          val ej = (if (j == len - 1) targetDst(e, target) else e)
-            .select(col("src").as(s"s$j"), col("rel_type").as(s"t$j"),
-              col("dst").as(s"d$j"))
-          df = df.join(ej, col(s"d${j - 1}") === col(s"s$j"))
+          df = df.join(leg(j, len), col(s"d${j - 1}") === col(s"s$j"))
           for (k <- 0 until j)
-            df = df.filter(
-              !(col(s"s$k") === col(s"s$j") && col(s"d$k") === col(s"d$j")))
+            df = df.filter(!(psj(k) === psj(j) && pdj(k) === pdj(j)))
         }
         df.select(col("s0").as("src"), col(s"d${len - 1}").as("dst"),
           lit(len.toLong).as("hops"),
-          array((0 until len).map(edgeStruct): _*).as("prels"))
+          array((0 until len).map(j => struct(psj(j).as("src"),
+            col(s"t$j").as("rel_type"), pdj(j).as("dst"))): _*).as("prels"))
       }
     }
     // unionAll: two paths with the same endpoints are two result rows
@@ -2363,9 +2286,9 @@ object CypherLite {
         case "--" => Hop(null, reversed = false, undirected = true)
         case undirArrow(rv, rel, star, props) =>
           // UNDIRECTED hop (r15; var-length r16): either physical
-          // orientation matches each step; the var-length composition
-          // runs over the symmetrized frame with physical-identity
-          // edge-uniqueness and physical prels structs
+          // orientation matches each step; a var-length hop expands
+          // over the two-orientation traversal frame with physical-
+          // identity edge-uniqueness and physical prels structs
           val (mn, mx) = parseStar(star)
           Hop(rel, reversed = false, mn, mx, parseProps(props), Option(rv),
             undirected = true)
@@ -2526,26 +2449,20 @@ object CypherLite {
             if (rightM.labels.isEmpty && rightM.props.isEmpty) None
             else Some(nodes.filter(nodePred(rightM.labels, rightM.props))
               .select(col("full_name").as("dst")).distinct())
-          // in EXPANSION space: a reversed hop walks the FLIPPED graph,
-          // where the chain anchor (which joins the flipped-back
-          // frame's dst = the expansion's src) is the src-seed and the
-          // right endpoint (frame src = expansion dst) the dst-target —
-          // the seed/target column names line up without renames
-          val expScan = if (hop.reversed) flipScan(scan) else scan
-          val (srcSeed, dstTarget) = (chainKeys, rightKeys)
+          // in EXPANSION space (the traversal frame): a reversed hop
+          // walks the FLIPPED graph, where the chain anchor (which joins
+          // the flipped-back frame's dst = the expansion's src) is the
+          // src-seed and the right endpoint (frame src = expansion dst)
+          // the dst-target — the seed/target column names line up
+          // without renames
+          val frame = traversalFrame(scan, hop.reversed, hop.undirected)
           val pos0 =
             if (hop.maxHops == 0) Seq.empty
-            else if (hop.undirected && hop.maxHops < 0)
-              Seq(varLengthRelUnboundedUndirected(expScan,
-                math.max(hop.minHops, 1), srcSeed))
-            else if (hop.undirected)
-              Seq(varLengthRelUndirected(expScan, math.max(hop.minHops, 1),
-                hop.maxHops, srcSeed, dstTarget))
             else if (hop.maxHops < 0)
-              Seq(varLengthRelUnbounded(expScan, math.max(hop.minHops, 1),
-                srcSeed))
-            else Seq(varLengthRel(expScan, math.max(hop.minHops, 1),
-              hop.maxHops, srcSeed, dstTarget))
+              Seq(varLengthRelUnbounded(frame, math.max(hop.minHops, 1),
+                chainKeys))
+            else Seq(varLengthRel(frame, math.max(hop.minHops, 1),
+              hop.maxHops, chainKeys, rightKeys))
           val pos = if (hop.reversed) pos0.map(flipVarFrame) else pos0
           (zero ++ pos).map(keep).reduce(_ unionAll _)
         } else scan
@@ -2564,8 +2481,8 @@ object CypherLite {
       // orientation, exactly Neo4j's semantics (an edge traversed
       // either way is the same relationship). Self-loops enter once
       // (the swapped copy filters them), so (a)-[r]-(a) matches once.
-      // a var-length undirected frame already symmetrized per step
-      // inside the composition — its (src, dst) ARE the traversal
+      // a var-length undirected frame already walked both orientations
+      // per step (traversalFrame) — its (src, dst) ARE the traversal
       // endpoints, so it joins like a forward hop below
       val e = (if (!hop.undirected || hop.isVarLength) eDir
         else eDir.withColumn("__from", col("src"))
@@ -2710,28 +2627,6 @@ object CypherLite {
       bPat: NodePat, hop: Hop, reversed: Boolean, minH: Int, maxH: Int,
       tail: String, undirected: Boolean)
 
-  /** The BFS traversal frame for the path-search operators: traversal
-    * (src, dst) per direction mode, with the PHYSICAL (psrc, pdst)
-    * riding along so reconstruction emits the real edge. Undirected
-    * unions both orientations (self-loops enter once). */
-  private def spathTraversalFrame(scan: DataFrame, reversed: Boolean,
-      undirected: Boolean): DataFrame = {
-    val base = scan.select(col("src"), col("dst"), col("rel_type"))
-    if (undirected)
-      base.select(col("src"), col("dst"), col("rel_type"),
-          col("src").as("psrc"), col("dst").as("pdst"))
-        .unionByName(base.filter(col("src") =!= col("dst"))
-          .select(col("dst").as("src"), col("src").as("dst"),
-            col("rel_type"), col("src").as("psrc"),
-            col("dst").as("pdst")))
-    else if (reversed)
-      base.select(col("dst").as("src"), col("src").as("dst"),
-        col("rel_type"), col("src").as("psrc"), col("dst").as("pdst"))
-    else
-      base.select(col("src"), col("dst"), col("rel_type"),
-        col("src").as("psrc"), col("dst").as("pdst"))
-  }
-
   private def parseSpathPattern(q: String, kwIdx: Int,
       kw: String): SpParts = {
     val open = q.indexOf('(', kwIdx)
@@ -2847,8 +2742,9 @@ object CypherLite {
     * sub-jobs) runs as one driver pass with the identical recurrences —
     * d = first-reach level, par = MIN predecessor among the settling
     * level's frontier rows (every edge OCCURRENCE a row, as in the
-    * groupBy), np = Σ np(pred) over edge occurrences (exact longs, the
-    * fused count DP). At cluster scale the bounded edge probe
+    * groupBy), np = Σ np(pred) over edge occurrences (the fused count
+    * DP, saturated at [[spathCountCap]]). At cluster scale the bounded
+    * edge probe
     * ([[graft.ops.Bounded]]) misses and the distributed loop carries the
     * work; specs force it via `spark.graft.localThreshold = 0`. Returns
     * (s, v, d, par, np) per settled pair. */
@@ -2887,7 +2783,8 @@ object CypherLite {
           if (!dist.contains(w)) {
             cand(w) = cand.get(w) match {
               case None => (np(u), u)
-              case Some((n, p)) => (n + np(u), if (u < p) u else p)
+              case Some((n, p)) =>
+                (math.min(n + np(u), spathCountCap), if (u < p) u else p)
             }
           }
         val nxt = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -2903,69 +2800,131 @@ object CypherLite {
     Some(out.toSeq)
   }
 
-  private def executeShortestPath(nodes: DataFrame, edges: DataFrame,
-      q: String, spIdx: Int, unwinds: Seq[Unwind] = Seq.empty)
-      : DataFrame = {
-    val sp = parseSpathPattern(q, spIdx, "shortestPath")
-    val SpParts(pVar, aPat, bPat, hop, reversed, minH, maxH, tail,
-      undirected) = sp
-    val scan = hopEdges(edges, hop)
-    // BFS space: reversed arrows flip the scan; UNDIRECTED (r15)
-    // unions both orientations. PHYSICAL (psrc, pdst) ride along with
-    // rel_type so path reconstruction emits the REAL edge whatever the
-    // traversal direction was.
-    val eTyped = spathTraversalFrame(scan, reversed, undirected)
+  /** The multi-source BFS both path searches run over their traversal
+    * frame: (s, v, d, par, np) per settled (start, vertex) pair — d =
+    * the first (= shortest) level the pair met, par = the MIN
+    * predecessor among that level's frontier rows (a deterministic
+    * parent pointer, so ONE shortest path per pair — Neo4j's
+    * shortestPath contract — reconstructs by backtracking), np = the
+    * shortest-path count Σ np(pred) over edge occurrences (r17, the
+    * fused count DP: the per-level groupBy IS the DP, so parallel edges
+    * of different rel types count as distinct paths when the frame
+    * keeps them). A count saturates at [[spathCountCap]]: past
+    * allShortestPaths' cap its exact value only ever trips that cap,
+    * and saturating keeps the sums inside Long range on both arms.
+    * [[spathBfsLocal]] answers on the driver when it fits;
+    * otherwise the distributed frontier fixpoint runs the same
+    * recurrences, one frontier⋈edges join + groupBy per level. */
+  private def spathBfs(eTyped: DataFrame, seedF: DataFrame,
+      maxH: Int): DataFrame = {
     val e = eTyped.select(col("src"), col("dst"))
       .repartition(col("src")).pin(eager = false)
-
-    // multi-source frontier BFS keyed by the start node: settled
-    // (s, v, d, par) holds the first (= shortest) level each
-    // (start, vertex) pair met, plus the MIN predecessor at that level
-    // — a deterministic parent pointer, so ONE shortest path per pair
-    // (Neo4j's shortestPath contract) reconstructs by backtracking
-    val (seedF, seedVar) = spathSeedFrame(nodes, aPat, unwinds, q)
-    val settled: DataFrame =
-      spathBfsLocal(eTyped.select(col("src"), col("dst")), seedF,
-          maxH) match {
-        case Some(state) =>
-          val spark = nodes.sparkSession
-          import spark.implicits._
-          state.map { case (s, v, d, par, _) => (s, v, d, par) }
-            .toDF("s", "v", "d", "par")
-        case None =>
-          var frontier = seedF
-            .withColumn("v", col("s")).withColumn("d", lit(0L))
-            .withColumn("par", lit(null).cast("string"))
+    spathBfsLocal(eTyped.select(col("src"), col("dst")), seedF,
+        maxH) match {
+      case Some(state) =>
+        val spark = seedF.sparkSession
+        import spark.implicits._
+        state.toDF("s", "v", "d", "par", "np")
+      case None =>
+        var frontier = seedF
+          .withColumn("v", col("s")).withColumn("d", lit(0L))
+          .withColumn("par", lit(null).cast("string"))
+          .withColumn("np", lit(1L))
+          .pin(eager = false)
+        var st = frontier
+        var i = 1
+        var done = frontier.count() == 0
+        while (i <= maxH && !done) {
+          val nxt = e.join(frontier.select(col("s"), col("np"),
+              col("v").as("src")), "src")
+            .groupBy(col("s"), col("dst"))
+            .agg(min(col("src")).as("par"),
+              least(sum(col("np")), lit(spathCountCap)).as("np"))
+            .select(col("s"), col("dst").as("v"), col("par"), col("np"))
+            .join(st.select(col("s"), col("v")), Seq("s", "v"),
+              "left_anti")
+            .select(col("s"), col("v"), lit(i.toLong).as("d"), col("par"),
+              col("np"))
             .pin(eager = false)
-          var st = frontier
-          var i = 1
-          var done = frontier.count() == 0
-          while (i <= maxH && !done) {
-            val nxt = e
-              .join(frontier.select(col("s"), col("v").as("src")), "src")
-              .groupBy(col("s"), col("dst"))
-              .agg(min(col("src")).as("par"))
-              .select(col("s"), col("dst").as("v"), col("par"))
-              .join(st.select(col("s"), col("v")), Seq("s", "v"),
-                "left_anti")
-              .select(col("s"), col("v"), lit(i.toLong).as("d"), col("par"))
-              .pin(eager = false)
-            if (nxt.count() == 0L) done = true
-            else { st = st.unionByName(nxt); frontier = nxt; i += 1 }
-          }
-          st
-      }
+          if (nxt.count() == 0L) done = true
+          else { st = st.unionByName(nxt); frontier = nxt; i += 1 }
+        }
+        st
+    }
+  }
 
-    val paths = settled.filter(col("d") >= minH && col("d") <= maxH)
-    val vars = Map(aPat.v -> "n0", bPat.v -> "n1")
-    var df = paths
+  /** A path search's tail with the unwound seed variable read as the
+    * path's start key (r18) and the demand-only endpoint reads
+    * rewritten (r17), plus whether it still reads `nodes(p)` or
+    * `relationships(p)` — only then does a search build per-path
+    * lists. */
+  private def spathTail(sp: SpParts,
+      seedVar: Option[String]): (String, Boolean) = {
+    val pQuoted = java.util.regex.Pattern.quote(sp.pVar)
+    val tailS = seedVar.fold(sp.tail)(v => replaceOutsideQuotes(sp.tail,
+      "\\b" + java.util.regex.Pattern.quote(v) + "\\b", "__pstart"))
+    val tail2 = rewriteEndpointReads(tailS, pQuoted)
+    (tail2, ("(?i)\\b(nodes|relationships)\\(\\s*" + pQuoted + "\\s*\\)")
+      .r.findFirstIn(tail2).isDefined)
+  }
+
+  /** The one path tail of both searches. `paths` holds one row per
+    * result path as (s, v, d), with `__pnodes`/`__prels` when they are
+    * already built, or joined in from `recon` by (s, v). The endpoint
+    * patterns join as n0/n1, the path reads become the plain columns
+    * `__plen/__pstart/__pend/__pnn` (and the lists), and
+    * `length/nodes/relationships(p)` rewrite to them, so WHERE and the
+    * ordinary RETURN machinery (aliases, ORDER BY, aggregates) apply
+    * unchanged. */
+  private def pathTail(nodes: DataFrame, sp: SpParts, kw: String,
+      q: String, tail2: String, paths: DataFrame,
+      recon: Option[DataFrame] = None): DataFrame = {
+    val vars = Map(sp.aPat.v -> "n0", sp.bPat.v -> "n1")
+    val ends = paths
       .join(nodes.alias("n0"), col("n0.full_name") === col("s"))
-      .join(nodes.filter(nodePred(bPat.labels, bPat.props)).alias("n1"),
-        col("n1.full_name") === col("v"))
+      .join(nodes.filter(nodePred(sp.bPat.labels, sp.bPat.props))
+        .alias("n1"), col("n1.full_name") === col("v"))
       .withColumn("__plen", col("d"))
       .withColumn("__pstart", col("s"))
       .withColumn("__pend", col("v"))
       .withColumn("__pnn", col("d") + 1)
+    var df = recon.fold(ends)(r => ends.join(r.select(col("s").as("__ps"),
+        col("v").as("__pv"), col("__pnodes"), col("__prels")),
+      col("s") === col("__ps") && col("v") === col("__pv"))
+      .drop("__ps", "__pv"))
+    val pQuoted = java.util.regex.Pattern.quote(sp.pVar)
+    def rewritePathFns(t: String): String = {
+      var r = replaceOutsideQuotes(t,
+        "(?i)\\b(?:length|size)\\(\\s*" + pQuoted + "\\s*\\)", "__plen")
+      r = replaceOutsideQuotes(r,
+        "(?i)\\bnodes\\(\\s*" + pQuoted + "\\s*\\)", "__pnodes")
+      replaceOutsideQuotes(r,
+        "(?i)\\brelationships\\(\\s*" + pQuoted + "\\s*\\)", "__prels")
+    }
+    val withPaths = recon.isDefined || paths.columns.contains("__pnodes")
+    val plainCols = Set("__plen", "__pstart", "__pend", "__pnn") ++
+      (if (withPaths) Set("__pnodes", "__prels") else Set.empty[String])
+    val retIdx = topLevelKeyword(tail2, "RETURN")
+    require(retIdx >= 0, s"$kw needs a RETURN clause: $q")
+    val whereIdx = topLevelKeyword(tail2, "WHERE")
+    if (whereIdx >= 0 && whereIdx < retIdx)
+      df = df.filter(parseWhere(
+        rewritePathFns(tail2.substring(whereIdx + 5, retIdx).trim),
+        ref => if (plainCols(ref)) col(ref) else matchScope(vars)(ref)))
+    shapeResult(df, rewritePathFns(tail2.substring(retIdx + 6).trim), vars,
+      plainCols)
+  }
+
+  private def executeShortestPath(nodes: DataFrame, edges: DataFrame,
+      q: String, spIdx: Int, unwinds: Seq[Unwind] = Seq.empty)
+      : DataFrame = {
+    val sp = parseSpathPattern(q, spIdx, "shortestPath")
+    val SpParts(_, aPat, bPat, hop, reversed, minH, maxH, _,
+      undirected) = sp
+    val eTyped = traversalFrame(hopEdges(edges, hop), reversed, undirected)
+    val (seedF, seedVar) = spathSeedFrame(nodes, aPat, unwinds, q)
+    val settled = spathBfs(eTyped, seedF, maxH)
+    val paths = settled.filter(col("d") >= minH && col("d") <= maxH)
 
     // r12: nodes(p)/relationships(p) projections — reconstruct THE
     // shortest path per (s, v) by backtracking the parent pointers,
@@ -2975,19 +2934,12 @@ object CypherLite {
     // arrows. Built only when the tail actually references them AFTER
     // the demand-only rewrite (r17): endpoint/length reads never
     // trigger the reconstruction loop.
-    val pQuoted = java.util.regex.Pattern.quote(pVar)
-    // r18: reads of the unwound seed variable are reads of the path's
-    // start key — rewrite to the BFS frame's own column
-    val tailS = seedVar.fold(tail)(v => replaceOutsideQuotes(tail,
-      "\\b" + java.util.regex.Pattern.quote(v) + "\\b", "__pstart"))
-    val tail2 = rewriteEndpointReads(tailS, pQuoted)
-    val needPaths =
-      ("(?i)\\b(nodes|relationships)\\(\\s*" + pQuoted + "\\s*\\)").r
-        .findFirstIn(tail2).isDefined
-    if (needPaths) {
+    val (tail2, needPaths) = spathTail(sp, seedVar)
+    val recon = if (!needPaths) None else {
+      val (ps, pd) = physical(eTyped)
       val eMin = eTyped.groupBy("src", "dst")
-        .agg(min(struct(col("rel_type").as("rt"), col("psrc"),
-          col("pdst"))).as("m"))
+        .agg(min(struct(col("rel_type").as("rt"), col(ps).as("psrc"),
+          col(pd).as("pdst"))).as("m"))
         .pin(eager = false)
       val emptyRels = expr("CAST(array() AS " +
         "array<struct<src:string,rel_type:string,dst:string>>)")
@@ -3000,7 +2952,7 @@ object CypherLite {
           .select(col("full_name").as("v")).distinct(), Seq("v"),
           "left_semi")
       var st = stBase.select(col("s"), col("v"), col("v").as("cur"),
-          array(col("v")).as("__bn"), emptyRels.as("__br"),
+          array(col("v")).as("__pnodes"), emptyRels.as("__prels"),
           col("d").as("rem"))
         .pin(eager = false)
       val maxD = paths.agg(coalesce(max(col("d")), lit(0L)))
@@ -3020,42 +2972,16 @@ object CypherLite {
             col("t.src") === col("q.par") && col("t.dst") === col("p.cur"))
           .select(col("p.s").as("s"), col("p.v").as("v"),
             col("q.par").as("cur"),
-            concat(array(col("q.par")), col("p.__bn")).as("__bn"),
-            concat(array(relStruct), col("p.__br")).as("__br"),
+            concat(array(col("q.par")), col("p.__pnodes")).as("__pnodes"),
+            concat(array(relStruct), col("p.__prels")).as("__prels"),
             (col("p.rem") - 1).as("rem"))
         // r19: lazy — the whole backtrack chain executes inside the
         // final action's single job, level states persisting as they go
         st = settledRows.unionByName(step).pin(eager = false)
       }
-      df = df.join(st.select(col("s").as("__ps"), col("v").as("__pv"),
-          col("__bn").as("__pnodes"), col("__br").as("__prels")),
-        col("s") === col("__ps") && col("v") === col("__pv"))
-        .drop("__ps", "__pv")
+      Some(st)
     }
-
-    def rewritePathFns(t: String): String = {
-      var r = replaceOutsideQuotes(t,
-        "(?i)\\b(?:length|size)\\(\\s*" + pQuoted + "\\s*\\)", "__plen")
-      r = replaceOutsideQuotes(r,
-        "(?i)\\bnodes\\(\\s*" + pQuoted + "\\s*\\)", "__pnodes")
-      replaceOutsideQuotes(r,
-        "(?i)\\brelationships\\(\\s*" + pQuoted + "\\s*\\)", "__prels")
-    }
-    val plainCols = Set("__plen", "__pstart", "__pend", "__pnn") ++
-      (if (needPaths) Set("__pnodes", "__prels") else Set.empty[String])
-
-    var rest = tail2
-    val retIdx2 = topLevelKeyword(rest, "RETURN")
-    require(retIdx2 >= 0, s"shortestPath needs a RETURN clause: $q")
-    val whereIdx = topLevelKeyword(rest, "WHERE")
-    if (whereIdx >= 0 && whereIdx < retIdx2)
-      df = df.filter(parseWhere(
-        rewritePathFns(rest.substring(whereIdx + 5, retIdx2).trim),
-        ref => if (plainCols(ref)) col(ref) else matchScope(vars)(ref)))
-    // path projections rewrite to plain columns so the ordinary RETURN
-    // machinery (aliases, ORDER BY, aggregates) applies unchanged
-    val ret = rewritePathFns(rest.substring(retIdx2 + 6).trim)
-    shapeResult(df, ret, vars, plainCols)
+    pathTail(nodes, sp, "shortestPath", q, tail2, paths, recon)
   }
 
   /** DEMAND-ONLY path reads rewritten to scalar columns (r17, verdict
@@ -3097,62 +3023,17 @@ object CypherLite {
       q: String, idx: Int, unwinds: Seq[Unwind] = Seq.empty)
       : DataFrame = {
     val sp = parseSpathPattern(q, idx, "allShortestPaths")
-    val SpParts(pVar, aPat, bPat, hop, reversed, minH, maxH, tail,
+    val SpParts(_, aPat, bPat, hop, reversed, minH, maxH, _,
       undirected) = sp
-    val scan = hopEdges(edges, hop)
-    val eTyped = spathTraversalFrame(scan, reversed, undirected)
+    // NOT distinct'd beyond exact duplicates: parallel edges of
+    // different rel types are DISTINCT shortest paths (Neo4j), and the
+    // fused count DP (r17) rides multiplicity through this frame
+    val eTyped = traversalFrame(hopEdges(edges, hop), reversed, undirected)
       .distinct()
       .pin(eager = false)
-    // NOT distinct'd: parallel edges of different rel types are
-    // DISTINCT shortest paths (Neo4j), and the fused count DP (r17)
-    // rides multiplicity through this frame
-    val e = eTyped.select(col("src"), col("dst"))
-      .repartition(col("src")).pin(eager = false)
     val (seedF, seedVar) = spathSeedFrame(nodes, aPat, unwinds, q)
-    // r17 (fused count DP): the shortest-path COUNT rides the BFS
-    // frontier — np(s, v) = Σ np(s, u) over parallel-typed edges u→v
-    // arriving at v's settling level (the groupBy IS the per-level DP
-    // the r16 code ran as a second maxD-round loop over the layered
-    // DAG) — so the length-only arm below needs neither the DAG build
-    // (two settled self-joins) nor any extra per-level jobs.
-    val settled: DataFrame =
-      spathBfsLocal(eTyped.select(col("src"), col("dst")), seedF,
-          maxH) match {
-        case Some(state) =>
-          val spark = nodes.sparkSession
-          import spark.implicits._
-          state.map { case (s, v, d, _, np) => (s, v, d, np) }
-            .toDF("s", "v", "d", "np")
-        case None =>
-          var frontier = seedF
-            .withColumn("v", col("s")).withColumn("d", lit(0L))
-            .withColumn("np", lit(1L))
-            .pin(eager = false)
-          var st = frontier
-          var i = 1
-          var done = frontier.count() == 0
-          while (i <= maxH && !done) {
-            val nxt = e.join(frontier.select(col("s"), col("np"),
-                col("v").as("src")), "src")
-              .select(col("s"), col("dst").as("v"), col("np"))
-              .groupBy("s", "v").agg(sum("np").as("np"))
-              .join(st.select(col("s"), col("v")), Seq("s", "v"),
-                "left_anti")
-              .select(col("s"), col("v"), lit(i.toLong).as("d"), col("np"))
-              .pin(eager = false)
-            if (nxt.count() == 0L) done = true
-            else { st = st.unionByName(nxt); frontier = nxt; i += 1 }
-          }
-          st
-      }
-    val pQuoted0 = java.util.regex.Pattern.quote(pVar)
-    // r18: reads of the unwound seed variable rewrite to the start key
-    val tailS = seedVar.fold(tail)(v => replaceOutsideQuotes(tail,
-      "\\b" + java.util.regex.Pattern.quote(v) + "\\b", "__pstart"))
-    val tail2 = rewriteEndpointReads(tailS, pQuoted0)
-    val needsPaths = Seq("nodes", "relationships").exists(fn =>
-      ("(?i)\\b" + fn + "\\(\\s*" + pQuoted0 + "\\s*\\)").r
-        .findFirstIn(tail2).isDefined)
+    val settled = spathBfs(eTyped, seedF, maxH)
+    val (tail2, needsPaths) = spathTail(sp, seedVar)
     val maxD = settled.agg(coalesce(max(col("d")), lit(0L)))
       .collect()(0).getLong(0)
     // the right endpoint's key set — BOTH arms prune to it before any
@@ -3167,11 +3048,10 @@ object CypherLite {
     if (!needsPaths) {
       // the counts already rode the BFS (fused DP, r17): settled IS
       // the per-(start, vertex) multiplicity table
-      val allC = settled.select(col("s"), col("v").as("cur"),
-        col("d"), col("np"))
-      val inRange0 = allC.filter(col("d") >= minH && col("d") <= maxH)
-      val inRange = bKeys.fold(inRange0)(b => inRange0
-        .join(b.select(col("v").as("cur")), Seq("cur"), "left_semi"))
+      val inRange0 = settled.select(col("s"), col("v"), col("d"), col("np"))
+        .filter(col("d") >= minH && col("d") <= maxH)
+      val inRange = bKeys.fold(inRange0)(b =>
+        inRange0.join(b, Seq("v"), "left_semi"))
       val totPaths = inRange.agg(coalesce(sum(col("np")), lit(0L)))
         .collect()(0).getLong(0)
       require(totPaths <= allspLevelRowCap,
@@ -3180,28 +3060,7 @@ object CypherLite {
       val paths = inRange
         .withColumn("__dup", explode(sequence(lit(1L), col("np"))))
         .drop("np", "__dup")
-      val vars = Map(aPat.v -> "n0", bPat.v -> "n1")
-      var df = paths
-        .join(nodes.alias("n0"), col("n0.full_name") === col("s"))
-        .join(nodes.filter(nodePred(bPat.labels, bPat.props)).alias("n1"),
-          col("n1.full_name") === col("cur"))
-        .withColumn("__plen", col("d"))
-        .withColumn("__pstart", col("s"))
-        .withColumn("__pend", col("cur"))
-        .withColumn("__pnn", col("d") + 1)
-      def rewriteLen(t: String): String = replaceOutsideQuotes(t,
-        "(?i)\\b(?:length|size)\\(\\s*" + pQuoted0 + "\\s*\\)", "__plen")
-      val plainCols = Set("__plen", "__pstart", "__pend", "__pnn")
-      var rest = tail2
-      val retIdx2 = topLevelKeyword(rest, "RETURN")
-      require(retIdx2 >= 0, s"allShortestPaths needs a RETURN clause: $q")
-      val whereIdx = topLevelKeyword(rest, "WHERE")
-      if (whereIdx >= 0 && whereIdx < retIdx2)
-        df = df.filter(parseWhere(
-          rewriteLen(rest.substring(whereIdx + 5, retIdx2).trim),
-          ref => if (plainCols(ref)) col(ref) else matchScope(vars)(ref)))
-      val ret = rewriteLen(rest.substring(retIdx2 + 6).trim)
-      return shapeResult(df, ret, vars, plainCols)
+      return pathTail(nodes, sp, "allShortestPaths", q, tail2, paths)
     }
     // checkpoint-and-strip: localCheckpoint preserves the frame's
     // constraint set, and when a lineage held duplicate-named attrs the
@@ -3218,6 +3077,7 @@ object CypherLite {
     // per-start layered DAG (per-path arm only, r17 — the length-only
     // arm above reads the fused BFS counts): edges that advance the
     // BFS level; every path in it is a shortest-path prefix
+    val (ps, pd) = physical(eTyped)
     val spE = eTyped.alias("t")
       .join(settled.alias("u"), col("t.src") === col("u.v"))
       .join(settled.alias("w"),
@@ -3225,7 +3085,7 @@ object CypherLite {
           col("w.d") === col("u.d") + 1)
       .select(col("u.s").as("s"), col("t.src").as("esrc"),
         col("t.dst").as("edst"), col("t.rel_type").as("rt"),
-        col("t.psrc").as("xpsrc"), col("t.pdst").as("xpdst"),
+        col(s"t.$ps").as("xpsrc"), col(s"t.$pd").as("xpdst"),
         col("w.d").as("dl"))
     // r17 (verdict task #1): the per-path arm reconstructs BACKWARD
     // from QUALIFYING endpoints — (start, target, d) triples whose
@@ -3250,7 +3110,7 @@ object CypherLite {
     // one partial-reconstruction row per qualifying (start, target)
     // pair, entering the walk at its own depth
     def entering(lvl: Long): DataFrame = qual.filter(col("d") === lvl)
-      .select(col("s"), col("v").as("tgt"), col("d"),
+      .select(col("s"), col("v"), col("d"),
         col("v").as("cur"),
         array(col("v")).as("__pnodes"), emptyRels.as("__prels"))
     var rows: DataFrame = null
@@ -3266,7 +3126,7 @@ object CypherLite {
         .join(spEB.alias("x"),
           col("p.s") === col("x.s") && col("p.cur") === col("x.edst") &&
             col("x.dl") === lvl)
-        .select(col("p.s").as("s"), col("p.tgt").as("tgt"),
+        .select(col("p.s").as("s"), col("p.v").as("v"),
           col("p.d").as("d"), col("x.esrc").as("cur"),
           concat(array(col("x.esrc")), col("p.__pnodes")).as("__pnodes"),
           concat(array(relStruct), col("p.__prels")).as("__prels"))
@@ -3284,41 +3144,11 @@ object CypherLite {
     // after the walk every partial sits at level 0 (cur == s, the only
     // depth-0 vertex of start s's own DAG); zero-length paths (a == b,
     // minH == 0) enter directly
-    val cols5 = Seq("s", "tgt", "d", "__pnodes", "__prels").map(col)
+    val cols5 = Seq("s", "v", "d", "__pnodes", "__prels").map(col)
     val zero = entering(0L).select(cols5: _*)
     val paths = (if (rows == null) zero
       else rows.select(cols5: _*).unionByName(zero))
-      .withColumnRenamed("tgt", "cur")
-    val vars = Map(aPat.v -> "n0", bPat.v -> "n1")
-    var df = paths
-      .join(nodes.alias("n0"), col("n0.full_name") === col("s"))
-      .join(nodes.filter(nodePred(bPat.labels, bPat.props)).alias("n1"),
-        col("n1.full_name") === col("cur"))
-      .withColumn("__plen", col("d"))
-      .withColumn("__pstart", col("s"))
-      .withColumn("__pend", col("cur"))
-      .withColumn("__pnn", col("d") + 1)
-    val pQuoted = java.util.regex.Pattern.quote(pVar)
-    def rewritePathFns(t: String): String = {
-      var r = replaceOutsideQuotes(t,
-        "(?i)\\b(?:length|size)\\(\\s*" + pQuoted + "\\s*\\)", "__plen")
-      r = replaceOutsideQuotes(r,
-        "(?i)\\bnodes\\(\\s*" + pQuoted + "\\s*\\)", "__pnodes")
-      replaceOutsideQuotes(r,
-        "(?i)\\brelationships\\(\\s*" + pQuoted + "\\s*\\)", "__prels")
-    }
-    val plainCols = Set("__plen", "__pnodes", "__prels",
-      "__pstart", "__pend", "__pnn")
-    var rest = tail2
-    val retIdx2 = topLevelKeyword(rest, "RETURN")
-    require(retIdx2 >= 0, s"allShortestPaths needs a RETURN clause: $q")
-    val whereIdx = topLevelKeyword(rest, "WHERE")
-    if (whereIdx >= 0 && whereIdx < retIdx2)
-      df = df.filter(parseWhere(
-        rewritePathFns(rest.substring(whereIdx + 5, retIdx2).trim),
-        ref => if (plainCols(ref)) col(ref) else matchScope(vars)(ref)))
-    val ret = rewritePathFns(rest.substring(retIdx2 + 6).trim)
-    shapeResult(df, ret, vars, plainCols)
+    pathTail(nodes, sp, "allShortestPaths", q, tail2, paths)
   }
 
   /** `q1 UNION [ALL] q2 [UNION [ALL] q3 …]` — each branch plans

@@ -32,7 +32,8 @@ import graft.store.Snapshot.GraphSnapshot
   * local frames, when they fit the row budget ([[graft.ops.Bounded]],
   * `spark.graft.localThreshold`); otherwise they stay parquet-backed
   * (persisted) or pinned (in memory). `locations`, which no read
-  * touches, is never held. The choice is made at most once per version
+  * touches, is never held; in memory, a write that changes it pins it.
+  * The choice is made at most once per version
   * and table: by the table's first read (so `indexRepo` runs no collect
   * for it), or by the write that makes the version — a table the driver
   * held stays held while its new plan, run over the held leaves, still
@@ -127,7 +128,10 @@ final class GraphDatabase private (
     * each commit's merge plan embeds the previous snapshot's plan several
     * times (upsertInto + stubs), so a session of many commits (e.g.
     * per-statement MERGE existence probes) would otherwise compound its
-    * plan exponentially. */
+    * plan exponentially. A changed `locations`, never held, is pinned
+    * too: an ingest's locations are a projection of its whole pinned
+    * event set, which would otherwise stay alive as long as the
+    * database. */
   private def advance(nodes: Option[DataFrame] = None,
       edges: Option[DataFrame] = None,
       locations: Option[DataFrame] = None): Unit = {
@@ -156,7 +160,8 @@ final class GraphDatabase private (
       case Some(_) => // nothing changed, and the directory holds it
       case None =>
         snap = changed.keys.foldLeft(next)((s, t) =>
-          if (held.get(t).contains(false)) s.updated(t, s(t).pin(eager = true))
+          if (t == "locations" || held.get(t).contains(false))
+            s.updated(t, s(t).pin(eager = true))
           else s)
     }
   }

@@ -100,4 +100,21 @@ class BoundedSpec extends AnyFunSuite {
       .flatMap(hits("""Bounded\.take\(""".r))
     assert(calls.size === 1, calls.mkString("\n"))
   }
+
+  test("structure: one path engine in CypherLite") {
+    val cypher = Paths.get("src/main/scala/graft/api/CypherLite.scala")
+    def count(re: String) = hits(re.r)(cypher)
+    // a bounded and an unbounded var-length expander, whatever the arrow
+    val expanders = count("""private def varLength\w*\(""")
+    assert(expanders.size === 2, expanders.mkString("\n"))
+    // one traversal frame for forward, reversed and undirected hops
+    val frames = count("""private def \w*(?:Scan|[tT]raversalFrame)\(""")
+    assert(frames.size === 1, frames.mkString("\n"))
+    // one distributed frontier BFS for shortestPath and allShortestPaths
+    val loops = count("""frontier\.count\(\) == 0""")
+    assert(loops.size === 1, loops.mkString("\n"))
+    // one endpoint-join + WHERE/RETURN tail for the path searches
+    val tails = count("""withColumn\("__pnn"""")
+    assert(tails.size === 1, tails.mkString("\n"))
+  }
 }

@@ -181,6 +181,25 @@ class CypherLitePathSpec extends AnyFunSuite {
     assert(paths(1)._2 === List(("b2", Rel.Call, "c"), ("a", Rel.Call, "b2")))
   }
 
+  test("reversed UNBOUNDED var-length hop: nodes(p) and relationships(p) " +
+      "in pattern order, r in edge-chain order") {
+    val out = diamond.executeQuery(
+      "MATCH p = (y {full_name: 'c'})<-[r:CALL*]-(x) " +
+        "RETURN nodes(p) AS ns, relationships(p) AS rs, r").collect()
+    def rels(row: Row, i: Int) = row.getSeq[Row](i).map(e =>
+      (e.getString(0), e.getString(1), e.getString(2))).toList
+    val got = out.map(row => (row.getSeq[String](0).toList, rels(row, 1),
+      rels(row, 2))).toSeq.sortBy(_._1.mkString(","))
+    val (ab1, b1c) = (("a", Rel.Call, "b1"), ("b1", Rel.Call, "c"))
+    val (ab2, b2c) = (("a", Rel.Call, "b2"), ("b2", Rel.Call, "c"))
+    // every path into c: c <- b1, c <- b1 <- a, c <- b2, c <- b2 <- a
+    assert(got === Seq(
+      (List("c", "b1"), List(b1c), List(b1c)),
+      (List("c", "b1", "a"), List(b1c, ab1), List(ab1, b1c)),
+      (List("c", "b2"), List(b2c), List(b2c)),
+      (List("c", "b2", "a"), List(b2c, ab2), List(ab2, b2c))))
+  }
+
   test("r13: OPTIONAL MATCH path variable — bound when matched, NULL " +
       "when the optional pattern finds nothing") {
     val hit = diamond.executeQuery(

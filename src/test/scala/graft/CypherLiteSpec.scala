@@ -833,13 +833,46 @@ class CypherLiteSpec extends AnyFunSuite {
         "RETURN b.full_name AS v, nodes(p) AS ns, relationships(p) AS rs " +
         "ORDER BY v",
       "MATCH p = allShortestPaths((a {full_name: 'a'})-[:CONTAINS*]->(b)) " +
-        "RETURN b.full_name AS v, length(p) AS d ORDER BY v, d")
+        "RETURN b.full_name AS v, length(p) AS d ORDER BY v, d",
+      // reversed and undirected searches walk a flipped and a two-way
+      // traversal frame; both reconstruct physical relationships
+      "MATCH p = shortestPath((a {full_name: 'e'})<-[:CONTAINS*]-(b)) " +
+        "RETURN b.full_name AS v, nodes(p) AS ns, relationships(p) AS rs " +
+        "ORDER BY v",
+      "MATCH p = shortestPath((a {full_name: 'e'})-[:CONTAINS*]-(b)) " +
+        "RETURN b.full_name AS v, length(p) AS d, nodes(p) AS ns, " +
+        "relationships(p) AS rs ORDER BY v",
+      // every shortest path, reconstructed over the layered DAG
+      "MATCH p = allShortestPaths((a {full_name: 'a'})-[:CONTAINS|USES*]->" +
+        "(b)) RETURN b.full_name AS v, head(tail(nodes(p))) AS mid, " +
+        "nodes(p) AS ns, relationships(p) AS rs ORDER BY v, mid")
     for (q <- qs) {
       val local = dsp.executeQuery(q).collect().map(_.toSeq).toSeq
       spark.conf.set("spark.graft.localThreshold", "0")
       try {
         val dist = dsp.executeQuery(q).collect().map(_.toSeq).toSeq
         assert(local === dist, q)
+      } finally spark.conf.unset("spark.graft.localThreshold")
+    }
+  }
+
+  test("shortest-path counts past Long range: shortestPath answers and " +
+      "allShortestPaths raises its cap, on both BFS arms") {
+    // a feeds layer 0; 17 layers of 16 vertices, each wired fully to
+    // the next: 16^16 = 2^64 shortest paths reach layer 16
+    val d = GraphDatabase.inMemory(spark)
+    for (j <- 0 until 16) d.addEdge("t", "a", Rel.Call, s"L0.$j")
+    for (l <- 0 until 16; i <- 0 until 16; j <- 0 until 16)
+      d.addEdge("t", s"L$l.$i", Rel.Call, s"L${l + 1}.$j")
+    d.commit()
+    def search(kw: String) = d.executeQuery(
+      s"MATCH p = $kw((a {full_name: 'a'})-[:CALL*]->" +
+        "(b {full_name: 'L16.0'})) RETURN length(p) AS d").collect()
+    for (th <- Seq(None, Some("0"))) withClue(s"threshold $th: ") {
+      th.foreach(spark.conf.set("spark.graft.localThreshold", _))
+      try {
+        assert(search("shortestPath").map(_.getLong(0)).toSeq === Seq(17L))
+        intercept[IllegalArgumentException](search("allShortestPaths"))
       } finally spark.conf.unset("spark.graft.localThreshold")
     }
   }

@@ -184,6 +184,21 @@ class GraphDatabaseSpec extends AnyFunSuite {
     }
   }
 
+  test("an in-memory ingest pins its locations: they read a pinned leaf " +
+      "of their own, not the ingest's event pin") {
+    val repo = getClass.getClassLoader.getResource("fixture_repo").getPath
+    val db = GraphDatabase.inMemory(spark)
+    db.indexRepo(repo, "t1")
+    val plan = db.locations.queryExecution.analyzed
+    plan match {
+      case leaf: org.apache.spark.sql.execution.LogicalRDD =>
+        assert(leaf.rdd.isCheckpointed, plan.treeString)
+      case other => fail("locations read a plan, not a pinned leaf:\n" +
+        other.treeString)
+    }
+    assert(db.locations.count() > 0)
+  }
+
   test("a persisted write's next read sees the version it wrote: " +
       "clearTaskData, deleteEdge, removeNodeProps, promoteNodeKind, " +
       "updateFilePath") {
