@@ -1593,9 +1593,8 @@ object CypherLite {
     * single-column item; a whole-variable projection expands to its five
     * fixed columns and can't be renamed. */
   private def retItem(p: String, vars: Map[String, String],
-      plain: Set[String] = Set.empty,
-      schema: org.apache.spark.sql.types.StructType =
-        new org.apache.spark.sql.types.StructType()): (Seq[Column], Boolean) = {
+      plain: Set[String],
+      schema: org.apache.spark.sql.types.StructType): (Seq[Column], Boolean) = {
     val (core, alias) = splitTop(p, "AS") match {
       case Seq(c) => (c.trim, None)
       case Seq(c, a) =>
@@ -1811,7 +1810,7 @@ object CypherLite {
     * limit — so Catalyst plans partial aggregation and TakeOrdered the
     * same as for hand-written combinators. */
   private def shapeResult(df: DataFrame, ret0: String,
-      vars: Map[String, String], plain: Set[String] = Set.empty): DataFrame = {
+      vars: Map[String, String], plain: Set[String]): DataFrame = {
     var body = ret0.trim
     // trailing clauses, in Cypher's fixed order: ORDER BY … SKIP n LIMIT n
     var limitN: Option[Int] = None
@@ -2263,7 +2262,7 @@ object CypherLite {
   /** Parse one clause body "pattern [WHERE cond]" into node patterns +
     * hops, with the same validations the single-chain parser applied. */
   private def parseClause(body: String, optional: Boolean, q: String,
-      clauseIx: Int = 0): Clause = {
+      clauseIx: Int): Clause = {
     val whereIdx = topLevelKeyword(body, "WHERE")
     val pattern = (if (whereIdx >= 0) body.substring(0, whereIdx) else body).trim
     val where = if (whereIdx >= 0) body.substring(whereIdx + 5).trim else null
@@ -2746,18 +2745,17 @@ object CypherLite {
     * DP, saturated at [[spathCountCap]]). At cluster scale the bounded
     * edge probe
     * ([[graft.ops.Bounded]]) misses and the distributed loop carries the
-    * work; specs force it via `spark.graft.localThreshold = 0`. Returns
-    * (s, v, d, par, np) per settled pair. */
+    * work; a session budget of 0 forces it. Returns (s, v, d, par, np)
+    * per settled pair. */
   private def spathBfsLocal(e: DataFrame, seedF: DataFrame, maxH: Int,
       seedCap: Int = 64)
       : Option[Seq[(String, String, Long, Option[String], Long)]] = {
-    val th = Bounded.rows(e.sparkSession)
-    if (th <= 0) return None
+    if (Bounded.rows(e.sparkSession) <= 0) return None
     // seeds first (tiny); a large seed set takes the distributed arm —
     // driver work is Σ_seed |reached edges|, bounded only for few seeds
     val seeds = Bounded.take(seedF, seedCap)(_.getString(0))
       .getOrElse(return None)
-    val probe = Bounded.take(e.select(col("src"), col("dst")), th)(
+    val probe = Bounded.take(e.select(col("src"), col("dst")))(
         r => (r.getString(0), r.getString(1)))
       .getOrElse(return None)
     val adj = scala.collection.mutable.HashMap
@@ -2818,14 +2816,15 @@ object CypherLite {
   private def spathBfs(eTyped: DataFrame, seedF: DataFrame,
       maxH: Int): DataFrame = {
     val e = eTyped.select(col("src"), col("dst"))
-      .repartition(col("src")).pin(eager = false)
-    spathBfsLocal(eTyped.select(col("src"), col("dst")), seedF,
-        maxH) match {
+    spathBfsLocal(e, seedF, maxH) match {
       case Some(state) =>
         val spark = seedF.sparkSession
         import spark.implicits._
         state.toDF("s", "v", "d", "par", "np")
       case None =>
+        // built on this arm only: under AQE even a lazy pin runs the
+        // repartition's shuffle at once
+        val eBySrc = e.repartition(col("src")).pin(eager = false)
         var frontier = seedF
           .withColumn("v", col("s")).withColumn("d", lit(0L))
           .withColumn("par", lit(null).cast("string"))
@@ -2835,7 +2834,7 @@ object CypherLite {
         var i = 1
         var done = frontier.count() == 0
         while (i <= maxH && !done) {
-          val nxt = e.join(frontier.select(col("s"), col("np"),
+          val nxt = eBySrc.join(frontier.select(col("s"), col("np"),
               col("v").as("src")), "src")
             .groupBy(col("s"), col("dst"))
             .agg(min(col("src")).as("par"),
@@ -2916,7 +2915,7 @@ object CypherLite {
   }
 
   private def executeShortestPath(nodes: DataFrame, edges: DataFrame,
-      q: String, spIdx: Int, unwinds: Seq[Unwind] = Seq.empty)
+      q: String, spIdx: Int, unwinds: Seq[Unwind])
       : DataFrame = {
     val sp = parseSpathPattern(q, spIdx, "shortestPath")
     val SpParts(_, aPat, bPat, hop, reversed, minH, maxH, _,
@@ -3020,7 +3019,7 @@ object CypherLite {
     * different rel types are DISTINCT paths, as in Neo4j; the
     * spathMaxDepth cap bounds depth, never correctness. */
   private def executeAllShortestPaths(nodes: DataFrame, edges: DataFrame,
-      q: String, idx: Int, unwinds: Seq[Unwind] = Seq.empty)
+      q: String, idx: Int, unwinds: Seq[Unwind])
       : DataFrame = {
     val sp = parseSpathPattern(q, idx, "allShortestPaths")
     val SpParts(_, aPat, bPat, hop, reversed, minH, maxH, _,
@@ -3034,8 +3033,6 @@ object CypherLite {
     val (seedF, seedVar) = spathSeedFrame(nodes, aPat, unwinds, q)
     val settled = spathBfs(eTyped, seedF, maxH)
     val (tail2, needsPaths) = spathTail(sp, seedVar)
-    val maxD = settled.agg(coalesce(max(col("d")), lit(0L)))
-      .collect()(0).getLong(0)
     // the right endpoint's key set — BOTH arms prune to it before any
     // per-path work (r17): counts explode / paths reconstruct only for
     // (start, target) pairs that actually qualify. None when the right
@@ -3113,6 +3110,8 @@ object CypherLite {
       .select(col("s"), col("v"), col("d"),
         col("v").as("cur"),
         array(col("v")).as("__pnodes"), emptyRels.as("__prels"))
+    val maxD = settled.agg(coalesce(max(col("d")), lit(0L)))
+      .collect()(0).getLong(0)
     var rows: DataFrame = null
     for (lvl <- maxD to 1L by -1L) {
       val ent = entering(lvl)
@@ -4074,7 +4073,7 @@ object CypherLite {
     * ORDER/SKIP/LIMIT inside the pipe, un-aliased expressions — raises,
     * the module's posture. */
   private def applyWith(df0: DataFrame, body0: String,
-      vars: Map[String, String], prevPlain: Set[String] = Set.empty)
+      vars: Map[String, String], prevPlain: Set[String])
       : (DataFrame, Map[String, String], Set[String]) = {
     var body = body0
     var whereTxt: Option[String] = None

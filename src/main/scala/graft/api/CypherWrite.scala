@@ -354,7 +354,7 @@ object CypherWrite {
         Option(set).map(parseSetItems(_, v)).getOrElse(Map.empty)
       Some(UpsertNode(tasks.head, kind, fullNameOf(props, "node") ,
         props - "full_name"))
-    case updateRe(v, labelSpec, propLit, set) =>
+    case updateRe(v, _, propLit, set) =>
       // a labeled MATCH-SET is still an A3 update; the label is a match
       // constraint the single-key model already guarantees via full_name
       val props = propsOf(propLit)

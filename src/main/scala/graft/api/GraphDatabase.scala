@@ -114,7 +114,7 @@ final class GraphDatabase private (
   private def hold(t: String, df: DataFrame): Option[DataFrame] = {
     val schema = if (dir.isDefined) Snapshot.schema(t) else df.schema
     val shaped = if (dir.isDefined) df.to(schema) else df
-    Bounded.take(shaped, Bounded.rows(spark))(identity).map(rows =>
+    Bounded.take(shaped)(identity).map(rows =>
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
   }
 

@@ -140,7 +140,7 @@ object Analytics {
   }
 
   def stronglyConnected(edges: DataFrame,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      localThreshold: Int = Bounded.Session): DataFrame = {
     // r13: the q77 probe discipline applied to the WHOLE operator — a
     // graph under the probe threshold skips the distributed trim AND
     // the coloring loop entirely: the driver-local Tarjan kernel labels
@@ -268,11 +268,12 @@ object Analytics {
     reached
   }
 
-  /** The string-keyed (src, dst) edge list when it fits `k` rows
-    * ([[Bounded.take]]) — the input of the driver kernels. Other key
-    * types take the distributed arm. */
+  /** The string-keyed (src, dst) edge list when it fits the session
+    * budget ([[Bounded.take]]; `k` is only ever a kept `localThreshold`
+    * override) — the input of the driver kernels. Other key types take
+    * the distributed arm. */
   private def localEdges(edges: DataFrame,
-      k: Int): Option[Array[(String, String)]] = {
+      k: Int = Bounded.Session): Option[Array[(String, String)]] = {
     val e = edges.select(col("src"), col("dst"))
     if (e.schema.head.dataType != org.apache.spark.sql.types.StringType)
       None
@@ -385,8 +386,7 @@ object Analytics {
     * rounds = condensation depth; SCC only on the (tiny) affected
     * subgraph; one broadcast-sized relabel join over the label table. */
   def stronglyConnectedIncremental(newEdges: DataFrame, prev: DataFrame,
-      prevCond: DataFrame,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      prevCond: DataFrame): DataFrame = {
     val spark = newEdges.sparkSession
     val e = newEdges.select(col("src"), col("dst"))
     val prevL = prev.select(col("v"), col("scc"))
@@ -435,7 +435,7 @@ object Analytics {
     // distributed BFS passes buy nothing a one-pass local Tarjan
     // doesn't give. At scale the condensation is corpus-sized, the
     // probe misses, and the BFS-bounded region path carries the work.
-    localEdges(aug, localThreshold).foreach { arr =>
+    localEdges(aug).foreach { arr =>
       import spark.implicits._
       return relabel(tarjanNontrivial(arr).toSeq.toDF("c", "_m"))
     }
@@ -453,7 +453,7 @@ object Analytics {
     // merge classes: driver-local Tarjan when the affected subgraph is
     // delta-sized (the c3 kernel discipline — bounded probe, distributed
     // fallback above the threshold, identical labels either way)
-    val merged: DataFrame = localEdges(subF, localThreshold) match {
+    val merged: DataFrame = localEdges(subF) match {
       case Some(arr) =>
         import spark.implicits._
         tarjanNontrivial(arr).toSeq.toDF("c", "_m")
@@ -471,7 +471,7 @@ object Analytics {
           .join(region.withColumnRenamed("v", "src"), Seq("src"))
           .join(region.withColumnRenamed("v", "dst"), Seq("dst"))
           .select(col("src"), col("dst"))
-        stronglyConnected(sub, localThreshold)
+        stronglyConnected(sub)
           .select(col("v").as("c"), col("scc").as("_m"))
     }
     relabel(merged)
@@ -519,16 +519,15 @@ object Analytics {
     * corpus version (`scclabels`/`scccond`), so the relaxation loop
     * reads two parquet scans and touches the base graph zero times. */
   def condensationLayersOver(condEdges: DataFrame,
-      scc0: DataFrame,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      scc0: DataFrame): DataFrame = {
     // r19: both inputs are bounded probes (condensation edges + DISTINCT
     // labels — never the corpus-sized vertex table), so at gate scale the
     // max-plus fixpoint runs as one driver pass of exact longs; at 100 TB
     // either probe misses and the relaxation loop below carries the work.
     val spark = condEdges.sparkSession
     localEdges(condEdges.select(col("src_scc").as("src"),
-        col("dst_scc").as("dst")), localThreshold).foreach { ceArr =>
-      Bounded.take(scc0.select(col("scc")).distinct(), localThreshold)(
+        col("dst_scc").as("dst"))).foreach { ceArr =>
+      Bounded.take(scc0.select(col("scc")).distinct())(
           _.getString(0)).foreach { labs =>
         import spark.implicits._
         val layer = scala.collection.mutable.HashMap.empty[String, Long]
@@ -596,8 +595,7 @@ object Analytics {
     * convention) so all three spellings — coloring loop, Pregel, oracle
     * closure — agree on the min-member label. */
   def stronglyConnectedGraphX(spark: SparkSession, edges: DataFrame,
-      numIter: Int = 12,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      numIter: Int = 12): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     import spark.implicits._
     // r19: the DF path's PRE-trim probe, ported (the c3 discipline —
@@ -609,9 +607,9 @@ object Analytics {
     // harmless to Tarjan), so the distinct+repartition+pin below is
     // only ever built for the distributed arm. At cluster scale
     // limit(k+1) pulls at most k+1 rows, the probe misses, and trim +
-    // Pregel carry the work; specs force the Pregel arm via
-    // localThreshold = 0.
-    localEdges(edges, localThreshold)
+    // Pregel carry the work; a session budget of 0 forces the Pregel
+    // arm.
+    localEdges(edges)
       .foreach(arr => return tarjanFrame(spark, arr))
     // the same TRIM pre-pass as the DataFrame path: the DAG periphery
     // (most of the fixture) never enters Pregel at all
@@ -629,8 +627,8 @@ object Analytics {
     // is usually tiny, and Pregel's per-superstep job overhead dwarfs a
     // one-pass local Tarjan on it. At cluster scale the probe misses
     // (limit(k+1) pulls at most k+1 rows, never the graph) and Pregel
-    // carries the work; specs force the Pregel arm via localThreshold=0.
-    localEdges(core, localThreshold).foreach { arr =>
+    // carries the work; a session budget of 0 forces the Pregel arm.
+    localEdges(core).foreach { arr =>
       val coreLabeled = tarjanFrame(spark, arr)
       return trimmed.fold(coreLabeled)(t =>
         t.select(col("v"), col("c").as("scc")).unionByName(coreLabeled))
@@ -701,11 +699,10 @@ object Analytics {
     * register and every estimate bit-for-bit. Returns one row per
     * radius: (h, nf = Σ_v |B_h(v)| estimate, reached_frac vs h=rounds).
     * N(h)'s growth curve is the effective-diameter instrument. */
-  def anf(edges: DataFrame, rounds: Int, m: Int = 16,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+  def anf(edges: DataFrame, rounds: Int, m: Int = 16): DataFrame = {
     require(m == 16, "alpha is pinned for m = 16 (0.673)")
     require(rounds >= 1 && rounds <= 12, s"anf rounds $rounds out of budget")
-    localEdges(edges, localThreshold).foreach { arr =>
+    localEdges(edges).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return anfLocal(arr, rounds, m).toDF("h", "nf")
@@ -1035,7 +1032,7 @@ object Analytics {
     * (Only equal when the DataFrame loop also converges within its
     * maxIter — true for any graph with diameter ≤ 20.) */
   def connectedComponentsGraphX(spark: SparkSession, edges: DataFrame,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      localThreshold: Int = Bounded.Session): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     import spark.implicits._
     // the DF arm's bounded probe, ported (the stronglyConnectedGraphX
@@ -1066,9 +1063,8 @@ object Analytics {
     * fixpoint is reached once `iterations` ≥ graph depth from the source;
     * the oracle unrolls the identical min-plus recurrence. */
   def bfsDistances(edges: DataFrame, source: String,
-      iterations: Int = 10,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
-    localEdges(edges, localThreshold).foreach { arr =>
+      iterations: Int = 10): DataFrame = {
+    localEdges(edges).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return bfsLocal(arr, Seq(source), iterations)
@@ -1119,9 +1115,8 @@ object Analytics {
     * depth, or earlier when a frontier empties) is identical to the
     * min-then-sum recurrence the oracle unrolls. */
   def shortestPathCounts(edges: DataFrame, source: String,
-      iterations: Int = 10,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
-    localEdges(edges, localThreshold).foreach { arr =>
+      iterations: Int = 10): DataFrame = {
+    localEdges(edges).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return brandesLocalState(arr, Seq(source), iterations)
@@ -1296,8 +1291,8 @@ object Analytics {
     * @return (v, d, betweenness) — δ rounded to 6, for reachable vertices
     */
   def betweennessFromSource(edges: DataFrame, source: String,
-      depth: Int = 10, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
-    localEdges(edges, localThreshold).foreach { arr =>
+      depth: Int = 10): DataFrame = {
+    localEdges(edges).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return brandesLocalState(arr, Seq(source), depth)
@@ -1341,7 +1336,7 @@ object Analytics {
     * the fused plan shares the per-source-replay oracle. Returns
     * (v, betweenness) for vertices reachable from ≥1 landmark. */
   def betweennessLandmarks(edges: DataFrame, sources: Seq[String],
-      depth: Int = 10, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      depth: Int = 10, localThreshold: Int = Bounded.Session): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     localEdges(edges, localThreshold).foreach { arr =>
@@ -1385,10 +1380,10 @@ object Analytics {
     * replayable-float discipline). Returns (src, dst, ebtw) for DAG
     * edges reachable from ≥1 landmark. */
   def edgeBetweennessLandmarks(edges: DataFrame, sources: Seq[String],
-      depth: Int = 10, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      depth: Int = 10): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    localEdges(edges, localThreshold).foreach { arr =>
+    localEdges(edges).foreach { arr =>
       // per-(s, edge-occurrence) round-10 terms summed per (src, dst),
       // rounded to 6 — the distributed e ⋈ state join's spelling, with
       // every duplicate edge row contributing exactly as the join does
@@ -1625,7 +1620,7 @@ object Analytics {
     * per landmark is identical to [[bfsDistances]], so per-landmark
     * oracles replay unchanged. */
   def bfsDistancesLandmarks(edges: DataFrame, sources: Seq[String],
-      iterations: Int, localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      iterations: Int, localThreshold: Int = Bounded.Session): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     localEdges(edges, localThreshold).foreach { arr =>
@@ -2634,21 +2629,22 @@ object Analytics {
     * on the UNDIRECTED view of edges(src, dst). Deterministic; converges
     * in O(diameter) iterations. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      localThreshold: Int = Bounded.Session): DataFrame = {
     localUnionFind(edges, localThreshold).foreach(return _)
     val und = undirectedView(edges)
     ccFrom(und, und.select(col("src").as("v")).distinct()
       .withColumn("component", col("v")), maxIter)
   }
 
-  /** Driver union-find for the CC arms when `edges` (src, dst) fits `k`
-    * rows ([[Bounded.take]]): (v, component) with component = class
-    * minimum, exactly the fixpoint of both the min-label propagation
-    * loop and the Pregel twin's component-min relabel, in the key type
-    * of `edges` (string corpus keys, longs in specs). Specs force the
-    * distributed arms via localThreshold = 0. */
+  /** Driver union-find for the CC arms when `edges` (src, dst) fits the
+    * session budget ([[Bounded.take]]; `k` as in [[localEdges]]):
+    * (v, component) with component = class minimum, exactly the
+    * fixpoint of both the min-label propagation loop and the Pregel
+    * twin's component-min relabel, in the key type of `edges` (string
+    * corpus keys, longs in specs). A session budget of 0 forces the
+    * distributed arms. */
   private def localUnionFind(edges: DataFrame,
-      k: Int): Option[DataFrame] = {
+      k: Int = Bounded.Session): Option[DataFrame] = {
     val e = edges.select(col("src"), col("dst"))
     Bounded.take(e, k)(r => (r.get(0), r.get(1))).map { pairs =>
       val vt = e.schema.head.dataType
@@ -2679,8 +2675,7 @@ object Analytics {
     * provably EQUALS the full recomputation — the gate shares q11's
     * oracle. */
   def connectedComponentsIncremental(edges: DataFrame, prev: DataFrame,
-      maxIter: Int = 20,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      maxIter: Int = 20): DataFrame = {
     // DIRECTED edges suffice here (r13 — the q59 drift fix): the label
     // mapping only needs each edge's endpoint pair once, and the
     // contracted graph is re-undirected inside ccFrom anyway. The old
@@ -2707,7 +2702,7 @@ object Analytics {
     // limit(k+1) probe, distributed fallback above it, identical labels
     // either way) replaces rounds of checkpointed fixpoint jobs whose
     // per-round overhead dominated at this graph size (r13).
-    val merged = localUnionFind(contracted, localThreshold).getOrElse(
+    val merged = localUnionFind(contracted).getOrElse(
       ccFrom(undirectedView(contracted),
         contracted.select(col("src").as("v"))
           .union(contracted.select(col("dst").as("v"))).distinct()
@@ -2945,7 +2940,6 @@ object Analytics {
     * oracle's unroll (sf0.01 converges in 10; the dense little
     * sf0.001 graph — coreness 15 — cascades for 21). */
   def coreness(edges: DataFrame, maxRounds: Int = 26): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dir = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
     val und = dir.unionByName(
@@ -3002,8 +2996,7 @@ object Analytics {
     * explicit budgets with LOUD require failures (the q65/q67/q68
     * discipline), matched by the oracle's unroll. */
   def boruvkaMsf(edges: DataFrame, maxRounds: Int = 6,
-      propHops: Int = 12,
-      localThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      propHops: Int = 12): DataFrame = {
     val spark = edges.sparkSession
     val e0 = edges.select(
         least(col("src"), col("dst")).as("src"),
@@ -3050,7 +3043,7 @@ object Analytics {
         // even at cluster scale); distributed min-label propagation is
         // the fallback above it, identical labels (class minimum)
         val lbl: DataFrame = localUnionFind(
-            mg.select(col("a").as("src"), col("b").as("dst")), localThreshold)
+            mg.select(col("a").as("src"), col("b").as("dst")))
           .map(_.toDF("c", "lbl")).getOrElse {
           var l0 = mg.select(col("a").as("c")).distinct()
             .withColumn("lbl", col("c")).pin(eager = false)

@@ -77,34 +77,6 @@ object Closure {
     inherited.except(hasMethod.select(col("src"), col("dst")))
   }
 
-  /** [[transitiveClosure]] carrying the MINIMUM hop count per pair:
-    * (descendant, ancestor, depth). The frontier loop reaches each pair
-    * first at its shortest distance (BFS invariant), so the anti-join
-    * that admits only NEW pairs is also the min-depth selector. */
-  def transitiveClosureDepth(edges: DataFrame, maxIter: Int = MaxRounds)
-      : DataFrame = {
-    val base = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).pin(eager = false)
-    var acc = base.withColumn("depth", lit(1L))
-    var delta = acc
-    var nDelta = delta.count()
-    var i = 0
-    while (i < maxIter && nDelta > 0) {
-      val next = delta.as("d")
-        .join(base.as("b"), col("d.dst") === col("b.src"))
-        .select(col("d.src").as("src"), col("b.dst").as("dst"),
-          (col("d.depth") + 1).as("depth"))
-        .groupBy(col("src"), col("dst")).agg(min(col("depth")).as("depth"))
-      delta = next.join(acc.select(col("src"), col("dst")),
-          Seq("src", "dst"), "left_anti")
-        .pin(eager = false)
-      nDelta = delta.count()
-      acc = acc.union(delta)
-      i += 1
-    }
-    acc
-  }
-
   /** Python's C3 merge: `L(C) = C + merge(L(B1)…L(Bn), [B1…Bn])`. Pick
     * the first list-head that appears in no other list's TAIL; remove it
     * everywhere; repeat. On a C3 inconsistency (Python raises TypeError
@@ -176,7 +148,7 @@ object Closure {
     import spark.implicits._
     val edges = inheritsOrd.select(col("src"), col("dst"),
       coalesce(col("ord"), lit(0)).cast("int").as("ord"))
-    Bounded.take(edges, Bounded.rows(spark))(
+    Bounded.take(edges)(
         r => (r.getString(0), r.getString(1), r.getInt(2)))
       .foreach(head => return c3LinearizeLocal(head.toSeq).toDF("cls", "mro"))
     val c3Udf = udf { (cls: String, bm: Seq[Row]) =>

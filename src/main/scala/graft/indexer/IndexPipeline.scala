@@ -240,7 +240,7 @@ object IndexPipeline {
       s.iterator.map(x => (x, null, null): Event) ++
         e.iterator.map(x => (null, x, null): Event) ++
         i.iterator.map(x => (null, null, x): Event)
-    }.coalesce(1), Bounded.rows(spark))(identity)
+    }.coalesce(1))(identity)
     collected match {
       case Some(evs) =>
         mergeOnDriver(evs.toSeq, taskId, Indexed(

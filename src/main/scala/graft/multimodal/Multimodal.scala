@@ -1433,7 +1433,6 @@ object Multimodal {
     * reusing the embedding pipeline end-to-end. */
   def mediaNearDups(spark: SparkSession, media: Dataset[Media],
       threshold: Double): DataFrame = {
-    import spark.implicits._
     val emb = extractFeatures(media)
       .select(col("doc_id").as("vec_id"), col("feature").as("embedding"))
     graft.pipeline.Similarity.embeddingNearDupPairs(emb, threshold)

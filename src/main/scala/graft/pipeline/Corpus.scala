@@ -1996,17 +1996,16 @@ object Corpus {
     * hash-partition by word, then per-position broadcast piece joins +
     * partial-agg struct-max argmaxes — no per-row UDF, no driver pass),
     * the backtrace unrolls the same way, and per-language counts join
-    * back (the bpeFertility discipline). Below `kernelThreshold`
-    * distinct words the segmentation short-circuits through the SAME
-    * [[viterbiPieces]] kernel driver-side (the bounded union-find/Tarjan
-    * probe discipline: [[graft.ops.Bounded]] decides BEFORE rows are
-    * held, the spec forces the distributed path at threshold 0 and pins
-    * equality). The oracle replays training AND the application DP
+    * back (the bpeFertility discipline). When the distinct words fit
+    * the session budget the segmentation short-circuits through the
+    * SAME [[viterbiPieces]] kernel driver-side (the bounded
+    * union-find/Tarjan probe discipline: [[graft.ops.Bounded]] decides
+    * BEFORE rows are held; the spec forces the distributed path with a
+    * session budget of 0 and pins equality). The oracle replays training AND the application DP
     * verbatim. */
   def unigramFertility(docs: DataFrame, emRounds: Int = 2,
       vocabCap: Int = 2000, maxLen: Int = 8, maxPiece: Int = 4,
-      seedCap: Int = 200, vocabSize: Int = 64,
-      kernelThreshold: Int = Bounded.DefaultRows): DataFrame = {
+      seedCap: Int = 200, vocabSize: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val m = unigramTrain(docs, emRounds, vocabCap, maxLen, maxPiece,
@@ -2017,7 +2016,7 @@ object Corpus {
       .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
       .pin(eager = true)
     val distinctWords = langWords.select(col("word")).distinct()
-    val nsub = Bounded.take(distinctWords, kernelThreshold)(_.getString(0))
+    val nsub = Bounded.take(distinctWords)(_.getString(0))
       .map(_.sorted.toSeq.map(w => (w,
         viterbiPieces(w, maxPiece, m.appWts, Some(m.unkLw)).length.toLong))
         .toDF("word", "n_pieces"))
@@ -2033,7 +2032,8 @@ object Corpus {
   /** The distributed spelling of the fertility segmentation — unrolled
     * integer max-plus DP layers over the distinct-word table (see
     * [[unigramFertility]]); provably ≡ [[viterbiPieces]] per word
-    * (identical scores and tie-breaks), spec-pinned at threshold 0. */
+    * (identical scores and tie-breaks), spec-pinned at session budget
+    * 0. */
   private def unigramSegmentRelational(distinctWords: DataFrame,
       m: UnigramModel, maxLen: Int, maxPiece: Int): DataFrame = {
     val spark = distinctWords.sparkSession

@@ -6,6 +6,7 @@ import graft.enrich.Analytics
 class AnalyticsSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
+  import IngestArms.{Distributed, under}
 
   test("stronglyConnected: cycles merge, one-way bridges and pendants don't") {
     // two 3-cycles joined by a ONE-WAY bridge, a pendant source, a
@@ -25,21 +26,21 @@ class AnalyticsSpec extends AnyFunSuite {
     val df = Analytics.stronglyConnected(edges)
       .as[(String, String)].collect().toMap
     assert(df === expected)
-    // threshold 0 FORCES the distributed Orzan coloring loop past the
+    // budget 0 FORCES the distributed Orzan coloring loop past the
     // r13 Tarjan-kernel short-circuit — identical labels
-    val loop = Analytics.stronglyConnected(edges, localThreshold = 0)
-      .as[(String, String)].collect().toMap
+    val loop = under(Distributed)(Analytics.stronglyConnected(edges)
+      .as[(String, String)].collect().toMap)
     assert(loop === expected)
     // default threshold: the r16 post-trim core probe labels the tiny
     // core driver-side (Tarjan), Pregel never launches
     val gx = Analytics.stronglyConnectedGraphX(spark, edges)
       .as[(String, String)].collect().toMap
     assert(gx === expected)
-    // threshold 0 FORCES the GraphX Pregel arm past the probe —
+    // budget 0 FORCES the GraphX Pregel arm past the probe —
     // identical labels (the spec-forced distributed fallback discipline)
-    val gxForced = Analytics.stronglyConnectedGraphX(spark, edges,
-        localThreshold = 0)
-      .as[(String, String)].collect().toMap
+    val gxForced = under(Distributed)(
+      Analytics.stronglyConnectedGraphX(spark, edges)
+        .as[(String, String)].collect().toMap)
     assert(gxForced === expected)
   }
 
@@ -66,11 +67,11 @@ class AnalyticsSpec extends AnyFunSuite {
     val scratch = Analytics.stronglyConnected(full)
       .as[(String, String)].collect().toMap
     assert(inc === scratch)
-    // the DISTRIBUTED fallback (forced by threshold 0) must agree with
+    // the DISTRIBUTED fallback (forced by budget 0) must agree with
     // the driver-local Tarjan kernel label-for-label
-    val incDist = Analytics.stronglyConnectedIncremental(
-        newEdges, prev, prevCond, localThreshold = 0)
-      .as[(String, String)].collect().toMap
+    val incDist = under(Distributed)(Analytics.stronglyConnectedIncremental(
+        newEdges, prev, prevCond)
+      .as[(String, String)].collect().toMap)
     assert(incDist === scratch)
     // and the merged class really is {a1,a2,b,c1,c2} labeled a1
     assert(Seq("a1", "a2", "b", "c1", "c2").forall(v => inc(v) == "a1"))
@@ -94,10 +95,10 @@ class AnalyticsSpec extends AnyFunSuite {
     }
     // monotone: balls only grow
     assert(nf.map(_._2).sliding(2).forall(p => p(0) <= p(1)))
-    // the driver kernel ≡ the distributed register loop (localThreshold=0
+    // the driver kernel ≡ the distributed register loop (budget 0
     // forces the distributed arm; both share the oracle)
-    val dist = Analytics.anf(edges, rounds = 3, localThreshold = 0)
-      .as[(Int, Double)].collect().sortBy(_._1)
+    val dist = under(Distributed)(Analytics.anf(edges, rounds = 3)
+      .as[(Int, Double)].collect().sortBy(_._1))
     assert(nf.toSeq === dist.toSeq)
   }
 
@@ -177,11 +178,11 @@ class AnalyticsSpec extends AnyFunSuite {
       "probe-bound union-find must agree with each)") {
     val edges = Seq(("b", "a"), ("c", "b"), ("y", "z"), ("x", "y"), ("q", "c"))
       .toDF("src", "dst")
-    val loop = Analytics.connectedComponents(edges, localThreshold = 0)
-      .as[(String, String)].collect().toMap
-    val gx = Analytics.connectedComponentsGraphX(spark, edges,
-        localThreshold = 0)
-      .as[(String, String)].collect().toMap
+    val (loop, gx) = under(Distributed)((
+      Analytics.connectedComponents(edges)
+        .as[(String, String)].collect().toMap,
+      Analytics.connectedComponentsGraphX(spark, edges)
+        .as[(String, String)].collect().toMap))
     assert(gx === loop)
     val local = Analytics.connectedComponents(edges)
       .as[(String, String)].collect().toMap
@@ -347,20 +348,12 @@ class AnalyticsSpec extends AnyFunSuite {
       ("d", "e"), ("b", "e"), ("b", "d"), ("q", "r")).toDF("src", "dst")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    assert(rows(Analytics.shortestPathCounts(edges, "a", iterations = 6)) ===
-      rows(Analytics.shortestPathCounts(edges, "a", iterations = 6,
-        localThreshold = 0)))
-    assert(rows(Analytics.betweennessFromSource(edges, "a", depth = 6)) ===
-      rows(Analytics.betweennessFromSource(edges, "a", depth = 6,
-        localThreshold = 0)))
-    assert(rows(Analytics.betweennessLandmarks(edges, Seq("a", "b"),
-        depth = 6)) ===
-      rows(Analytics.betweennessLandmarks(edges, Seq("a", "b"), depth = 6,
-        localThreshold = 0)))
-    assert(rows(Analytics.edgeBetweennessLandmarks(edges, Seq("a", "b"),
-        depth = 6)) ===
-      rows(Analytics.edgeBetweennessLandmarks(edges, Seq("a", "b"),
-        depth = 6, localThreshold = 0)))
+    def both(op: => org.apache.spark.sql.DataFrame) =
+      assert(rows(op) === under(Distributed)(rows(op)))
+    both(Analytics.shortestPathCounts(edges, "a", iterations = 6))
+    both(Analytics.betweennessFromSource(edges, "a", depth = 6))
+    both(Analytics.betweennessLandmarks(edges, Seq("a", "b"), depth = 6))
+    both(Analytics.edgeBetweennessLandmarks(edges, Seq("a", "b"), depth = 6))
   }
 
   test("BFS / layers driver kernels ≡ the distributed loops " +
@@ -369,20 +362,17 @@ class AnalyticsSpec extends AnyFunSuite {
       ("d", "e"), ("b", "e"), ("q", "r")).toDF("src", "dst")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSet
-    assert(rows(Analytics.bfsDistances(edges, "a", iterations = 6)) ===
-      rows(Analytics.bfsDistances(edges, "a", iterations = 6,
-        localThreshold = 0)))
+    def both(op: => org.apache.spark.sql.DataFrame) =
+      assert(rows(op) === under(Distributed)(rows(op)))
+    both(Analytics.bfsDistances(edges, "a", iterations = 6))
     // "ghost" landmark absent from the graph still seeds its own row
-    assert(rows(Analytics.bfsDistancesLandmarks(edges, Seq("a", "q", "ghost"),
-        iterations = 6)) ===
-      rows(Analytics.bfsDistancesLandmarks(edges, Seq("a", "q", "ghost"),
-        iterations = 6, localThreshold = 0)))
+    both(Analytics.bfsDistancesLandmarks(edges, Seq("a", "q", "ghost"),
+      iterations = 6))
     val ce = Seq(("x", "y"), ("y", "z"), ("x", "z"), ("w", "z"))
       .toDF("src_scc", "dst_scc")
     val scc = Seq(("v1", "x"), ("v2", "y"), ("v3", "z"), ("v4", "w"),
       ("v5", "iso")).toDF("v", "scc")
-    assert(rows(Analytics.condensationLayersOver(ce, scc)) ===
-      rows(Analytics.condensationLayersOver(ce, scc, localThreshold = 0)))
+    both(Analytics.condensationLayersOver(ce, scc))
     assert(rows(Analytics.condensationLayersOver(ce, scc)) === Set(
       Seq("x", 0L), Seq("y", 1L), Seq("z", 2L), Seq("w", 0L),
       Seq("iso", 0L)))
@@ -760,7 +750,6 @@ class AnalyticsSpec extends AnyFunSuite {
     // (path vertices peel in the early rounds, the clique survives)
     val k5 = for { a <- 1L to 5L; b <- (a + 1) to 5L } yield (a, b)
     val path = (0 until 6).map(i => (100L + i, 101L + i))
-    val e = (k5 ++ path).toDF("src", "dst") // disjoint ids; 1 joins path?
     val out = Analytics.densestSubgraph(
         (k5 ++ path :+ ((1L, 100L))).toDF("src", "dst"))
       .as[(Int, Long, Long, Long, Int)].collect().sortBy(_._1)
@@ -819,11 +808,11 @@ class AnalyticsSpec extends AnyFunSuite {
       val verts = es.flatMap(e => Seq(e._1, e._2)).distinct.size
       // spanning forest size: n − #components (Kruskal's own count)
       assert(got.size === kruskal(es).size && got.size < verts)
-      // threshold 0 FORCES the distributed merge-propagation fallback —
+      // budget 0 FORCES the distributed merge-propagation fallback —
       // identical forest (the r13 union-find kernel discipline)
-      val dist = Analytics.boruvkaMsf(es.toDF("src", "dst", "weight"),
-          localThreshold = 0)
-        .as[(Long, Long, Long)].collect().toSet
+      val dist = under(Distributed)(
+        Analytics.boruvkaMsf(es.toDF("src", "dst", "weight"))
+          .as[(Long, Long, Long)].collect().toSet)
       assert(dist === got)
     }
     // two components, a tie (weight 5 twice) broken by (src, dst)
@@ -909,11 +898,11 @@ class AnalyticsSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(inc === full)
     assert(inc(4L) === 1L && inc(10L) === 9L)
-    // threshold 0 FORCES the distributed ccFrom fallback — identical
+    // budget 0 FORCES the distributed ccFrom fallback — identical
     // labels either way (the q77 probe discipline, r13)
-    val incDist = Analytics.connectedComponentsIncremental(allE, prev,
-        localThreshold = 0)
-      .as[(Long, Long)].collect().toMap
+    val incDist = under(Distributed)(
+      Analytics.connectedComponentsIncremental(allE, prev)
+        .as[(Long, Long)].collect().toMap)
     assert(incDist === full)
   }
 
@@ -925,8 +914,8 @@ class AnalyticsSpec extends AnyFunSuite {
     val e = Seq((5L, 2L), (2L, 9L), (7L, 8L), (1L, 5L)).toDF("src", "dst")
     val kernel = Analytics.connectedComponents(e)
       .as[(Long, Long)].collect().toMap
-    val loop = Analytics.connectedComponents(e, localThreshold = 0)
-      .as[(Long, Long)].collect().toMap
+    val loop = under(Distributed)(Analytics.connectedComponents(e)
+      .as[(Long, Long)].collect().toMap)
     assert(kernel === loop)
     assert(kernel === Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 9L -> 1L,
       7L -> 7L, 8L -> 7L))

@@ -5,14 +5,19 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
+import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.enrich.Analytics
 import graft.ops.Bounded
+import graft.pipeline.Corpus
 
 class BoundedSpec extends AnyFunSuite {
   import TestSpark.spark
+  import spark.implicits._
 
   private def recorded[T](body: => T) = JobRecorder.recorded(spark)(body)
   import JobRecorder.jobs
@@ -60,9 +65,82 @@ class BoundedSpec extends AnyFunSuite {
 
   test("rows: spark.graft.localThreshold sets the session budget") {
     assert(Bounded.rows(spark) === Bounded.DefaultRows)
-    spark.conf.set("spark.graft.localThreshold", "7")
-    try assert(Bounded.rows(spark) === 7)
-    finally spark.conf.unset("spark.graft.localThreshold")
+    IngestArms.under(IngestArms.Arm("seven", 7))(
+      assert(Bounded.rows(spark) === 7))
+    assert(Bounded.rows(spark) === Bounded.DefaultRows)
+  }
+
+  /** Whether `evs` ran a bounded probe at the default budget: a
+    * `CollectLimit` of `DefaultRows + 1` rows anywhere in an executed
+    * plan. */
+  private def probed(evs: Seq[SparkListenerEvent]): Boolean = {
+    def nodes(i: SparkPlanInfo): Seq[SparkPlanInfo] =
+      i +: i.children.flatMap(nodes)
+    val limit = (Bounded.DefaultRows + 1).toString
+    evs.exists {
+      case s: SparkListenerSQLExecutionStart =>
+        nodes(s.sparkPlanInfo).exists(n => n.nodeName == "CollectLimit" &&
+          n.simpleString.split("[ ,]").contains(limit))
+      case _ => false
+    }
+  }
+
+  test("the session key alone moves every driver-kernel operator to its " +
+      "distributed arm") {
+    // RDD-backed inputs: a probe of a local Seq folds into the local
+    // relation and would run no CollectLimit
+    def scan(df: DataFrame) = spark.createDataFrame(df.rdd, df.schema)
+    val edges = scan(Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"),
+      ("d", "e"), ("b", "e"), ("q", "r")).toDF("src", "dst"))
+    val prevScc = scan(Seq(("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"),
+      ("e", "e"), ("q", "q"), ("r", "r")).toDF("v", "scc"))
+    val prevCond = scan(Seq(("a", "d"), ("a", "e"), ("d", "e"), ("q", "r"))
+      .toDF("src_scc", "dst_scc"))
+    val newEdges = scan(Seq(("e", "d"), ("r", "s")).toDF("src", "dst"))
+    val prevCc = scan(Seq(("a", "a"), ("b", "a"), ("q", "q"), ("r", "q"))
+      .toDF("v", "component"))
+    val weighted = scan(Seq((1L, 2L, 5L), (2L, 3L, 5L), (1L, 3L, 9L),
+      (7L, 8L, 1L)).toDF("src", "dst", "weight"))
+    val docs = scan(Seq((1L, "en", "ab ab abab"), (2L, "fr", "xq"))
+      .toDF("doc_id", "lang", "text"))
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "stronglyConnected" -> (() => Analytics.stronglyConnected(edges)),
+      "stronglyConnectedIncremental" -> (() =>
+        Analytics.stronglyConnectedIncremental(newEdges, prevScc, prevCond)),
+      "condensationLayersOver" -> (() =>
+        Analytics.condensationLayersOver(prevCond, prevScc)),
+      "stronglyConnectedGraphX" -> (() =>
+        Analytics.stronglyConnectedGraphX(spark, edges)),
+      "anf" -> (() => Analytics.anf(edges, rounds = 3)),
+      "connectedComponentsGraphX" -> (() =>
+        Analytics.connectedComponentsGraphX(spark, edges)),
+      "bfsDistances" -> (() => Analytics.bfsDistances(edges, "a", 4)),
+      "shortestPathCounts" -> (() =>
+        Analytics.shortestPathCounts(edges, "a", 4)),
+      "betweennessFromSource" -> (() =>
+        Analytics.betweennessFromSource(edges, "a", 4)),
+      "betweennessLandmarks" -> (() =>
+        Analytics.betweennessLandmarks(edges, Seq("a", "q"), 4)),
+      "edgeBetweennessLandmarks" -> (() =>
+        Analytics.edgeBetweennessLandmarks(edges, Seq("a", "q"), 4)),
+      "bfsDistancesLandmarks" -> (() =>
+        Analytics.bfsDistancesLandmarks(edges, Seq("a", "q"), 4)),
+      "connectedComponents" -> (() => Analytics.connectedComponents(edges)),
+      "connectedComponentsIncremental" -> (() =>
+        Analytics.connectedComponentsIncremental(edges, prevCc)),
+      "boruvkaMsf" -> (() => Analytics.boruvkaMsf(weighted)),
+      "unigramFertility" -> (() => Corpus.unigramFertility(docs,
+        vocabCap = 2, seedCap = 10, vocabSize = 3)))
+    for ((name, op) <- ops) withClue(s"$name: ") {
+      def run(arm: IngestArms.Arm) = recorded(IngestArms.under(arm)(
+        op().collect().map(_.toString).sorted.toSeq))
+      val (kernel, kEvs) = run(IngestArms.Driver)
+      val (dist, dEvs) = run(IngestArms.Distributed)
+      assert(probed(kEvs))
+      assert(!probed(dEvs))
+      assert(jobs(dEvs) > jobs(kEvs))
+      assert(dist === kernel)
+    }
   }
 
   /** The Scala sources under `dir`. */
@@ -116,5 +194,65 @@ class BoundedSpec extends AnyFunSuite {
     // one endpoint-join + WHERE/RETURN tail for the path searches
     val tails = count("""withColumn\("__pnn"""")
     assert(tails.size === 1, tails.mkString("\n"))
+  }
+
+  /** `p`'s text without string literals and comments, line by line. */
+  private def code(p: Path): Seq[String] =
+    Files.readAllLines(p).asScala.toSeq.map(_
+      .replaceAll("\"[^\"]*\"", "\"\"").replaceAll("//.*", "")
+      .replaceAll("^\\s*/?\\*.*", ""))
+
+  test("structure: one row budget, the session key") {
+    val param = """\b(?:localThreshold|kernelThreshold)\s*:""".r
+    val call = """\b(?:localThreshold|kernelThreshold)\s*=(?!=)""".r
+    val defName = """\bdef (\w+)""".r
+    // the parameters graphbench's analytics suite passes; each defaults
+    // to the session budget and goes with graphbench's next change
+    val kept = Set("connectedComponents", "connectedComponentsGraphX",
+      "stronglyConnected", "betweennessLandmarks", "bfsDistancesLandmarks")
+    val params = sources("src/main/scala").flatMap { p =>
+      val lines = code(p)
+      lines.indices.filter(i => param.findFirstIn(lines(i)).isDefined)
+        .map { i =>
+          val owner = (i to 0 by -1).iterator
+            .flatMap(j => defName.findFirstMatchIn(lines(j))).next().group(1)
+          (p.getFileName.toString, owner, lines(i).trim)
+        }
+    }
+    assert(params.map(_._1).toSet === Set("Analytics.scala"),
+      params.mkString("\n"))
+    assert(params.map(_._2).sorted === kept.toSeq.sorted,
+      params.mkString("\n"))
+    assert(params.forall(_._3.contains("= Bounded.Session")),
+      params.mkString("\n"))
+    val passes = sources("src").flatMap(p => code(p).zipWithIndex.collect {
+      case (l, i) if call.findFirstIn(l).isDefined => s"$p:${i + 1}: $l"
+    })
+    assert(passes.isEmpty, passes.mkString("\n"))
+    // every probe reads the session budget but for the named caps that
+    // are no arm choice, and the kept overrides' helper argument `k`
+    val caps = Set("seedCap", "maxCandidates", "k")
+    val budgets = sources("src/main/scala").flatMap { p =>
+      val text = code(p).mkString("\n")
+      "Bounded\\.take\\(".r.findAllMatchIn(text).map { m =>
+        var depth = 1
+        var i = m.end
+        val args = scala.collection.mutable.ArrayBuffer(new StringBuilder)
+        while (depth > 0) {
+          text(i) match {
+            case '(' => depth += 1; args.last += '('
+            case ')' => depth -= 1; if (depth > 0) args.last += ')'
+            case ',' if depth == 1 => args += new StringBuilder
+            case c => args.last += c
+          }
+          i += 1
+        }
+        (p.getFileName.toString, args.drop(1).map(_.toString.trim).toSeq)
+      }
+    }
+    assert(budgets.size >= 8, budgets.mkString("\n"))
+    val odd = budgets.filterNot { case (_, k) =>
+      k.isEmpty || (k.size == 1 && caps(k.head)) }
+    assert(odd.isEmpty, odd.mkString("\n"))
   }
 }

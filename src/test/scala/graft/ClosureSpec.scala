@@ -109,10 +109,8 @@ class ClosureSpec extends AnyFunSuite {
   test("c3Linearize: driver-local fast path equals the distributed " +
     "fixpoint on random multi-inheritance DAGs (and drops cycles)") {
     val rnd = new scala.util.Random(11)
-    def distributed[T](body: => T): T = {
-      spark.conf.set("spark.graft.localThreshold", "0")
-      try body finally spark.conf.unset("spark.graft.localThreshold")
-    }
+    def distributed[T](body: => T): T =
+      IngestArms.under(IngestArms.Distributed)(body)
     (1 to 3).foreach { _ =>
       // layered DAG: each class inherits 1-3 earlier classes, ordered
       val n = 18

@@ -1245,14 +1245,14 @@ class CorpusSpec extends AnyFunSuite {
     assert(out("en") === ((3L, 4L, 1.3333)))
     // fr: xq segments as two UNK chars → 2/1
     assert(out("fr") === ((1L, 2L, 2.0)))
-    // threshold 0 forces the DISTRIBUTED unrolled-DP path — must be
+    // budget 0 forces the DISTRIBUTED unrolled-DP path — must be
     // label-identical to the driver Viterbi kernel (the bounded-probe
     // discipline's spec-forced fallback)
-    val rel = Corpus.unigramFertility(docs, emRounds = 2, vocabCap = 2,
-        maxLen = 8, maxPiece = 4, seedCap = 10, vocabSize = 3,
-        kernelThreshold = 0)
-      .as[(String, Long, Long, Double)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    val rel = IngestArms.under(IngestArms.Distributed)(
+      Corpus.unigramFertility(docs, emRounds = 2, vocabCap = 2,
+          maxLen = 8, maxPiece = 4, seedCap = 10, vocabSize = 3)
+        .as[(String, Long, Long, Double)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap)
     assert(rel === out)
   }
 

@@ -848,11 +848,9 @@ class CypherLiteSpec extends AnyFunSuite {
         "nodes(p) AS ns, relationships(p) AS rs ORDER BY v, mid")
     for (q <- qs) {
       val local = dsp.executeQuery(q).collect().map(_.toSeq).toSeq
-      spark.conf.set("spark.graft.localThreshold", "0")
-      try {
-        val dist = dsp.executeQuery(q).collect().map(_.toSeq).toSeq
-        assert(local === dist, q)
-      } finally spark.conf.unset("spark.graft.localThreshold")
+      val dist = IngestArms.under(IngestArms.Distributed)(
+        dsp.executeQuery(q).collect().map(_.toSeq).toSeq)
+      assert(local === dist, q)
     }
   }
 
@@ -868,13 +866,11 @@ class CypherLiteSpec extends AnyFunSuite {
     def search(kw: String) = d.executeQuery(
       s"MATCH p = $kw((a {full_name: 'a'})-[:CALL*]->" +
         "(b {full_name: 'L16.0'})) RETURN length(p) AS d").collect()
-    for (th <- Seq(None, Some("0"))) withClue(s"threshold $th: ") {
-      th.foreach(spark.conf.set("spark.graft.localThreshold", _))
-      try {
+    for (arm <- Seq(IngestArms.Driver, IngestArms.Distributed))
+      withClue(s"${arm.name}: ")(IngestArms.under(arm) {
         assert(search("shortestPath").map(_.getLong(0)).toSeq === Seq(17L))
         intercept[IllegalArgumentException](search("allShortestPaths"))
-      } finally spark.conf.unset("spark.graft.localThreshold")
-    }
+      })
   }
 
   test("shortestPath: rel-type alternation widens the frontier") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.indexer.{IndexPipeline, PyIndexer}
+import graft.indexer.PyIndexer
 import graft.indexer.IndexPipeline.SourceFile
 import graft.model._
 

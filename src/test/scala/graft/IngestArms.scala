@@ -19,7 +19,8 @@ object IngestArms {
   private val Key = "spark.graft.localThreshold"
 
   /** Runs `body` with `spark.graft.localThreshold` set to the arm's
-    * budget, then restores the key. */
+    * budget, then restores the key: every spec picks a driver-kernel or
+    * distributed arm through this session key, never a parameter. */
   def under[T](arm: Arm)(body: => T): T = {
     val conf = TestSpark.spark.conf
     val prev = conf.getOption(Key)

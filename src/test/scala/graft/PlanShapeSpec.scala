@@ -696,7 +696,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // the loop's localCheckpoints hide round plans from the final scan
     // (the s_graph_ann situation), so gate the exposed round body — the
     // exact DataFrame the loop iterates
-    import org.apache.spark.sql.functions._
     import TestSpark.spark.implicits._
     val und = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
       .toDF("src", "dst")

@@ -413,7 +413,6 @@ class StreamsSpec extends AnyFunSuite {
       Seq(ev(4, 5000, 1, "click")),
       // FRESH u1 view: starts a NEW funnel from step 1
       Seq(ev(5, 2 * hourMs, 1, "view")))) { ds =>
-      import spark.implicits._
       Streams.streamingFunnel(ds, Seq("view", "click"),
         stateTtlSeconds = Some(10L)).toDF()
     }
@@ -438,7 +437,6 @@ class StreamsSpec extends AnyFunSuite {
       (4L, "the quick brown fox jumps over the lazy cat today")) // near 1/3
     val sink = StreamReplay.replay(TestSpark.spark, texts, "neardup_spec",
       "append", batches = 4) { df =>
-      import TestSpark.spark.implicits._
       Streams.streamingNearDup(df.toDF("doc_id", "text"),
         k = 3, numHashes = 16, bands = 4, threshold = 0.25).toDF()
     }.distinct().collect()
@@ -526,7 +524,6 @@ class StreamsSpec extends AnyFunSuite {
       // pre-expiry 'a'
       Seq(ev(4, 2 * hourMs, 1, "c")),
       Seq(ev(5, 2 * hourMs + 1000, 1, "d")))) { ds =>
-      import spark.implicits._
       Streams.streamingTransitions(ds, stateTtlSeconds = Some(10L)).toDF()
     }
     val got = rows.map(r => (r.getString(0), r.getString(1))).toSet
@@ -853,13 +850,8 @@ class StreamsSpec extends AnyFunSuite {
     def ev(id: Long, day: Int, v: Double) =
       Streams.Event(id, java.sql.Timestamp.valueOf(
         f"2024-01-$day%02d 01:00:00"), 1L, "a", v)
-    // reference: an even mix of octave-4 (0.01*1000=10) and octave-10
-    // (600*1000 → high) values
-    val ref = Map(
-      (math.floor(0.01 * 1000).toLong, 100L),     // lv=10 ≤ 63 → bucket 10
-      (0L, 0L)) // placeholder replaced below
-    // build the real reference from the batch bucket rule: values 0.01
-    // and 600.0 — compute buckets via the same integer spelling
+    // reference: an even mix of 0.01 and 600.0, bucketed by the batch
+    // bucket rule's integer spelling
     def bucketOf(v: Double): Long = {
       val lv = math.max(math.floor(v * 1000).toLong, 0L)
       if (lv <= 63) lv
