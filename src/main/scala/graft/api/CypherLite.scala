@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.Bounded
 import graft.ops.Pin._
+import CypherText._
 
 /** B10 — `execute_query(cypher)` for the Cypher subset the reference's
   * workflows issue (SURVEY.md §2.B; graphDB.py:106-112 delegates arbitrary
@@ -110,6 +111,11 @@ import graft.ops.Pin._
   * The parse result is a plain DataFrame expression — Catalyst plans it
   * like any hand-written combinator query (broadcast point expands,
   * pushdown, etc.).
+  *
+  * Every scan of the query text — clause keywords, item and predicate
+  * separators, a group's closer, the path-function rewrites, a string
+  * literal's extent — goes through [[CypherText]], so quoted text (prop
+  * values that hold code, `'it\'s'`) reads the same at every site.
   */
 object CypherLite {
 
@@ -181,40 +187,8 @@ object CypherLite {
     * a warning; we execute it under the allShortestPaths loud-budget
     * discipline — count both sides in-plan, RAISE when |left|·|right|
     * exceeds this cap (a silent planet-sized product is a job-killer at
-    * 100 TB; a raise names the query), execute below it. Overridable
-    * per-deployment (and spec-testable) via the system property. */
-  private[api] def cartesianRowBudget: Long =
-    sys.props.get("graft.cypher.cartesianBudget").map(_.toLong)
-      .getOrElse(2000000L)
-
-  /** Split a MATCH pattern on top-level commas — unlike [[splitTop]]
-    * this also tracks brace and bracket depth: a comma inside a
-    * relationship pattern's props (`-[r:R {k:'a', j:'b'}]->`) sits at
-    * paren depth 0 but brace depth 1 and must NOT start a new comma
-    * pattern. Quotes and their escapes are literal text throughout. */
-  private def splitTopPattern(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var quote: Char = 0
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        sb.append(c)
-        if (c == '\\' && i + 1 < s.length) { i += 1; sb.append(s.charAt(i)) }
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') { quote = c; sb.append(c) }
-      else if (c == '(' || c == '{' || c == '[') { depth += 1; sb.append(c) }
-      else if (c == ')' || c == '}' || c == ']') {
-        depth = math.max(0, depth - 1); sb.append(c)
-      } else if (c == ',' && depth == 0) { out += sb.toString; sb.clear() }
-      else sb.append(c)
-      i += 1
-    }
-    out += sb.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
+    * 100 TB; a raise names the query), execute below it. */
+  private val cartesianRowBudget = 2000000L
 
   /** Restrict an edge frame's first-leg `src` to the anchor frontier
     * (r16, scale): an ANCHORED var-length pattern must expand FROM its
@@ -410,76 +384,9 @@ object CypherLite {
   private val whereNotGeneral = """^(?i)NOT\s+(.+)$""".r
   private val numericLit = """^-?\d+(\.\d+)?$""".r
 
-  /** Index of the first occurrence of `word` (whole-word, case-insensitive)
-    * outside single/double quotes; -1 if none. The same quote/escape rules
-    * as [[splitTop]] — prop literals holding text like "WHERE x" (code
-    * snippets, signatures) must not be mistaken for clause keywords. */
-  private def topLevelKeyword(s: String, word: String): Int = {
-    var quote: Char = 0
-    var brace = 0 // `{…}` bodies (prop literals, EXISTS{} subqueries)
-                  // are opaque to the clause scanners
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1 // escaped char inside quotes
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '{') brace += 1
-      else if (c == '}') brace = math.max(0, brace - 1)
-      else if (brace == 0 &&
-          s.regionMatches(true, i, word, 0, word.length) &&
-          (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-          (i + word.length >= s.length || !isWordChar(s.charAt(i + word.length))))
-        return i
-      i += 1
-    }
-    -1
-  }
-
-  /** \w boundary semantics: '_' is a word char, so `n.return_type` never
-    * reads as the RETURN keyword. */
-  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  /** Split on `sep` at top level only — separators inside single/double
-    * quotes don't count (prop values may contain commas/colons), and a
-    * backslash inside quotes escapes the next char (so `'it\'s'` is one
-    * literal). */
-  private[api] def splitTop(s: String, sep: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var quote: Char = 0
-    var depth = 0 // paren depth outside quotes: a separator inside a
-                  // function call (`coalesce(x, 'd')`) never splits
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        sb.append(c)
-        if (c == '\\' && i + 1 < s.length) { i += 1; sb.append(s.charAt(i)) }
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') { quote = c; sb.append(c) }
-      else if (c == '(' || c == '[' || c == '{') { depth += 1; sb.append(c) }
-      else if (c == ')' || c == ']' || c == '}') {
-        depth = math.max(0, depth - 1); sb.append(c)
-      }
-      else if (depth == 0 &&
-          s.regionMatches(true, i, sep, 0, sep.length) &&
-          (sep.head.isLetter // word separators (AND) need \w boundaries
-            && (i == 0 || !isWordChar(s.charAt(i - 1)))
-            && (i + sep.length >= s.length || !isWordChar(s.charAt(i + sep.length)))
-            || !sep.head.isLetter)) {
-        out += sb.toString; sb.clear(); i += sep.length - 1
-      } else sb.append(c)
-      i += 1
-    }
-    out += sb.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Render one parameter value as an inline Cypher literal. The graph
     * model is string-typed (§1.2), so strings quote-and-escape (the
-    * escapes [[splitTop]]/[[unquote]] honour), numbers and booleans
+    * escapes [[CypherText.unquote]] resolves), numbers and booleans
     * inline bare (numeric WHERE comparisons see them unquoted, exactly
     * like hand-written literals), and sequences render as `[…]` lists
     * (the `IN $list` shape). Anything else — including null, which in
@@ -512,44 +419,23 @@ object CypherLite {
     * fine (Neo4j ignores them too). `$` inside quotes is literal text. */
   private[api] def substituteParams(q: String, params: Map[String, Any]): String = {
     if (params.isEmpty && !q.contains("$")) return q
-    val sb = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (quote != 0) {
-        sb.append(c)
-        if (c == '\\' && i + 1 < q.length) { i += 1; sb.append(q.charAt(i)) }
-        else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"') { quote = c; sb.append(c); i += 1 }
-      else if (c == '$' && i + 1 < q.length && isWordChar(q.charAt(i + 1))) {
-        var j = i + 1
-        while (j < q.length && isWordChar(q.charAt(j))) j += 1
-        val name = q.substring(i + 1, j)
-        val v = params.getOrElse(name, throw new IllegalArgumentException(
-          s"missing query parameter $$$name (expected a binding)"))
-        sb.append(renderParam(name, v))
-        i = j
-      } else { sb.append(c); i += 1 }
+    val refs = indexesWhere(q, "")(i =>
+      q.charAt(i) == '$' && i + 1 < q.length && isWordChar(q.charAt(i + 1)))
+    // right to left, so each splice keeps the earlier offsets
+    refs.foldRight(q) { (i, out) =>
+      val end = q.indexWhere(c => !isWordChar(c), i + 1)
+      val name = q.substring(i + 1, if (end < 0) q.length else end)
+      val v = params.getOrElse(name, throw new IllegalArgumentException(
+        s"missing query parameter $$$name (pass a params map that binds it)"))
+      out.patch(i, renderParam(name, v), name.length + 1)
     }
-    sb.toString
-  }
-
-  private[api] def unquote(v: String): String = {
-    val t = v.trim
-    if ((t.startsWith("'") && t.endsWith("'") && t.length >= 2) ||
-        (t.startsWith("\"") && t.endsWith("\"") && t.length >= 2))
-      // unescape the backslash escapes splitTop honoured
-      t.substring(1, t.length - 1).replaceAll("""\\(['"\\])""", "$1")
-    else t
   }
 
   private[api] def parseProps(s: String): Map[String, String] =
     if (s == null || s.trim.isEmpty) Map.empty
-    else splitTop(s.trim.stripPrefix("{").stripSuffix("}"), ",").iterator
+    else splitOn(s.trim.stripPrefix("{").stripSuffix("}"), ",", "([{").iterator
       .map { kv =>
-        splitTop(kv, ":") match {
+        splitOn(kv, ":", "([{") match {
           case Seq(k1, rest @ _*) if rest.nonEmpty =>
             k1.trim -> unquote(rest.mkString(":"))
           case _ => throw new IllegalArgumentException(
@@ -830,67 +716,14 @@ object CypherLite {
     * are not scalar functions). */
   private def isValueExpr(c: String): Boolean = {
     val head = c.takeWhile(isWordChar).toLowerCase
-    if (scalarFns.contains(head) && c.drop(head.length).trim.startsWith("("))
-      return true
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < c.length) {
-      val ch = c.charAt(i)
-      if (quote != 0) { if (ch == quote) quote = 0 }
-      else if (ch == '\'' || ch == '"') quote = ch
-      else if (ch == '(' || ch == '{') depth += 1
-      else if (ch == ')' || ch == '}') depth -= 1
-      else if (depth == 0 && ch == '[') return true
-      else if (depth == 0 && "+-*/%".indexOf(ch.toInt) >= 0) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Matching `]` for the `[` at `open`, honoring quotes and nesting;
-    * -1 when unterminated. */
-  private def matchingBracket(s: String, open: Int): Int = {
-    var depth = 0
-    var quote: Char = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '[') depth += 1
-      else if (c == ']') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
+    (scalarFns.contains(head) && c.drop(head.length).trim.startsWith("(")) ||
+      indexWhere(c, "({")(i => "[+-*/%".indexOf(c.charAt(i)) >= 0) >= 0
   }
 
   private def skipWs(s: String, from: Int): Int = {
     var i = from
     while (i < s.length && s.charAt(i).isWhitespace) i += 1
     i
-  }
-
-  /** Matching closer for the opener at `open`, honoring quotes and
-    * nesting of the same delimiter pair; -1 when unterminated. */
-  private def matchingDelim(s: String, open: Int, oc: Char,
-      cc: Char): Int = {
-    var depth = 0
-    var quote: Char = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == oc) depth += 1
-      else if (c == cc) { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
   }
 
   /** PATTERN COUNTS (r16): `size((a)-[:R]->(b))` (the classic spelling
@@ -909,14 +742,14 @@ object CypherLite {
     var again = true
     while (again) {
       again = false
-      val cPos = allTopLevelKeywords(q, "COUNT").find { p =>
+      val cPos = indexesOf(q, "COUNT", "{").find { p =>
         val j = skipWs(q, p + 5)
         j < q.length && q.charAt(j) == '{'
       }
       cPos match {
         case Some(p) =>
           val open = skipWs(q, p + 5)
-          val close = matchingDelim(q, open, '{', '}')
+          val close = closer(q, open, "{")
           require(close > 0, s"unterminated COUNT subquery: $q0")
           var body = q.substring(open + 1, close).trim
           if (body.regionMatches(true, 0, "MATCH", 0, 5) &&
@@ -927,17 +760,17 @@ object CypherLite {
           q = q.substring(0, p) + name + q.substring(close + 1)
           again = true
         case None =>
-          val sPos = allTopLevelKeywords(q, "size").find { p =>
+          val sPos = indexesOf(q, "size", "{").find { p =>
             val j = skipWs(q, p + 4)
             if (j >= q.length || q.charAt(j) != '(') false
             else {
-              val close = matchingDelim(q, j, '(', ')')
+              val close = closer(q, j, "(")
               close > 0 && hasRelPatternText(q.substring(j + 1, close))
             }
           }
           sPos.foreach { p =>
             val open = skipWs(q, p + 4)
-            val close = matchingDelim(q, open, '(', ')')
+            val close = closer(q, open, "(")
             val name = s"__pcnt_${out.size}"
             out += name -> q.substring(open + 1, close).trim
             q = q.substring(0, p) + name + q.substring(close + 1)
@@ -985,7 +818,7 @@ object CypherLite {
     // is also a relationship TYPE in this model (`-[:CALL]->`, and
     // `-[:CALL {k: 'v'}]->` even pairs it with a brace), so rel-type
     // positions must not parse as subqueries
-    def nextCall(): Int = allTopLevelKeywords(q, "CALL").find { p =>
+    def nextCall(): Int = indexesOf(q, "CALL", "{").find { p =>
       var k = p - 1
       while (k >= 0 && q.charAt(k).isWhitespace) k -= 1
       val before = if (k >= 0) q.charAt(k) else ' '
@@ -1002,28 +835,28 @@ object CypherLite {
       // WITH / ENDS WITH never count)
       val pre = q.substring(0, idx)
       val pipeIdx = clauseWithPositions(pre).size +
-        allTopLevelKeywords(pre, "UNWIND").size
+        indexesOf(pre, "UNWIND", "{").size
       val open = skipWs(q, idx + 4)
-      val close = matchingDelim(q, open, '{', '}')
+      val close = closer(q, open, "{")
       require(close > 0, s"unterminated CALL subquery: $q0")
       var body = q.substring(open + 1, close).trim
       // leading importing WITH: bare variable names only (Neo4j's rule)
       val imports: Seq[String] =
         if (body.regionMatches(true, 0, "WITH", 0, 4) &&
             body.length > 4 && !isWordChar(body.charAt(4))) {
-          val mIdx = topLevelKeyword(body, "MATCH")
+          val mIdx = indexOf(body, "MATCH", "{")
           require(mIdx > 4, s"CALL importing WITH needs a MATCH: $q0")
-          val vs = splitTop(body.substring(4, mIdx), ",").map(_.trim)
+          val vs = splitOn(body.substring(4, mIdx), ",", "([{")
           vs.foreach(v => require(v.matches("""\w+"""),
             s"CALL importing WITH takes bare variables, got '$v': $q0"))
           body = body.substring(mIdx)
           vs
         } else Seq.empty
-      val retI = topLevelKeyword(body, "RETURN")
+      val retI = indexOf(body, "RETURN", "{")
       require(retI >= 0, s"CALL subquery needs a RETURN: $q0")
-      val items = splitTop(body.substring(retI + 6), ",").map(_.trim)
+      val items = splitOn(body.substring(retI + 6), ",", "([{")
       val aliased = items.map { it =>
-        val parts = splitTop(it, "AS")
+        val parts = splitOn(it, "AS", "([{")
         require(parts.length == 2 &&
             parts(1).trim.matches("""\w+"""),
           s"CALL subquery RETURN items must be aliased (`expr AS x`): $q0")
@@ -1049,46 +882,6 @@ object CypherLite {
     (q, out.toSeq)
   }
 
-  /** First top-level `|` outside quotes/brackets/parens/braces — the
-    * comprehension/reduce projection separator (a rel-type alternation
-    * `:A|B` always sits inside a bracket, never at this level). */
-  private def topLevelPipe(s: String): Int = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '[' || c == '(' || c == '{') depth += 1
-      else if (c == ']' || c == ')' || c == '}') depth -= 1
-      else if (depth == 0 && c == '|') return i
-      i += 1
-    }
-    -1
-  }
-
-  /** First top-level `,` outside quotes/brackets/parens/braces. */
-  private def topLevelCommaIdx(s: String): Int = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '[' || c == '(' || c == '{') depth += 1
-      else if (c == ']' || c == ')' || c == '}') depth -= 1
-      else if (depth == 0 && c == ',') return i
-      i += 1
-    }
-    -1
-  }
-
   /** Boolean predicate INSIDE a list comprehension (r16): AND/OR/NOT
     * with Cypher precedence over comparison leaves whose sides are
     * scalar value expressions resolved with the lambda variable in
@@ -1096,23 +889,20 @@ object CypherLite {
   private def parseCompPred(t0: String, vars: Map[String, String],
       plain: Set[String], schema: org.apache.spark.sql.types.StructType,
       locals: Map[String, Column]): Column = {
-    val t = t0.trim
+    val t = ungroup(t0, "(")
     def fail(): Nothing = throw new IllegalArgumentException(
       s"unsupported comprehension predicate '$t0'")
-    val orParts = splitBool(t, "OR")
+    val orParts = splitOn(t, "OR", "({")
     if (orParts.lengthCompare(1) > 0)
       return orParts.map(parseCompPred(_, vars, plain, schema, locals))
         .reduce(_ || _)
-    val andParts = splitBool(t, "AND")
+    val andParts = splitOn(t, "AND", "({")
     if (andParts.lengthCompare(1) > 0)
       return andParts.map(parseCompPred(_, vars, plain, schema, locals))
         .reduce(_ && _)
     if (t.regionMatches(true, 0, "NOT", 0, 3) && t.length > 3 &&
         !isWordChar(t.charAt(3)))
       return !parseCompPred(t.substring(3), vars, plain, schema, locals)
-    if (isWholeParen(t))
-      return parseCompPred(t.substring(1, t.length - 1), vars, plain,
-        schema, locals)
     def side(x: String): Column =
       parseValueExpr(x.trim, vars, plain, schema, locals)
     val isNull = """(?is)^(.*?)\s+IS\s+NULL$""".r
@@ -1120,51 +910,19 @@ object CypherLite {
     isNotNull.findFirstMatchIn(t).foreach(m => return side(m.group(1)).isNotNull)
     isNull.findFirstMatchIn(t).foreach(m => return side(m.group(1)).isNull)
     // first top-level comparison operator (two-char ops before one-char)
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '[' || c == '(') depth += 1
-      else if (c == ']' || c == ')') depth -= 1
-      else if (depth == 0) {
-        val two = if (i + 1 < t.length) t.substring(i, i + 2) else ""
-        if (two == "<=" ) return side(t.substring(0, i)) <= side(t.substring(i + 2))
-        if (two == ">=") return side(t.substring(0, i)) >= side(t.substring(i + 2))
-        if (two == "<>") return side(t.substring(0, i)) =!= side(t.substring(i + 2))
-        if (c == '=') return side(t.substring(0, i)) === side(t.substring(i + 1))
-        if (c == '<') return side(t.substring(0, i)) < side(t.substring(i + 1))
-        if (c == '>') return side(t.substring(0, i)) > side(t.substring(i + 1))
-      }
-      i += 1
+    val i = indexWhere(t, "([")(j => "=<>".indexOf(t.charAt(j)) >= 0)
+    if (i < 0) fail()
+    val op = Seq("<=", ">=", "<>").find(t.startsWith(_, i))
+      .getOrElse(t.substring(i, i + 1))
+    val (l, r) = (side(t.substring(0, i)), side(t.substring(i + op.length)))
+    op match {
+      case "<=" => l <= r
+      case ">=" => l >= r
+      case "<>" => l =!= r
+      case "=" => l === r
+      case "<" => l < r
+      case _ => l > r
     }
-    fail()
-  }
-
-  /** Index of the slice separator `..` outside quotes/brackets/parens;
-    * -1 when absent (then the bracket body is a plain index). A number
-    * literal never swallows it — this scan runs BEFORE parsing. */
-  private def topLevelDotDot(s: String): Int = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '[' || c == '(') depth += 1
-      else if (c == ']' || c == ')') depth -= 1
-      else if (depth == 0 && c == '.' && i + 1 < s.length &&
-          s.charAt(i + 1) == '.') return i
-      i += 1
-    }
-    -1
   }
 
   /** Scalar RETURN/WITH expressions — the most common real-world shapes
@@ -1199,7 +957,7 @@ object CypherLite {
     // documents. `'n = ' + n.name` and `xs + [4]` both work.
     def operandKind(): Char = {
       val j = skipWs(s, i)
-      if (j < s.length && (s.charAt(j) == '\'' || s.charAt(j) == '"')) 's'
+      if (j < s.length && isQuote(s.charAt(j))) 's'
       else if (j < s.length && s.charAt(j) == '[') 'l'
       else {
         // advisor r17: a var.prop operand is STRING-typed in this model,
@@ -1255,7 +1013,7 @@ object CypherLite {
         }
         else if (peek == '[') listOrComprehension()
         else if (peek == '-') { i += 1; negate(factor()) }
-        else if (peek == '\'' || peek == '"') lit(stringLit())
+        else if (isQuote(peek)) lit(stringLit())
         else if (peek.isDigit) numberLit()
         else ident()
       // postfix LIST INDEX / SLICE (r16, verdict task #6): Cypher's
@@ -1265,10 +1023,10 @@ object CypherLite {
       // size, clamped like Cypher (never raising)
       ws()
       while (peek == '[') {
-        val close = matchingBracket(s, i)
+        val close = closer(s, i, "[")
         if (close < 0) fail("unterminated '['")
         val body = s.substring(i + 1, close)
-        val dd = topLevelDotDot(body)
+        val dd = indexOf(body, "..", "([")
         def sub(t: String): Column =
           parseValueExpr(t, vars, plain, schema, locals)
         base =
@@ -1295,11 +1053,10 @@ object CypherLite {
       base
     }
     def stringLit(): String = {
-      val q = peek; i += 1
-      val sb = new StringBuilder
-      while (i < s.length && s.charAt(i) != q) { sb.append(s.charAt(i)); i += 1 }
-      if (i >= s.length) fail("unterminated string")
-      i += 1; sb.toString()
+      val end = literalEnd(s, i)
+      if (end < 0) fail("unterminated string")
+      val text = unquote(s.substring(i, end))
+      i = end; text
     }
     def numberLit(): Column = {
       val st = i
@@ -1313,7 +1070,7 @@ object CypherLite {
     // `[x IN list [WHERE pred] [| out]]` (r16) — filter/transform stay
     // in-plan; the lambda variable enters `locals` for the sub-parses
     def listOrComprehension(): Column = {
-      val close = matchingBracket(s, i)
+      val close = closer(s, i, "[")
       if (close < 0) fail("unterminated '['")
       val body = s.substring(i + 1, close)
       i = close + 1
@@ -1322,8 +1079,8 @@ object CypherLite {
         case Some(m) =>
           val v = m.group(1)
           val rest = body.substring(m.matched.length)
-          val wIdx = topLevelKeyword(rest, "WHERE")
-          val pIdx = topLevelPipe(rest)
+          val wIdx = indexOf(rest, "WHERE", "{")
+          val pIdx = indexOf(rest, "|", "([{")
           require(pIdx < 0 || wIdx < pIdx,
             s"malformed comprehension '[${body.trim}]'")
           val listEnd =
@@ -1342,7 +1099,7 @@ object CypherLite {
               x => subExpr(rest.substring(pIdx + 1), locals + (v -> x)))
           cur
         case None =>
-          val parts = splitTop(body, ",").map(_.trim).filter(_.nonEmpty)
+          val parts = splitOn(body, ",", "([{")
           if (parts.isEmpty)
             fail("empty list literal needs a type — not supported")
           array(parts.map(t => subExpr(t)): _*)
@@ -1363,7 +1120,7 @@ object CypherLite {
         // reduce(acc = init, x IN list | expr) — Cypher's fold, Spark's
         // aggregate(); intercepted raw (its body is not a plain arg list)
         if (w.equalsIgnoreCase("reduce")) {
-          val close = matchingDelim(s, i - 1, '(', ')')
+          val close = closer(s, i - 1, "(")
           if (close < 0) fail("unterminated reduce(")
           val body = s.substring(i, close)
           i = close + 1
@@ -1372,7 +1129,7 @@ object CypherLite {
             fail("reduce(acc = init, x IN list | expr)"))
           val accV = mAcc.group(1)
           val afterEq = body.substring(mAcc.matched.length)
-          val cIdx = topLevelCommaIdx(afterEq)
+          val cIdx = indexOf(afterEq, ",", "([{")
           if (cIdx < 0) fail("reduce needs `, x IN list | expr`")
           val initCol = subExpr(afterEq.substring(0, cIdx))
           val rest = afterEq.substring(cIdx + 1)
@@ -1381,7 +1138,7 @@ object CypherLite {
             fail("reduce needs `x IN list | expr`"))
           val elemV = mIn.group(1)
           val rest2 = rest.substring(mIn.matched.length)
-          val pIdx = topLevelPipe(rest2)
+          val pIdx = indexOf(rest2, "|", "([{")
           if (pIdx < 0) fail("reduce needs `| expr`")
           val listCol = subExpr(rest2.substring(0, pIdx))
           return aggregate(listCol, initCol, (acc, x) =>
@@ -1521,12 +1278,12 @@ object CypherLite {
     * CASE keyword opens minus END closes, so keywords inside a NESTED
     * CASE…END span can be told apart from the enclosing level's. */
   private def caseDepthAt(s: String, p: Int): Int =
-    allTopLevelKeywords(s, "CASE").count(_ < p) -
-      allTopLevelKeywords(s, "END").count(q => q + 3 <= p)
+    indexesOf(s, "CASE", "{").count(_ < p) -
+      indexesOf(s, "END", "{").count(q => q + 3 <= p)
 
   /** Top-level keyword positions treating nested CASE…END as opaque. */
   private def caseTopKeywords(s: String, kw: String): Seq[Int] =
-    allTopLevelKeywords(s, kw).filter(p => caseDepthAt(s, p) == 0)
+    indexesOf(s, kw, "{").filter(p => caseDepthAt(s, p) == 0)
 
   /** Cypher CASE expression, both forms:
     *   generic: `CASE WHEN <pred> THEN <val> [WHEN …]* [ELSE <val>] END`
@@ -1547,7 +1304,7 @@ object CypherLite {
     def fail(m: String): Nothing =
       throw new IllegalArgumentException(s"$m in CASE expression '$s0'")
     // the END matching the LEADING CASE: depth 1 (only the outer open)
-    val ends = allTopLevelKeywords(s, "END")
+    val ends = indexesOf(s, "END", "{")
       .filter(p => caseDepthAt(s, p) == 1)
     if (ends.isEmpty) fail("CASE without matching END")
     if (s.substring(ends.head + 3).trim.nonEmpty)
@@ -1595,7 +1352,7 @@ object CypherLite {
   private def retItem(p: String, vars: Map[String, String],
       plain: Set[String],
       schema: org.apache.spark.sql.types.StructType): (Seq[Column], Boolean) = {
-    val (core, alias) = splitTop(p, "AS") match {
+    val (core, alias) = splitOn(p, "AS", "([{") match {
       case Seq(c) => (c.trim, None)
       case Seq(c, a) =>
         require(a.trim.matches("""\w+"""), s"malformed alias in '$p'")
@@ -1636,8 +1393,8 @@ object CypherLite {
       // maps to Spark's distinct aggregates (count_distinct /
       // sum_distinct / collect_set; avg(DISTINCT) is the guarded
       // sum/count ratio — no avg_distinct Column function exists).
-      case aggExprRe(fn, arg0) if matchingDelim(core,
-          core.indexOf('('), '(', ')') == core.length - 1 =>
+      case aggExprRe(fn, arg0) if closer(core,
+          core.indexOf('('), "(") == core.length - 1 =>
         val (distinct, arg) = stripDistinct(arg0.trim)
         val base = parseValueExpr(arg, vars, plain, schema)
         val c = distinctAggCol(fn, distinct, base)
@@ -1707,11 +1464,11 @@ object CypherLite {
       // the full property map (the properties() fold) with explicit
       // entries overriding.
       case mapProjRe(v, items0) if vars.contains(v) &&
-          matchingDelim(core, core.indexOf('{'), '{', '}') ==
+          closer(core, core.indexOf('{'), "{") ==
             core.length - 1 =>
         val a = vars(v)
         require(!isRelAlias(a), s"map projection needs a node variable: '$p'")
-        val items = splitTop(items0, ",").map(_.trim).filter(_.nonEmpty)
+        val items = splitOn(items0, ",", "([{")
         var star = false
         val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Column)]
         items.foreach {
@@ -1722,7 +1479,7 @@ object CypherLite {
               s"malformed map-projection item '$it' in '$p'")
             entries += prop -> propColOf(v, prop, vars).cast("string")
           case it =>
-            val ci = topLevelIndexOf(it, ':')
+            val ci = indexOf(it, ":", "")
             require(ci > 0, s"malformed map-projection item '$it' in '$p'")
             val key = it.substring(0, ci).trim
             require(key.matches("""\w+"""),
@@ -1816,17 +1573,17 @@ object CypherLite {
     var limitN: Option[Int] = None
     var skipN: Option[Int] = None
     var orderSpec: Option[String] = None
-    val limitIdx = topLevelKeyword(body, "LIMIT")
+    val limitIdx = indexOf(body, "LIMIT", "{")
     if (limitIdx >= 0) {
       limitN = Some(body.substring(limitIdx + 5).trim.toInt)
       body = body.substring(0, limitIdx).trim
     }
-    val skipIdx = topLevelKeyword(body, "SKIP")
+    val skipIdx = indexOf(body, "SKIP", "{")
     if (skipIdx >= 0) {
       skipN = Some(body.substring(skipIdx + 4).trim.toInt)
       body = body.substring(0, skipIdx).trim
     }
-    val orderIdx = topLevelKeyword(body, "ORDER")
+    val orderIdx = indexOf(body, "ORDER", "{")
     if (orderIdx >= 0) {
       val tail = body.substring(orderIdx + 5).trim
       require(tail.regionMatches(true, 0, "BY", 0, 2) &&
@@ -1850,7 +1607,7 @@ object CypherLite {
       body = (plain.toSeq.sorted ++ userVars).mkString(", ")
     }
 
-    val items = splitTop(body, ",").map(retItem(_, vars, plain, df.schema))
+    val items = splitOn(body, ",", "([{").map(retItem(_, vars, plain, df.schema))
     val aggCols = items.filter(_._2).flatMap(_._1)
     val plainCols = items.filterNot(_._2).flatMap(_._1)
     var res =
@@ -1866,7 +1623,7 @@ object CypherLite {
     if (isDistinct && aggCols.isEmpty) res = res.distinct()
     orderSpec.foreach { spec =>
       val outCols = res.columns.toSet
-      val parsed = splitTop(spec, ",").map { item =>
+      val parsed = splitOn(spec, ",", "([{").map { item =>
         val t = item.trim
         if (t.toUpperCase.endsWith(" DESC")) (t.dropRight(5).trim, true)
         else if (t.toUpperCase.endsWith(" ASC")) (t.dropRight(4).trim, false)
@@ -1911,61 +1668,6 @@ object CypherLite {
     skipN.foreach(n => res = res.offset(n))
     limitN.foreach(n => res = res.limit(n))
     res
-  }
-
-  /** Split on a boolean keyword (AND / OR) at top level — outside quotes
-    * AND outside parentheses, with \w boundaries. [[splitTop]] is also
-    * quote- and paren-aware but splits on a literal SEPARATOR; this one
-    * splits on a KEYWORD, so it additionally requires \w boundaries
-    * (`BRAND` must not split at its embedded `AND`). `(a OR b) AND c`
-    * must not split inside the group. */
-  private def splitBool(s: String, word: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var quote: Char = 0
-    var depth = 0 // parens AND braces both group (EXISTS{} bodies)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        sb.append(c)
-        if (c == '\\' && i + 1 < s.length) { i += 1; sb.append(s.charAt(i)) }
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') { quote = c; sb.append(c) }
-      else if (c == '(' || c == '{') { depth += 1; sb.append(c) }
-      else if (c == ')' || c == '}') { depth -= 1; sb.append(c) }
-      else if (depth == 0 && s.regionMatches(true, i, word, 0, word.length) &&
-          (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-          (i + word.length >= s.length || !isWordChar(s.charAt(i + word.length)))) {
-        out += sb.toString; sb.clear(); i += word.length - 1
-      } else sb.append(c)
-      i += 1
-    }
-    out += sb.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** True when `s` is one parenthesized group — starts with '(' whose
-    * match is the final char (quote-aware). */
-  private def isWholeParen(s: String): Boolean = {
-    if (!s.startsWith("(") || !s.endsWith(")")) return false
-    var quote: Char = 0
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '(') depth += 1
-      else if (c == ')') {
-        depth -= 1
-        if (depth == 0) return i == s.length - 1
-      }
-      i += 1
-    }
-    false
   }
 
   /** WHERE boolean expression → Column, with Cypher precedence (NOT over
@@ -2015,15 +1717,13 @@ object CypherLite {
 
   private def parseWhere(s: String, resolve: String => Column,
       valueRef: String => Option[Column] = _ => None): Column = {
-    val t = s.trim
-    val orParts = splitBool(t, "OR")
+    val t = ungroup(s, "(")
+    val orParts = splitOn(t, "OR", "({")
     if (orParts.length > 1)
       return orParts.map(parseWhere(_, resolve, valueRef)).reduce(_ || _)
-    val andParts = splitBool(t, "AND")
+    val andParts = splitOn(t, "AND", "({")
     if (andParts.length > 1)
       return andParts.map(parseWhere(_, resolve, valueRef)).reduce(_ && _)
-    if (isWholeParen(t))
-      return parseWhere(t.substring(1, t.length - 1), resolve, valueRef)
     def cmpOperand(ref: String, value: String): (Column, Column) = {
       val raw = value.trim
       valueRef(raw) match {
@@ -2040,7 +1740,7 @@ object CypherLite {
       // NOT exists must match before the bare exists pattern; NOT (…)
       // negates a group (Cypher's unary NOT at top precedence)
       case whereNotExists(ref) => resolve(ref).isNull
-      case notParen(rest) if isWholeParen(s"($rest") =>
+      case notParen(rest) if closer(s"($rest", 0, "(") == rest.length =>
         !parseWhere(rest.dropRight(1), resolve, valueRef)
       case whereExists(ref) => resolve(ref).isNotNull
       // IS [NOT] NULL ≡ [NOT] exists — Neo4j's modern spelling (exists()
@@ -2082,7 +1782,7 @@ object CypherLite {
         valueRef(value).map(resolve(ref) =!= _)
           .getOrElse(resolve(ref) =!= unquote(value))
       case whereIn(ref, list) =>
-        resolve(ref).isin(splitTop(list, ",").map(unquote): _*)
+        resolve(ref).isin(splitOn(list, ",", "([{").map(unquote): _*)
       case whereStrPred(ref, op, value) =>
         val c = resolve(ref)
         val lv = unquote(value)
@@ -2179,22 +1879,6 @@ object CypherLite {
   private val varLabels =
     """^(\w+)?\s*((?::\s*(?:`[^`]+`|\w+))*)\s*$""".r
 
-  /** First top-level (not in quotes) occurrence of `target`; -1 if none. */
-  private def topLevelIndexOf(s: String, target: Char): Int = {
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == target) return i
-      i += 1
-    }
-    -1
-  }
-
   /** Scan the MATCH pattern for node patterns, quote-aware throughout:
     * parens, braces, colons, and arrows inside quoted prop values are
     * literal text (the nodePat regex this replaces choked on a `}` or
@@ -2202,53 +1886,28 @@ object CypherLite {
     * pattern; arrow text between patterns never contains parens. */
   private def scanNodes(pattern: String, anonPrefix: String = "__anon_"): Seq[NodePat] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[NodePat]
-    var i = 0
-    while (i < pattern.length) {
-      val ch = pattern.charAt(i)
-      if (ch == '\'' || ch == '"') {
-        // quotes BETWEEN node patterns (relationship-property values) are
-        // literal text: a '(' inside them must not open a node pattern
-        var j = i + 1
-        while (j < pattern.length && pattern.charAt(j) != ch) {
-          if (pattern.charAt(j) == '\\') j += 1
-          j += 1
-        }
-        i = j + 1
-      } else if (ch == '(') {
-        var depth = 0
-        var j = i
-        var quote: Char = 0
-        var end = -1
-        while (j < pattern.length && end < 0) {
-          val c = pattern.charAt(j)
-          if (quote != 0) {
-            if (c == '\\') j += 1
-            else if (c == quote) quote = 0
-          } else if (c == '\'' || c == '"') quote = c
-          else if (c == '(') depth += 1
-          else if (c == ')') { depth -= 1; if (depth == 0) end = j }
-          j += 1
-        }
-        if (end < 0) throw new IllegalArgumentException(
-          s"unbalanced parens in pattern: $pattern")
-        val inner = pattern.substring(i + 1, end)
-        val braceIdx = topLevelIndexOf(inner, '{')
-        val head = (if (braceIdx >= 0) inner.substring(0, braceIdx) else inner).trim
-        val props =
-          if (braceIdx >= 0) parseProps(inner.substring(braceIdx).trim) else Map.empty[String, String]
-        head match {
-          case varLabels(v, ls) =>
-            // anonymous pattern (`()` / `(:CLASS)`): bind a reserved
-            // planner name — unique per pattern position, never
-            // user-referencable (the vars map only hands out what the
-            // query text names)
-            val name = Option(v).getOrElse(s"$anonPrefix${out.size}")
-            out += NodePat(i, end + 1, name, parseLabels(ls), props)
-          case _ => throw new IllegalArgumentException(
-            s"unsupported node pattern '($inner)' (expected (var:Label… {props}))")
-        }
-        i = end + 1
-      } else i += 1
+    var i = indexOf(pattern, "(", "")
+    while (i >= 0) {
+      val end = closer(pattern, i, "(")
+      if (end < 0) throw new IllegalArgumentException(
+        s"unbalanced parens in pattern: $pattern")
+      val inner = pattern.substring(i + 1, end)
+      val braceIdx = indexOf(inner, "{", "")
+      val head = (if (braceIdx >= 0) inner.substring(0, braceIdx) else inner).trim
+      val props =
+        if (braceIdx >= 0) parseProps(inner.substring(braceIdx).trim) else Map.empty[String, String]
+      head match {
+        case varLabels(v, ls) =>
+          // anonymous pattern (`()` / `(:CLASS)`): bind a reserved
+          // planner name — unique per pattern position, never
+          // user-referencable (the vars map only hands out what the
+          // query text names)
+          val name = Option(v).getOrElse(s"$anonPrefix${out.size}")
+          out += NodePat(i, end + 1, name, parseLabels(ls), props)
+        case _ => throw new IllegalArgumentException(
+          s"unsupported node pattern '($inner)' (expected (var:Label… {props}))")
+      }
+      i = indexOf(pattern, "(", "", end + 1)
     }
     out.toSeq
   }
@@ -2263,7 +1922,7 @@ object CypherLite {
     * hops, with the same validations the single-chain parser applied. */
   private def parseClause(body: String, optional: Boolean, q: String,
       clauseIx: Int): Clause = {
-    val whereIdx = topLevelKeyword(body, "WHERE")
+    val whereIdx = indexOf(body, "WHERE", "{")
     val pattern = (if (whereIdx >= 0) body.substring(0, whereIdx) else body).trim
     val where = if (whereIdx >= 0) body.substring(whereIdx + 5).trim else null
     // anonymous-node names are unique across clauses (clause index in
@@ -2311,30 +1970,11 @@ object CypherLite {
   }
 
   /** `-[` outside quotes — the relationship-pattern marker that
-    * distinguishes a pattern-existence predicate from a boolean leaf. */
-  private def hasRelPatternText(s: String): Boolean = {
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '[')
-        return true
-      // full bare arrows only: `n.bal<-1` / `a-5 > b` must stay
-      // comparisons, so `-->` needs both dashes and `<--` all three chars
-      else if (c == '-' && i + 2 < s.length && s.charAt(i + 1) == '-' &&
-          s.charAt(i + 2) == '>')
-        return true
-      else if (c == '<' && i + 2 < s.length && s.charAt(i + 1) == '-' &&
-          s.charAt(i + 2) == '-')
-        return true
-      i += 1
-    }
-    false
-  }
+    * distinguishes a pattern-existence predicate from a boolean leaf.
+    * Bare arrows count only whole: `n.bal<-1` / `a-5 > b` must stay
+    * comparisons, so `-->` needs both dashes and `<--` all three chars. */
+  private def hasRelPatternText(s: String): Boolean =
+    indexWhere(s, "")(i => Seq("-[", "-->", "<--").exists(s.startsWith(_, i))) >= 0
 
   /** One pattern-existence predicate `[NOT] (a)-[:R]->(b)` lifted out of
     * a MATCH-clause WHERE — Neo4j's existential subpattern, executed as
@@ -2351,17 +1991,16 @@ object CypherLite {
   private def extractPatternPreds(w: String, q: String, clauseIx: Int)
       : (Seq[PatPred], Option[String]) = {
     if (!hasRelPatternText(w)) return (Nil, Some(w))
-    require(splitBool(w, "OR").lengthCompare(1) == 0 ||
-        splitBool(w, "OR").forall(!hasRelPatternText(_)),
+    require(splitOn(w, "OR", "({").lengthCompare(1) == 0 ||
+        splitOn(w, "OR", "({").forall(!hasRelPatternText(_)),
       s"pattern predicate under OR not supported: $q")
-    val (pats, rest) = splitBool(w, "AND").partition(hasRelPatternText)
+    val (pats, rest) = splitOn(w, "AND", "({").partition(hasRelPatternText)
     val existsWrap = """(?is)^EXISTS\s*\{(.*)\}$""".r
     val preds = pats.zipWithIndex.map { case (p0, i) =>
       val t = p0.trim
       val neg = t.regionMatches(true, 0, "NOT", 0, 3) && t.length > 3 &&
         !isWordChar(t.charAt(3))
-      var body = (if (neg) t.substring(3) else t).trim
-      while (isWholeParen(body)) body = body.substring(1, body.length - 1).trim
+      var body = ungroup(if (neg) t.substring(3) else t, "(")
       // modern Neo4j spelling: `EXISTS { [MATCH] pattern [WHERE …] }` —
       // same existential semantics, same semi/anti-join plan; the inner
       // WHERE (resolving against the subpattern's own variables) filters
@@ -2630,16 +2269,7 @@ object CypherLite {
       kw: String): SpParts = {
     val open = q.indexOf('(', kwIdx)
     require(open > 0, s"malformed $kw: $q")
-    // balanced-paren scan (quote-aware) for the pattern's closing paren
-    var depth = 0; var j = open; var close = -1; var quote: Char = 0
-    while (j < q.length && close < 0) {
-      val c = q.charAt(j)
-      if (quote != 0) { if (c == '\\') j += 1 else if (c == quote) quote = 0 }
-      else if (c == '\'' || c == '"') quote = c
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) close = j }
-      j += 1
-    }
+    val close = closer(q, open, "(")
     require(close > 0, s"unbalanced $kw parens: $q")
     val inner = q.substring(open + 1, close)
     val tail = q.substring(close + 1).trim
@@ -2860,8 +2490,8 @@ object CypherLite {
   private def spathTail(sp: SpParts,
       seedVar: Option[String]): (String, Boolean) = {
     val pQuoted = java.util.regex.Pattern.quote(sp.pVar)
-    val tailS = seedVar.fold(sp.tail)(v => replaceOutsideQuotes(sp.tail,
-      "\\b" + java.util.regex.Pattern.quote(v) + "\\b", "__pstart"))
+    val tailS = seedVar.fold(sp.tail)(v => mapUnquoted(sp.tail)(_.replaceAll(
+      "\\b" + java.util.regex.Pattern.quote(v) + "\\b", "__pstart")))
     val tail2 = rewriteEndpointReads(tailS, pQuoted)
     (tail2, ("(?i)\\b(nodes|relationships)\\(\\s*" + pQuoted + "\\s*\\)")
       .r.findFirstIn(tail2).isDefined)
@@ -2892,20 +2522,16 @@ object CypherLite {
       col("s") === col("__ps") && col("v") === col("__pv"))
       .drop("__ps", "__pv"))
     val pQuoted = java.util.regex.Pattern.quote(sp.pVar)
-    def rewritePathFns(t: String): String = {
-      var r = replaceOutsideQuotes(t,
-        "(?i)\\b(?:length|size)\\(\\s*" + pQuoted + "\\s*\\)", "__plen")
-      r = replaceOutsideQuotes(r,
-        "(?i)\\bnodes\\(\\s*" + pQuoted + "\\s*\\)", "__pnodes")
-      replaceOutsideQuotes(r,
-        "(?i)\\brelationships\\(\\s*" + pQuoted + "\\s*\\)", "__prels")
-    }
+    def rewritePathFns(t: String): String = mapUnquoted(t)(_
+      .replaceAll("(?i)\\b(?:length|size)\\(\\s*" + pQuoted + "\\s*\\)", "__plen")
+      .replaceAll("(?i)\\bnodes\\(\\s*" + pQuoted + "\\s*\\)", "__pnodes")
+      .replaceAll("(?i)\\brelationships\\(\\s*" + pQuoted + "\\s*\\)", "__prels"))
     val withPaths = recon.isDefined || paths.columns.contains("__pnodes")
     val plainCols = Set("__plen", "__pstart", "__pend", "__pnn") ++
       (if (withPaths) Set("__pnodes", "__prels") else Set.empty[String])
-    val retIdx = topLevelKeyword(tail2, "RETURN")
+    val retIdx = indexOf(tail2, "RETURN", "{")
     require(retIdx >= 0, s"$kw needs a RETURN clause: $q")
-    val whereIdx = topLevelKeyword(tail2, "WHERE")
+    val whereIdx = indexOf(tail2, "WHERE", "{")
     if (whereIdx >= 0 && whereIdx < retIdx)
       df = df.filter(parseWhere(
         rewritePathFns(tail2.substring(whereIdx + 5, retIdx).trim),
@@ -2991,18 +2617,16 @@ object CypherLite {
     * projections) skips per-path reconstruction entirely: the
     * shortestPath/allShortestPaths plan collapses to the BFS + joins. */
   private def rewriteEndpointReads(t: String, pQuoted: String): String = {
-    var r = replaceOutsideQuotes(t,
-      "(?i)\\bhead\\(\\s*nodes\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
-      "__pstart")
-    r = replaceOutsideQuotes(r,
-      "(?i)\\blast\\(\\s*nodes\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
-      "__pend")
-    r = replaceOutsideQuotes(r,
-      "(?i)\\bsize\\(\\s*relationships\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
-      "__plen")
-    replaceOutsideQuotes(r,
-      "(?i)\\bsize\\(\\s*nodes\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
-      "__pnn")
+    mapUnquoted(t)(_
+      .replaceAll("(?i)\\bhead\\(\\s*nodes\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
+        "__pstart")
+      .replaceAll("(?i)\\blast\\(\\s*nodes\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
+        "__pend")
+      .replaceAll(
+        "(?i)\\bsize\\(\\s*relationships\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
+        "__plen")
+      .replaceAll("(?i)\\bsize\\(\\s*nodes\\(\\s*" + pQuoted + "\\s*\\)\\s*\\)",
+        "__pnn"))
   }
 
   /** `MATCH p = allShortestPaths((a…)-[:R*…]->(b…)) …` — EVERY shortest
@@ -3256,58 +2880,17 @@ object CypherLite {
       out: scala.collection.mutable.ArrayBuffer[Unwind]): String = {
     require(rest.startsWith("["),
       s"UNWIND expects a literal list, range(), or a \\$$param list: $q")
-    // find the matching top-level ']' honoring quotes
-    var i = 1
-    var quote: Char = 0
-    var end = -1
-    while (i < rest.length && end < 0) {
-      val c = rest.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == ']') end = i
-      i += 1
-    }
+    // the first ']' outside quotes ends the list: its elements are
+    // literals, so a nested list leaves a tail that is not `AS x`
+    val end = indexOf(rest, "]", "")
     require(end > 0, s"unterminated UNWIND list: $q")
-    val values = splitTop(rest.substring(1, end), ",").map(unquote)
+    val values = splitOn(rest.substring(1, end), ",", "([{").map(unquote)
     val tail = rest.substring(end + 1).trim
     val asRe = """^(?i)AS\s+(\w+)\s*""".r
     val m = asRe.findFirstMatchIn(tail).getOrElse(
       throw new IllegalArgumentException(s"UNWIND needs `AS <var>`: $q"))
     out += Unwind(m.group(1), values)
     tail.substring(m.matched.length).trim
-  }
-
-  /** `replaceAll` applied only OUTSIDE single/double-quoted string
-    * literals (r13, advisor finding): the textual path-function rewrite
-    * must never mangle a quoted property literal like
-    * `{full_name: 'length(p)'}` — plausible text in this code-graph
-    * domain, and the clause splitter is quote-aware for the same
-    * reason. Backslash escapes honored; an unterminated quote keeps its
-    * tail literal (the parser raises on it elsewhere). */
-  private def replaceOutsideQuotes(s: String, regex: String,
-      repl: String): String = {
-    val sb = new StringBuilder
-    var i = 0; var segStart = 0; var quote: Char = 0
-    def flushCode(end: Int): Unit =
-      sb.append(s.substring(segStart, end).replaceAll(regex, repl))
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) {
-          sb.append(s.substring(segStart, i + 1)); segStart = i + 1
-          quote = 0
-        }
-      } else if (c == '\'' || c == '"') {
-        flushCode(i); segStart = i; quote = c
-      }
-      i += 1
-    }
-    if (quote != 0) sb.append(s.substring(segStart))
-    else flushCode(s.length)
-    sb.toString
   }
 
   /** PATH VARIABLES in plain MATCH (r12): strip `p =` after each
@@ -3319,7 +2902,7 @@ object CypherLite {
     * query, path var per MATCH ordinal, the plain column names). */
   private def extractPathVars(q: String)
       : (String, Map[Int, String], Set[String]) = {
-    val mPos = allTopLevelKeywords(q, "MATCH")
+    val mPos = indexesOf(q, "MATCH", "{")
     val assignRe = """\A\s*(\w+)\s*=\s*\(""".r
     val sb = new StringBuilder(q)
     val byMatch = scala.collection.mutable.Map.empty[Int, String]
@@ -3337,12 +2920,10 @@ object CypherLite {
     var out = sb.toString
     for (pv <- names) {
       val w = java.util.regex.Pattern.quote(pv)
-      out = replaceOutsideQuotes(out,
-        s"(?i)\\bnodes\\(\\s*$w\\s*\\)", s"__pnodes_$pv")
-      out = replaceOutsideQuotes(out,
-        s"(?i)\\brelationships\\(\\s*$w\\s*\\)", s"__prels_$pv")
-      out = replaceOutsideQuotes(out,
-        s"(?i)\\b(?:length|size)\\(\\s*$w\\s*\\)", s"__plen_$pv")
+      out = mapUnquoted(out)(_
+        .replaceAll(s"(?i)\\bnodes\\(\\s*$w\\s*\\)", s"__pnodes_$pv")
+        .replaceAll(s"(?i)\\brelationships\\(\\s*$w\\s*\\)", s"__prels_$pv")
+        .replaceAll(s"(?i)\\b(?:length|size)\\(\\s*$w\\s*\\)", s"__plen_$pv"))
     }
     val cols = names.flatMap(pv =>
       Seq(s"__pnodes_$pv", s"__prels_$pv", s"__plen_$pv")).toSet
@@ -3354,7 +2935,7 @@ object CypherLite {
     locally {
       // UNION splits FIRST — each branch is a full sub-query (possibly a
       // shortestPath or WITH-piped one) planned independently
-      val unionPos = allTopLevelKeywords(q0, "UNION")
+      val unionPos = indexesOf(q0, "UNION", "{")
       if (unionPos.nonEmpty) return executeUnion(nodes, edges, q0, unionPos)
     }
     // UNWIND preludes: `UNWIND [...] AS x [UNWIND …] MATCH … / RETURN …`
@@ -3363,10 +2944,10 @@ object CypherLite {
       // r18 (verdict task #4): an UNWIND prelude seeds the path
       // search's frontier directly (the multi-source BFS the fixpoint
       // already runs) — spathSeedFrame carries the contract
-      val aspIdx = topLevelKeyword(qU, "allShortestPaths")
+      val aspIdx = indexOf(qU, "allShortestPaths", "{")
       if (aspIdx >= 0)
         return executeAllShortestPaths(nodes, edges, qU, aspIdx, unwinds)
-      val spIdx = topLevelKeyword(qU, "shortestPath")
+      val spIdx = indexOf(qU, "shortestPath", "{")
       if (spIdx >= 0)
         return executeShortestPath(nodes, edges, qU, spIdx, unwinds)
     }
@@ -3400,7 +2981,7 @@ object CypherLite {
     // quote-aware clause split (not regex): keywords inside a quoted
     // prop literal — likely in code/signature text — must not terminate
     // the pattern
-    val retIdx = topLevelKeyword(q, "RETURN")
+    val retIdx = indexOf(q, "RETURN", "{")
     // MID-QUERY UNWIND (r16): `… WITH collect(x) AS xs UNWIND xs AS y …`
     // — Neo4j's collect-then-regroup idiom. An UNWIND after the pattern
     // is a pipe boundary like WITH: its operand is any scalar LIST
@@ -3409,7 +2990,7 @@ object CypherLite {
     def applyMidUnwind(d0: DataFrame, body: String,
         vs: Map[String, String], pl: Set[String])
         : (DataFrame, Set[String]) = {
-      val parts = splitTop(body, "AS")
+      val parts = splitOn(body, "AS", "([{")
       require(parts.length == 2, s"UNWIND needs `<list-expr> AS <var>`: $q")
       val (exprTxt, v) = (parts(0).trim, parts(1).trim)
       require(v.matches("""\w+"""), s"malformed UNWIND alias '$v': $q")
@@ -3517,7 +3098,7 @@ object CypherLite {
         return shapeResult(seed, q.substring(6).trim,
           Map.empty[String, String], unwindVars)
       val boundaries = (clauseWithPositions(q) ++
-        allTopLevelKeywords(q, "UNWIND")).sorted
+        indexesOf(q, "UNWIND", "{")).sorted
       require(boundaries.nonEmpty && boundaries.forall(_ < retIdx),
         s"unsupported Cypher shape after UNWIND: $q")
       val (df, curVars, curPlain) = foldPipeSegments(seed,
@@ -3533,7 +3114,7 @@ object CypherLite {
     // pipe boundaries: WITH clauses and mid-query UNWINDs (r16) — the
     // pattern region ends at the first of them
     val pipeBoundaries = (clauseWithPositions(q) ++
-      allTopLevelKeywords(q, "UNWIND")).sorted
+      indexesOf(q, "UNWIND", "{")).sorted
     require(pipeBoundaries.forall(_ < retIdx),
       s"WITH/UNWIND after RETURN is not a clause: $q")
     val withPositions = pipeBoundaries
@@ -3543,7 +3124,7 @@ object CypherLite {
     // split the pre-RETURN text into MATCH clauses: each further
     // top-level MATCH starts a new clause; a trailing OPTIONAL keyword on
     // the preceding body marks the NEXT clause optional
-    val matchPos = allTopLevelKeywords(head, "MATCH")
+    val matchPos = indexesOf(head, "MATCH", "{")
     require(matchPos.headOption.contains(0), s"malformed MATCH clauses: $q")
     val rawBodies = matchPos.zipWithIndex.map { case (p, ix) =>
       val end = if (ix + 1 < matchPos.length) matchPos(ix + 1) else head.length
@@ -3567,11 +3148,11 @@ object CypherLite {
     rawBodies.zipWithIndex.foreach { case (b, ix) =>
       val body = if (optionalMarks(ix)) b.dropRight(8).trim else b
       val optional = ix > 0 && optionalMarks(ix - 1)
-      val whereIdx = topLevelKeyword(body, "WHERE")
+      val whereIdx = indexOf(body, "WHERE", "{")
       val pat =
         (if (whereIdx >= 0) body.substring(0, whereIdx) else body).trim
       val whereTxt = if (whereIdx >= 0) body.substring(whereIdx) else ""
-      val subs = splitTopPattern(pat)
+      val subs = splitOn(pat, ",", "([{")
       require(subs.nonEmpty, s"no node pattern in: $q")
       subs.zipWithIndex.foreach { case (sp, j) =>
         val sbody =
@@ -3730,11 +3311,11 @@ object CypherLite {
       val w =
         if (!w0.contains("__pcnt_")) w0
         else {
-          require(splitBool(w0, "OR").lengthCompare(1) == 0 ||
-              splitBool(w0, "OR").forall(!_.contains("__pcnt_")),
+          require(splitOn(w0, "OR", "({").lengthCompare(1) == 0 ||
+              splitOn(w0, "OR", "({").forall(!_.contains("__pcnt_")),
             s"a pattern count under OR is not supported: $q")
           val (defer, keep) =
-            splitBool(w0, "AND").partition(_.contains("__pcnt_"))
+            splitOn(w0, "AND", "({").partition(_.contains("__pcnt_"))
           deferredWhere ++= defer
           if (keep.isEmpty) return d0 else keep.mkString(" AND ")
         }
@@ -3742,22 +3323,19 @@ object CypherLite {
       // the flag plan; pure-conjunction WHEREs keep the semi/anti-join
       // plan (the tighter shape — no flag column, no distinct)
       def conjunctHasOrPattern(t0: String): Boolean = {
-        var t = t0.trim
-        while (isWholeParen(t)) t = t.substring(1, t.length - 1).trim
-        val dj = splitBool(t, "OR")
+        val dj = splitOn(ungroup(t0, "("), "OR", "({")
         dj.lengthCompare(1) > 0 && dj.exists(hasRelPatternText)
       }
       if (conjunctHasOrPattern(w) ||
-          splitBool(w, "AND").exists(conjunctHasOrPattern)) {
+          splitOn(w, "AND", "({").exists(conjunctHasOrPattern)) {
         val flagDrops = scala.collection.mutable.ArrayBuffer.empty[String]
         def whereColumn(din: DataFrame, t0: String, ns: Int)
             : (DataFrame, Column) = {
-          var t = t0.trim
-          while (isWholeParen(t)) t = t.substring(1, t.length - 1).trim
+          val t = ungroup(t0, "(")
           def plainCol = parseWhere(t, scopeU(vs), valueRefOf(vs, unwindVars))
           if (!hasRelPatternText(t)) return (din, plainCol)
-          val dj = splitBool(t, "OR")
-          val cj = if (dj.lengthCompare(1) > 0) dj else splitBool(t, "AND")
+          val dj = splitOn(t, "OR", "({")
+          val cj = if (dj.lengthCompare(1) > 0) dj else splitOn(t, "AND", "({")
           if (cj.lengthCompare(1) > 0) {
             var d = din
             val cols = cj.zipWithIndex.map { case (x, i) =>
@@ -4077,7 +3655,7 @@ object CypherLite {
       : (DataFrame, Map[String, String], Set[String]) = {
     var body = body0
     var whereTxt: Option[String] = None
-    val wIdx = topLevelKeyword(body, "WHERE")
+    val wIdx = indexOf(body, "WHERE", "{")
     if (wIdx >= 0) {
       whereTxt = Some(body.substring(wIdx + 5).trim)
       body = body.substring(0, wIdx).trim
@@ -4090,17 +3668,17 @@ object CypherLite {
     var skipN: Option[Int] = None
     var orderSpec: Option[String] = None
     locally {
-      val li = topLevelKeyword(body, "LIMIT")
+      val li = indexOf(body, "LIMIT", "{")
       if (li >= 0) {
         limitN = Some(body.substring(li + 5).trim.toInt)
         body = body.substring(0, li).trim
       }
-      val si = topLevelKeyword(body, "SKIP")
+      val si = indexOf(body, "SKIP", "{")
       if (si >= 0) {
         skipN = Some(body.substring(si + 4).trim.toInt)
         body = body.substring(0, si).trim
       }
-      val oi = topLevelKeyword(body, "ORDER")
+      val oi = indexOf(body, "ORDER", "{")
       if (oi >= 0) {
         val tail = body.substring(oi + 5).trim
         require(tail.regionMatches(true, 0, "BY", 0, 2) &&
@@ -4118,8 +3696,8 @@ object CypherLite {
     var plain = Set.empty[String]
     val keys = scala.collection.mutable.ArrayBuffer.empty[Column]
     val aggs = scala.collection.mutable.ArrayBuffer.empty[Column]
-    splitTop(body, ",").foreach { item =>
-      val (core, alias) = splitTop(item, "AS") match {
+    splitOn(body, ",", "([{").foreach { item =>
+      val (core, alias) = splitOn(item, "AS", "([{") match {
         case Seq(c) => (c.trim, None)
         case Seq(c, a) =>
           require(a.trim.matches("""\w+"""), s"malformed alias in '$item'")
@@ -4173,8 +3751,8 @@ object CypherLite {
         // expression-argument aggregates (r16) — same guard as retItem:
         // the head's '(' must close at the FINAL ')'; DISTINCT args
         // route through the shared distinct-aware body (r18)
-        case aggExprRe(fn, arg0) if matchingDelim(core,
-            core.indexOf('('), '(', ')') == core.length - 1 =>
+        case aggExprRe(fn, arg0) if closer(core,
+            core.indexOf('('), "(") == core.length - 1 =>
           val a = alias.getOrElse(throw new IllegalArgumentException(
             s"WITH expression needs AS alias: '$item'"))
           val (distinct, arg) = stripDistinct(arg0.trim)
@@ -4252,7 +3830,7 @@ object CypherLite {
         else df0.groupBy(keys.toSeq: _*).agg(aggs.head, aggs.tail.toSeq: _*)
       }
     orderSpec.foreach { spec =>
-      val sortKeys = splitTop(spec, ",").map { item =>
+      val sortKeys = splitOn(spec, ",", "([{").map { item =>
         val (ref, desc) = {
           val t = item.trim
           if (t.toUpperCase.endsWith(" DESC")) (t.dropRight(5).trim, true)
@@ -4274,35 +3852,8 @@ object CypherLite {
   /** Top-level WITH occurrences that are the CLAUSE keyword — the WITH of
     * `STARTS WITH` / `ENDS WITH` is disqualified by its preceding word. */
   private def clauseWithPositions(s: String): Seq[Int] =
-    allTopLevelKeywords(s, "WITH").filterNot { p =>
+    indexesOf(s, "WITH", "{").filterNot { p =>
       val before = s.substring(0, p).reverse.dropWhile(_.isWhitespace).reverse
       "(?i).*\\b(starts|ends)$".r.matches(before)
     }
-
-  /** Every top-level (quote-aware, \w-bounded) occurrence of `word`,
-    * ascending — the multi-hit sibling of [[topLevelKeyword]]. */
-  private def allTopLevelKeywords(s: String, word: String): Seq[Int] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var quote: Char = 0
-    var brace = 0 // `{…}` bodies are opaque, as in [[topLevelKeyword]]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '{') brace += 1
-      else if (c == '}') brace = math.max(0, brace - 1)
-      else if (brace == 0 &&
-          s.regionMatches(true, i, word, 0, word.length) &&
-          (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-          (i + word.length >= s.length || !isWordChar(s.charAt(i + word.length)))) {
-        out += i
-        i += word.length - 1
-      }
-      i += 1
-    }
-    out.toSeq
-  }
 }

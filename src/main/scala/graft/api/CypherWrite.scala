@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.model.Kind
+import CypherText._
 
 /** The WRITE side of `execute_query` — the Cypher statements the
   * reference itself issues against its store, parsed into typed
@@ -164,35 +165,10 @@ object CypherWrite {
     (kinds.headOption.getOrElse(Kind.None_), tasks)
   }
 
-  /** Guard against an UN-substituted parameter token reaching the typed
-    * write parse — the parameterized entry points (GraphDatabase
-    * `executeQuery(q, params)`) inline `$name` via
-    * [[CypherLite.substituteParams]] BEFORE routing here, so a surviving
-    * `$name` outside quotes means the caller used the no-params overload
-    * with a parameterized query. `$` inside quoted text (code snippets,
-    * shell text) is literal and passes. */
-  private def noParams(s: String): String = {
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\') i += 1
-        else if (c == quote) quote = 0
-      } else if (c == '\'' || c == '"') quote = c
-      else if (c == '$' && i + 1 < s.length &&
-          (s.charAt(i + 1).isLetterOrDigit || s.charAt(i + 1) == '_'))
-        throw new IllegalArgumentException(
-          "unbound query parameter — pass a params map (executeQuery(q, params))")
-      i += 1
-    }
-    s
-  }
-
   /** `SET v.k = 'x', v.j = 'y'` → props map; every target must dot the
     * bound variable. */
   private def parseSetItems(set: String, v: String): Map[String, String] =
-    CypherLite.splitTop(noParams(set).trim.replaceAll("(?is)^SET\\s+", ""), ",")
+    splitOn(set.trim.replaceAll("(?is)^SET\\s+", ""), ",", "([{")
       .map { item =>
         val m = """(?s)^\s*(\w+)\.(\w+)\s*=\s*(.+?)\s*$""".r
           .findFirstMatchIn(item)
@@ -200,11 +176,11 @@ object CypherWrite {
             s"unsupported SET item '$item' (expected $v.prop = <literal>)"))
         require(m.group(1) == v,
           s"SET target '${m.group(1)}' is not the bound variable '$v'")
-        m.group(2) -> CypherLite.unquote(m.group(3))
+        m.group(2) -> unquote(m.group(3))
       }.toMap
 
   private def propsOf(lit: String): Map[String, String] =
-    if (lit == null) Map.empty else CypherLite.parseProps(noParams(lit))
+    if (lit == null) Map.empty else CypherLite.parseProps(lit)
 
   private def fullNameOf(props: Map[String, String], what: String): String =
     props.getOrElse("full_name", throw new IllegalArgumentException(
@@ -215,42 +191,6 @@ object CypherWrite {
   private val foreachRe =
     """(?is)^\s*FOREACH\s*\(\s*(\w+)\s+IN\s+\[(.*?)\]\s*\|\s*(.+)\)\s*$""".r
 
-  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  /** Replace bare word-boundary occurrences of variable `v` outside
-    * quotes with `value` (already a rendered literal) — the FOREACH
-    * element substitution, the same quote discipline as parameter
-    * inlining. An occurrence whose next non-space char is `:` is a
-    * property-map KEY (or a label anchor), not a value position — a
-    * loop variable named like a prop key (`FOREACH (x IN … | CREATE
-    * ({x: x}))`) must rewrite only the value side, never the key. */
-  private def substVar(s: String, v: String, value: String): String = {
-    def keyPosition(after: Int): Boolean = {
-      var j = after
-      while (j < s.length && s.charAt(j).isWhitespace) j += 1
-      j < s.length && s.charAt(j) == ':'
-    }
-    val sb = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        sb.append(c)
-        if (c == '\\' && i + 1 < s.length) { i += 1; sb.append(s.charAt(i)) }
-        else if (c == quote) quote = 0
-        i += 1
-      } else if (c == '\'' || c == '"') { quote = c; sb.append(c); i += 1 }
-      else if (s.regionMatches(i, v, 0, v.length) &&
-          (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-          (i + v.length >= s.length || !isWordChar(s.charAt(i + v.length))) &&
-          !keyPosition(i + v.length)) {
-        sb.append(value); i += v.length
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   /** [[parse]] generalized to statement LISTS: `FOREACH (x IN [list] |
     * <write clause>)` — Neo4j's per-element write loop — expands to one
     * typed mutation per element (the loop variable substitutes wherever
@@ -259,16 +199,31 @@ object CypherWrite {
     * LITERAL list — bounded by the query text, the parameter-batch
     * idiom, never a data-driven loop. Nested FOREACH composes. A
     * FOREACH whose body is not a write clause raises; everything else
-    * delegates to [[parse]]. */
-  def parseAll(q: String): Option[Seq[Stmt]] = q match {
-    case foreachRe(v, list, body) =>
-      val elems = CypherLite.splitTop(noParams(list), ",").map(_.trim)
-      Some(elems.flatMap { e =>
-        val substituted = substVar(body.trim, v, e)
-        parseAll(substituted).getOrElse(throw new IllegalArgumentException(
-          s"FOREACH body must be a write clause, got: $body"))
-      })
-    case _ => parse(q).map(Seq(_))
+    * delegates to [[parse]]. A write holding a `$name` outside quotes
+    * raises: the parameterized entry point inlines every binding before
+    * this parse, so one left here came through the no-params overload. */
+  def parseAll(q: String): Option[Seq[Stmt]] = {
+    val stmts = q match {
+      case foreachRe(v, list, body0) =>
+        // the loop variable's uses outside quotes, as a whole word; one
+        // followed by `:` is a property-map KEY (`CREATE ({x: x})`), not
+        // a value position, and stays
+        val body = body0.trim
+        val uses = indexesWhere(body, "") { i =>
+          val after = body.indexWhere(!_.isWhitespace, i + v.length)
+          body.startsWith(v, i) && tokenAt(body, i, v) &&
+            !(after >= 0 && body.charAt(after) == ':')
+        }
+        Some(splitOn(list, ",", "([{").flatMap { e =>
+          val substituted = uses.foldRight(body)((i, t) => t.patch(i, e, v.length))
+          parseAll(substituted).getOrElse(throw new IllegalArgumentException(
+            s"FOREACH body must be a write clause, got: $body0"))
+        })
+      case _ => parse(q).map(Seq(_))
+    }
+    // substituting no bindings raises on any `$name` left
+    if (stmts.isDefined) CypherLite.substituteParams(q, Map.empty)
+    stmts
   }
 
   /** Some(stmt) when `q` is a supported write statement; None when it is
@@ -282,7 +237,7 @@ object CypherWrite {
       Some(ClearLabel(label))
     case promoteRe(v, fn, v2, v3, label) =>
       require(v == v2 && v == v3, "REMOVE/SET must target the bound variable")
-      Some(Promote(CypherLite.unquote(noParams(fn)), label))
+      Some(Promote(unquote(fn), label))
     case edgeDeleteRe(_, _, aProps, relVar, rel, _, _, bProps, delVar) =>
       require(relVar == delVar,
         s"DELETE '$delVar' does not match bound '$relVar'")

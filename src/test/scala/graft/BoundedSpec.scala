@@ -196,6 +196,17 @@ class BoundedSpec extends AnyFunSuite {
     assert(tails.size === 1, tails.mkString("\n"))
   }
 
+  test("structure: one Cypher text scanner") {
+    val api = sources("src/main/scala/graft/api")
+    // a quote test opens a literal-tracking loop: CypherText.isQuote is
+    // the only one, and every scan of Cypher text goes through it
+    val quoteTests = api.flatMap(hits("""==\s*'\\''""".r))
+    assert(quoteTests.size === 1, quoteTests.mkString("\n"))
+    assert(quoteTests.head.contains("CypherText.scala"), quoteTests.head)
+    val wordChar = api.flatMap(hits("""def isWordChar\b""".r))
+    assert(wordChar.size === 1, wordChar.mkString("\n"))
+  }
+
   /** `p`'s text without string literals and comments, line by line. */
   private def code(p: Path): Seq[String] =
     Files.readAllLines(p).asScala.toSeq.map(_
