@@ -1715,6 +1715,17 @@ object CypherLite {
     } else None
   }
 
+  /** A comparison's value text as a literal: a quoted value must be one
+    * whole string literal (`'util' } OR …` is no value), anything else is
+    * taken as written. */
+  private def literalValue(value: String): String = {
+    val v = value.trim
+    if (v.nonEmpty && isQuote(v.head) && literalEnd(v, 0) != v.length)
+      throw new IllegalArgumentException(
+        s"trailing input after the string literal: $v")
+    unquote(v)
+  }
+
   private def parseWhere(s: String, resolve: String => Column,
       valueRef: String => Option[Column] = _ => None): Column = {
     val t = ungroup(s, "(")
@@ -1733,7 +1744,7 @@ object CypherLite {
             // try_cast: a non-numeric property compared to a number is
             // NULL in Neo4j (row drops) — ANSI cast would THROW instead
             (resolve(ref).try_cast("double"), lit(raw.toDouble))
-          else (resolve(ref), lit(unquote(raw)))
+          else (resolve(ref), lit(literalValue(raw)))
       }
     }
     t match {
@@ -1773,19 +1784,18 @@ object CypherLite {
             concat(lit("^(?:"), rc.cast("string"), lit(")$")))
           case None =>
             val v = value.trim
-            require((v.startsWith("'") && v.endsWith("'") && v.length > 1)
-              || (v.startsWith("\"") && v.endsWith("\"") && v.length > 1),
+            require(v.nonEmpty && isQuote(v.head),
               s"=~ needs a string-literal or var.prop pattern: $value")
-            resolve(ref).rlike("^(?:" + unquote(value) + ")$")
+            resolve(ref).rlike("^(?:" + literalValue(v) + ")$")
         }
       case whereNeq(ref, value) =>
         valueRef(value).map(resolve(ref) =!= _)
-          .getOrElse(resolve(ref) =!= unquote(value))
+          .getOrElse(resolve(ref) =!= literalValue(value))
       case whereIn(ref, list) =>
-        resolve(ref).isin(splitOn(list, ",", "([{").map(unquote): _*)
+        resolve(ref).isin(splitOn(list, ",", "([{").map(literalValue): _*)
       case whereStrPred(ref, op, value) =>
         val c = resolve(ref)
-        val lv = unquote(value)
+        val lv = literalValue(value)
         op.toUpperCase.replaceAll("\\s+", " ") match {
           case "STARTS WITH" => c.startsWith(lv)
           case "ENDS WITH" => c.endsWith(lv)
@@ -1801,7 +1811,7 @@ object CypherLite {
         }
       case whereEq(ref, value) =>
         valueRef(value).map(resolve(ref) === _)
-          .getOrElse(resolve(ref) === unquote(value))
+          .getOrElse(resolve(ref) === literalValue(value))
       // r17: function-wrapped LHS — the same comparison vocabulary over
       // a whitelisted scalar call (semantics match parseValueExpr's:
       // toInteger/toFloat null on junk via try_cast, size/length is
@@ -1820,7 +1830,7 @@ object CypherLite {
         lazy val rhs = valueRef(value).getOrElse {
           val raw = value.trim
           if (numericLit.findFirstIn(raw).isDefined) lit(raw.toDouble)
-          else lit(unquote(raw))
+          else lit(literalValue(raw))
         }
         op match {
           case "=" => c === rhs
@@ -1829,9 +1839,9 @@ object CypherLite {
           case "<=" => c <= rhs
           case ">" => c > rhs
           case ">=" => c >= rhs
-          case "STARTS WITH" => c.startsWith(unquote(value))
-          case "ENDS WITH" => c.endsWith(unquote(value))
-          case _ => c.contains(unquote(value))
+          case "STARTS WITH" => c.startsWith(literalValue(value))
+          case "ENDS WITH" => c.endsWith(literalValue(value))
+          case _ => c.contains(literalValue(value))
         }
       // r17: general prefix NOT — comparison binds tighter than NOT in
       // Cypher, so `NOT a = b` ≡ `NOT (a = b)`; the specific NOT arms

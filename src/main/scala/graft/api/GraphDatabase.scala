@@ -2,11 +2,15 @@ package graft.api
 
 import graft.ops.Pin._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlInternals
 import graft.indexer.IndexPipeline
 import graft.merge.Merge
 import graft.model._
-import graft.ops.{Bounded, GraphOps}
+import graft.ops.{Bounded, GraphOps, LocalFold}
 import graft.store.Snapshot
 import graft.store.Snapshot.GraphSnapshot
 
@@ -37,9 +41,13 @@ import graft.store.Snapshot.GraphSnapshot
   * and table: by the table's first read (so `indexRepo` runs no collect
   * for it), or by the write that makes the version — a table the driver
   * held stays held while its new plan, run over the held leaves, still
-  * fits. Spark folds point filters over local frames without a job, so
-  * point reads, the MERGE existence probes and the path searches' edge
-  * collect run on the driver only.
+  * fits. A held table is a local relation of `UnsafeRow`s. Spark folds
+  * point filters over it without a job, and [[graft.ops.LocalFold]],
+  * which the constructor installs, folds the joins, unions and
+  * `DISTINCT`s over held tables on the driver too: point reads, expands,
+  * var-length walks, `shortestPath`, the MERGE existence probes and the
+  * path searches' edge collect run no Spark job. A commit still reads its
+  * held tables through single-partition tasks, which no fold crosses.
   *
   * Every write ends the same way (`advance`): a persisted database
   * writes the tables the write changed, links the files of the others
@@ -50,6 +58,10 @@ import graft.store.Snapshot.GraphSnapshot
 final class GraphDatabase private (
     val spark: SparkSession, dir: Option[String]) {
   import spark.implicits._
+
+  // joins, unions and DISTINCTs over held tables fold on the driver,
+  // whichever session the caller built
+  LocalFold.install(spark)
 
   @volatile private var snap: GraphSnapshot = GraphSnapshot(
     spark.emptyDataset[NodeRow].toDF()
@@ -108,14 +120,15 @@ final class GraphDatabase private (
     snap(t)
   }
 
-  /** `df` as a local frame when it fits the row budget: one bounded
-    * collect. Persisted, it takes the schema a read of table `t` gives,
-    * so a held table and a read one have the same schema. */
+  /** `df` as a local frame of `UnsafeRow`s when it fits the row budget:
+    * one bounded collect. Persisted, it takes the schema a read of table
+    * `t` gives, so a held table and a read one have the same schema. */
   private def hold(t: String, df: DataFrame): Option[DataFrame] = {
     val schema = if (dir.isDefined) Snapshot.schema(t) else df.schema
     val shaped = if (dir.isDefined) df.to(schema) else df
-    Bounded.take(shaped)(identity).map(rows =>
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+    val toRow = ExpressionEncoder(schema).createSerializer()
+    Bounded.take(shaped)(r => toRow(r).copy()).map(rows => SqlInternals.ofPlan(
+      spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows.toSeq)))
   }
 
   /** Installs the next version, in which the given tables changed and the

@@ -16,6 +16,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * arm carries the work. A budget of 0 (or less) answers "does not fit"
   * without a job, so a session at budget 0 runs every distributed arm.
   *
+  * One driver arm takes no probe: [[LocalFold]] evaluates joins, unions
+  * and `DISTINCT`s over local relations at optimization time, and reads
+  * [[rows]] to abandon a fold whose result passes the budget (at 0 it
+  * folds nothing).
+  *
   * Caps that are not an arm choice (the path-search seed cap, the
   * k-means|| candidate bound) pass their own `k`. Five Analytics
   * operators still take a `localThreshold` override for graphbench's

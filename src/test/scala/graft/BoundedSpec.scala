@@ -207,6 +207,29 @@ class BoundedSpec extends AnyFunSuite {
     assert(wordChar.size === 1, wordChar.mkString("\n"))
   }
 
+  test("structure: the local fold reads the one budget through Bounded, " +
+      "and the session recipe and the database install it") {
+    val fold = Paths.get("src/main/scala/graft/ops/LocalFold.scala")
+    val lines = code(fold)
+    assert(lines.exists(_.contains("Bounded.rows(SparkSession.active)")))
+    // no key, conf read or budget value of its own
+    val own = lines.filter(l =>
+      """spark\.graft|conf\.|SQLConf|Threshold|DefaultRows|\b\d{3,}\b""".r
+        .findFirstIn(l).isDefined)
+    assert(own.isEmpty, own.mkString("\n"))
+    // its public members take no budget: install(spark) and apply(plan)
+    val public = lines.filter(_.startsWith("  def ")).map(_.trim)
+    assert(public.map(_.takeWhile(_ != ')')) === Seq(
+      "def install(spark: SparkSession", "def apply(plan: LogicalPlan"),
+      public.mkString("\n"))
+    val installs = sources("src/main/scala")
+      .flatMap(hits("""LocalFold\.install\(""".r))
+    assert(installs.map(_.takeWhile(_ != ':')).sorted === Seq(
+      "src/main/scala/graft/GraftSession.scala",
+      "src/main/scala/graft/api/GraphDatabase.scala"),
+      installs.mkString("\n"))
+  }
+
   /** `p`'s text without string literals and comments, line by line. */
   private def code(p: Path): Seq[String] =
     Files.readAllLines(p).asScala.toSeq.map(_

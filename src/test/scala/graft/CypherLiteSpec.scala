@@ -361,6 +361,28 @@ class CypherLiteSpec extends AnyFunSuite {
     assert(negated === Set("MODULE", "FUNCTION"))
   }
 
+  test("WHERE: a quoted value is one whole literal; text after it is " +
+      "trailing input") {
+    def names(where: String) = db.executeQuery(
+      s"MATCH (n:sklearn) WHERE $where RETURN n.full_name")
+      .collect().map(_.getString(0)).toSet
+    for (where <- Seq("n.name = 'util' } OR n.name = 'm'",
+        "n.name = 'util' x", "n.name <> 'util' }", "n.name < 'util' x",
+        "n.name >= \"util\" x", "n.name STARTS WITH 'u' x",
+        "n.name ENDS WITH 'l' }", "n.name CONTAINS 'ti' x",
+        "n.name =~ 'u.*' x", "toUpper(n.name) = 'UTIL' x",
+        "size(n.name) > '3' x", "toLower(n.name) CONTAINS 'ti' }",
+        "n.name IN ['util' x, 'm']"))
+      withClue(where) {
+        val e = intercept[IllegalArgumentException](names(where))
+        assert(e.getMessage.contains("trailing input"), e.getMessage)
+      }
+    // whole literals, escapes included, still compare
+    assert(names("n.name = 'util' OR n.name = 'm'") === Set("m", "m.util"))
+    assert(names("n.name = 'it\\'s' OR n.name =~ 'ut.*'") === Set("m.util"))
+    assert(names("toUpper(n.name) = \"UTIL\"") === Set("m.util"))
+  }
+
   test("WHERE string predicates: STARTS WITH / ENDS WITH / CONTAINS / IN") {
     val starts = db.executeQuery(
       "MATCH (n:sklearn) WHERE n.full_name STARTS WITH 'm.Person' RETURN n.full_name")

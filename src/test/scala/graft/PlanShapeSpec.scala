@@ -939,4 +939,39 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(pointStored > 0)
     assert(commitStored > commit)
   }
+
+  test("a held snapshot serves expand, *1..3 and shortestPath with no " +
+      "job (more at threshold 0)") {
+    import JobRecorder.{jobs, recorded}
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-fold-jobs")
+    try {
+      val db = graft.api.GraphDatabase.open(spark, s"$dir/db")
+      db.indexRepo(fixtureRepo, "t1")
+      // the version's first reads decide residency: held at the default
+      // budget
+      val calls = db.edges.filter(col("rel_type") === "CALL")
+        .select("src", "dst").collect().map(r => (r.getString(0), r.getString(1)))
+      db.nodes
+      assert(calls.nonEmpty)
+      val (src, dst) = calls.minBy(_.toString)
+      val shapes = Seq(
+        "expand" -> (s"MATCH (a {full_name: '$src'})-[:CALL]->(b) " +
+          "RETURN b.full_name AS dst, b.kind AS kind"),
+        "varpath" -> (s"MATCH (a {full_name: '$src'})-[:CALL*1..3]->(b) " +
+          "RETURN DISTINCT b.full_name AS dst"),
+        "shortest" -> (s"MATCH p = shortestPath((a {full_name: '$src'})" +
+          s"-[:CALL*]->(b {full_name: '$dst'})) RETURN length(p) AS len"))
+      def run(cy: String) = recorded(spark)(
+        db.executeQuery(cy).collect().map(_.toString).sorted.toSeq)
+      for ((kind, cy) <- shapes) withClue(s"$kind: ") {
+        val (folded, evs) = run(cy)
+        assert(folded.nonEmpty)
+        assert(jobs(evs) === 0)
+        val (spark0, evs0) = IngestArms.under(IngestArms.Distributed)(run(cy))
+        assert(jobs(evs0) > 0)
+        assert(spark0 === folded)
+      }
+    } finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+  }
 }
