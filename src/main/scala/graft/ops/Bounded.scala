@@ -18,8 +18,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * One driver arm takes no probe: [[LocalFold]] evaluates joins, unions
   * and `DISTINCT`s over local relations at optimization time, and reads
-  * [[rows]] to abandon a fold whose result passes the budget (at 0 it
-  * folds nothing).
+  * [[rows]] to abandon a fold whose result, or a join whose key
+  * matches, pass the budget (at 0 it folds nothing).
   *
   * Caps that are not an arm choice (the path-search seed cap, the
   * k-means|| candidate bound) pass their own `k`. Five Analytics

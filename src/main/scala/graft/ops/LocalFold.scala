@@ -29,10 +29,13 @@ import org.apache.spark.sql.graft.SqlInternals.normalizeFloats
   * the `Project`, `Filter` and `Limit` between them. Join keys compare as
   * `UnsafeRow`s, as in Spark's `HashedRelation`: a key with a null never
   * matches, and float keys arrive normalized (`-0.0` is `0.0`, one `NaN`).
-  * Nothing else folds: no general aggregate, window or sort.
+  * Join and grouping keys must compare as their bytes: a collated string
+  * key (`UTF8_LCASE`) stays Spark's. Nothing else folds: no general
+  * aggregate, window or sort.
   *
   * The row budget is the session's ([[Bounded.rows]]): a fold whose
-  * result would pass it is abandoned and that subtree left to Spark, and
+  * result would pass it, or an inner or outer join whose key matches do,
+  * is abandoned and that subtree left to Spark, and
   * a budget of 0 disables the rule, so that arm runs Spark's own plan.
   */
 object LocalFold extends Rule[LogicalPlan] {
@@ -51,7 +54,7 @@ object LocalFold extends Rule[LogicalPlan] {
       case j @ ExtractEquiJoinKeys(jt, lk, rk, cond, _,
           l: LocalRelation, r: LocalRelation, _)
           if local(l, r) && joins(jt) && evaluable(lk ++ rk ++ cond) &&
-            lk.forall(k => UnsafeRowUtils.isBinaryStable(k.dataType)) =>
+            binaryStable(lk) =>
         join(j, jt, lk, rk, cond, l, r, budget).getOrElse(j)
       case u @ Union(children, _, _)
           if children.forall { case c: LocalRelation => local(c); case _ => false } =>
@@ -59,6 +62,7 @@ object LocalFold extends Rule[LogicalPlan] {
         if (data.size > budget) u else LocalRelation(u.output, data)
       case a @ Aggregate(groups, aggs, c: LocalRelation, _)
           if local(c) && groups.nonEmpty && evaluable(groups ++ aggs) &&
+            binaryStable(groups) &&
             !aggs.exists(_.exists(_.isInstanceOf[AggregateExpression])) =>
         distinct(a, groups, aggs, c).getOrElse(a)
       // bottom-up, a Limit's LocalLimit folds first, and Spark's rule
@@ -74,11 +78,18 @@ object LocalFold extends Rule[LogicalPlan] {
 
   private def local(rs: LocalRelation*): Boolean = rs.forall(!_.isStreaming)
 
+  /** Keys that compare as their bytes: not a string under a collation
+    * such as `UTF8_LCASE`, where Spark matches and groups unequal bytes. */
+  private def binaryStable(keys: Seq[Expression]): Boolean =
+    keys.forall(k => UnsafeRowUtils.isBinaryStable(k.dataType))
+
   private def evaluable(es: Seq[Expression]): Boolean =
     es.forall(e => e.deterministic && !ConvertToLocalRelation.hasUnevaluableExpr(e))
 
   /** The hash join of `l` (probe) and `r` (build), or `None` past the
-    * budget. */
+    * budget. An inner or outer join counts its key matches first, and
+    * past the budget builds no row: those are its rows when no residual
+    * drops one, and the pairs its residual tests when one does. */
   private def join(j: Join, jt: JoinType, lk: Seq[Expression],
       rk: Seq[Expression], cond: Option[Expression], l: LocalRelation,
       r: LocalRelation, budget: Int): Option[LocalRelation] = {
@@ -91,34 +102,44 @@ object LocalFold extends Rule[LogicalPlan] {
         table.getOrElseUpdate(k.copy(), mutable.ArrayBuffer.empty) += row
     }
     val lKey = UnsafeProjection.create(lk.map(normalizeFloats), l.output)
-    val residual = cond.map { c =>
-      val p = Predicate.create(c, input); p.initialize(0); p }
-    val pair = new JoinedRow
-    val nulls = new GenericInternalRow(r.output.length)
-    // bound to the join's own output: a left outer join's right side is
-    // nullable there
-    val out = UnsafeProjection.create(j.output, j.output)
-    val rows = mutable.ArrayBuffer.empty[InternalRow]
-    def emit(row: InternalRow): Boolean = {
-      rows += row
-      rows.size <= budget
-    }
-    val fits = l.data.forall { row =>
+    val none = mutable.ArrayBuffer.empty[InternalRow]
+    // each left row's key matches
+    val candidates = l.data.map { row =>
       val k = lKey(row)
-      val matches =
-        if (k.anyNull) Iterator.empty
-        else table.get(k).iterator.flatten.filter(m =>
-          residual.forall(_.eval(pair(row, m))))
-      jt match {
-        case LeftSemi => !matches.hasNext || emit(row)
-        case LeftAnti => matches.hasNext || emit(row)
-        case _ =>
-          val any = matches.hasNext
-          matches.forall(m => emit(out(pair(row, m)).copy())) &&
-            (any || jt != LeftOuter || emit(out(pair(row, nulls)).copy()))
-      }
+      if (k.anyNull) none else table.getOrElse(k, none)
     }
-    if (fits) Some(LocalRelation(j.output, rows.toSeq)) else None
+    val pairs = jt match {
+      case Inner => candidates.iterator.map(_.size.toLong).sum
+      case LeftOuter => candidates.iterator.map(_.size.max(1).toLong).sum
+      case _ => 0L
+    }
+    if (pairs > budget) None
+    else {
+      val residual = cond.map { c =>
+        val p = Predicate.create(c, input); p.initialize(0); p }
+      val pair = new JoinedRow
+      val nulls = new GenericInternalRow(r.output.length)
+      // bound to the join's own output: a left outer join's right side is
+      // nullable there
+      val out = UnsafeProjection.create(j.output, j.output)
+      val rows = mutable.ArrayBuffer.empty[InternalRow]
+      def emit(row: InternalRow): Boolean = {
+        rows += row
+        rows.size <= budget
+      }
+      val fits = l.data.iterator.zip(candidates.iterator).forall { case (row, cs) =>
+        val matches = cs.iterator.filter(m => residual.forall(_.eval(pair(row, m))))
+        jt match {
+          case LeftSemi => !matches.hasNext || emit(row)
+          case LeftAnti => matches.hasNext || emit(row)
+          case _ =>
+            val any = matches.hasNext
+            matches.forall(m => emit(out(pair(row, m)).copy())) &&
+              (any || jt != LeftOuter || emit(out(pair(row, nulls)).copy()))
+        }
+      }
+      if (fits) Some(LocalRelation(j.output, rows.toSeq)) else None
+    }
   }
 
   /** The groups of `c` under `groups`, each projected through `aggs`

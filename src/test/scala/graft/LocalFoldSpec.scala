@@ -5,7 +5,7 @@ import scala.util.Random
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation,
   LogicalPlan, Union}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, collate, lit}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -135,6 +135,22 @@ class LocalFoldSpec extends AnyFunSuite {
     }
   }
 
+  test("collated string keys group and match as Spark's collation does") {
+    def cased(p: String, xs: String*) = spark.createDataFrame(
+      java.util.Arrays.asList(xs.map(Row(_)): _*),
+      StructType(Seq(StructField(s"${p}s", StringType))))
+      .select(collate(col(s"${p}s"), "UTF8_LCASE").as(s"${p}c"))
+    def l = cased("l", "A", "a", "b", "B", "c")
+    def r = cased("r", "a", "B", "d")
+    // grouped by its bytes, 'A' and 'a' would be two rows
+    val distinct = same(l.distinct())
+    assert(!distinct.isInstanceOf[LocalRelation], distinct.treeString)
+    assert(l.distinct().count() === 3)
+    // Spark joins on the collation key, a binary column, which may fold
+    for (how <- joinTypes) withClue(s"$how: ")(
+      same(l.join(r, col("lc") === col("rc"), how)))
+  }
+
   test("nested joins, unions and distincts fold into one relation, " +
       "Project, Filter and Limit between them") {
     for (seed <- 1L to 4L) withClue(s"$seed: ") {
@@ -179,6 +195,19 @@ class LocalFoldSpec extends AnyFunSuite {
       val p = plan(budget)
       assert(p.exists(_.isInstanceOf[Join]), p.treeString)
     }
+  }
+
+  test("a join whose key matches pass the budget is Spark's, however few " +
+      "rows its residual keeps") {
+    def q(residual: Boolean) = left(1).join(right(1), col("lk") === col("rk") &&
+      (if (residual) col("lv") < col("rv") else lit(true)))
+    val matches = q(residual = false).count().toInt
+    assert(q(residual = true).count() < matches)
+    def plan(budget: Int) = IngestArms.under(
+      IngestArms.Arm(s"$budget", budget))(same(q(residual = true)))
+    assert(plan(matches).isInstanceOf[LocalRelation])
+    val p = plan(matches - 1)
+    assert(p.exists(_.isInstanceOf[Join]), p.treeString)
   }
 
   test("install is idempotent") {

@@ -48,15 +48,7 @@ object PlanAudit {
     println("held bytes: " + held.map { case (t, b) =>
       s"$t=${b.getOrElse("not held")}" }.mkString(" ") +
       s" total=${held.flatMap(_._2).sum}")
-    val reads = Seq(
-      "point" -> (s"MATCH (n {full_name: '$key'}) RETURN n.full_name AS " +
-        "full_name, n.kind AS kind, n.name AS name, n.file_path AS file_path"),
-      "expand" -> (s"MATCH (a {full_name: '$key'})-[:CALL]->(b) " +
-        "RETURN b.full_name AS dst, b.kind AS kind"),
-      "varpath" -> (s"MATCH (a {full_name: '$caller'})-[:CALL*1..3]->(b) " +
-        "RETURN DISTINCT b.full_name AS dst"),
-      "shortest" -> (s"MATCH p = shortestPath((a {full_name: '$key'})" +
-        s"-[:CALL*]->(b {full_name: '$dst'})) RETURN length(p) AS len"))
+    val reads = ServeShapes.reads(key, dst, caller)
     for ((kind, cy) <- reads) {
       println(s"\n===== serve_$kind =====\n-- $cy")
       val df = db.executeQuery(cy)

@@ -955,13 +955,7 @@ class PlanShapeSpec extends AnyFunSuite {
       db.nodes
       assert(calls.nonEmpty)
       val (src, dst) = calls.minBy(_.toString)
-      val shapes = Seq(
-        "expand" -> (s"MATCH (a {full_name: '$src'})-[:CALL]->(b) " +
-          "RETURN b.full_name AS dst, b.kind AS kind"),
-        "varpath" -> (s"MATCH (a {full_name: '$src'})-[:CALL*1..3]->(b) " +
-          "RETURN DISTINCT b.full_name AS dst"),
-        "shortest" -> (s"MATCH p = shortestPath((a {full_name: '$src'})" +
-          s"-[:CALL*]->(b {full_name: '$dst'})) RETURN length(p) AS len"))
+      val shapes = ServeShapes.reads(src, dst, src).filterNot(_._1 == "point")
       def run(cy: String) = recorded(spark)(
         db.executeQuery(cy).collect().map(_.toString).sorted.toSeq)
       for ((kind, cy) <- shapes) withClue(s"$kind: ") {
